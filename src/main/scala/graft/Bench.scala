@@ -210,26 +210,42 @@ object Bench {
     // legitimate slow-down trade-off or new hardware with
     // SPARK_GRAFT_REFRESH_DRIFT (e.g. 10.0 to force).
     val drift = sys.env.getOrElse("SPARK_GRAFT_REFRESH_DRIFT", "0.10").toDouble
-    val committedTotal =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_LOCAL.json")), "UTF-8")
-        // anchored to the total metric: a bare "value": grab would
-        // silently ratchet against the wrong number if the JSON layout
-        // ever serialized per-query values first
-        """"metric":"total","value":([0-9.]+)""".r
-          .findFirstMatchIn(txt).map(_.group(1).toDouble)
-      } catch { case _: Throwable => None }
-    val ratchetOk = committedTotal.forall(total <= _ * (1.0 + drift))
-    if (referenceConfig && quietHost && probeFailure.isEmpty && !ratchetOk)
-      System.err.println(f"[bench] NOT refreshing BENCH_LOCAL.json: total " +
-        f"$total%.1fs > ${1.0 + drift}%.2fx committed ${committedTotal.get}%.1fs " +
-        "(uniform multi-core contention the probes cannot see; re-run " +
-        "quiet, or raise SPARK_GRAFT_REFRESH_DRIFT for a real trade-off)")
-    if (referenceConfig && quietHost && probeFailure.isEmpty && ratchetOk)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-        (full + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () } // bench result on stdout is the contract
+    val local = java.nio.file.Paths.get("BENCH_LOCAL.json")
+    val committed =
+      if (!java.nio.file.Files.exists(local)) None
+      else Some(try new String(java.nio.file.Files.readAllBytes(local), "UTF-8")
+        catch { case _: java.io.IOException => "" }) // unreadable = unparseable
+    if (referenceConfig && quietHost && probeFailure.isEmpty)
+      ratchetRefusal(committed, total, drift) match {
+        case Some(reason) =>
+          System.err.println(s"[bench] NOT refreshing BENCH_LOCAL.json: $reason")
+        case None =>
+          try java.nio.file.Files.write(local, (full + "\n").getBytes("UTF-8"))
+          catch { case _: Throwable => () } // bench result on stdout is the contract
+      }
     spark.stop()
   }
+
+  /** The refresh ratchet's decision: the reason to refuse replacing the
+    * committed profile, or None to allow it. `committed` is the text of
+    * BENCH_LOCAL.json, None when the file does not exist (no baseline
+    * yet). The total is read through a regex anchored to the total
+    * metric — a bare "value": grab would silently ratchet against the
+    * wrong number if the JSON layout ever serialized per-query values
+    * first — and a file the regex misses is refused, never treated as
+    * "no baseline", which would switch the gate off without a word. */
+  private[graft] def ratchetRefusal(committed: Option[String], total: Double,
+      drift: Double): Option[String] =
+    committed.flatMap { txt =>
+      """"metric":"total","value":([0-9.]+)""".r.findFirstMatchIn(txt)
+        .flatMap(_.group(1).toDoubleOption) match {
+        case None => Some("it exists but has no \"metric\":\"total\" value " +
+          "(format drift?); fix or remove it rather than lose the regression gate")
+        case Some(c) if total > c * (1.0 + drift) => Some(f"total $total%.1fs > " +
+          f"${1.0 + drift}%.2fx committed $c%.1fs (uniform multi-core contention " +
+          "the probes cannot see; re-run quiet, or raise " +
+          "SPARK_GRAFT_REFRESH_DRIFT for a real trade-off)")
+        case _ => None
+      }
+    }
 }

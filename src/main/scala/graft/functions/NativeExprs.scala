@@ -582,14 +582,12 @@ object NativeExprs {
         if (stopSet.contains(tok.toString.toLowerCase(java.util.Locale.ROOT))) stop += 1
         tok.setLength(0)
       }
-      // whitespace = Java regex \s (the split the oracle mirrors)
-      def isWs(c: Char): Boolean =
-        c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
       while (i < n) {
         val c = s.charAt(i)
         if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')) alpha += 1
         if (c == ' ') space += 1
-        if (isWs(c)) flush() else tok.append(c)
+        // whitespace = Java regex \s (the split the oracle mirrors)
+        if (isRegexSpace(c)) flush() else tok.append(c)
         i += 1
       }
       flush()
@@ -597,6 +595,136 @@ object NativeExprs {
     }
 
     override protected def withNewChildInternal(newChild: Expression): TextStats =
+      copy(child = newChild)
+  }
+
+  /** Shared tokenizer of the tokenize-once text kernels — Spark's
+    * `filter(split(lower(text), "\\s+"), _ != "")`: the child's own
+    * `Lower.convert` (same case mapping and collation as `lower`), then
+    * a split on the six Java-regex `\s` characters with empty tokens
+    * dropped. */
+  trait TextTokenKernel extends UnaryKernelCodegen with DeclaredInputTypes {
+    override def declaredInputTypes: Seq[DataType] = Seq(StringType)
+
+    @transient private lazy val lower =
+      org.apache.spark.sql.catalyst.expressions.Lower(child)
+
+    protected def tokens(text: org.apache.spark.unsafe.types.UTF8String)
+        : Array[String] = {
+      val s = lower.convert(text).toString
+      val out = new scala.collection.mutable.ArrayBuffer[String](64)
+      var start = 0
+      var i = 0
+      while (i <= s.length) {
+        if (i == s.length || isRegexSpace(s.charAt(i))) {
+          if (i > start) out += s.substring(start, i)
+          start = i + 1
+        }
+        i += 1
+      }
+      out.toArray
+    }
+
+    protected override def nullSafeEval(input: Any): Any =
+      kernel(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+    def kernel(text: org.apache.spark.unsafe.types.UTF8String)
+        : org.apache.spark.sql.catalyst.InternalRow
+  }
+
+  private val UndLang = org.apache.spark.unsafe.types.UTF8String.fromString("und")
+
+  /** Java regex `\s` without UNICODE_CHARACTER_CLASS. */
+  @inline private def isRegexSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+
+  /** Distinct k-token shingle strings of a document, in first-occurrence
+    * order, plus the window count they came from: struct(shingles,
+    * windows) with windows = max(n − k + 1, 1). Fewer than k tokens
+    * give one shingle of all of them; no tokens give `[""]` —
+    * the same values as `array_distinct(transform(sequence(1, windows),
+    * i -> concat_ws(" ", slice(tokens, i, k))))`, from one tokenization. */
+  case class TextShingles(child: Expression, k: Int) extends TextTokenKernel {
+    require(k >= 1, s"shingle width must be positive, got $k")
+    override def dataType: DataType = StructType(Seq(
+      StructField("shingles", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("windows", IntegerType, nullable = false)))
+    override def prettyName: String = "text_shingles"
+
+    def kernel(text: org.apache.spark.unsafe.types.UTF8String)
+        : org.apache.spark.sql.catalyst.InternalRow = {
+      val toks = tokens(text)
+      val n = toks.length
+      val windows = math.max(n - (k - 1), 1)
+      val seen = new java.util.LinkedHashSet[String](windows * 2)
+      val sb = new java.lang.StringBuilder(64)
+      var i = 0
+      while (i < windows) {
+        sb.setLength(0)
+        var j = i
+        val end = math.min(i + k, n)
+        while (j < end) {
+          if (j > i) sb.append(' ')
+          sb.append(toks(j))
+          j += 1
+        }
+        seen.add(sb.toString)
+        i += 1
+      }
+      val out = new Array[Any](seen.size)
+      val it = seen.iterator()
+      var m = 0
+      while (it.hasNext) {
+        out(m) = org.apache.spark.unsafe.types.UTF8String.fromString(it.next())
+        m += 1
+      }
+      org.apache.spark.sql.catalyst.InternalRow(new GenericArrayData(out), windows)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): TextShingles =
+      copy(child = newChild)
+  }
+
+  /** Marker-word language ID: struct(lang, score) where score is the
+    * best per-language count of tokens in that language's marker set
+    * (a token listed by several languages counts for each), lang the
+    * first language in `markers` order reaching it, and "und" when no
+    * marker occurs. One hash lookup per token. */
+  case class LangId(child: Expression, markers: Seq[(String, Seq[String])])
+      extends TextTokenKernel {
+    override def dataType: DataType = StructType(Seq(
+      StructField("lang", StringType, nullable = false),
+      StructField("score", IntegerType, nullable = false)))
+    override def prettyName: String = "lang_id"
+
+    @transient private lazy val langs: Array[org.apache.spark.unsafe.types.UTF8String] =
+      markers.map(m => org.apache.spark.unsafe.types.UTF8String.fromString(m._1)).toArray
+    @transient private lazy val langsOf: java.util.HashMap[String, Array[Int]] = {
+      val m = new java.util.HashMap[String, Array[Int]]()
+      markers.flatMap(_._2).distinct.foreach { w =>
+        m.put(w, markers.indices.filter(markers(_)._2.contains(w)).toArray)
+      }
+      m
+    }
+
+    def kernel(text: org.apache.spark.unsafe.types.UTF8String)
+        : org.apache.spark.sql.catalyst.InternalRow = {
+      val scores = new Array[Int](langs.length)
+      tokens(text).foreach { t =>
+        val ls = langsOf.get(t)
+        if (ls != null) ls.foreach(l => scores(l) += 1)
+      }
+      var best = 0
+      var arg = -1
+      var l = 0
+      while (l < scores.length) {
+        if (scores(l) > best) { best = scores(l); arg = l }
+        l += 1
+      }
+      org.apache.spark.sql.catalyst.InternalRow(if (arg < 0) UndLang else langs(arg), best)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): LangId =
       copy(child = newChild)
   }
 
@@ -1170,6 +1298,12 @@ object NativeExprs {
 
   def textStats(text: Column, stopwords: Seq[String]): Column =
     ColumnBridge.column(TextStats(ColumnBridge.expression(text), stopwords))
+
+  def textShingles(text: Column, k: Int): Column =
+    ColumnBridge.column(TextShingles(ColumnBridge.expression(text), k))
+
+  def langId(text: Column, markers: Seq[(String, Seq[String])]): Column =
+    ColumnBridge.column(LangId(ColumnBridge.expression(text), markers))
 
   /** BM25's per-row counters in ONE pass: doc length (non-empty
     * single-space tokens, the split(lower(text), ' ') convention the

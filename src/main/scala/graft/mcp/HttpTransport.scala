@@ -33,6 +33,16 @@ object HttpTransport {
   private[mcp] def isValidHostHeader(h: String): Boolean =
     h != null && h.nonEmpty && h.length <= 255 &&
       h.matches("""(\[[0-9A-Fa-f:]+\]|[A-Za-z0-9._-]+)(:\d{1,5})?""")
+
+  /** TCP_NODELAY on accepted connections. The JDK server writes a
+    * response's headers and body as separate segments; with Nagle on,
+    * the body waits for the client's delayed ACK of the headers (~40 ms
+    * per keep-alive call). The JDK reads the property once per process,
+    * when the server's config class initializes, so it must be set
+    * before the first `HttpServer.create`; an explicit `-D` value wins. */
+  private[graft] def enableNoDelay(): Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
 }
 
 class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
@@ -40,6 +50,7 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
     oauth: Option[OAuthEndpoints] = None,
     publicUrl: Option[String] = None) {
 
+  HttpTransport.enableNoDelay()
   private val http = HttpServer.create(new InetSocketAddress(port), 0)
   // A real pool: the default (single dispatcher thread) would let one
   // open /sse stream starve every other request.

@@ -95,8 +95,11 @@ object Retrieval {
     * Crash consistency does NOT depend on lane order: both index paths
     * write the corpus_stats completeness marker strictly AFTER awaitAll
     * returns, so a failed lane aborts the whole operation before the
-    * index is certified complete. */
-  private def awaitAll[A](fs: Seq[() => A]): Seq[A] = {
+    * index is certified complete. A failed lane does not return early:
+    * every lane settles first, then the first failure (in lane order)
+    * is rethrown — the caller's cleanup (unpersist, tmp-dir removal)
+    * never races a sibling that is still writing. */
+  private[ops] def awaitAll[A](fs: Seq[() => A]): Seq[A] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     if (fs.size <= 1) return fs.map(_())
@@ -109,8 +112,10 @@ object Retrieval {
         }
       })
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(fs.map(f => Future(f()))), Duration.Inf)
-    finally pool.shutdown()
+    val outcomes =
+      try fs.map(f => Future(f())).map(Await.ready(_, Duration.Inf).value.get)
+      finally pool.shutdown()
+    outcomes.map(_.get)
   }
 
   /** Build the index: ONE corpus exchange for the whole tf+dl stream

@@ -54,9 +54,6 @@ object TextAnalysis {
   /** English stopword hits (fixed tiny list — the heuristic, not NLP). */
   val stopwords: Seq[String] = Seq("the", "a", "or", "and", "of", "to", "in")
 
-  def stopwordCount(text: Column): Column =
-    size(filter(tokens(lower(text)), t => t.isin(stopwords.map(lit(_)): _*)))
-
   /** Language-ID heuristic: score each language by marker-token hits,
     * pick the argmax (ties broken by fixed language order). Markers are
     * high-frequency function words per language. */
@@ -67,19 +64,13 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist"),
     "zh" -> Seq("的", "了", "是", "我", "不"))
 
-  def langScore(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(lower(text)), t => t.isin(markers.map(lit(_)): _*)))
-
   /** Predicted language + its score. Deterministic: first max wins in
-    * the declared order. */
+    * the declared order. One native kernel tokenizes the text once and
+    * looks every token up against all marker sets. NULL text is "und"
+    * with a NULL score. */
   def langId(text: Column): (Column, Column) = {
-    val scores = langMarkers.map { case (l, m) => (l, langScore(text, m)) }
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    val lang = scores.reverse.foldLeft(lit("und")) { case (acc, (l, sc)) =>
-      when(sc === best && best > 0, l).otherwise(acc)
-    }
-    // reverse fold ⇒ earlier languages override later ones on ties
-    (lang, best)
+    val id = graft.functions.NativeExprs.langId(text, langMarkers)
+    (coalesce(id.getField("lang"), lit("und")), id.getField("score"))
   }
 
   /** PII scrub: masks emails, IPv4 addresses, and US-style phone
@@ -136,21 +127,18 @@ object TextAnalysis {
   /** Distinct k-token shingles as strings (un-hashed variant of
     * [[shingleHashes]]): oracle-friendly — DuckDB can mirror it with a
     * list comprehension, where xxhash64 has no cross-engine twin. */
-  def shingleStrings(text: Column, k: Int): Column = {
-    val toks = tokens(lower(trim(text)))
-    val n = size(toks)
-    val idx = sequence(lit(1), greatest(n - (k - 1), lit(1)))
-    array_distinct(transform(idx, i => concat_ws(" ", slice(toks, i, lit(k)))))
-  }
+  def shingleStrings(text: Column, k: Int): Column =
+    graft.functions.NativeExprs.textShingles(text, k).getField("shingles")
 
   /** Repetition ratio: 1 − distinct/total k-token shingles — the
     * boilerplate/spam signal CommonCrawl-style curation filters on
     * (high ratio = the same phrases loop). Integer-count ratio over a
-    * double division — hash-stable cross-engine. */
+    * double division — hash-stable cross-engine. Both counts come from
+    * one kernel evaluation (one tokenization). */
   def repetitionRatio(text: Column, k: Int = 3): Column = {
-    val total = greatest(size(tokens(lower(trim(text)))) - (k - 1), lit(1))
-    val dist = size(shingleStrings(text, k))
-    lit(1.0) - dist.cast("double") / total.cast("double")
+    val sh = graft.functions.NativeExprs.textShingles(text, k)
+    lit(1.0) - size(sh.getField("shingles")).cast("double") /
+      sh.getField("windows").cast("double")
   }
 
   /** Fixed-window document chunking with overlap: windows of `win`

@@ -57,6 +57,21 @@ class HttpTransportSpec extends SparkSpec {
     assert(r("status") == "ok" && r("name") == "mcp-graft-spark")
   }
 
+  test("keep-alive calls do not stall on Nagle + delayed ACK") {
+    // headers and body leave as separate segments: without TCP_NODELAY
+    // every keep-alive reply waits ~40 ms for the client's delayed ACK
+    val frame = """{"jsonrpc":"2.0","id":1,"method":"tools/list"}"""
+    assert(post(frame).statusCode() == 200) // connect + warm
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      val resp = post(frame)
+      assert(resp.statusCode() == 200 && resp.body().contains("execute_query"))
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 20.0, f"median keep-alive tools/list $median%.1f ms: ${ms.mkString(", ")}")
+  }
+
   test("OPTIONS preflight carries CORS headers") {
     val resp = client.send(HttpRequest.newBuilder(URI.create(s"$base/mcp"))
       .method("OPTIONS", HttpRequest.BodyPublishers.noBody()).build(),

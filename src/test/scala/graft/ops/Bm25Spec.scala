@@ -22,6 +22,20 @@ class Bm25Spec extends SparkSpec {
     }
   }
 
+  test("index lanes: a failed lane waits for its running sibling before rethrowing") {
+    // the caller's cleanup (unpersist, tmp-dir removal) runs as soon as
+    // the exception arrives — a sibling still writing then races it
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Retrieval.awaitAll(Seq(
+        () => throw new IllegalStateException("lane failed"),
+        () => { Thread.sleep(500); siblingDone.set(true) }))
+    }
+    assert(e.getMessage == "lane failed")
+    assert(siblingDone.get, "exception reached the caller while a lane still ran")
+    assert(Retrieval.awaitAll(Seq(() => 1, () => 2)) == Seq(1, 2))
+  }
+
   test("bm25TopK ranks by the textbook formula") {
     // 3 docs, query = {cat, dog}: doc 1 has both terms, doc 2 has cat
     // twice in a longer doc, doc 3 has neither (must not appear).

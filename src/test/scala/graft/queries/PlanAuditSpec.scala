@@ -309,6 +309,72 @@ class PlanAuditSpec extends SparkSpec {
       s"fusion must join bounded lists broadcast-side:\n${p.take(1200)}")
   }
 
+  private val textScans =
+    Seq("text_repetition", "text_contamination", "text_langid", "text_langid_accuracy")
+
+  private def optimized(name: String) =
+    SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
+
+  test("text scans: tokenize-once kernels, no lambda left in the optimized plans") {
+    // a transform/filter lambda here re-split the document per window
+    // or per language — the O(n²) interpreted shape the kernels replaced
+    textScans.foreach { name =>
+      val lambdas = optimized(name).flatMap(_.expressions.flatMap(_.collect {
+        case l: org.apache.spark.sql.catalyst.expressions.LambdaFunction => l
+      }))
+      assert(lambdas.isEmpty, s"$name still evaluates lambdas: ${lambdas.take(3)}")
+    }
+  }
+
+  test("text_langid: one kernel per output, not an 8,000-expression plan") {
+    val exprs = optimized("text_langid")
+      .collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum
+    assert(exprs < 100, s"text_langid optimized plan holds $exprs expressions")
+  }
+
+  test("text_repetition, text_langid: one kernel call per row feeds every output") {
+    // repetition's window total and its distinct count, and langid's
+    // lang and score, read one struct: whole-stage codegen must share
+    // it (subexpression elimination), not tokenize the row twice
+    Seq("text_repetition", "text_langid").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, dir)
+      df.collect() // AQE finalizes the generated stages at runtime
+      def bodies(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = p match {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+          w.doCodeGen()._2.body +: w.children.flatMap(bodies)
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          bodies(a.executedPlan)
+        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => bodies(s.plan)
+        case o => o.children.flatMap(bodies)
+      }
+      val calls = bodies(df.queryExecution.executedPlan)
+        .map("\\.kernel\\(".r.findAllIn(_).size).sum
+      assert(calls == 1, s"$name: $calls kernel calls in the generated code")
+    }
+  }
+
+  test("text scans: the kernels leave every exchange in place") {
+    // the initial adaptive plan's exchanges (not yet executed, so no
+    // runtime re-planning), by partitioning
+    def exchanges(name: String): Seq[String] =
+      SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan.collect {
+            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+              e.outputPartitioning.getClass.getSimpleName
+            case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+              "Broadcast"
+          }.sorted
+        case p => fail(s"$name: expected an adaptive plan, got ${p.nodeName}")
+      }
+    val expected = Map(
+      "text_repetition" -> Seq("RangePartitioning"),
+      "text_contamination" -> Seq("Broadcast", "RangePartitioning", "SinglePartition$"),
+      "text_langid" -> Seq("RangePartitioning"),
+      "text_langid_accuracy" -> Seq("HashPartitioning", "RangePartitioning"))
+    textScans.foreach(name => assert(exchanges(name) == expected(name), name))
+  }
+
   test("text_unigram_entropy: one corpus scan, zero shuffles before the output sort") {
     val p = plan("text_unigram_entropy")
     // the kernel makes entropy a pure projection: the ONLY Exchange

@@ -200,6 +200,9 @@ class OidcSpec extends AnyFunSuite {
   }
 
   test("JWKS over HTTP: discovery against a loopback stub issuer") {
+    // the JDK reads its server config once per process: the first
+    // server in this JVM fixes it for the HTTP transport specs too
+    graft.mcp.HttpTransport.enableNoDelay()
     val srv = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     val port = srv.getAddress.getPort
