@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   // Committed quiet-host probe references (seconds), measured on the
   // reference box at an idle moment. Overridable for other hardware:
@@ -89,7 +89,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Host-contention guard, sampled BEFORE we load the box ourselves:
     // a contended run is a valid bench result (the JSON line on stdout
     // stays the contract) but must never become the committed idle
@@ -101,56 +100,24 @@ object Bench {
     val maxLoad = sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "4.0").toDouble
     // fixed-work calibration, also sampled BEFORE Spark loads the box
     val probeResult = calibrate(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same dialect rules the Engine-built sessions get
-      .withExtensions { ext =>
-        ext.injectResolutionRule(_ => graft.dialect.TimeCastRule)
-        ext.injectPostHocResolutionRule(_ => graft.dialect.EmptyGroupingSetsRule)
-      }
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE initial shuffle-partition count: deployment config, NOT a
-      // hardcoded 8x-cores — at local[32]/small SF that multiplier made
-      // every shuffle write 256 reducer partitions and tripled the full
-      // bench wall-clock (191.7s vs 68.0s measured at sf0.1). On a real
-      // cluster, size it to the input via SPARK_GRAFT_INITIAL_PARTITIONS.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.silenceWindowWarn()
-    // Warm-up (untimed): run EVERY query once first. A single first run
-    // is dominated by planning, codegen compilation and JIT — measured
-    // ~3× steady state on this VM — so the timed pass below is the
-    // second (steady-state) execution of each query.
+    val spark = Sessions.build("graft-bench")
     // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 times a subset.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
-    selected.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count()
-      catch { case _: Throwable => () }
-    }
-    // Timed: median-of-3 post-warmup runs per query. A single timed run
-    // let one GC pause or host-contention burst set the official number
-    // (BENCH_r10 measured 1.7x the same-HEAD idle profile for exactly
-    // that reason); the median of three is robust to one bad run while
-    // still charging any real per-query regression. An explicit GC
-    // between queries keeps one query's garbage from billing the next.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val results = selected.map { case (name, fn) =>
-      System.gc()
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      name -> times(times.size / 2)
-    }
+    // A query that throws ends the run: a failure timed as a fast
+    // success would lower the total, and could ratchet the committed
+    // profile down with it.
+    val results =
+      try timeQueries(spark, sfDir, selected.toSeq, reps).toMap
+      catch { case e: QueryFailed =>
+        System.err.println(s"[bench] ${e.getMessage}")
+        spark.stop()
+        sys.exit(1)
+      }
     // The harness records only a bounded tail of stdout, so the JSON line
     // must stay well under 2000 chars: report the total over ALL queries
     // (the operative BASELINE.md metric) plus per-query seconds for the
@@ -178,10 +145,9 @@ object Bench {
     // run (cpus/reps/partitions overridden) would record a profile the
     // gate's thresholds don't mean anything against.
     // (the reference config is local[32], median-of-3, AQE partitions
-    // = cores — what bench_check.sh runs; CPUS defaults to 4 only for
-    // ad-hoc laptop runs, which must not refresh either)
+    // = cores — what bench_check.sh runs)
     val referenceConfig = only.isEmpty && sfDir == "/root/testdata/sf0.1" &&
-      cpus == "32" && reps == 3 &&
+      referenceCores(sys.env) && reps == 3 &&
       !sys.env.contains("SPARK_GRAFT_INITIAL_PARTITIONS")
     val quietHost = loadAvg < 0 || loadAvg <= maxLoad // -1 = unmeasurable
     if (referenceConfig && !quietHost)
@@ -225,6 +191,45 @@ object Bench {
       }
     spark.stop()
   }
+
+  /** A query that threw in the bench's warm-up or timed pass. */
+  private[graft] final class QueryFailed(name: String, cause: Throwable)
+    extends RuntimeException(s"query $name failed: " +
+      Option(cause.getMessage).getOrElse(cause.toString), cause)
+
+  /** Warm-up, then the median of `reps` timed runs per query, in
+    * seconds. The first run of a query is dominated by planning,
+    * codegen compilation and JIT — measured at ~3× steady state — so
+    * every query runs once untimed before any is timed.
+    * The median of `reps` is robust to one GC pause or contention
+    * burst (BENCH_r10 measured 1.7x the same-HEAD idle profile when a
+    * single run set the number) while still charging any real
+    * per-query regression; an explicit GC between queries keeps one
+    * query's garbage from billing the next. Throws [[QueryFailed]]
+    * naming the first query that throws. */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      reps: Int): Seq[(String, Double)] = {
+    def run(name: String, fn: (SparkSession, String) => DataFrame): Long =
+      try fn(spark, sfDir).count()
+      catch { case scala.util.control.NonFatal(e) => throw new QueryFailed(name, e) }
+    queries.foreach { case (name, fn) => run(name, fn) }
+    queries.map { case (name, fn) =>
+      System.gc()
+      val times = (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        run(name, fn)
+        (System.nanoTime() - t0) / 1e9
+      }.sorted
+      name -> times(times.size / 2)
+    }
+  }
+
+  /** The reference profile is a local[32] run. The core count defaults
+    * to the host's, so only an explicit SPARK_GRAFT_CPUS=32 counts: a
+    * bare run on a 32-core host must not refresh BENCH_LOCAL.json. */
+  private[graft] def referenceCores(env: Map[String, String]): Boolean =
+    env.get("SPARK_GRAFT_CPUS").contains("32")
 
   /** The refresh ratchet's decision: the reason to refuse replacing the
     * committed profile, or None to allow it. `committed` is the text of

@@ -12,13 +12,12 @@ import graft.dialect.TrinoFunctions
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
   *
-  * The Engine path registers the same functions directly on its own
+  * Sessions graft builds itself come from [[graft.Sessions]], which
+  * installs the same two rules and registers the same functions on the
   * session; this is the integration point for sessions graft does not
   * build itself (notebooks, Spark Connect servers, other apps).
-  * One resolution rule is injected ([[graft.dialect.TimeCastRule]]:
-  * Trino's `CAST(timestamp AS TIME)`, which Spark's own cast lacks);
-  * otherwise built-in Catalyst covers the whole promised surface
-  * (SURVEY.md §4).
+  * Two rules are injected ([[GraftExtensions.injectRules]]); otherwise
+  * built-in Catalyst covers the whole promised surface (SURVEY.md §4).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -29,9 +28,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           new ExpressionInfo("graft", name),
           builder))
     }
+    GraftExtensions.injectRules(ext)
+  }
+}
+
+object GraftExtensions {
+  /** The dialect's two analyzer rules: Trino's `CAST(timestamp AS
+    * TIME)`, which Spark's own cast lacks ([[graft.dialect.TimeCastRule]]),
+    * and standard empty-input ROLLUP/CUBE semantics — the () grouping
+    * set emits one row over empty input, where Spark emits none
+    * ([[graft.dialect.EmptyGroupingSetsRule]]). */
+  def injectRules(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(_ => graft.dialect.TimeCastRule)
-    // Standard empty-input ROLLUP/CUBE semantics (Trino/ANSI: the ()
-    // grouping set emits one row over empty input; Spark emits none).
     ext.injectPostHocResolutionRule(_ => graft.dialect.EmptyGroupingSetsRule)
   }
 }

@@ -1,41 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same dialect rules the Engine-built sessions get (uniform
-      // semantics across the library and service surfaces)
-      .withExtensions { ext =>
-        ext.injectResolutionRule(_ => graft.dialect.TimeCastRule)
-        ext.injectPostHocResolutionRule(_ => graft.dialect.EmptyGroupingSetsRule)
-      }
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE initial shuffle-partition count: deployment config, NOT a
-      // hardcoded 8x-cores — at local[32]/small SF that multiplier made
-      // every shuffle write 256 reducer partitions and tripled the full
-      // bench wall-clock (191.7s vs 68.0s measured at sf0.1). On a real
-      // cluster, size it to the input via SPARK_GRAFT_INITIAL_PARTITIONS.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      // Deliberately KEEP the default INT96 timestamp encoding: arrow reads
-      // INT96 as tz-NAIVE ns, matching DuckDB's naive timestamp[us] values.
-      // TIMESTAMP_MICROS would stamp isAdjustedToUTC=true and every
-      // timestamp column would come back tz-aware ≠ the naive oracle
-      // (verified: it flips fn_datetime/time_* red). The round-2
-      // fn_cast_types hash gap was the literals' NOT-NULL marking, fixed
-      // at the query (see Funcs "fn_cast_types").
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.silenceWindowWarn()
+    // Deliberately KEEP the default INT96 timestamp encoding: arrow reads
+    // INT96 as tz-NAIVE ns, matching DuckDB's naive timestamp[us] values.
+    // TIMESTAMP_MICROS would stamp isAdjustedToUTC=true and every
+    // timestamp column would come back tz-aware ≠ the naive oracle
+    // (verified: it flips fn_datetime/time_* red). The round-2
+    // fn_cast_types hash gap was the literals' NOT-NULL marking, fixed
+    // at the query (see Funcs "fn_cast_types").
+    val spark = Sessions.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (same contract as Bench): SPARK_GRAFT_ONLY
     // dumps a subset; the driver never sets it, so its runs stay total.

@@ -1,7 +1,6 @@
 package graft.dialect
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
 import org.apache.spark.sql.types.{DateType, DayTimeIntervalType, Decimal, DecimalType, DoubleType, IntegerType, LongType, StringType, TimestampType}
@@ -4751,10 +4750,6 @@ object TrinoFunctions {
       registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
   }
-
-  def registeredNames(spark: SparkSession): Seq[String] =
-    shims.keys.toSeq.filter(n =>
-      spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
 }
 
 /** Static math helpers behind the statistical dialect functions,

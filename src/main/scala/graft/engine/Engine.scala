@@ -12,10 +12,10 @@ import graft.security.Allowlists
   * db.QueryContext, our boundary is Spark driver→executor task
   * scheduling inside collect().
   *
-  * Session-level settings are applied ONCE at build (shuffle
-  * partitions, UTC, ANSI double-quoted identifiers for Trino dialect
-  * fidelity) — never mutated per query (safe for the concurrent tool
-  * calls the MCP server takes).
+  * Session-level settings are applied ONCE at build, by
+  * [[graft.Sessions]] (shuffle partitions, UTC, ANSI double-quoted
+  * identifiers for Trino dialect fidelity) — never mutated per query
+  * (safe for the concurrent tool calls the MCP server takes).
   */
 class Engine(
     val config: EngineConfig,
@@ -44,47 +44,9 @@ class Engine(
   @volatile var sessionMaxResultRows: Int = config.maxResultRows
 
   lazy val spark: SparkSession = {
-    val s = existing.getOrElse {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString)
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        // Trino's CAST(timestamp AS TIME) needs a resolution rule
-        // (dialect.TimeCastRule); sessions passed in via `existing`
-        // must install it themselves (GraftExtensions is the hook).
-        .withExtensions { ext =>
-          ext.injectResolutionRule(_ => graft.dialect.TimeCastRule)
-          ext.injectPostHocResolutionRule(_ => graft.dialect.EmptyGroupingSetsRule)
-        }
-        .appName(config.source)
-        .config("spark.sql.shuffle.partitions", cpus)
-        // AQE initial shuffle-partition count: deployment config, NOT a
-        // hardcoded 8x-cores — at local[32]/small SF that multiplier made
-        // every shuffle write 256 reducer partitions and tripled the full
-        // bench wall-clock (191.7s vs 68.0s measured at sf0.1). On a real
-        // cluster, size it to the input via SPARK_GRAFT_INITIAL_PARTITIONS.
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    }
-    // Trino quotes identifiers with "double quotes" (the sanitizer pins
-    // that, reference client.go:445); Spark defaults to backticks.
-    s.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-    // Trino has a first-class TIME type (unrestricted SELECT
-    // pass-through, reference client.go:284-290); Spark 4.1 ships
-    // TimeType behind a flag — enable it so TIME literals, make_time,
-    // EXTRACT, comparisons and parquet round-trips all work.
-    s.conf.set("spark.sql.timeType.enabled", "true")
-    // NOTE on string literals: Trino treats backslash as an ORDINARY
-    // character ('' is the only escape); Spark's parser processes
-    // C-style escapes. The dialect pre-pass doubles backslashes inside
-    // single-quoted literals (TrinoFunctions.preprocess) so the served
-    // SQL surface gets Trino semantics — '\d+' stays '\d+'. Spark's
-    // escapedStringLiterals flag is NOT the fix: it also stops ''
-    // from collapsing, which Trino requires.
-    graft.dialect.TrinoFunctions.register(s)
+    // a session handed in is switched to the served dialect too (once)
+    val s = existing.map(graft.Sessions.serve)
+      .getOrElse(graft.Sessions.build(config.source))
     dataDir.foreach(Tables.registerAll(s, _))
     // second catalog: the reference's flagship tpch.tiny example served
     // by an in-memory V2 TableCatalog (docs/tools.md:113-157)

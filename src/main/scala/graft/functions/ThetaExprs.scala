@@ -281,47 +281,6 @@ object ThetaExprs {
       copy(child = newChild)
   }
 
-  /** `theta_union_agg(sk)`: merge stored binary sketches → binary. */
-  case class ThetaUnionAgg(child: Expression,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends TypedImperativeAggregate[Union] with UnaryLike[Expression]
-      with DeclaredInputTypes {
-    override def prettyName: String = "theta_union_agg"
-    override def dataType: DataType = BinaryType
-    override def declaredInputTypes: Seq[DataType] = Seq(BinaryType)
-    override def nullable: Boolean = false
-
-    override def createAggregationBuffer(): Union = newUnion()
-
-    override def update(buf: Union, input: InternalRow): Union = {
-      val v = child.eval(input)
-      if (v != null)
-        buf.union(Memory.wrap(thetaPart(v.asInstanceOf[Array[Byte]])))
-      buf
-    }
-
-    override def merge(buf: Union, other: Union): Union = {
-      buf.union(other.getResult)
-      buf
-    }
-
-    override def eval(buf: Union): Any = buf.getResult.toByteArray
-
-    override def serialize(buf: Union): Array[Byte] = buf.getResult.toByteArray
-    override def deserialize(bytes: Array[Byte]): Union = {
-      val u = newUnion()
-      u.union(Memory.wrap(bytes))
-      u
-    }
-
-    override def withNewMutableAggBufferOffset(newOffset: Int): ThetaUnionAgg =
-      copy(mutableAggBufferOffset = newOffset)
-    override def withNewInputAggBufferOffset(newOffset: Int): ThetaUnionAgg =
-      copy(inputAggBufferOffset = newOffset)
-    override protected def withNewChildInternal(newChild: Expression): ThetaUnionAgg =
-      copy(child = newChild)
-  }
-
   /** `theta_estimate(sk)`: distinct-count estimate of a binary sketch.
     * Runs once per output row (CodegenFallback is fine off the hot
     * path). */
@@ -389,10 +348,6 @@ object ThetaExprs {
   def thetaSketchAgg(x: Column): Column =
     ColumnBridge.column(
       ThetaSketchAgg(ColumnBridge.expression(x)).toAggregateExpression())
-
-  def thetaUnionAgg(sk: Column): Column =
-    ColumnBridge.column(
-      ThetaUnionAgg(ColumnBridge.expression(sk)).toAggregateExpression())
 
   def thetaEstimate(sk: Column): Column =
     ColumnBridge.column(ThetaEstimate(ColumnBridge.expression(sk)))

@@ -51,12 +51,6 @@ object Similarity {
       lit(0L),
       (acc, v) => acc + v)
 
-  /** Cosine similarity, hash-stable variant (quantized dots, double
-    * combine — the 1e12 quantization scales cancel in the ratio). */
-  def cosineQuant(a: Column, b: Column): Column =
-    dotQuant(a, b).cast("double") /
-      sqrt(dotQuant(a, a).cast("double") * dotQuant(b, b).cast("double"))
-
   /** Brute-force top-k by cosine against one anchor vector. The anchor's
     * self-dot is computed once on the (single-row) broadcast side, not
     * re-derived per corpus row — same quantized sum, one less 64-element
@@ -144,12 +138,6 @@ object Similarity {
         dot(col("v_a"), col("v_b")) / sqrt(col("dd_a") * col("dd_b")))
       .select(col("id_a"), col("id_b"), col("cos_sim"))
   }
-
-  /** Embedding near-dup pairs via SRP-LSH: candidates ≥ threshold. */
-  def srpNearDupPairs(embeddings: DataFrame, idCol: String, vecCol: String,
-      bits: Int = 32, bands: Int = 4, cosThreshold: Double = 0.9): DataFrame =
-    srpCandidatePairs(embeddings, idCol, vecCol, bits, bands)
-      .filter(col("cos_sim") >= cosThreshold)
 
   /** Chunk bits sized to the corpus: 2^chunkBits buckets per band, so
     * expected occupancy n / 2^chunkBits stays near `targetOccupancy`.
@@ -813,11 +801,6 @@ object Similarity {
       anchorId: Long, k: Int, m: Int = 8, ksub: Int = 16,
       dims: Int = 64): DataFrame = {
     val dsub = dims / m
-    // Native quantized-L2 kernel (NativeExprsSpec pins it term-for-term
-    // against this exact zip_with/aggregate fold): same per-element IEEE
-    // sequence, codegen'd loop instead of interpreted lambda dispatch.
-    def qdist(a: Column, b: Column): Column =
-      graft.functions.NativeExprs.l2QuantD(a, b)
     val vecs = embeddings.select(col(idCol).cast("long").as("graft_id"),
       col(vecCol).as("graft_v"))
     // md5-ordered seed vectors: model-sized (ksub rows) — collected,

@@ -179,9 +179,9 @@ object Funcs {
     // lambda bodies DuckDB cannot express are unit-pinned instead).
     "fn_regexp_lambda" -> ((s, d) => {
       // the lambda form lives in the dialect FUNCTION registry (unlike
-      // unnest_lateral's pure text rewrite) — install it on this session
-      // the same way Engine does (idempotent re-registration)
-      graft.dialect.TrinoFunctions.register(s)
+      // unnest_lateral's pure text rewrite) — a no-op on graft's own
+      // sessions, which are built served
+      graft.Sessions.serve(s)
       graft.engine.Tables.sql(s, d, graft.dialect.TrinoFunctions.preprocess(
         """SELECT c_custkey,
           |  regexp_replace(c_name, '(\d+)',
@@ -216,7 +216,7 @@ object Funcs {
     // the ON-clause outcomes as the constants they deterministically
     // produce on this data (props is always {"k": int}).
     "fn_json_clauses" -> ((s, d) => {
-      graft.dialect.TrinoFunctions.register(s)
+      graft.Sessions.serve(s)
       graft.engine.Tables.sql(s, d, graft.dialect.TrinoFunctions.preprocess(
         """SELECT event_id,
           |  json_query(props, '$.k' WITH ARRAY WRAPPER) AS k_wrapped,
@@ -244,7 +244,7 @@ object Funcs {
     // ordinality + a typed value column. DuckDB has no JSON_TABLE —
     // the twin replays the two-items-per-row expansion as a UNION ALL.
     "fn_json_table" -> ((s, d) => {
-      graft.dialect.TrinoFunctions.register(s)
+      graft.Sessions.serve(s)
       graft.engine.Tables.sql(s, d, graft.dialect.TrinoFunctions.preprocess(
         """SELECT event_id, jt.ord, jt.v
           |FROM events, JSON_TABLE(
@@ -261,7 +261,7 @@ object Funcs {
     // per-branch NULL masking. The DuckDB twin replays each branch as
     // a guarded UNION ALL arm plus the both-empty outer arm.
     "fn_json_table_nested" -> ((s, d) => {
-      graft.dialect.TrinoFunctions.register(s)
+      graft.Sessions.serve(s)
       graft.engine.Tables.sql(s, d, graft.dialect.TrinoFunctions.preprocess(
         """SELECT event_id, jt.o, jt.v, jt.t
           |FROM events, JSON_TABLE(
@@ -284,7 +284,7 @@ object Funcs {
     // rendered lengths as constants — still an end-to-end gate through
     // preprocess → registry → codegen → parquet.
     "fn_spooky_bar" -> ((s, d) => {
-      graft.dialect.TrinoFunctions.register(s)
+      graft.Sessions.serve(s)
       graft.engine.Tables.sql(s, d, graft.dialect.TrinoFunctions.preprocess(
         """SELECT to_hex(spooky_hash_v2_64(to_utf8('hello'))) AS h64,
           |  to_hex(spooky_hash_v2_32(to_utf8('hello'))) AS h32,

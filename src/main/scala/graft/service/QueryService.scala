@@ -25,8 +25,6 @@ class QueryService(engine: Engine) {
     * end-to-end wall time. */
   final case class QueryResult(columns: Seq[String], rows: Seq[Seq[Any]],
       truncated: Boolean, queryId: String = "", wallMillis: Long = 0L) {
-    def toMaps: Seq[Map[String, Any]] =
-      rows.map(r => columns.zip(r).toMap)
     /** JSON array of objects in schema column order (the reference's
       * exact result shape, handlers.go:83). */
     def toJson: String =

@@ -88,18 +88,11 @@ object ClusterSmoke {
       ckpt: Option[String]): Map[String, String] = {
     val classesDir =
       new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-cluster executors are SEPARATE JVMs launched from
-      // SPARK_HOME — they must find the graft classes themselves
-      .config("spark.executor.extraClassPath", classesDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local-cluster executors are SEPARATE JVMs launched from
+    // SPARK_HOME — they must find the graft classes themselves
+    val spark = graft.Sessions.build("graft-cluster-smoke", cores = 8,
+      master = Some(master),
+      static = Map("spark.executor.extraClassPath" -> classesDir))
     // reliable checkpointing: Lineage.cut switches every iterative
     // operator to checkpoint() because this is set
     ckpt.foreach(spark.sparkContext.setCheckpointDir)

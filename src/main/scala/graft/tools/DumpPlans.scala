@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named queries to plans/<dir>/ as
   * <query>_<suffix>.txt — the before/after evidence files the
@@ -16,16 +15,7 @@ object DumpPlans {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.silenceWindowWarn()
+    val spark = graft.Sessions.build("graft-dump-plans")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -4,8 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
-
 /** Differential SQL fuzzer: generate deterministic random queries in
   * the ANSI subset BOTH Spark and DuckDB implement with identical
   * semantics, run each through the engine's dialect path
@@ -963,21 +961,9 @@ object FuzzDump {
     val outDir = args.lift(1).getOrElse("/tmp/fuzz_out")
     val n = args.lift(2).map(_.toInt).getOrElse(400)
     val seed = args.lift(3).map(_.toLong).getOrElse(20260814L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-fuzz")
-      // full dialect extension set — the fuzzer must exercise the same
-      // rules (EmptyGroupingSetsRule etc.) the engine surface runs with
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.silenceWindowWarn()
-    graft.dialect.TrinoFunctions.register(spark) // v8 json productions
+    // the full served dialect (EmptyGroupingSetsRule, the v8 json
+    // productions, …): the fuzzer exercises what the engine surface runs
+    val spark = graft.Sessions.build("graft-fuzz")
     new java.io.File(outDir).mkdirs()
 
     var sqls = Map.empty[String, String]

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.config.EngineConfig
 import graft.engine.Engine
@@ -40,18 +39,7 @@ object FuzzStatements {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val n = args.lift(1).map(_.toInt).getOrElse(200)
     val seed = args.lift(2).map(_.toLong).getOrElse(20260814L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-fuzz-statements")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.silenceWindowWarn()
+    val spark = graft.Sessions.build("graft-fuzz-statements")
     val engine = new Engine(EngineConfig.fromEnv(Map.empty).toOption.get,
       Some(sfDir), Some(spark))
     val qs = new QueryService(engine)

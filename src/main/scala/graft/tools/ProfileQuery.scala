@@ -1,27 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
 
-/** Ad-hoc per-job wall-clock profiler for one bench query: prints every
-  * Spark job's duration plus the gaps between jobs (= driver-side time:
-  * planning, codegen compile, collect processing). Usage:
-  *   SPARK_GRAFT_Q=embed_pq_topk_md5 sbt "runMain graft.tools.ProfileQuery"
+/** Per-job wall-clock profiler for one inventory query: after one
+  * untimed warm-up run, times `reps` runs of the query's served plan
+  * (`queryExecution.toRdd`, what servebench and EXPLAIN ANALYZE run, so
+  * count pruning hides no projection) and prints, per run, every Spark
+  * job's duration — the gaps between jobs are driver-side time:
+  * planning, codegen compile, collect processing. `explain` prints the
+  * formatted plan first. Usage:
+  *   SPARK_GRAFT_SF_DIR=<dir> sbt "runMain graft.tools.ProfileQuery <name> [reps] [explain]"
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val qname = sys.env.getOrElse("SPARK_GRAFT_Q", "embed_pq_topk_md5")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.silenceWindowWarn()
+    val qname = args(0)
+    val reps = args.lift(1).filter(_.forall(_.isDigit)).map(_.toInt).getOrElse(3)
+    val spark = graft.Sessions.build("graft-profile")
     val jobs = collection.concurrent.TrieMap.empty[Int, (Long, String)]
     val lines = collection.mutable.ArrayBuffer.empty[(Long, String)]
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -40,14 +35,18 @@ object ProfileQuery {
         }
     })
     val fn = graft.SparkEntry.queries(qname)
-    fn(spark, sfDir).count() // warmup
-    lines.clear()
-    val t0 = System.nanoTime()
-    fn(spark, sfDir).count()
-    val total = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(300)
-    println(f"== $qname total ${total}%.3fs ==")
-    lines.sortBy(_._1).foreach(l => println(l._2))
+    if (args.contains("explain")) fn(spark, sfDir).explain("formatted")
+    fn(spark, sfDir).queryExecution.toRdd.count() // warmup
+    Thread.sleep(300) // job events arrive asynchronously; let them drain
+    (1 to reps).foreach { i =>
+      lines.synchronized(lines.clear())
+      val t0 = System.nanoTime()
+      val n = fn(spark, sfDir).queryExecution.toRdd.count()
+      val total = (System.nanoTime() - t0) / 1e9
+      Thread.sleep(300)
+      println(f"== $qname rep$i rows=$n total ${total}%.3fs ==")
+      lines.synchronized(lines.sortBy(_._1)).foreach(l => println(l._2))
+    }
     spark.stop()
   }
 }

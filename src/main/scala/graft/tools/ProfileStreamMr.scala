@@ -2,7 +2,6 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.Streams
@@ -30,15 +29,7 @@ object ProfileStreamMr {
     val users = args.lift(1).map(_.toInt).getOrElse(5000)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(10)
     val horizonArg = args.lift(3).map(_.toLong).getOrElse(600L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile-stream-mr")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build("graft-profile-stream-mr")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

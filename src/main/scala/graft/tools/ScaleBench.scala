@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scaling measurement: run a set of queries on two dirs (e.g. sf0.1
   * and its 10× synthesis from [[SynthScale]]) in ONE JVM, warm + 2
@@ -21,24 +20,7 @@ object ScaleBench {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val big = args.lift(1).getOrElse("/tmp/sfsynth1")
     val queries = args.lift(2).map(_.split(",").toSeq).getOrElse(DefaultQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE initial shuffle-partition count: deployment config, NOT a
-      // hardcoded 8x-cores — at local[32]/small SF that multiplier made
-      // every shuffle write 256 reducer partitions and tripled the full
-      // bench wall-clock (191.7s vs 68.0s measured at sf0.1). On a real
-      // cluster, size it to the input via SPARK_GRAFT_INITIAL_PARTITIONS.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.silenceWindowWarn()
+    val spark = graft.Sessions.build("graft-scale-bench")
 
     def time(name: String, dir: String): (Double, Long) = {
       val fn = graft.SparkEntry.queries(name)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling sweep for the SERVING-OP families (persisted-index build /
@@ -24,19 +23,7 @@ import org.apache.spark.sql.functions._
 object ScaleServing {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleServing <dir1> [dir2 ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-serving")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.silenceWindowWarn()
+    val spark = graft.Sessions.build("graft-scale-serving")
 
     def timed[A](f: => A): (Double, A) = {
       val t0 = System.nanoTime()

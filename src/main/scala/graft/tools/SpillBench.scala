@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Memory-pressure evidence: run the heaviest pipeline/relational
   * queries at 100× data with the executor heap CAPPED so the sorts and
@@ -55,23 +54,15 @@ object SpillBench {
     // same-commit reruns). 4 tasks at 2 GB (~580 MB peak each) is
     // deterministic-stable, 3/3 reruns, ~1.4x the 8-task wall time.
     val heapGb = math.max(1L, Runtime.getRuntime.maxMemory() / (1024L * 1024 * 1024))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(2 * heapGb, Runtime.getRuntime.availableProcessors().toLong).toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(
+      math.min(2 * heapGb, Runtime.getRuntime.availableProcessors().toLong).toInt)
     val shufParts = sys.env.getOrElse("SPILL_SHUFFLE_PARTS", "256")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-spill-bench")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPILL_MAX_PART_BYTES", "33554432"))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", shufParts))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.silenceWindowWarn()
+    val spark = graft.Sessions.build("graft-spill-bench", cores = cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", shufParts)
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPILL_MAX_PART_BYTES", "33554432"))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", shufParts))
 
     val memSpill = new AtomicLong
     val diskSpill = new AtomicLong

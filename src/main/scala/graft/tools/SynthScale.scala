@@ -33,15 +33,7 @@ object SynthScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/sfsynth1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-synth-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build("graft-synth-scale")
 
     def table(n: String): DataFrame = graft.engine.Tables.load(spark, src, n)
 

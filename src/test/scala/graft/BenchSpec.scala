@@ -1,11 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The BENCH_LOCAL.json refresh ratchet: a committed profile may only
   * be replaced by a run within the drift bound, and a profile the gate
-  * cannot read refuses the refresh instead of disabling the gate. */
-class BenchSpec extends AnyFunSuite {
+  * cannot read refuses the refresh instead of disabling the gate. A
+  * query that throws ends the run instead of timing as a success. */
+class BenchSpec extends SparkSpec {
 
   private val profile =
     """{"metric":"total","value":65.5,"unit":"s","queries":{"a":{"metric":"q","value":1.0}}}"""
@@ -29,5 +30,30 @@ class BenchSpec extends AnyFunSuite {
         val refused = Bench.ratchetRefusal(Some(txt), 1.0, 0.10)
         assert(refused.exists(_.contains("metric")), s"$txt -> $refused")
       }
+  }
+
+  test("a query that throws fails the bench run, naming the query") {
+    val ok: (SparkSession, String) => DataFrame = (s, _) => s.range(3).toDF()
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    // throws in the warm-up pass
+    val broken: (SparkSession, String) => DataFrame =
+      (s, _) => s.sql("SELECT no_such_column FROM range(1)")
+    // passes the warm-up, throws in the timed pass
+    val flaky: (SparkSession, String) => DataFrame = (s, _) =>
+      if (calls.incrementAndGet() > 1) throw new IllegalStateException("injected")
+      else s.range(1).toDF()
+    assert(Bench.timeQueries(spark, "", Seq("ok" -> ok), 3).map(_._1) == Seq("ok"))
+    val warm = intercept[Bench.QueryFailed](
+      Bench.timeQueries(spark, "", Seq("ok" -> ok, "broken" -> broken), 3))
+    assert(warm.getMessage.contains("query broken failed"), warm.getMessage)
+    val timed = intercept[Bench.QueryFailed](
+      Bench.timeQueries(spark, "", Seq("ok" -> ok, "flaky" -> flaky), 3))
+    assert(timed.getMessage == "query flaky failed: injected")
+  }
+
+  test("reference gate: only an explicit SPARK_GRAFT_CPUS=32 counts") {
+    assert(!Bench.referenceCores(Map.empty)) // a bare run, whatever the host's cores
+    assert(!Bench.referenceCores(Map("SPARK_GRAFT_CPUS" -> "4")))
+    assert(Bench.referenceCores(Map("SPARK_GRAFT_CPUS" -> "32")))
   }
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for unit specs (small local[2]; the
-  * driver's correctness/bench harnesses build their own sessions). */
+/** Shared local SparkSession for unit specs: a small local[2] session
+  * from the same factory as every graft session, so specs run the
+  * served dialect whatever order they run in. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -14,19 +15,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      // same dialect rules the Engine-built sessions get
-      .withExtensions { ext =>
-        ext.injectResolutionRule(_ => graft.dialect.TimeCastRule)
-        ext.injectPostHocResolutionRule(_ => graft.dialect.EmptyGroupingSetsRule)
-      }
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
+    val s = Sessions.build("graft-test", cores = 2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

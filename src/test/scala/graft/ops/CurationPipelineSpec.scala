@@ -66,7 +66,6 @@ class CurationPipelineSpec extends SparkSpec {
     assert(rows(3) > 0.0)
     assert(rows(4) == 0.0) // empty input pinned to 0
     // SQL surface (registered graft native)
-    graft.dialect.TrinoFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT deflate_ratio('spam spam spam spam spam spam spam spam')").head.getDouble(0)
     assert(viaSql > 0.0 && viaSql < 1.0)

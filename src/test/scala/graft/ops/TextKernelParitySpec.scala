@@ -15,15 +15,9 @@ import graft.engine.Tables
 class TextKernelParitySpec extends SparkSpec {
   import spark.implicits._
 
-  // The compositions resolve `greatest` by name. graft's sessions (the
-  // Engine's, and any that served a Trino-dialect query) carry Trino's
-  // NULL-propagating `greatest`, which makes a NULL document's
-  // shingles NULL; Spark's own skips NULLs and gave `[""]`. Compare in
-  // the served dialect, whatever specs ran before this one.
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    graft.dialect.TrinoFunctions.register(spark)
-  }
+  // The compositions resolve `greatest` by name. graft's sessions carry
+  // Trino's NULL-propagating `greatest`, which makes a NULL document's
+  // shingles NULL; Spark's own skips NULLs and gave `[""]`.
 
   // ---- reference compositions ----
 

@@ -1065,7 +1065,6 @@ class StreamsSpec extends SparkSpec {
     // append mode — JSON shredding is exactly the kind of per-row
     // transform an ingest stream does at scale
     implicit val sqlCtx = spark.sqlContext
-    graft.dialect.TrinoFunctions.register(spark)
     def shred(view: String) = graft.dialect.TrinoFunctions.preprocess(
       s"""SELECT jt.id, jt.v, jt.t FROM $view, JSON_TABLE(j, '$$' COLUMNS(
          |  id bigint PATH '$$.id',

@@ -37,7 +37,6 @@ class FuzzSpec extends SparkSpec {
   }
 
   test("every generated query executes through the dialect path") {
-    graft.dialect.TrinoFunctions.register(spark) // v8 json productions
     (0 until 60).foreach { i =>
       val sql = FuzzDump.genQuery(555000L + i)
       val pre = graft.dialect.TrinoFunctions.preprocess(sql)
