@@ -1466,14 +1466,19 @@ object MatchRecognize {
   }
 
   /** Replace every `<relation> MATCH_RECOGNIZE ( … )` span in `sql`
-    * with a registered temp view of the computed result. `relate`
-    * resolves the relation text (through the caller's namespace rules);
-    * `register` installs the result DataFrame and returns its name.
-    * Left = a user-facing parse/validation error. */
-  def spliceAll(sql: String, relate: String => DataFrame,
-      register: DataFrame => String): Either[String, String] = {
+    * with a placeholder relation name (`__match_recognize_<i>`) and
+    * compute each span's result. `relate(relation, earlier)` plans the
+    * relation text through the caller's statement rules, given the
+    * spans computed so far (a later span's relation may read an earlier
+    * placeholder). Right = the spliced text and each placeholder's
+    * result, in splice order; Left = a user-facing parse/validation
+    * error. Nothing is registered in the catalog. */
+  def spliceAll(sql: String,
+      relate: (String, Seq[(String, DataFrame)]) => DataFrame)
+      : Either[String, (String, Seq[(String, DataFrame)])] = {
     try {
       var cur = sql
+      val spans = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
       var m = MrToken.findFirstMatchIn(stripLiterals(cur))
       var guard = 0
       while (m.isDefined) {
@@ -1520,12 +1525,12 @@ object MatchRecognize {
         }
         if (bodyEnd < 0) fail("unbalanced MATCH_RECOGNIZE parentheses")
         val spec = parseClause(cur.substring(j + 1, bodyEnd))
-        val result = run(relate(relation), spec)
-        val view = register(result)
-        cur = cur.substring(0, relStart) + view + cur.substring(bodyEnd + 1)
+        val placeholder = s"__match_recognize_${spans.length}"
+        spans += placeholder -> run(relate(relation, spans.toSeq), spec)
+        cur = cur.substring(0, relStart) + placeholder + cur.substring(bodyEnd + 1)
         m = MrToken.findFirstMatchIn(stripLiterals(cur))
       }
-      Right(cur)
+      Right((cur, spans.toSeq))
     } catch {
       case e: IllegalArgumentException => Left(e.getMessage)
     }

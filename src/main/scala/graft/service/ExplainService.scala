@@ -1,7 +1,8 @@
 package graft.service
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 import graft.engine.Engine
 import graft.security.ReadOnlyGuard
@@ -35,87 +36,40 @@ class ExplainService(engine: Engine) {
         "queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to enable write " +
         "operations (at your own risk)")
 
-    // same type-aware ambiguity retry as QueryService.buildStatement:
-    // EXPLAIN of a row-splat UNNEST or an unprojected-key WITH TIES
-    // must explain the plan the execute path would run
-    val first = explainOpts(stripped, f,
-      graft.dialect.TrinoFunctions.PreprocessOpts())
-    first match {
-      case Left(err) =>
-        val up = stripped.toUpperCase
-        val wantSplat = up.contains("UNNEST") &&
-          (err.contains("UDTF_ALIAS_NUMBER_MISMATCH") ||
-            (err.contains("number of aliases") && err.contains("explode")))
-        val wantTies = up.contains("WITH TIES") &&
-          (err.contains("UNRESOLVED_COLUMN") || err.contains("MISSING_GROUP_BY"))
-        if (!wantSplat && !wantTies) first
-        else explainOpts(stripped, f, graft.dialect.TrinoFunctions
-            .PreprocessOpts(unnestRowSplat = wantSplat,
-              tiesInBlock = wantTies)) match {
-          case r @ Right(_) => r
-          case Left(_) => first
-        }
-      case ok => ok
+    // the plan execute_query would run (one statement pipeline), then
+    // rendered in the requested format
+    Statements.build(engine, stripped).flatMap { df =>
+      try Right(Seq(render(df.queryExecution, f)))
+      catch { case e: Throwable =>
+        Left(s"query explanation failed: ${Option(e.getMessage).getOrElse(e.toString).linesIterator.take(3).mkString(" ")}")
+      }
     }
   }
 
-  private def explainOpts(stripped: String, f: String,
-      opts: graft.dialect.TrinoFunctions.PreprocessOpts)
-      : Either[String, Seq[Map[String, Any]]] = {
-    val mrViews = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      val pre = graft.dialect.TrinoFunctions.preprocess(stripped, opts)
-      // MATCH_RECOGNIZE splice (same rewrite as QueryService): EXPLAIN
-      // of a row-pattern query explains the spliced plan
-      val spliced = graft.dialect.MatchRecognize.spliceAll(pre,
-        rel => engine.spark.sql(s"SELECT * FROM $rel"),
-        df => {
-          val n = s"graft_mr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-          df.createOrReplaceTempView(n)
-          mrViews += n
-          n
-        }) match {
-        case Right(s) => s
-        case Left(err) => return Left(err)
-      }
-      val qe = engine.spark.sql(spliced).queryExecution
-      val text = f match {
-        case "VALIDATE" =>
-          qe.assertAnalyzed()
-          return Right(Seq(Map("Valid" -> true)))
-        case "LOGICAL" => qe.optimizedPlan.treeString
-        case "IO" =>
-          qe.assertAnalyzed()
-          val scans = collectScans(qe.executedPlan)
-          if (scans.isEmpty) "no file sources"
-          else scans.map {
-            case f: FileSourceScanExec =>
-              val md = f.metadata
-              s"Scan ${f.tableIdentifier.map(_.toString).getOrElse(f.nodeName)}\n" +
-                s"  Location: ${md.getOrElse("Location", "?")}\n" +
-                s"  ReadSchema: ${md.getOrElse("ReadSchema", "?")}\n" +
-                s"  PushedFilters: ${md.getOrElse("PushedFilters", "[]")}\n" +
-                s"  PartitionFilters: ${md.getOrElse("PartitionFilters", "[]")}"
-            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-              // V2 sources (the tpch.tiny catalog): the scan's own
-              // description carries table + pruned columns
-              s"Scan ${b.scan.description()}\n" +
-                s"  ReadSchema: ${b.scan.readSchema().simpleString}"
-            case other => s"Scan ${other.nodeName}"
-          }.mkString("\n")
-        case _ => // "" or DISTRIBUTED
-          qe.explainString(org.apache.spark.sql.execution.FormattedMode)
-      }
-      Right(Seq(Map("Query Plan" -> text)))
-    } catch {
-      case e: Throwable =>
-        Left(s"query explanation failed: ${Option(e.getMessage).getOrElse(e.toString).linesIterator.take(3).mkString(" ")}")
-    } finally mrViews.foreach { v =>
-      // drop the splice's temp views: the explain text is already
-      // rendered from the analyzed plan, the view is dead weight
-      try engine.spark.catalog.dropTempView(v)
-      catch { case _: Throwable => () }
-    }
+  private def render(qe: QueryExecution, f: String): Map[String, Any] = f match {
+    // analysis already passed (the pipeline analyzes eagerly)
+    case "VALIDATE" => Map("Valid" -> true)
+    case "LOGICAL" => Map("Query Plan" -> qe.optimizedPlan.treeString)
+    case "IO" =>
+      val scans = collectScans(qe.executedPlan)
+      Map("Query Plan" -> (if (scans.isEmpty) "no file sources"
+      else scans.map {
+        case f: FileSourceScanExec =>
+          val md = f.metadata
+          s"Scan ${f.tableIdentifier.map(_.toString).getOrElse(f.nodeName)}\n" +
+            s"  Location: ${md.getOrElse("Location", "?")}\n" +
+            s"  ReadSchema: ${md.getOrElse("ReadSchema", "?")}\n" +
+            s"  PushedFilters: ${md.getOrElse("PushedFilters", "[]")}\n" +
+            s"  PartitionFilters: ${md.getOrElse("PartitionFilters", "[]")}"
+        case b: BatchScanExec =>
+          // V2 sources (the tpch.tiny catalog): the scan's own
+          // description carries table + pruned columns
+          s"Scan ${b.scan.description()}\n" +
+            s"  ReadSchema: ${b.scan.readSchema().simpleString}"
+        case other => s"Scan ${other.nodeName}"
+      }.mkString("\n")))
+    case _ => // "" or DISTRIBUTED
+      Map("Query Plan" -> qe.explainString(FormattedMode))
   }
 
   /** File + V2 batch scans in the physical plan, descending into
@@ -125,7 +79,6 @@ class ExplainService(engine: Engine) {
     plan.collect {
       case a: AdaptiveSparkPlanExec => collectScans(a.inputPlan)
       case f: FileSourceScanExec => Seq(f)
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        Seq(b)
+      case b: BatchScanExec => Seq(b)
     }.flatten
 }

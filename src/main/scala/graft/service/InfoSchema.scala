@@ -1,6 +1,9 @@
 package graft.service
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.AliasIdentifier
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.types._
 
 import graft.engine.Engine
@@ -10,17 +13,17 @@ import graft.engine.Engine
   * the unrestricted query pass-through (reference
   * internal/trino/client.go:284-290 — the remote Trino serves these
   * natively). Spark's session catalog has no such schema, so the
-  * execute path rewrites those references (outside string literals) to
-  * two session temp views rebuilt from `spark.catalog` listings at
-  * query time, allowlist-filtered exactly like the metadata tools.
+  * statement pipeline ([[Statements]]) renames those relations in the
+  * parsed plan to four session temp views rebuilt from `spark.catalog`
+  * listings at query time, allowlist-filtered exactly like the metadata
+  * tools.
   *
   * The listings are driver-side metadata (bounded by table count, never
   * by data volume), so refresh-per-query is safe at any corpus scale.
   * Supported spellings: `information_schema.tables`, an optional
-  * catalog qualifier (`memory.information_schema.columns`), any case.
-  * Double-quoted spellings (`"information_schema"."tables"`) are not
-  * rewritten — the sanitizer-visible unquoted form is what the
-  * reference's own clients emit.
+  * catalog qualifier (`memory.information_schema.columns`), any case,
+  * quoted or not. Text elsewhere (string literals, comments) is never
+  * touched: only relation names in the parsed tree are.
   */
 object InfoSchema {
 
@@ -29,58 +32,21 @@ object InfoSchema {
   val SchemataView = "graft_info_schema_schemata"
   val ViewsView = "graft_info_schema_views"
 
-  private val Ref =
-    """(?i)(?:[A-Za-z_][A-Za-z0-9_]*\s*\.\s*)?information_schema\s*\.\s*(tables|columns|schemata|views)""".r
+  private val Views = Map("tables" -> TablesView, "columns" -> ColumnsView,
+    "schemata" -> SchemataView, "views" -> ViewsView)
 
-  /** True when the query references information_schema outside quotes. */
-  def references(sql: String): Boolean = findSpans(sql).nonEmpty
-
-  /** Replace information_schema references (outside string literals and
-    * quoted identifiers) with the shim view names. */
-  def rewrite(sql: String): String = {
-    val spans = findSpans(sql)
-    if (spans.isEmpty) sql
-    else {
-      val sb = new StringBuilder
-      var pos = 0
-      spans.foreach { case (start, end, target) =>
-        sb.append(sql.substring(pos, start)).append(target)
-        pos = end
-      }
-      sb.append(sql.substring(pos)).toString
-    }
-  }
-
-  /** (start, end, replacement) for each match outside '…' / "…" runs. */
-  private def findSpans(sql: String): Seq[(Int, Int, String)] =
-    Ref.findAllMatchIn(sql).collect {
-      case m if !inQuotes(sql, m.start) =>
-        val target = m.group(1).toLowerCase match {
-          case "tables" => TablesView
-          case "columns" => ColumnsView
-          case "schemata" => SchemataView
-          case _ => ViewsView
-        }
-        (m.start, m.end, target)
-    }.toSeq
-
-  /** Whether position `at` falls inside a single-quoted string or
-    * double-quoted identifier ('' and "" escapes respected). */
-  private def inQuotes(sql: String, at: Int): Boolean = {
-    var i = 0
-    var quote: Char = 0
-    while (i < at) {
-      val c = sql.charAt(i)
-      if (quote == 0) { if (c == '\'' || c == '"') quote = c }
-      else if (c == quote) {
-        // doubled quote = escape inside the run; consume both
-        if (i + 1 < sql.length && sql.charAt(i + 1) == quote) i += 1
-        else quote = 0
-      }
-      i += 1
-    }
-    quote != 0
-  }
+  /** The shim relation a parsed `[catalog.]information_schema.<t>`
+    * name stands for (any case, quoted or not), aliased
+    * `information_schema.<t>` so column qualifiers written against the
+    * Trino name still resolve; None for every other name. */
+  def relation(parts: Seq[String]): Option[LogicalPlan] =
+    (parts.map(_.toLowerCase) match {
+      case Seq(_, "information_schema", t) => Some(t)
+      case Seq("information_schema", t) => Some(t)
+      case _ => None
+    }).flatMap(t => Views.get(t).map(view =>
+      SubqueryAlias(AliasIdentifier(t, Seq("information_schema")),
+        UnresolvedRelation(Seq(view)))))
 
   private val tablesSchema = StructType(Seq(
     StructField("table_catalog", StringType, nullable = false),
@@ -98,7 +64,7 @@ object InfoSchema {
     StructField("is_nullable", StringType, nullable = false),
     StructField("data_type", StringType, nullable = false)))
 
-  /** Rebuild both views from the current catalog state (allowlist-
+  /** Rebuild the four views from the current catalog state (allowlist-
     * filtered via MetadataService — the same trust boundary as
     * list_tables / get_table_schema). */
   def refresh(engine: Engine): Unit = {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import graft.engine.Engine
 import graft.security.{Attribution, ReadOnlyGuard}
 
-/** execute_query: guard → spark.sql → bounded collect → rows, mirroring
+/** execute_query: guard → [[Statements]] → bounded collect → rows, mirroring
   * the reference's hot path (reference internal/trino/client.go:501-630):
   * trailing-semicolon strip, read-only guard (unless
   * TRINO_ALLOW_WRITE_QUERIES), per-query timeout — realized here as a
@@ -109,7 +109,7 @@ class QueryService(engine: Engine) {
         // substitute NULL for parameters: analysis-only, never executed
         val probed = PreparedStatements.substitute(sql,
           Seq.fill(PreparedStatements.paramCount(sql))("NULL"))
-        return probed.flatMap(buildStatement).flatMap { df =>
+        return probed.flatMap(Statements.build(engine, _)).flatMap { df =>
           val rows = df.schema.fields.toSeq.map(f =>
             org.apache.spark.sql.Row(f.name, "", "", "",
               TypeNames.trino(f.dataType), 0, false))
@@ -157,8 +157,12 @@ class QueryService(engine: Engine) {
         "queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to enable write " +
         "operations (at your own risk)")
 
-    // preprocess rejects constructs with no Spark translation (e.g.
-    // `time with time zone`) via IllegalArgumentException → clean Left
+    // One error path for the SHOW routes below: a throwing catalog or
+    // listing surfaces as a tool error, never an exception out of
+    // execute() (SHOW SCHEMAS FROM nonexistent_catalog, r10 ADVICE).
+    def serve(df: => DataFrame): Either[String, QueryResult] =
+      (try Right(df) catch { case e: Throwable => Left(Statements.failed(e)) })
+        .flatMap(collectBounded)
     // SHOW STATS FOR t — Trino's statistics surface (pass-through in the
     // reference); computed here since Spark's SHOW has no STATS form.
     // Under the opt-in SQL allowlist flag the same table gate applies.
@@ -180,55 +184,21 @@ class QueryService(engine: Engine) {
       }
     ShowStats.matchStats(stripped).foreach { t =>
       showGate(t).foreach(err => return Left(err))
-      val df =
-        try ShowStats.forTable(engine, t)
-        catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-      return collectBounded(df)
+      return serve(ShowStats.forTable(engine, t))
     }
-    // SHOW STATS FOR (SELECT ...): the inner query runs through the
-    // same dialect/allowlist/info_schema pipeline as a standalone
-    // statement, then the one-pass stats aggregate over its result.
-    // (The whole statement already passed the read-only guard above —
-    // its write-keyword scan covers the inner text too.)
+    // SHOW STATS FOR (SELECT ...): the inner query is planned like a
+    // standalone statement, then the one-pass stats aggregate runs over
+    // its result. (The whole statement already passed the read-only
+    // guard above — its write-keyword scan covers the inner text too.)
     ShowStats.matchStatsQuery(stripped).foreach { inner =>
-      val innerSql0 =
-        try graft.dialect.TrinoFunctions.preprocess(inner)
-        catch { case e: IllegalArgumentException => return Left(e.getMessage) }
-      val mrViews = scala.collection.mutable.ArrayBuffer.empty[String]
-      try {
-        val innerSql = spliceMatchRecognize(innerSql0, mrViews) match {
-          case Right(s2) => s2
-          case Left(err) => return Left(err)
-        }
-        if (engine.config.enforceSqlAllowlists) {
-          val parsed =
-            try engine.spark.sessionState.sqlParser.parsePlan(innerSql)
-            catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-          graft.security.SqlAllowlist.check(parsed, engine.allowlists,
-              engine.sessionCatalog, engine.sessionSchema)
-            .foreach(err => return Left(err))
-        }
-        val resolved =
-          if (InfoSchema.references(innerSql)) {
-            try InfoSchema.refresh(engine)
-            catch { case e: Throwable =>
-              return Left(s"query execution failed: ${clip(e)}") }
-            InfoSchema.rewrite(innerSql)
-          } else innerSql
-        val df =
-          try ShowStats.forDataFrame(engine, runSql(resolved))
-          catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-        return collectBounded(df)
-      } finally dropMrViews(mrViews)
+      return Statements.build(engine, inner)
+        .flatMap(df => serve(ShowStats.forDataFrame(engine, df)))
     }
     // SHOW CREATE TABLE / SHOW SESSION — also reference pass-throughs
     // Spark can't serve on temp-view-backed relations (ShowMeta).
     ShowMeta.matchCreateTable(stripped).foreach { t =>
       showGate(t).foreach(err => return Left(err))
-      val df =
-        try ShowMeta.createTable(engine, t)
-        catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-      return collectBounded(df)
+      return serve(ShowMeta.createTable(engine, t))
     }
     ShowMeta.matchSession(stripped).foreach { like =>
       return collectBounded(ShowMeta.session(engine, like))
@@ -237,38 +207,23 @@ class QueryService(engine: Engine) {
     // synonyms emitting Column/Type/Extra/Comment; Spark's own DESCRIBE
     // has a different shape (col_name/data_type/comment), so route to
     // the same renderer get_table_schema uses. Multi-token DESCRIBE
-    // forms (FUNCTION/QUERY/EXTENDED) still pass through to spark.sql.
+    // forms (FUNCTION/QUERY/EXTENDED) still pass through to Spark.
     ShowMeta.matchDescribe(stripped).foreach { case (t, like) =>
       showGate(t).foreach(err => return Left(err))
-      val df =
-        try ShowMeta.describeTable(engine, t, like)
-        catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-      return collectBounded(df)
+      return serve(ShowMeta.describeTable(engine, t, like))
     }
     // SHOW CATALOGS / SCHEMAS / TABLES — Trino's single-column listing
     // shapes (Catalog / Schema / Table); Spark's own forms emit
     // different columns, so intercept and serve from the allowlist-
     // filtered metadata surface (same listings as the MCP tools).
     ShowMeta.matchCatalogs(stripped).foreach { like =>
-      val df =
-        try ShowMeta.catalogs(engine, like)
-        catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-      return collectBounded(df)
+      return serve(ShowMeta.catalogs(engine, like))
     }
-    // same try/catch-to-Left as the sibling routes: SHOW SCHEMAS FROM
-    // nonexistent_catalog must surface the consistent error string, not
-    // an AnalysisException out of execute() (r10 ADVICE)
     ShowMeta.matchSchemas(stripped).foreach { case (c, like) =>
-      val df =
-        try ShowMeta.schemas(engine, c, like)
-        catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-      return collectBounded(df)
+      return serve(ShowMeta.schemas(engine, c, like))
     }
     ShowMeta.matchTables(stripped).foreach { case (q, like) =>
-      val df =
-        try ShowMeta.tables(engine, q, like)
-        catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-      return collectBounded(df)
+      return serve(ShowMeta.tables(engine, q, like))
     }
     // SHOW FUNCTIONS — function discovery over the dialect surface
     // (reference pass-through; Spark's own SHOW FUNCTIONS has the wrong
@@ -280,178 +235,33 @@ class QueryService(engine: Engine) {
     // EXPLAIN statement forms Spark's parser rejects — Trino's
     // (TYPE ...) options and EXPLAIN ANALYZE — plus plain EXPLAIN q,
     // normalized to Trino's "Query Plan" column (Spark-mode spellings
-    // like EXPLAIN EXTENDED pass through to spark.sql unchanged).
+    // like EXPLAIN EXTENDED pass through to Spark's parser). The
+    // explained query is planned by Statements like any other, so the
+    // allowlist gate, USE and MATCH_RECOGNIZE apply to it unchanged.
     ExplainStatements.matchStatement(stripped).foreach {
       case Left(err) => return Left(err)
-      case Right(form) =>
-        val inner = form match {
-          case ExplainStatements.Typed(_, _, q) => q
-          case ExplainStatements.Analyze(_, q) => q
-          case ExplainStatements.Plain(q) => q
-        }
-        // same relation-level gate the plain-SQL path applies
-        if (engine.config.enforceSqlAllowlists) {
-          val parsed =
-            try engine.spark.sessionState.sqlParser.parsePlan(
-              graft.dialect.TrinoFunctions.preprocess(inner))
-            catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-          graft.security.SqlAllowlist.check(parsed, engine.allowlists,
-              engine.sessionCatalog, engine.sessionSchema)
-            .foreach(err => return Left(err))
-        }
-        form match {
-          case ExplainStatements.Analyze(verbose, q) =>
-            return buildStatement(q).flatMap { df =>
-              val group = s"graft-query-${UUID.randomUUID()}"
-              val start = System.nanoTime()
-              // Execute the DataFrame's OWN plan (df.count() would build
-              // and run a different aggregate plan, leaving this plan's
-              // runtime metrics at zero): toRdd is the executed plan's
-              // row stream; counting it materializes nothing driver-side.
-              withTimeoutAndCancel(group)(df.queryExecution.toRdd.count()).map { n =>
-                val wall = (System.nanoTime() - start) / 1000000L
-                QueryResult(Seq("Query Plan"),
-                  Seq(Seq(ExplainStatements.renderAnalyzed(df, n, wall, verbose))),
-                  truncated = false, queryId = group, wallMillis = wall)
-              }
-            }
-          case ExplainStatements.Typed(tpe, _, q) =>
-            return explainToResult(q, if (tpe == "DISTRIBUTED") "" else tpe)
-          case ExplainStatements.Plain(q) =>
-            return explainToResult(q, "")
-        }
-    }
-    // The standard statement pipeline — shared with the embedded-query
-    // entry points (EXPLAIN ANALYZE targets, DESCRIBE OUTPUT probes) so
-    // the type-aware ambiguity retry applies uniformly. buildStatement
-    // drops its MATCH_RECOGNIZE views post-analysis (safe: the plan
-    // holds resolved relations, not catalog lookups).
-    buildStatement(stripped).flatMap(collectBounded)
-  }
-
-  /** MATCH_RECOGNIZE (SQL:2016 row patterns — Trino-only; Spark's
-    * parser has no surface for it): compute each
-    * `<relation> MATCH_RECOGNIZE (…)` span with the library's
-    * sequential matcher and splice a temp view of the result into the
-    * statement, which then continues through the normal pipeline. Runs
-    * BEFORE the allowlist parse (Spark cannot parse the clause); each
-    * source relation is allowlist-checked on its own. */
-  private def spliceMatchRecognize(sql: String,
-      views: scala.collection.mutable.Buffer[String]): Either[String, String] =
-    if (!graft.dialect.MatchRecognize.contains(sql)) Right(sql)
-    else
-      try graft.dialect.MatchRecognize.spliceAll(sql,
-        relation => {
-          val sel = s"SELECT * FROM $relation"
-          if (engine.config.enforceSqlAllowlists) {
-            val parsed = engine.spark.sessionState.sqlParser.parsePlan(sel)
-            graft.security.SqlAllowlist.check(parsed, engine.allowlists,
-                engine.sessionCatalog, engine.sessionSchema)
-              .foreach(err => throw new IllegalArgumentException(err))
+      case Right(ExplainStatements.Analyze(verbose, q)) =>
+        return Statements.build(engine, q).flatMap { df =>
+          val group = s"graft-query-${UUID.randomUUID()}"
+          val start = System.nanoTime()
+          // Execute the DataFrame's OWN plan (df.count() would build
+          // and run a different aggregate plan, leaving this plan's
+          // runtime metrics at zero): toRdd is the executed plan's
+          // row stream; counting it materializes nothing driver-side.
+          withTimeoutAndCancel(group)(df.queryExecution.toRdd.count()).map { n =>
+            val wall = (System.nanoTime() - start) / 1000000L
+            QueryResult(Seq("Query Plan"),
+              Seq(Seq(ExplainStatements.renderAnalyzed(df, n, wall, verbose))),
+              truncated = false, queryId = group, wallMillis = wall)
           }
-          runSql(sel)
-        },
-        result => {
-          val name = s"graft_mr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-          result.createOrReplaceTempView(name)
-          views += name
-          name
-        })
-      catch { case e: Throwable => // relation resolution errors
-        Left(s"query execution failed: ${clip(e)}") }
-
-  /** Drop the temp views a MATCH_RECOGNIZE splice registered. Safe once
-    * the statement's DataFrame is ANALYZED (spark.sql / Dataset.ofRows
-    * analyze eagerly — the plan holds the resolved relation, not a
-    * catalog lookup), so callers drop in a finally right after building
-    * the statement; without this a long-lived session's catalog grows
-    * by one view per row-pattern query (r12 ADVICE). */
-  private def dropMrViews(views: scala.collection.mutable.Buffer[String]): Unit = {
-    views.foreach { v =>
-      try engine.spark.catalog.dropTempView(v)
-      catch { case _: Throwable => () }
-    }
-    views.clear()
-  }
-
-  /** The standard statement pipeline (dialect preprocess →
-    * MATCH_RECOGNIZE splice → opt-in allowlist gate → info_schema
-    * rewrite → spark.sql) for an embedded query — EXPLAIN ANALYZE
-    * targets, subquery forms: EXPLAIN / SHOW STATS over a
-    * MATCH_RECOGNIZE query work like any other statement. */
-  private def buildStatement(inner: String): Either[String, DataFrame] = {
-    val first = buildStatementOpts(inner,
-      graft.dialect.TrinoFunctions.PreprocessOpts())
-    first match {
-      case Left(err) =>
-        // Type-aware retry: two textual forms are ambiguous without
-        // types, and their default readings fail analysis with a
-        // recognizable signature. Re-preprocess under the alternate
-        // reading; if that also fails, surface the FIRST error (it
-        // carries the curated workaround text).
-        val up = inner.toUpperCase
-        val wantSplat = up.contains("UNNEST") &&
-          (err.contains("UDTF_ALIAS_NUMBER_MISMATCH") ||
-            (err.contains("number of aliases") && err.contains("explode")))
-        val wantTies = up.contains("WITH TIES") &&
-          (err.contains("UNRESOLVED_COLUMN") ||      // key not projected
-            err.contains("MISSING_GROUP_BY"))        // key is an aggregate
-        if (!wantSplat && !wantTies) first
-        else buildStatementOpts(inner, graft.dialect.TrinoFunctions
-            .PreprocessOpts(unnestRowSplat = wantSplat,
-              tiesInBlock = wantTies)) match {
-          case Right(df) => Right(df)
-          case Left(_) => first
         }
-      case ok => ok
+      case Right(ExplainStatements.Typed(tpe, _, q)) =>
+        return explainToResult(q, if (tpe == "DISTRIBUTED") "" else tpe)
+      case Right(ExplainStatements.Plain(q)) =>
+        return explainToResult(q, "")
     }
+    Statements.build(engine, stripped).flatMap(collectBounded)
   }
-
-  private def buildStatementOpts(inner: String,
-      opts: graft.dialect.TrinoFunctions.PreprocessOpts)
-      : Either[String, DataFrame] = {
-    val innerSql0 =
-      try graft.dialect.TrinoFunctions.preprocess(inner, opts)
-      catch { case e: IllegalArgumentException => return Left(e.getMessage) }
-    val mrViews = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-    val innerSql = spliceMatchRecognize(innerSql0, mrViews) match {
-      case Right(s2) => s2
-      case Left(err) => return Left(err)
-    }
-    if (engine.config.enforceSqlAllowlists) {
-      val parsed =
-        try engine.spark.sessionState.sqlParser.parsePlan(innerSql)
-        catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-      graft.security.SqlAllowlist.check(parsed, engine.allowlists,
-          engine.sessionCatalog, engine.sessionSchema)
-        .foreach(err => return Left(err))
-    }
-    val resolved =
-      if (InfoSchema.references(innerSql)) {
-        try InfoSchema.refresh(engine)
-        catch { case e: Throwable => return Left(s"query execution failed: ${clip(e)}") }
-        InfoSchema.rewrite(innerSql)
-      } else innerSql
-    try Right(runSql(resolved))
-    catch { case e: Throwable => Left(s"query execution failed: ${clip(e)}") }
-    } finally dropMrViews(mrViews)
-  }
-
-  /** Execute SQL under the session namespace: when `USE` moved the
-    * session off the configured default, parse and QUALIFY unresolved
-    * 1/2-part relations to the session namespace first — Spark would
-    * otherwise resolve unqualified names to the default-catalog temp
-    * views regardless of the current namespace (UseStatement docs). */
-  private def runSql(resolved: String): DataFrame =
-    if (engine.sessionCatalog.equalsIgnoreCase(engine.config.catalog) &&
-        engine.sessionSchema.equalsIgnoreCase(engine.config.schema))
-      engine.spark.sql(resolved)
-    else {
-      val plan = engine.spark.sessionState.sqlParser.parsePlan(resolved)
-      org.apache.spark.sql.graft.ColumnBridge.ofRows(engine.spark,
-        UseStatement.qualify(plan, engine.sessionCatalog, engine.sessionSchema))
-    }
 
   /** ExplainService output (rows of single-key maps) → QueryResult. */
   private def explainToResult(inner: String, tpe: String): Either[String, QueryResult] =
@@ -496,33 +306,18 @@ class QueryService(engine: Engine) {
     try Right(fut.get(engine.sessionQueryTimeoutSeconds.toLong, TimeUnit.SECONDS))
     catch {
       case _: TimeoutException =>
-        spark.sparkContext.cancelJobGroup(group)
+        // and FUTURE jobs: a deadline that fires while the runner is
+        // still planning would otherwise let its job start afterwards
+        // and hold the cores, unbounded, for every later query
+        spark.sparkContext.cancelJobGroupAndFutureJobs(group)
         Left(s"query execution failed: query timed out after " +
           s"${engine.sessionQueryTimeoutSeconds}s")
       case e: java.util.concurrent.ExecutionException =>
-        Left(s"query execution failed: ${clip(e.getCause)}")
+        Left(Statements.failed(e.getCause))
     }
   }
 
   /** Acting user for the next execute() on this thread (request-scoped,
     * like the reference's context values). */
   private val actingUser = new ThreadLocal[String] { override def initialValue = "" }
-
-  private def clip(e: Throwable): String = {
-    val m0 = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-    // UNNEST(array_of_2_field_rows) AS t(a, b) is textually ambiguous
-    // with UNNEST(map) — the dialect routes 2 aliases to explode()
-    // first and buildStatement retries the inline() reading when that
-    // fails analysis. Reaching THIS message means both readings failed
-    // (e.g. the element row has ≠2 fields); name the workaround.
-    val m =
-      if (m0.contains("UDTF_ALIAS_NUMBER_MISMATCH") ||
-          (m0.contains("number of aliases") && m0.contains("explode")))
-        m0 + " — UNNEST with two aliases takes a MAP or an " +
-          "ARRAY(ROW(a, b)) (both readings were tried); for other " +
-          "element shapes select the row fields instead: CROSS JOIN " +
-          "UNNEST(x) AS t(r) then r.a, r.b"
-      else m0
-    if (m.length > 800) m.take(800) + "…" else m
-  }
 }

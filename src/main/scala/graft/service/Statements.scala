@@ -1,0 +1,121 @@
+package graft.service
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.dialect.{MatchRecognize, TrinoFunctions}
+import graft.engine.Engine
+import graft.security.SqlAllowlist
+
+/** The one "SQL text → DataFrame" pipeline. execute_query's plain path,
+  * EXPLAIN ANALYZE, DESCRIBE OUTPUT, `SHOW STATS FOR (SELECT …)`, the
+  * EXPLAIN statement forms and the explain_query tool all plan their
+  * query here, so what is explained is what would run. In order:
+  *
+  *  1. dialect preprocess, with the type-aware retry below;
+  *  2. each `<relation> MATCH_RECOGNIZE (…)` span: its relation planned
+  *     by steps 3, 5 and 6, the matcher run over it, the span replaced
+  *     by a placeholder relation name;
+  *  3. one parse;
+  *  4. each placeholder replaced by its span's plan — no temp view, so
+  *     a concurrent listing never sees one;
+  *  5. the opt-in SQL allowlist gate;
+  *  6. one relation walk ([[UseStatement.qualify]]: information_schema
+  *     shims, USE qualification), then analysis.
+  */
+object Statements {
+
+  def build(engine: Engine, sql: String): Either[String, DataFrame] = {
+    val first = buildWith(engine, sql, TrinoFunctions.PreprocessOpts())
+    first match {
+      case Left(err) =>
+        // Type-aware retry: two textual forms are ambiguous without
+        // types, and their default readings fail analysis with a
+        // recognizable signature. Re-preprocess under the alternate
+        // reading; if that also fails, surface the FIRST error (it
+        // carries the curated workaround text).
+        val up = sql.toUpperCase
+        val wantSplat = up.contains("UNNEST") && isAliasMismatch(err)
+        val wantTies = up.contains("WITH TIES") &&
+          (err.contains("UNRESOLVED_COLUMN") ||      // key not projected
+            err.contains("MISSING_GROUP_BY"))        // key is an aggregate
+        if (!wantSplat && !wantTies) first
+        else buildWith(engine, sql, TrinoFunctions.PreprocessOpts(
+            unnestRowSplat = wantSplat, tiesInBlock = wantTies))
+          .orElse(first)
+      case ok => ok
+    }
+  }
+
+  private def buildWith(engine: Engine, sql: String,
+      opts: TrinoFunctions.PreprocessOpts): Either[String, DataFrame] = {
+    // preprocess rejects constructs with no Spark translation (e.g.
+    // `time with time zone`) via IllegalArgumentException → clean Left
+    val pre =
+      try TrinoFunctions.preprocess(sql, opts)
+      catch { case e: IllegalArgumentException => return Left(e.getMessage) }
+    try {
+      val spliced =
+        if (!MatchRecognize.contains(pre)) Right((pre, Nil))
+        else MatchRecognize.spliceAll(pre, (relation, earlier) =>
+          plan(engine, s"SELECT * FROM $relation", earlier)
+            .fold(err => throw new IllegalArgumentException(err), identity))
+      spliced.flatMap { case (text, spans) => plan(engine, text, spans) }
+    } catch { case e: Throwable => Left(failed(e)) }
+  }
+
+  /** Steps 3–6 for preprocessed text whose MATCH_RECOGNIZE spans are
+    * placeholders; Left = an allowlist denial. */
+  private def plan(engine: Engine, text: String,
+      spans: Seq[(String, DataFrame)]): Either[String, DataFrame] = {
+    val parsed = engine.spark.sessionState.sqlParser.parsePlan(text)
+    val byName = spans.toMap
+    val substituted =
+      if (spans.isEmpty) parsed
+      else UseStatement.mapRelations(parsed) { r =>
+        r.multipartIdentifier match {
+          case Seq(p) if byName.contains(p) =>
+            SubqueryAlias(p, byName(p).queryExecution.analyzed)
+          case _ => r
+        }
+      }
+    val denied =
+      if (!engine.config.enforceSqlAllowlists) None
+      else SqlAllowlist.check(substituted, engine.allowlists,
+        engine.sessionCatalog, engine.sessionSchema)
+    denied.toLeft {
+      val ns =
+        if (engine.sessionCatalog.equalsIgnoreCase(engine.config.catalog) &&
+            engine.sessionSchema.equalsIgnoreCase(engine.config.schema)) None
+        else Some((engine.sessionCatalog, engine.sessionSchema))
+      val (resolved, shims) = UseStatement.qualify(substituted, ns)
+      if (shims) InfoSchema.refresh(engine)
+      ColumnBridge.ofRows(engine.spark, resolved)
+    }
+  }
+
+  /** The tool-error text for a failed statement. */
+  def failed(e: Throwable): String = s"query execution failed: ${clip(e)}"
+
+  private def isAliasMismatch(m: String): Boolean =
+    m.contains("UDTF_ALIAS_NUMBER_MISMATCH") ||
+      (m.contains("number of aliases") && m.contains("explode"))
+
+  private def clip(e: Throwable): String = {
+    val m0 = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+    // UNNEST(array_of_2_field_rows) AS t(a, b) is textually ambiguous
+    // with UNNEST(map) — the dialect routes 2 aliases to explode()
+    // first and build retries the inline() reading when that fails
+    // analysis. Reaching THIS message means both readings failed (e.g.
+    // the element row has ≠2 fields); name the workaround.
+    val m =
+      if (isAliasMismatch(m0))
+        m0 + " — UNNEST with two aliases takes a MAP or an " +
+          "ARRAY(ROW(a, b)) (both readings were tried); for other " +
+          "element shapes select the row fields instead: CROSS JOIN " +
+          "UNNEST(x) AS t(r) then r.a, r.b"
+      else m0
+    if (m.length > 800) m.take(800) + "…" else m
+  }
+}

@@ -2,7 +2,8 @@ package graft.service
 
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.command.ExplainCommand
 
 import graft.engine.Engine
 
@@ -21,11 +22,11 @@ import graft.engine.Engine
   * Spark's current namespace would leave `USE tpch.tiny; SELECT * FROM
   * customer` reading the default catalog's view (the wrong table,
   * silently). Instead, when the session namespace differs from the
-  * configured default, QueryService parses the SQL and QUALIFIES every
-  * unresolved 1/2-part relation to the session namespace (3-part names
-  * resolve as written) with the same scope-aware CTE walk the SQL
-  * allowlist uses, then executes the rewritten plan — Trino's
-  * resolution order, enforced at parse level.
+  * configured default, the statement pipeline ([[Statements]])
+  * QUALIFIES every unresolved 1/2-part relation of the parsed plan to
+  * the session namespace (3-part names resolve as written) with the
+  * same scope-aware CTE walk the SQL allowlist uses, then executes the
+  * rewritten plan — Trino's resolution order, enforced at parse level.
   */
 object UseStatement {
 
@@ -61,38 +62,51 @@ object UseStatement {
       Left(s"query execution failed: ${String.valueOf(e.getMessage).take(300)}")
   }
 
-  /** Qualify unresolved 1/2-part relations to (catalog, schema) —
-    * scope-aware: CTE-bound names stay as written where their defining
-    * WITH is in scope (same walk as SqlAllowlist), and the engine's
-    * internal `graft_*` shim views (information_schema rewrite targets)
-    * are never qualified. */
-  def qualify(plan: LogicalPlan, catalog: String, schema: String): LogicalPlan = {
-    def rewName(parts: Seq[String], scope: Set[String]): Seq[String] =
-      parts match {
-        case Seq(t) if scope(t.toLowerCase) => parts
-        case Seq(t) if t.toLowerCase.startsWith("graft_") => parts
-        case Seq(t) => Seq(catalog, schema, t)
-        case Seq(s1, _) if s1.equalsIgnoreCase("information_schema") => parts
-        case Seq(s1, t) => Seq(catalog, s1, t)
-        case _ => parts
+  /** Step 6 of [[Statements]]: one walk over the parsed relations.
+    * `[catalog.]information_schema.<t>` becomes its shim view (the flag
+    * says whether any did, so the caller refreshes the shims first);
+    * with `ns` set (USE moved the session off the configured default),
+    * every other 1/2-part name is qualified to it (3-part names resolve
+    * as written). */
+  def qualify(plan: LogicalPlan, ns: Option[(String, String)]): (LogicalPlan, Boolean) = {
+    var shims = false
+    val out = mapRelations(plan) { r =>
+      InfoSchema.relation(r.multipartIdentifier) match {
+        case Some(shim) => shims = true; shim
+        case None => (ns, r.multipartIdentifier) match {
+          case (Some((c, s)), Seq(t)) => r.copy(multipartIdentifier = Seq(c, s, t))
+          case (Some((c, _)), Seq(s, t)) => r.copy(multipartIdentifier = Seq(c, s, t))
+          case _ => r
+        }
       }
+    }
+    (out, shims)
+  }
+
+  /** `plan` with `f` applied to every unresolved relation that is not a
+    * CTE name in scope — the scope-aware walk SqlAllowlist uses (a CTE
+    * body sees the names defined before it, the main query sees them
+    * all), into expression subqueries and EXPLAIN targets. Resolved
+    * subtrees (a substituted MATCH_RECOGNIZE result) are left as they
+    * are. */
+  def mapRelations(plan: LogicalPlan)(f: UnresolvedRelation => LogicalPlan): LogicalPlan = {
     def rew(p: LogicalPlan, scope: Set[String]): LogicalPlan = p match {
+      case e: ExplainCommand => e.copy(logicalPlan = rew(e.logicalPlan, scope))
       case w: UnresolvedWith =>
         var s = scope
         val newRels = w.cteRelations.map { rel =>
           s = s + rel._1.toLowerCase
-          rel.copy(_2 = rew(rel._2, s).asInstanceOf[
-            org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias])
+          rel.copy(_2 = rew(rel._2, s).asInstanceOf[SubqueryAlias])
         }
-        val scopeAll = s
-        w.copy(child = rew(w.child, scopeAll), cteRelations = newRels)
+        w.copy(child = rew(w.child, s), cteRelations = newRels)
+      case _ if p.resolved => p
       case r: UnresolvedRelation =>
-        val parts = rewName(r.multipartIdentifier, scope)
-        if (parts == r.multipartIdentifier) r
-        else UnresolvedRelation(parts, r.options, r.isStreaming)
+        r.multipartIdentifier match {
+          case Seq(t) if scope(t.toLowerCase) => r
+          case _ => f(r)
+        }
       case other =>
-        val withChildren = other.mapChildren(rew(_, scope))
-        withChildren.transformExpressions {
+        other.mapChildren(rew(_, scope)).transformExpressions {
           case sq: SubqueryExpression => sq.withNewPlan(rew(sq.plan, scope))
         }
     }

@@ -1245,6 +1245,28 @@ class MatchRecognizeSpec extends SparkSpec {
       s"MATCH_RECOGNIZE temp views leaked: $before -> $after")
   }
 
+  test("two spans over one relation self-join without touching the catalog") {
+    val cfg = EngineConfig.fromEnv(Map.empty).toOption.get
+    val engine = new Engine(cfg, Some("/root/testdata/sf0.001"),
+      existing = Some(spark))
+    val qs = new QueryService(engine)
+    val span =
+      """events MATCH_RECOGNIZE (
+        |  PARTITION BY user_id ORDER BY ts, event_id
+        |  MEASURES FIRST(A.ts) AS start_ts
+        |  PATTERN (A B+)
+        |  DEFINE A AS event_type = 'view', B AS event_type = 'click')""".stripMargin
+    val before = spark.catalog.listTables().collect().map(_.name).toSet
+    val joined = qs.execute(
+      s"SELECT COUNT(*) AS n FROM $span AS a JOIN $span AS b ON a.user_id = b.user_id")
+    val perUser = qs.execute(
+      s"SELECT SUM(c * c) AS n FROM (SELECT user_id, COUNT(*) AS c FROM $span GROUP BY user_id)")
+    val n = joined.toOption.getOrElse(fail(joined.toString)).rows
+    assert(n.head.head.asInstanceOf[Long] > 0L)
+    assert(n == perUser.toOption.getOrElse(fail(perUser.toString)).rows)
+    assert(spark.catalog.listTables().collect().map(_.name).toSet == before)
+  }
+
   test("nested navigation: PREV(FIRST/LAST) reads the partition context") {
     // the row BEFORE the match start / AFTER the match end — SQL:2016's
     // PREV(FIRST(A.c)) / NEXT(LAST(B.c)); out of partition → NULL

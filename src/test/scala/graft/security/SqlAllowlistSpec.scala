@@ -100,6 +100,43 @@ class SqlAllowlistSpec extends SparkSpec {
     assert(enforcing.execute("EXPLAIN SELECT COUNT(*) FROM region").isRight)
   }
 
+  private val mrQuery =
+    """SELECT COUNT(*) AS n FROM events MATCH_RECOGNIZE (
+      |  PARTITION BY user_id ORDER BY ts, event_id
+      |  MEASURES FIRST(A.ts) AS start_ts
+      |  PATTERN (A B+)
+      |  DEFINE A AS event_type = 'view', B AS event_type = 'click')""".stripMargin
+
+  test("flag on: a MATCH_RECOGNIZE result is judged by its source relation") {
+    val eventsOnly = qs(Map(
+      "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_TABLES" -> "spark_catalog.default.events"))
+    val r = eventsOnly.execute(mrQuery)
+    assert(r.isRight, r.toString)
+    assert(enforcing.execute(mrQuery) ==
+      Left("table access denied: spark_catalog.default.events not in allowlist"))
+  }
+
+  test("flag on: EXPLAIN of a MATCH_RECOGNIZE query plans like execute") {
+    val eventsOnly = qs(Map(
+      "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_TABLES" -> "spark_catalog.default.events"))
+    val r = eventsOnly.execute(s"EXPLAIN $mrQuery")
+    assert(r.isRight, r.toString)
+  }
+
+  test("flag on: explain_query is gated like execute_query and EXPLAIN") {
+    val engine = new Engine(EngineConfig.fromEnv(Map(
+      "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_SCHEMAS" -> "spark_catalog.default")).toOption.get,
+      Some(dir), existing = Some(spark))
+    val q = "SELECT COUNT(*) FROM tpch.tiny.customer"
+    val ran = new QueryService(engine).execute(q)
+    assert(ran == Left("schema access denied: tpch.tiny not in allowlist"))
+    assert(new QueryService(engine).execute(s"EXPLAIN $q") == ran)
+    assert(new graft.service.ExplainService(engine).explain(q, "IO") == ran)
+  }
+
   test("catalog and schema allowlists deny at their levels") {
     val catOnly = qs(Map(
       "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",

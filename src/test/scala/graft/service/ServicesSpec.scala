@@ -99,6 +99,22 @@ class ServicesSpec extends SparkSpec {
     assert(r.rows == Seq(Seq("information_schema.tables")))
   }
 
+  test("execute: quoted information_schema names are served") {
+    val r = new QueryService(engine())
+      .execute("""SELECT table_name FROM "information_schema"."tables" ORDER BY 1""")
+    val names = r.toOption.getOrElse(fail(r.toString)).rows.map(_.head.toString)
+    assert(names.contains("region"), names)
+  }
+
+  test("execute: information_schema.tables works as a column qualifier") {
+    val r = new QueryService(engine()).execute(
+      """SELECT information_schema.tables.table_name
+        |FROM information_schema.tables
+        |WHERE information_schema.tables.table_name = 'region'
+        |  AND information_schema.tables.table_schema = 'default'""".stripMargin)
+    assert(r.toOption.getOrElse(fail(r.toString)).rows == Seq(Seq("region")))
+  }
+
   test("execute: write statements rejected with the reference error text") {
     val r = new QueryService(engine()).execute("DROP TABLE region")
     assert(r == Left("security restriction: only SELECT, SHOW, DESCRIBE, and EXPLAIN " +
@@ -300,6 +316,34 @@ class ServicesSpec extends SparkSpec {
 
   test("explain: target query still passes the guard") {
     assert(new ExplainService(engine()).explain("DROP TABLE region", "LOGICAL").isLeft)
+  }
+
+  test("explain: information_schema is explained, not reported missing") {
+    val r = new ExplainService(engine()).explain(
+      "SELECT table_name FROM information_schema.tables", "LOGICAL")
+    assert(r.isRight, r.toString)
+  }
+
+  test("explain: after USE, the session namespace's table is explained") {
+    val e = engine()
+    val qs = new QueryService(e)
+    assert(qs.execute("USE tpch.tiny").isRight)
+    val n = qs.execute("SELECT count(*) AS n FROM customer").toOption.get
+    assert(n.rows == Seq(Seq(150L)), n.rows)
+    val io = new ExplainService(e).explain("SELECT count(*) FROM customer", "IO")
+    val text = io.toOption.getOrElse(fail(io.toString)).head("Query Plan").toString
+    assert(!text.contains("Location") && text.toLowerCase.contains("customer"), text)
+  }
+
+  test("explain: build errors carry execute_query's text, UNNEST hint included") {
+    val e = engine()
+    Seq("SELECT missing_col FROM region" -> "UNRESOLVED_COLUMN",
+        "SELECT a, b FROM UNNEST(array(named_struct('x', 1, 'y', 2, 'z', 3))) AS t(a, b)" ->
+          "both readings were tried").foreach { case (q, text) =>
+      val ran = new QueryService(e).execute(q)
+      assert(ran.swap.exists(_.contains(text)), ran.toString)
+      assert(new ExplainService(e).explain(q, "") == ran)
+    }
   }
 
   // --- Json round-trip ---
