@@ -213,7 +213,7 @@ object MatchRecognize {
       "ALL ROWS PER MATCH", "AFTER MATCH", "PATTERN", "SUBSET", "DEFINE")
     val found = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
     val upper = src.toUpperCase
-    val inQuote = quoteMask(src)
+    val mask = SqlText.mask(src)
     // identifier-boundary check: '_' is a word character in SQL
     // identifiers (a column named pattern_id must not match PATTERN)
     def wordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
@@ -222,7 +222,7 @@ object MatchRecognize {
       while (i >= 0) {
         i = upper.indexOf(k, i)
         if (i >= 0) {
-          if (depthAt(src, i) == 0 && !inQuote(i) &&
+          if (SqlText.atTop(src, mask, i) &&
               (i == 0 || !wordChar(src(i - 1))) &&
               (i + k.length >= src.length || !wordChar(src(i + k.length))))
             found += ((i, k))
@@ -253,7 +253,7 @@ object MatchRecognize {
     // SUBSET U = (A, B): union variables — usable wherever a pattern
     // variable is (MEASURES navigation/aggregates, AFTER MATCH SKIP TO);
     // a subset's mapped rows are the union of its members' rows
-    val subsets = section("SUBSET").map(splitTop(_, ',').map { s =>
+    val subsets = section("SUBSET").map(splitList(_).map { s =>
       val m = "(?is)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*=\\s*\\(([^)]*)\\)\\s*$".r
       s.trim match {
         case m(u, members) =>
@@ -277,14 +277,14 @@ object MatchRecognize {
         s"SKIP TO NEXT ROW / SKIP TO [FIRST|LAST] <var> are supported (got: $m)")
     }
     val partCols = section("PARTITION BY")
-      .map(splitTop(_, ',').map(parseIdent)).getOrElse(Seq.empty)
+      .map(splitList(_).map(parseIdent)).getOrElse(Seq.empty)
     // ORDER BY entries take an optional direction and null ordering:
     // `c [ASC|DESC] [NULLS FIRST|LAST]` — Trino defaults (ASC → NULLS
     // LAST, DESC → NULLS FIRST; DuckDB's defaults too)
     val orderEntryRe =
       "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
     val orderParsed = section("ORDER BY")
-      .map(splitTop(_, ',').map { e =>
+      .map(splitList(_).map { e =>
         e.trim match {
           case orderEntryRe(c, dir, nulls) =>
             val asc = dir == null || dir.equalsIgnoreCase("ASC")
@@ -309,7 +309,7 @@ object MatchRecognize {
       fail("a pattern that can match empty cannot combine with " +
         "WITH UNMATCHED ROWS (an empty-match site row would be both " +
         "matched and unmatched)")
-    val defines = section("DEFINE").map(splitTop(_, ',').map { d =>
+    val defines = section("DEFINE").map(splitList(_).map { d =>
       val m = "(?is)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s+AS\\s+(.+)$".r
       d.trim match {
         case m(v, pred) => (v, pred.trim)
@@ -320,7 +320,7 @@ object MatchRecognize {
     // they need the full variable universe (pattern vars + subsets)
     val allVarsForMeasures = patternVars(pattern) ++ subsets.map(_._1)
     val measures = section("MEASURES")
-      .map(splitTop(_, ',').map(parseMeasure(_, allVarsForMeasures)))
+      .map(splitList(_).map(parseMeasure(_, allVarsForMeasures)))
       .getOrElse(Seq.empty)
     if (measures.isEmpty && !allRows)
       fail("MEASURES is required in this subset " +
@@ -366,55 +366,9 @@ object MatchRecognize {
     spec
   }
 
-  /** mask(i) = position i sits inside a '…' / "…" literal (the opening
-    * and closing quote chars included) — used to keep the section
-    * scanner away from keywords quoted in string literals. */
-  private def quoteMask(s: String): Array[Boolean] = {
-    val m = new Array[Boolean](s.length)
-    var q = ' '; var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (q != ' ') { m(i) = true; if (c == q) q = ' ' }
-      else if (c == '\'' || c == '"') { m(i) = true; q = c }
-      i += 1
-    }
-    m
-  }
-
-  private def depthAt(s: String, pos: Int): Int = {
-    var d = 0; var i = 0; var q = ' '
-    while (i < pos) {
-      val c = s(i)
-      if (q != ' ') { if (c == q) q = ' ' }
-      else c match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case '\'' | '"' => q = c
-        case _ => ()
-      }
-      i += 1
-    }
-    d
-  }
-
-  /** Split on `sep` at top paren depth, quote-aware. */
-  private def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var d = 0; var q = ' '
-    s.foreach { c =>
-      if (q != ' ') { cur += c; if (c == q) q = ' ' }
-      else c match {
-        case '\'' | '"' => q = c; cur += c
-        case '(' => d += 1; cur += c
-        case ')' => d -= 1; cur += c
-        case `sep` if d == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
+  /** Top-level comma list entries, blanks dropped. */
+  private def splitList(s: String): Seq[String] =
+    SqlText.splitTop(s).filter(_.nonEmpty)
 
   private def parseIdent(s: String): String = {
     val t = s.trim
@@ -496,8 +450,8 @@ object MatchRecognize {
   // quant := atom [+*?] ; atom := VAR | '(' alt ')'
   private def parsePattern(txt0: String): Pat = {
     var txt = txt0.trim
-    if (txt.startsWith("(") && depthAt(txt, txt.length - 1) == 1 &&
-        txt.endsWith(")"))
+    if (txt.startsWith("(") &&
+        SqlText.closeParen(txt, SqlText.mask(txt), 0) == txt.length - 1)
       txt = txt.substring(1, txt.length - 1) // the PATTERN (...) parens
     val toks = tokenizePattern(txt)
     val (p, rest) = parseAlt(toks)
@@ -681,7 +635,7 @@ object MatchRecognize {
     * touched. */
   private[graft] def rewriteDefinePred(v: String, pred0: String,
       vars: Seq[String]): String = {
-    val masked = quoteMask(pred0)
+    val masked = SqlText.mask(pred0)
     def qualMatches(name: String): Iterator[scala.util.matching.Regex.Match] = {
       val re = ("(?i)(?<![A-Za-z0-9_])" +
         java.util.regex.Pattern.quote(name) + "\\s*\\.").r
@@ -762,7 +716,7 @@ object MatchRecognize {
       // quote-masked: a 'PREV(x)' inside a string literal is data, not
       // navigation — rewriting (or rejecting the qualified form) there
       // would corrupt a working predicate
-      val masked = quoteMask(pred)
+      val masked = SqlText.mask(pred)
       val sb = new StringBuilder
       var last = 0
       navRe.findAllMatchIn(pred).filterNot(m => masked(m.start)).foreach { m =>
@@ -1433,37 +1387,11 @@ object MatchRecognize {
 
   // ---------- SQL statement splice (the service face) ----------
 
-  private val MrToken = "(?i)\\bMATCH_RECOGNIZE\\b".r
+  private val MrToken = java.util.regex.Pattern.compile("(?i)\\bMATCH_RECOGNIZE\\b")
 
-  def contains(sql: String): Boolean =
-    MrToken.findFirstMatchIn(stripLiterals(sql)).isDefined
-
-  private def stripLiterals(sql: String): String = {
-    // blank out string literals AND comments so a quoted/commented
-    // 'MATCH_RECOGNIZE' or relation name never confuses the scanner
-    // (positions are preserved — same length)
-    val b = sql.toCharArray
-    var i = 0; var q = ' '
-    while (i < b.length) {
-      val c = b(i)
-      if (q == '-') { if (c == '\n') q = ' ' else b(i) = ' ' } // -- line
-      else if (q == '*') {                                      // /* block
-        if (c == '*' && i + 1 < b.length && b(i + 1) == '/') {
-          b(i) = ' '; b(i + 1) = ' '; i += 1; q = ' '
-        } else b(i) = ' '
-      }
-      else if (q != ' ') { if (c == q) q = ' ' else b(i) = ' ' } // quotes
-      else if (c == '\'' || c == '"') q = c
-      else if (c == '-' && i + 1 < b.length && b(i + 1) == '-') {
-        b(i) = ' '; q = '-'
-      }
-      else if (c == '/' && i + 1 < b.length && b(i + 1) == '*') {
-        b(i) = ' '; q = '*'
-      }
-      i += 1
-    }
-    new String(b)
-  }
+  /** `sql` holds a MATCH_RECOGNIZE keyword outside literals, quoted
+    * identifiers and comments. */
+  def contains(sql: String): Boolean = SqlText.firstUnmasked(sql, MrToken).isDefined
 
   /** Replace every `<relation> MATCH_RECOGNIZE ( … )` span in `sql`
     * with a placeholder relation name (`__match_recognize_<i>`) and
@@ -1479,17 +1407,17 @@ object MatchRecognize {
     try {
       var cur = sql
       val spans = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
-      var m = MrToken.findFirstMatchIn(stripLiterals(cur))
+      var kw = SqlText.firstUnmasked(cur, MrToken)
       var guard = 0
-      while (m.isDefined) {
+      while (kw.isDefined) {
         guard += 1
         if (guard > 16) fail("too many MATCH_RECOGNIZE clauses")
-        val stripped = stripLiterals(cur)
-        val kw = m.get
+        val mask = SqlText.mask(cur)
+        val (kwStart, kwEnd) = (kw.get.start, kw.get.end)
         // relation: scan LEFT from the keyword over a subquery or a
         // (possibly qualified/quoted) table name
         val relEnd = {
-          var i = kw.start - 1
+          var i = kwStart - 1
           while (i >= 0 && cur(i).isWhitespace) i -= 1
           i + 1
         }
@@ -1497,38 +1425,33 @@ object MatchRecognize {
           if (relEnd > 0 && cur(relEnd - 1) == ')') {
             var d = 0; var i = relEnd - 1; var open = -1
             while (i >= 0 && open < 0) {
-              if (stripped(i) == ')') d += 1
-              else if (stripped(i) == '(') { d -= 1; if (d == 0) open = i }
+              if (!mask(i) && cur(i) == ')') d += 1
+              else if (!mask(i) && cur(i) == '(') { d -= 1; if (d == 0) open = i }
               i -= 1
             }
             if (open < 0) fail("cannot find relation before MATCH_RECOGNIZE")
             open
           } else {
+            // quoted parts ("…" or `…`) are masked, so they walk too
             var i = relEnd - 1
-            while (i >= 0 && (Character.isLetterOrDigit(cur(i)) ||
-              "_.\"".contains(cur(i)))) i -= 1
+            while (i >= 0 && (mask(i) || Character.isLetterOrDigit(cur(i)) ||
+              cur(i) == '_' || cur(i) == '.')) i -= 1
             i + 1
           }
         if (relStart >= relEnd) fail("cannot find relation before MATCH_RECOGNIZE")
         val relation = cur.substring(relStart, relEnd).trim
         // clause body: balanced parens after the keyword
-        var j = kw.end
+        var j = kwEnd
         while (j < cur.length && cur(j).isWhitespace) j += 1
         if (j >= cur.length || cur(j) != '(')
           fail("expected ( after MATCH_RECOGNIZE")
-        var d = 0; var k = j
-        var bodyEnd = -1
-        while (k < cur.length && bodyEnd < 0) {
-          if (stripped(k) == '(') d += 1
-          else if (stripped(k) == ')') { d -= 1; if (d == 0) bodyEnd = k }
-          k += 1
-        }
+        val bodyEnd = SqlText.closeParen(cur, mask, j)
         if (bodyEnd < 0) fail("unbalanced MATCH_RECOGNIZE parentheses")
         val spec = parseClause(cur.substring(j + 1, bodyEnd))
         val placeholder = s"__match_recognize_${spans.length}"
         spans += placeholder -> run(relate(relation, spans.toSeq), spec)
         cur = cur.substring(0, relStart) + placeholder + cur.substring(bodyEnd + 1)
-        m = MrToken.findFirstMatchIn(stripLiterals(cur))
+        kw = SqlText.firstUnmasked(cur, MrToken)
       }
       Right((cur, spans.toSeq))
     } catch {

@@ -2113,79 +2113,30 @@ object TrinoFunctions {
     // (spark.sql.parser.escapedStringLiterals is NOT the fix: it also
     // stops '' from collapsing, which Trino requires.)
     val sql = escapeLiteralBackslashes(sql0)
-    val masked = maskedRegions(sql)
     // `time with time zone` has no Spark equivalent (DIALECT.md): fail
     // with a clear, actionable error instead of Spark's opaque parse
     // error. `timestamp with time zone` never matches: \btime demands
     // whitespace-or-precision right after the word, which "timestamp"'s
     // trailing "stamp" fails.
-    val tz = timeWithTzPattern.matcher(sql)
-    while (tz.find()) {
-      if (!masked(tz.start))
-        throw new IllegalArgumentException(
-          "type `time with time zone` is not supported by this engine: Spark has " +
-            "no equivalent type. Model it as a TIME column plus a zone/offset column " +
-            "(see DIALECT.md), or use `timestamp with time zone`.")
-    }
-    val m = dateFnPattern.matcher(sql)
-    val sb = new StringBuilder
-    var last = 0
-    while (m.find()) {
-      val u = m.group(3).toLowerCase
-      if (!masked(m.start) && unitNames(u)) {
-        sb.append(sql.substring(last, m.start))
-        sb.append(m.group(1)).append(m.group(2)).append(m.group(3))
-        last = m.end
-      }
-    }
-    val afterDateFns =
-      if (last == 0) sql else { sb.append(sql.substring(last)); sb.toString }
-
-    val nmasked = maskedRegions(afterDateFns)
-    val nm = normalizeFormPattern.matcher(afterDateFns)
-    val nsb = new StringBuilder
-    var nlast = 0
-    while (nm.find()) {
-      if (!nmasked(nm.start(2))) {
-        nsb.append(afterDateFns.substring(nlast, nm.start))
-        nsb.append(nm.group(1)).append("'").append(nm.group(2)).append("'")
-          .append(nm.group(3))
-        nlast = nm.end
-      }
+    if (SqlText.firstUnmasked(sql, timeWithTzPattern).isDefined)
+      throw new IllegalArgumentException(
+        "type `time with time zone` is not supported by this engine: Spark has " +
+          "no equivalent type. Model it as a TIME column plus a zone/offset column " +
+          "(see DIALECT.md), or use `timestamp with time zone`.")
+    val afterDateFns = SqlText.replaceUnmasked(sql, dateFnPattern) { m =>
+      if (unitNames(m.group(3).toLowerCase)) m.group(1) + m.group(2) + m.group(3)
+      else m.group(0)
     }
     val afterNormalize =
-      if (nlast == 0) afterDateFns
-      else { nsb.append(afterDateFns.substring(nlast)); nsb.toString }
-
-    val smasked = maskedRegions(afterNormalize)
-    val sm = splitCallPattern.matcher(afterNormalize)
-    val ssb = new StringBuilder
-    var slast = 0
-    while (sm.find()) {
-      if (!smasked(sm.start)) {
-        ssb.append(afterNormalize.substring(slast, sm.start))
-        ssb.append("trino_").append(sm.group(1).toLowerCase).append(sm.group(2))
-        slast = sm.end
+      SqlText.replaceUnmasked(afterDateFns, normalizeFormPattern, _.start(2)) { m =>
+        s"${m.group(1)}'${m.group(2)}'${m.group(3)}"
       }
+    val afterSplit = SqlText.replaceUnmasked(afterNormalize, splitCallPattern) { m =>
+      "trino_" + m.group(1).toLowerCase + m.group(2)
     }
-    val afterSplit =
-      if (slast == 0) afterNormalize
-      else { ssb.append(afterNormalize.substring(slast)); ssb.toString }
-
-    val tmasked = maskedRegions(afterSplit)
-    val tm = tablesamplePattern.matcher(afterSplit)
-    val tsb = new StringBuilder
-    var tlast = 0
-    while (tm.find()) {
-      if (!tmasked(tm.start)) {
-        tsb.append(afterSplit.substring(tlast, tm.start))
-        tsb.append("TABLESAMPLE (").append(tm.group(2)).append(" PERCENT)")
-        tlast = tm.end
-      }
+    val afterSample = SqlText.replaceUnmasked(afterSplit, tablesamplePattern) { m =>
+      s"TABLESAMPLE (${m.group(2)} PERCENT)"
     }
-    val afterSample =
-      if (tlast == 0) afterSplit
-      else { tsb.append(afterSplit.substring(tlast)); tsb.toString }
 
     rewriteAtTimeZone(rewriteFetchFirst(rewriteTypedLiterals(
       rewriteCastTypes(rewriteQuantified(rewriteArrayAggOrderBy(
@@ -2215,135 +2166,90 @@ object TrinoFunctions {
     "(?i)\\s+(ERROR|NULL|EMPTY\\s+ARRAY|EMPTY\\s+OBJECT)" +
     "\\s+ON\\s+(EMPTY|ERROR)\\b")
 
-  private def rewriteJsonQueryClauses(sql0: String): String = {
-    if (!jsonQueryCallPattern.matcher(sql0).find()) return sql0
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val n = sql.length
-      val m = jsonQueryCallPattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val open = m.end - 1
-          var depth = 0
-          var i = open
-          var close = -1
-          while (close < 0 && i < n) {
-            if (!masked(i)) {
-              if (sql(i) == '(') depth += 1
-              else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
-          }
-          if (close < 0) return sql
-          val content = sql.substring(open + 1, close)
-          val cmask = maskedRegions(content)
-          // depth-0, unmasked clause matches only (a clause keyword
-          // inside a nested call or literal is not ours)
-          def depth0(at: Int): Boolean = {
-            if (cmask(at)) return false
-            var d = 0; var k = 0
-            while (k < at) {
-              if (!cmask(k)) {
-                if (content(k) == '(') d += 1
-                else if (content(k) == ')') d -= 1
-              }
-              k += 1
-            }
-            d == 0
-          }
-          var wrapMode = ' '
-          var quoteMode = ' '
-          var clauseStart = content.length
-          val wm = jsonWrapperPattern.matcher(content)
-          while (wm.find()) if (depth0(wm.start)) {
-            val variant = Option(wm.group(2)).map(_.trim.toUpperCase)
-            wrapMode =
-              if (wm.group(1).equalsIgnoreCase("WITHOUT")) {
-                if (variant.nonEmpty) throw new IllegalArgumentException(
-                  "json_query: WITHOUT WRAPPER takes no " +
-                    "CONDITIONAL/UNCONDITIONAL variant")
-                'N'
-              } else if (variant.contains("CONDITIONAL")) 'C'
-              else 'U' // WITH [UNCONDITIONAL] [ARRAY] WRAPPER
-            clauseStart = math.min(clauseStart, wm.start)
-          }
-          val qm = jsonQuotesPattern.matcher(content)
-          while (qm.find()) if (depth0(qm.start)) {
-            quoteMode = if (qm.group(1).equalsIgnoreCase("OMIT")) 'O' else 'K'
-            clauseStart = math.min(clauseStart, qm.start)
-          }
-          var emptyMode = ' '
-          var errorMode = ' '
-          val bm = jsonQueryBehaviorPattern.matcher(content)
-          while (bm.find()) if (depth0(bm.start)) {
-            val b = bm.group(1).toUpperCase.replaceAll("\\s+", " ") match {
-              case "ERROR" => 'E'
-              case "NULL" => 'N'
-              case "EMPTY ARRAY" => 'A'
-              case _ => 'B' // EMPTY OBJECT ('O' is taken by OMIT quotes)
-            }
-            if (bm.group(2).equalsIgnoreCase("EMPTY")) {
-              if (emptyMode != ' ') throw new IllegalArgumentException(
-                "json_query: duplicate ON EMPTY clause")
-              emptyMode = b
-            } else {
-              if (errorMode != ' ') throw new IllegalArgumentException(
-                "json_query: duplicate ON ERROR clause")
-              errorMode = b
-            }
-            clauseStart = math.min(clauseStart, bm.start)
-          }
-          if (wrapMode == ' ' && quoteMode == ' ' &&
-              emptyMode == ' ' && errorMode == ' ') {
-            // no clauses on this call — leave it for the plain 2-arg shim
-          } else {
-            if (quoteMode == 'O' && (wrapMode == 'C' || wrapMode == 'U'))
-              throw new IllegalArgumentException(
-                "json_query: OMIT QUOTES cannot be combined with WITH " +
-                  "ARRAY WRAPPER (SQL/JSON rule; Trino rejects it too)")
-            val mode = s"${if (wrapMode == ' ') 'N' else wrapMode}" +
-              s"${if (quoteMode == ' ') 'K' else quoteMode}" +
-              s"${if (emptyMode == ' ') 'N' else emptyMode}" +
-              s"${if (errorMode == ' ') 'N' else errorMode}"
-            val args0 = content.substring(0, clauseStart)
-            // grammar puts `RETURNING type` BEFORE the clauses — keep
-            // it trailing in the splice so the RETURNING pass (which
-            // runs after this one) still sees it
-            val retIdx = {
-              val rre = java.util.regex.Pattern
-                .compile("(?i)\\bRETURNING\\b").matcher(args0)
-              var at = -1
-              while (rre.find()) if (depth0(rre.start)) at = rre.start
-              at
-            }
-            val (args, retSeg) =
-              if (retIdx < 0) (args0.trim, "")
-              else (args0.substring(0, retIdx).trim.stripSuffix(","),
-                " " + args0.substring(retIdx).trim)
-            val tail = content.substring(clauseStart)
-            // everything in the tail must be clause text we consumed
-            val residue = jsonQueryBehaviorPattern.matcher(
-              jsonQuotesPattern.matcher(
-                jsonWrapperPattern.matcher(tail).replaceAll(""))
-                .replaceAll("")).replaceAll("").trim
-            if (residue.nonEmpty) throw new IllegalArgumentException(
-              s"json_query: unsupported trailing clause '$residue' — " +
-                "supported: wrapper/quote clauses and {ERROR | NULL | " +
-                "EMPTY ARRAY | EMPTY OBJECT} ON {EMPTY | ERROR}")
-            sql = sql.substring(0, m.start) +
-              s"json_query($args, '$mode'$retSeg)" + sql.substring(close + 1)
-            spliced = true
-          }
-        }
+  private def rewriteJsonQueryClauses(sql0: String): String =
+    SqlText.rewriteCalls(sql0, jsonQueryCallPattern) { call =>
+      val content = call.content
+      val cmask = call.contentMask
+      // depth-0, unmasked clause matches only (a clause keyword
+      // inside a nested call or literal is not ours)
+      def depth0(at: Int): Boolean = SqlText.atTop(content, cmask, at)
+      var wrapMode = ' '
+      var quoteMode = ' '
+      var clauseStart = content.length
+      val wm = jsonWrapperPattern.matcher(content)
+      while (wm.find()) if (depth0(wm.start)) {
+        val variant = Option(wm.group(2)).map(_.trim.toUpperCase)
+        wrapMode =
+          if (wm.group(1).equalsIgnoreCase("WITHOUT")) {
+            if (variant.nonEmpty) throw new IllegalArgumentException(
+              "json_query: WITHOUT WRAPPER takes no " +
+                "CONDITIONAL/UNCONDITIONAL variant")
+            'N'
+          } else if (variant.contains("CONDITIONAL")) 'C'
+          else 'U' // WITH [UNCONDITIONAL] [ARRAY] WRAPPER
+        clauseStart = math.min(clauseStart, wm.start)
       }
-      if (!spliced) return sql
+      val qm = jsonQuotesPattern.matcher(content)
+      while (qm.find()) if (depth0(qm.start)) {
+        quoteMode = if (qm.group(1).equalsIgnoreCase("OMIT")) 'O' else 'K'
+        clauseStart = math.min(clauseStart, qm.start)
+      }
+      var emptyMode = ' '
+      var errorMode = ' '
+      val bm = jsonQueryBehaviorPattern.matcher(content)
+      while (bm.find()) if (depth0(bm.start)) {
+        val b = bm.group(1).toUpperCase.replaceAll("\\s+", " ") match {
+          case "ERROR" => 'E'
+          case "NULL" => 'N'
+          case "EMPTY ARRAY" => 'A'
+          case _ => 'B' // EMPTY OBJECT ('O' is taken by OMIT quotes)
+        }
+        if (bm.group(2).equalsIgnoreCase("EMPTY")) {
+          if (emptyMode != ' ') throw new IllegalArgumentException(
+            "json_query: duplicate ON EMPTY clause")
+          emptyMode = b
+        } else {
+          if (errorMode != ' ') throw new IllegalArgumentException(
+            "json_query: duplicate ON ERROR clause")
+          errorMode = b
+        }
+        clauseStart = math.min(clauseStart, bm.start)
+      }
+      if (wrapMode == ' ' && quoteMode == ' ' &&
+          emptyMode == ' ' && errorMode == ' ') {
+        None // no clauses on this call — leave it for the plain 2-arg shim
+      } else {
+        if (quoteMode == 'O' && (wrapMode == 'C' || wrapMode == 'U'))
+          throw new IllegalArgumentException(
+            "json_query: OMIT QUOTES cannot be combined with WITH " +
+              "ARRAY WRAPPER (SQL/JSON rule; Trino rejects it too)")
+        val mode = s"${if (wrapMode == ' ') 'N' else wrapMode}" +
+          s"${if (quoteMode == ' ') 'K' else quoteMode}" +
+          s"${if (emptyMode == ' ') 'N' else emptyMode}" +
+          s"${if (errorMode == ' ') 'N' else errorMode}"
+        val args0 = content.substring(0, clauseStart)
+        // grammar puts `RETURNING type` BEFORE the clauses — keep
+        // it trailing in the splice so the RETURNING pass (which
+        // runs after this one) still sees it
+        val retIdx = SqlText.topStarts(args0, cmask, returningPattern)
+          .lastOption.getOrElse(-1)
+        val (args, retSeg) =
+          if (retIdx < 0) (args0.trim, "")
+          else (args0.substring(0, retIdx).trim.stripSuffix(","),
+            " " + args0.substring(retIdx).trim)
+        val tail = content.substring(clauseStart)
+        // everything in the tail must be clause text we consumed
+        val residue = jsonQueryBehaviorPattern.matcher(
+          jsonQuotesPattern.matcher(
+            jsonWrapperPattern.matcher(tail).replaceAll(""))
+            .replaceAll("")).replaceAll("").trim
+        if (residue.nonEmpty) throw new IllegalArgumentException(
+          s"json_query: unsupported trailing clause '$residue' — " +
+            "supported: wrapper/quote clauses and {ERROR | NULL | " +
+            "EMPTY ARRAY | EMPTY OBJECT} ON {EMPTY | ERROR}")
+        Some(s"json_query($args, '$mode'$retSeg)")
+      }
     }
-    sql
-  }
 
   // SQL/JSON json_value ON EMPTY / ON ERROR clauses — `{NULL | ERROR |
   // DEFAULT expr} ON EMPTY` and the same ON ERROR — have no Spark
@@ -2359,132 +2265,85 @@ object TrinoFunctions {
   private val jsonValueBehaviorPattern = java.util.regex.Pattern.compile(
     "(?i)\\b(NULL|ERROR|DEFAULT)\\b")
 
-  private def rewriteJsonValueOnClauses(sql0: String): String = {
-    if (!jsonValuePattern.matcher(sql0).find()) return sql0
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val n = sql.length
-      val m = jsonValuePattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val open = m.end - 1
-          var depth = 0
-          var i = open
-          var close = -1
-          while (close < 0 && i < n) {
-            if (!masked(i)) {
-              if (sql(i) == '(') depth += 1
-              else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
-          }
-          if (close < 0) return sql
-          val content = sql.substring(open + 1, close)
-          val cmask = maskedRegions(content)
-          def depth0(at: Int): Boolean = {
-            if (cmask(at)) return false
-            var d = 0; var k = 0
-            while (k < at) {
-              if (!cmask(k)) {
-                if (content(k) == '(') d += 1
-                else if (content(k) == ')') d -= 1
-              }
-              k += 1
-            }
-            d == 0
-          }
-          // depth-0 ON EMPTY / ON ERROR hits, in order
-          val ons = {
-            val b = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-            val om = jsonValueOnPattern.matcher(content)
-            while (om.find()) if (depth0(om.start))
-              b += ((om.start, om.end, om.group(1).toUpperCase))
-            b.toSeq
-          }
-          if (ons.isEmpty) {
-            // no clauses on this call; scan the next one
-          } else {
-            if (ons.map(_._3).distinct.size != ons.size)
-              throw new IllegalArgumentException(
-                "json_value: duplicate ON " + ons.map(_._3).head + " clause")
-            // each clause's behavior: scan back from its ON keyword to
-            // the previous clause end (or the args start) for the LAST
-            // depth-0 NULL/ERROR adjacent to ON, else the DEFAULT whose
-            // expression is the text in between
-            var argsEnd = -1
-            var emptyB = ('N', "NULL")
-            var errorB = ('N', "NULL")
-            var prevEnd = 0
-            ons.foreach { case (os, oe, target) =>
-              val bm = jsonValueBehaviorPattern.matcher(content)
-              bm.region(prevEnd, os)
-              var best: Option[(Int, Int, String)] = None
-              while (bm.find()) if (depth0(bm.start)) {
-                val kw = bm.group(1).toUpperCase
-                val between = content.substring(bm.end, os).trim
-                // `DEFAULT NULL ON EMPTY` is a DEFAULT whose expression
-                // happens to be the NULL literal — don't let the bare
-                // keyword scan steal it (it would leave a dangling
-                // DEFAULT token inside the argument list)
-                val beforeTok = content.substring(prevEnd, bm.start)
-                  .trim.toUpperCase
-                val afterDefault = beforeTok.endsWith("DEFAULT") &&
-                  (beforeTok.length == 7 ||
-                    { val c = beforeTok.charAt(beforeTok.length - 8)
-                      !Character.isLetterOrDigit(c) && c != '_' })
-                if ((kw == "DEFAULT" && between.nonEmpty) ||
-                    ((kw == "NULL" || kw == "ERROR") && between.isEmpty &&
-                      !afterDefault))
-                  best = Some((bm.start, bm.end, kw))
-              }
-              val (bs, be, kw) = best.getOrElse(throw new IllegalArgumentException(
-                s"json_value: ON $target must be preceded by NULL, ERROR " +
-                  "or DEFAULT <expr>"))
-              if (argsEnd < 0) argsEnd = bs
-              val beh = kw match {
-                case "NULL" => ('N', "NULL")
-                case "ERROR" => ('E', "NULL")
-                case _ => ('D', content.substring(be, os).trim)
-              }
-              if (target == "EMPTY") emptyB = beh else errorB = beh
-              prevEnd = oe
-            }
-            val tailResidue = content.substring(ons.last._2).trim
-            if (tailResidue.nonEmpty) throw new IllegalArgumentException(
-              s"json_value: unexpected trailing text '$tailResidue' after " +
-                "the ON clauses")
-            // args may end with `RETURNING type` — keep it trailing so
-            // the RETURNING pass (which runs after) still sees it.
-            // (unpadded prefix: positions must stay content-relative
-            // for the depth check)
-            val args0 = content.substring(0, argsEnd)
-            val retIdx = {
-              val rm = java.util.regex.Pattern
-                .compile("(?i)\\bRETURNING\\b").matcher(args0)
-              var at = -1
-              while (rm.find()) if (depth0(rm.start)) at = rm.start
-              at
-            }
-            val (pre, retSeg) =
-              if (retIdx < 0) (args0, "")
-              else (args0.substring(0, retIdx).trim.stripSuffix(","),
-                " " + args0.substring(retIdx).trim)
-            val mode = s"${emptyB._1}${errorB._1}"
-            sql = sql.substring(0, m.start) +
-              s"json_value($pre, '$mode', ${emptyB._2}, ${errorB._2}$retSeg)" +
-              sql.substring(close + 1)
-            spliced = true
-          }
-        }
+  private def rewriteJsonValueOnClauses(sql0: String): String =
+    SqlText.rewriteCalls(sql0, jsonValuePattern) { call =>
+      val content = call.content
+      val cmask = call.contentMask
+      def depth0(at: Int): Boolean = SqlText.atTop(content, cmask, at)
+      // depth-0 ON EMPTY / ON ERROR hits, in order
+      val ons = {
+        val b = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
+        val om = jsonValueOnPattern.matcher(content)
+        while (om.find()) if (depth0(om.start))
+          b += ((om.start, om.end, om.group(1).toUpperCase))
+        b.toSeq
       }
-      if (!spliced) return sql
+      if (ons.isEmpty) None // no clauses on this call; scan the next one
+      else {
+        if (ons.map(_._3).distinct.size != ons.size)
+          throw new IllegalArgumentException(
+            "json_value: duplicate ON " + ons.map(_._3).head + " clause")
+        // each clause's behavior: scan back from its ON keyword to
+        // the previous clause end (or the args start) for the LAST
+        // depth-0 NULL/ERROR adjacent to ON, else the DEFAULT whose
+        // expression is the text in between
+        var argsEnd = -1
+        var emptyB = ('N', "NULL")
+        var errorB = ('N', "NULL")
+        var prevEnd = 0
+        ons.foreach { case (os, oe, target) =>
+          val bm = jsonValueBehaviorPattern.matcher(content)
+          bm.region(prevEnd, os)
+          var best: Option[(Int, Int, String)] = None
+          while (bm.find()) if (depth0(bm.start)) {
+            val kw = bm.group(1).toUpperCase
+            val between = content.substring(bm.end, os).trim
+            // `DEFAULT NULL ON EMPTY` is a DEFAULT whose expression
+            // happens to be the NULL literal — don't let the bare
+            // keyword scan steal it (it would leave a dangling
+            // DEFAULT token inside the argument list)
+            val beforeTok = content.substring(prevEnd, bm.start)
+              .trim.toUpperCase
+            val afterDefault = beforeTok.endsWith("DEFAULT") &&
+              (beforeTok.length == 7 ||
+                { val c = beforeTok.charAt(beforeTok.length - 8)
+                  !Character.isLetterOrDigit(c) && c != '_' })
+            if ((kw == "DEFAULT" && between.nonEmpty) ||
+                ((kw == "NULL" || kw == "ERROR") && between.isEmpty &&
+                  !afterDefault))
+              best = Some((bm.start, bm.end, kw))
+          }
+          val (bs, be, kw) = best.getOrElse(throw new IllegalArgumentException(
+            s"json_value: ON $target must be preceded by NULL, ERROR " +
+              "or DEFAULT <expr>"))
+          if (argsEnd < 0) argsEnd = bs
+          val beh = kw match {
+            case "NULL" => ('N', "NULL")
+            case "ERROR" => ('E', "NULL")
+            case _ => ('D', content.substring(be, os).trim)
+          }
+          if (target == "EMPTY") emptyB = beh else errorB = beh
+          prevEnd = oe
+        }
+        val tailResidue = content.substring(ons.last._2).trim
+        if (tailResidue.nonEmpty) throw new IllegalArgumentException(
+          s"json_value: unexpected trailing text '$tailResidue' after " +
+            "the ON clauses")
+        // args may end with `RETURNING type` — keep it trailing so
+        // the RETURNING pass (which runs after) still sees it.
+        // (unpadded prefix: positions must stay content-relative
+        // for the depth check)
+        val args0 = content.substring(0, argsEnd)
+        val retIdx = SqlText.topStarts(args0, cmask, returningPattern)
+          .lastOption.getOrElse(-1)
+        val (pre, retSeg) =
+          if (retIdx < 0) (args0, "")
+          else (args0.substring(0, retIdx).trim.stripSuffix(","),
+            " " + args0.substring(retIdx).trim)
+        val mode = s"${emptyB._1}${errorB._1}"
+        Some(s"json_value($pre, '$mode', ${emptyB._2}, ${errorB._2}$retSeg)")
+      }
     }
-    sql
-  }
 
   // SQL/JSON `JSON_TABLE(j, 'path' COLUMNS(…) [{ERROR|EMPTY} ON
   // ERROR])` — the SQL:2016 table function, rewritten onto two chained
@@ -2528,301 +2387,264 @@ object TrinoFunctions {
     "(?s)^([A-Za-z_][A-Za-z0-9_]*|\"[^\"]+\")\\s+(.*)$")
 
   private def rewriteJsonTable(sql0: String): String = {
-    if (!jsonTablePattern.matcher(sql0).find()) return sql0
-    var sql = sql0
     var ctr = 0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val n = sql.length
-      val m = jsonTablePattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val open = m.end - 1
-          var depth = 0
-          var i = open
-          var close = -1
-          while (close < 0 && i < n) {
-            if (!masked(i)) {
-              if (sql(i) == '(') depth += 1
-              else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
+    SqlText.rewriteCalls(sql0, jsonTablePattern) { call =>
+      val content = call.content
+      val frags = SqlText.splitTop(content)
+      if (frags.length < 2) throw new IllegalArgumentException(
+        "JSON_TABLE expects (json_expr, 'path' COLUMNS(…))")
+      val head = frags.last
+      val jsonExpr = frags.init.mkString(", ")
+      val hm = java.util.regex.Pattern.compile(
+        "(?is)^('(?:[^']|'')*')\\s+COLUMNS\\s*\\((.*)$").matcher(head)
+      if (!hm.matches()) throw new IllegalArgumentException(
+        "JSON_TABLE: expected a string-literal row path followed by " +
+          s"COLUMNS(…), got: ${head.take(80)}")
+      val rowPath = hm.group(1)
+      // COLUMNS(…) runs to ITS matching paren; the rest is the
+      // optional table-level ON ERROR clause
+      val cols = "(" + hm.group(2)
+      val colsEnd = SqlText.closeParen(cols, SqlText.mask(cols), 0)
+      if (colsEnd < 0) throw new IllegalArgumentException(
+        "JSON_TABLE: unterminated COLUMNS(…)")
+      val colsText = cols.substring(1, colsEnd)
+      var afterCols = cols.substring(colsEnd + 1).trim
+      // optional PLAN DEFAULT(…) between COLUMNS() and ON ERROR.
+      // Supported: OUTER | INNER (parent-child join) and UNION |
+      // CROSS (sibling combination) in either order; the full
+      // per-node PLAN form rejects loudly.
+      var innerJoin = false
+      var crossSiblings = false
+      if (afterCols.matches("(?is)^PLAN\\b.*")) {
+        val pd = java.util.regex.Pattern.compile(
+          "(?is)^PLAN\\s+DEFAULT\\s*\\(([^)]*)\\)\\s*(.*)$")
+          .matcher(afterCols)
+        if (!pd.matches()) throw new IllegalArgumentException(
+          "JSON_TABLE: only PLAN DEFAULT({OUTER|INNER}[, " +
+            "{UNION|CROSS}]) is supported (per-node PLAN clauses " +
+            "are not); restructure as separate JSON_TABLE calls")
+        val flags = pd.group(1).split(",").map(_.trim.toUpperCase)
+          .filter(_.nonEmpty)
+        flags.foreach {
+          case "OUTER" => innerJoin = false
+          case "INNER" => innerJoin = true
+          case "UNION" => crossSiblings = false
+          case "CROSS" => crossSiblings = true
+          case f => throw new IllegalArgumentException(
+            s"JSON_TABLE: unknown PLAN DEFAULT option '$f' — " +
+              "expected OUTER, INNER, UNION, or CROSS")
+        }
+        if (flags.count(f => f == "OUTER" || f == "INNER") > 1)
+          throw new IllegalArgumentException(
+            "JSON_TABLE: PLAN DEFAULT takes at most one of " +
+              "OUTER | INNER")
+        if (flags.count(f => f == "UNION" || f == "CROSS") > 1)
+          throw new IllegalArgumentException(
+            "JSON_TABLE: PLAN DEFAULT takes at most one of " +
+              "UNION | CROSS")
+        afterCols = pd.group(2).trim
+      }
+      val emptyOnError =
+        if (afterCols.isEmpty) false
+        else if (afterCols.matches("(?is)^EMPTY\\s+ON\\s+ERROR$")) true
+        else if (afterCols.matches("(?is)^ERROR\\s+ON\\s+ERROR$")) false
+        else throw new IllegalArgumentException(
+          s"JSON_TABLE: unexpected trailing text '$afterCols' — only " +
+            "[PLAN DEFAULT(…)] {ERROR | EMPTY} ON ERROR may follow " +
+            "COLUMNS(…)")
+      val it = s"__jt$ctr"
+      ctr += 1
+      // nested machinery: one iterator per nesting LEVEL; branch
+      // tag disambiguates sibling nodes sharing a level
+      val emptyArr =
+        "cast(array() as array<struct<b:int,p:int,v:string>>)"
+      def lvlIt(d: Int) = s"${it}_n$d"
+      def itemsOf(src: String, path: String): String = {
+        val raw = s"graft_json_items($src, $path)"
+        if (emptyOnError) s"try($raw)" else raw
+      }
+      // (id, depth, parentId, pathLit) per NESTED node, DFS order
+      val nodes =
+        scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, String)]
+      val outCols = scala.collection.mutable.ArrayBuffer.empty[String]
+      var nextId = 0
+      def columnExpr(mem: String, nodeId: Int, depth: Int): String = {
+        val (src, ord, guard) =
+          if (depth == 0) (s"$it.col", s"($it.pos + 1)", None)
+          else if (crossSiblings)
+            // CROSS rows carry one (p, v) SLOT per node; a node's
+            // slot is NULL only on the OUTER all-NULL row
+            (s"${lvlIt(1)}.nx.v$nodeId",
+              s"(${lvlIt(1)}.nx.p$nodeId + 1)",
+              Some(s"${lvlIt(1)}.nx.v$nodeId IS NOT NULL"))
+          else (s"${lvlIt(depth)}.nx.v", s"(${lvlIt(depth)}.nx.p + 1)",
+            Some(s"${lvlIt(depth)}.nx.b = $nodeId"))
+        val nm = jsonTableColName.matcher(mem)
+        if (!nm.matches()) throw new IllegalArgumentException(
+          s"JSON_TABLE: cannot parse COLUMNS entry: $mem")
+        val rawName = nm.group(1)
+        val alias =
+          if (rawName.startsWith("\""))
+            "`" + rawName.substring(1, rawName.length - 1) + "`"
+          else rawName
+        val implicitPath =
+          if (rawName.startsWith("\""))
+            s"'$$[\"${rawName.substring(1, rawName.length - 1)}\"]'"
+          else s"'$$.$rawName'"
+        val rest = nm.group(2).trim
+        val bare = if (rest.matches("(?is)^FOR\\s+ORDINALITY$")) ord
+        else {
+          // type = text before the first structural keyword
+          val kw = java.util.regex.Pattern.compile(
+            "(?i)\\b(FORMAT\\s+JSON|PATH\\b|EXISTS\\b|DEFAULT\\b|" +
+            "(?:NULL|ERROR|EMPTY\\s+ARRAY|EMPTY\\s+OBJECT|TRUE|FALSE|" +
+            "UNKNOWN)\\s+ON\\b)").matcher(rest)
+          val rmask = SqlText.mask(rest)
+          var cut = rest.length
+          var isExists = false
+          var isJson = false
+          var pathAt = -1
+          while (kw.find()) if (!rmask(kw.start)) {
+            if (kw.start < cut) cut = kw.start
+            val k = kw.group(1).toUpperCase.replaceAll("\\s+", " ")
+            if (k == "EXISTS") isExists = true
+            if (k == "FORMAT JSON") isJson = true
+            if (k.startsWith("PATH") && pathAt < 0) pathAt = kw.start
           }
-          if (close < 0) return sql
-          val content = sql.substring(open + 1, close)
-          val frags = topLevelCommaSplit(content).map(_.trim)
-          if (frags.length < 2) throw new IllegalArgumentException(
-            "JSON_TABLE expects (json_expr, 'path' COLUMNS(…))")
-          val head = frags.last
-          val jsonExpr = frags.init.mkString(", ")
-          val hm = java.util.regex.Pattern.compile(
-            "(?is)^('(?:[^']|'')*')\\s+COLUMNS\\s*\\((.*)$").matcher(head)
-          if (!hm.matches()) throw new IllegalArgumentException(
-            "JSON_TABLE: expected a string-literal row path followed by " +
-              s"COLUMNS(…), got: ${head.take(80)}")
-          val rowPath = hm.group(1)
-          // COLUMNS(…) runs to ITS matching paren; the rest is the
-          // optional table-level ON ERROR clause
-          val colsPlus = hm.group(2)
-          val cpm = maskedRegions(colsPlus)
-          var d2 = 0; var j2 = 0; var colsEnd = -1
-          while (colsEnd < 0 && j2 < colsPlus.length) {
-            if (!cpm(j2)) {
-              if (colsPlus(j2) == '(') d2 += 1
-              else if (colsPlus(j2) == ')') {
-                if (d2 == 0) colsEnd = j2 else d2 -= 1
+          val tpe = rest.substring(0, cut).trim
+          if (tpe.isEmpty) throw new IllegalArgumentException(
+            s"JSON_TABLE: COLUMNS entry $rawName needs a type")
+          // the path literal + everything after it (behaviors) ride
+          // verbatim; without PATH, behaviors may still follow
+          val (pathLit, tail) =
+            if (pathAt >= 0) {
+              val afterPath = rest.substring(pathAt + 4).trim
+              val pl = java.util.regex.Pattern.compile(
+                "(?s)^('(?:[^']|'')*')(.*)$").matcher(afterPath)
+              if (!pl.matches()) throw new IllegalArgumentException(
+                s"JSON_TABLE: PATH needs a string literal in: $mem")
+              (pl.group(1), pl.group(2))
+            } else {
+              // behaviors text = rest minus type and the EXISTS /
+              // FORMAT JSON markers before them
+              val behaviors = {
+                var t = rest.substring(cut)
+                t = t.replaceFirst("(?is)^\\s*EXISTS\\b", "")
+                t = t.replaceFirst("(?is)^\\s*FORMAT\\s+JSON\\b", "")
+                t
               }
+              (implicitPath, behaviors)
             }
-            j2 += 1
-          }
-          if (colsEnd < 0) throw new IllegalArgumentException(
-            "JSON_TABLE: unterminated COLUMNS(…)")
-          val colsText = colsPlus.substring(0, colsEnd)
-          var afterCols = colsPlus.substring(colsEnd + 1).trim
-          // optional PLAN DEFAULT(…) between COLUMNS() and ON ERROR.
-          // Supported: OUTER | INNER (parent-child join) and UNION |
-          // CROSS (sibling combination) in either order; the full
-          // per-node PLAN form rejects loudly.
-          var innerJoin = false
-          var crossSiblings = false
-          if (afterCols.matches("(?is)^PLAN\\b.*")) {
-            val pd = java.util.regex.Pattern.compile(
-              "(?is)^PLAN\\s+DEFAULT\\s*\\(([^)]*)\\)\\s*(.*)$")
-              .matcher(afterCols)
-            if (!pd.matches()) throw new IllegalArgumentException(
-              "JSON_TABLE: only PLAN DEFAULT({OUTER|INNER}[, " +
-                "{UNION|CROSS}]) is supported (per-node PLAN clauses " +
-                "are not); restructure as separate JSON_TABLE calls")
-            val flags = pd.group(1).split(",").map(_.trim.toUpperCase)
-              .filter(_.nonEmpty)
-            flags.foreach {
-              case "OUTER" => innerJoin = false
-              case "INNER" => innerJoin = true
-              case "UNION" => crossSiblings = false
-              case "CROSS" => crossSiblings = true
-              case f => throw new IllegalArgumentException(
-                s"JSON_TABLE: unknown PLAN DEFAULT option '$f' — " +
-                  "expected OUTER, INNER, UNION, or CROSS")
-            }
-            if (flags.count(f => f == "OUTER" || f == "INNER") > 1)
-              throw new IllegalArgumentException(
-                "JSON_TABLE: PLAN DEFAULT takes at most one of " +
-                  "OUTER | INNER")
-            if (flags.count(f => f == "UNION" || f == "CROSS") > 1)
-              throw new IllegalArgumentException(
-                "JSON_TABLE: PLAN DEFAULT takes at most one of " +
-                  "UNION | CROSS")
-            afterCols = pd.group(2).trim
-          }
-          val emptyOnError =
-            if (afterCols.isEmpty) false
-            else if (afterCols.matches("(?is)^EMPTY\\s+ON\\s+ERROR$")) true
-            else if (afterCols.matches("(?is)^ERROR\\s+ON\\s+ERROR$")) false
-            else throw new IllegalArgumentException(
-              s"JSON_TABLE: unexpected trailing text '$afterCols' — only " +
-                "[PLAN DEFAULT(…)] {ERROR | EMPTY} ON ERROR may follow " +
-                "COLUMNS(…)")
-          val it = s"__jt$ctr"
-          ctr += 1
-          // nested machinery: one iterator per nesting LEVEL; branch
-          // tag disambiguates sibling nodes sharing a level
-          val emptyArr =
-            "cast(array() as array<struct<b:int,p:int,v:string>>)"
-          def lvlIt(d: Int) = s"${it}_n$d"
-          def itemsOf(src: String, path: String): String = {
-            val raw = s"graft_json_items($src, $path)"
-            if (emptyOnError) s"try($raw)" else raw
-          }
-          // (id, depth, parentId, pathLit) per NESTED node, DFS order
-          val nodes =
-            scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, String)]
-          val outCols = scala.collection.mutable.ArrayBuffer.empty[String]
-          var nextId = 0
-          def columnExpr(mem: String, nodeId: Int, depth: Int): String = {
-            val (src, ord, guard) =
-              if (depth == 0) (s"$it.col", s"($it.pos + 1)", None)
-              else if (crossSiblings)
-                // CROSS rows carry one (p, v) SLOT per node; a node's
-                // slot is NULL only on the OUTER all-NULL row
-                (s"${lvlIt(1)}.nx.v$nodeId",
-                  s"(${lvlIt(1)}.nx.p$nodeId + 1)",
-                  Some(s"${lvlIt(1)}.nx.v$nodeId IS NOT NULL"))
-              else (s"${lvlIt(depth)}.nx.v", s"(${lvlIt(depth)}.nx.p + 1)",
-                Some(s"${lvlIt(depth)}.nx.b = $nodeId"))
-            val nm = jsonTableColName.matcher(mem)
-            if (!nm.matches()) throw new IllegalArgumentException(
-              s"JSON_TABLE: cannot parse COLUMNS entry: $mem")
-            val rawName = nm.group(1)
-            val alias =
-              if (rawName.startsWith("\""))
-                "`" + rawName.substring(1, rawName.length - 1) + "`"
-              else rawName
-            val implicitPath =
-              if (rawName.startsWith("\""))
-                s"'$$[\"${rawName.substring(1, rawName.length - 1)}\"]'"
-              else s"'$$.$rawName'"
-            val rest = nm.group(2).trim
-            val bare = if (rest.matches("(?is)^FOR\\s+ORDINALITY$")) ord
-            else {
-              // type = text before the first structural keyword
-              val kw = java.util.regex.Pattern.compile(
-                "(?i)\\b(FORMAT\\s+JSON|PATH\\b|EXISTS\\b|DEFAULT\\b|" +
-                "(?:NULL|ERROR|EMPTY\\s+ARRAY|EMPTY\\s+OBJECT|TRUE|FALSE|" +
-                "UNKNOWN)\\s+ON\\b)").matcher(rest)
-            val rmask = maskedRegions(rest)
-              var cut = rest.length
-              var isExists = false
-              var isJson = false
-              var pathAt = -1
-              while (kw.find()) if (!rmask(kw.start)) {
-                if (kw.start < cut) cut = kw.start
-                val k = kw.group(1).toUpperCase.replaceAll("\\s+", " ")
-                if (k == "EXISTS") isExists = true
-                if (k == "FORMAT JSON") isJson = true
-                if (k.startsWith("PATH") && pathAt < 0) pathAt = kw.start
-              }
-              val tpe = rest.substring(0, cut).trim
-              if (tpe.isEmpty) throw new IllegalArgumentException(
-                s"JSON_TABLE: COLUMNS entry $rawName needs a type")
-              // the path literal + everything after it (behaviors) ride
-              // verbatim; without PATH, behaviors may still follow
-              val (pathLit, tail) =
-                if (pathAt >= 0) {
-                  val afterPath = rest.substring(pathAt + 4).trim
-                  val pl = java.util.regex.Pattern.compile(
-                    "(?s)^('(?:[^']|'')*')(.*)$").matcher(afterPath)
-                  if (!pl.matches()) throw new IllegalArgumentException(
-                    s"JSON_TABLE: PATH needs a string literal in: $mem")
-                  (pl.group(1), pl.group(2))
-                } else {
-                  // behaviors text = rest minus type and the EXISTS /
-                  // FORMAT JSON markers before them
-                  val behaviors = {
-                    var t = rest.substring(cut)
-                    t = t.replaceFirst("(?is)^\\s*EXISTS\\b", "")
-                    t = t.replaceFirst("(?is)^\\s*FORMAT\\s+JSON\\b", "")
-                    t
-                  }
-                  (implicitPath, behaviors)
-                }
-              val fn =
-                if (isExists) "json_exists"
-                else if (isJson) "json_query"
-                else "json_value"
-              s"CAST($fn($src, $pathLit$tail) AS " +
-                s"${trinoTypeToSpark(tpe)})"
-            }
-            guard match {
-              case Some(g) => s"CASE WHEN $g THEN $bare END AS $alias"
-              case None    => s"$bare AS $alias"
-            }
-          }
-          val nestedHead = java.util.regex.Pattern.compile(
-            "(?is)^NESTED\\s+(?:PATH\\s+)?('(?:[^']|'')*')\\s*" +
-              "(?:AS\\s+(?:[A-Za-z_][A-Za-z0-9_]*|\"[^\"]+\")\\s*)?" +
-              "COLUMNS\\s*\\((.*)\\)\\s*$")
-          def parseCols(text: String, nodeId: Int, depth: Int): Unit =
-            topLevelCommaSplit(text).map(_.trim).foreach { mem =>
-              if (mem.matches("(?is)^NESTED\\b.*")) {
-                val nh = nestedHead.matcher(mem)
-                if (!nh.matches()) throw new IllegalArgumentException(
-                  "JSON_TABLE: cannot parse NESTED entry (expected " +
-                    s"NESTED [PATH] 'path' [AS name] COLUMNS(…)): " +
-                    mem.take(80))
-                nextId += 1
-                val id = nextId
-                nodes += ((id, depth + 1, nodeId, nh.group(1)))
-                parseCols(nh.group(2), id, depth + 1)
-              } else outCols += columnExpr(mem, nodeId, depth)
-            }
-          parseCols(colsText, 0, 0)
-          val maxDepth = if (nodes.isEmpty) 0 else nodes.map(_._2).max
-          if (crossSiblings && maxDepth > 1)
-            throw new IllegalArgumentException(
-              "JSON_TABLE: the CROSS sibling combination supports one " +
-                "nesting level only; restructure deeper NESTED levels " +
-                "as separate JSON_TABLE calls")
-          // OUTER: explode_outer — empty concat yields the all-NULL
-          // row (parent kept). INNER: plain explode — empty concat
-          // drops the parent — plus, below level 1, a passthrough
-          // MARKER row (b = -1, never a column's tag) for rows whose
-          // branch has no nodes at this level, so sibling-branch rows
-          // survive their siblings' inner grandchild joins.
-          val explodeFn = if (innerJoin) "explode" else "explode_outer"
-          // CROSS: one level, one slot-struct per row — the sibling
-          // arrays fold into a product via nested transforms (any
-          // empty factor empties the product: P ⋈ (C1 CROSS C2) drops
-          // the parent under INNER, keeps the all-NULL row under
-          // OUTER via explode_outer)
-          val crossLaterals = if (!crossSiblings || nodes.isEmpty) Seq.empty
-          else {
-            val ns = nodes.sortBy(_._1)
-            val ids = ns.map(_._1)
-            def slots(curId: Int, pExpr: String, vExpr: String,
-                accVar: Option[String]): String =
-              ids.map { id =>
-                if (id == curId) s"'p$id', $pExpr, 'v$id', $vExpr"
-                else accVar match {
-                  case Some(a) => s"'p$id', $a.p$id, 'v$id', $a.v$id"
-                  case None =>
-                    s"'p$id', CAST(NULL AS INT), 'v$id', CAST(NULL AS STRING)"
-                }
-              }.mkString("named_struct(", ", ", ")")
-            val h = ns.head
-            var acc = s"transform(${itemsOf(s"$it.col", h._4)}, " +
-              s"(x${h._1}, i${h._1}) -> " +
-              s"${slots(h._1, s"i${h._1}", s"x${h._1}", None)})"
-            ns.tail.foreach { case (id, _, _, pathLit) =>
-              acc = s"flatten(transform($acc, a$id -> " +
-                s"transform(${itemsOf(s"$it.col", pathLit)}, " +
-                s"(x$id, i$id) -> " +
-                s"${slots(id, s"i$id", s"x$id", Some(s"a$id"))})))"
-            }
-            Seq(s"LATERAL (SELECT $explodeFn($acc) AS nx) ${lvlIt(1)}")
-          }
-          val levelLaterals = if (crossSiblings) crossLaterals
-          else (1 to maxDepth).map { d =>
-            val lvlNodes = nodes.filter(_._2 == d)
-            val gens = lvlNodes.map {
-              case (id, _, pid, pathLit) =>
-                def tagged(src: String) =
-                  s"coalesce(transform(${itemsOf(src, pathLit)}, " +
-                    s"(x, i) -> named_struct('b', $id, 'p', i, 'v', x)), " +
-                    s"$emptyArr)"
-                if (d == 1) tagged(s"$it.col")
-                else {
-                  val p = lvlIt(d - 1)
-                  s"CASE WHEN $p.nx.b = $pid AND $p.nx.v IS NOT NULL " +
-                    s"THEN ${tagged(s"$p.nx.v")} ELSE $emptyArr END"
-                }
-            }
-            val marker =
-              if (innerJoin && d > 1) {
-                val p = lvlIt(d - 1)
-                val pids = lvlNodes.map(_._3).distinct.mkString(", ")
-                Seq(s"CASE WHEN $p.nx.b IN ($pids) THEN $emptyArr ELSE " +
-                  "array(named_struct('b', -1, 'p', -1, " +
-                  "'v', CAST(NULL AS STRING))) END")
-              } else Seq.empty
-            val all = gens ++ marker
-            val arr = if (all.length == 1) all.head
-              else s"concat(${all.mkString(", ")})"
-            s"LATERAL (SELECT $explodeFn($arr) AS nx) ${lvlIt(d)}"
-          }
-          val itemsCall = itemsOf(jsonExpr, rowPath)
-          val repl = (s"LATERAL (SELECT posexplode($itemsCall)) $it" +:
-            levelLaterals :+
-            s"LATERAL (SELECT ${outCols.mkString(", ")})").mkString(", ")
-          sql = sql.substring(0, m.start) + repl + sql.substring(close + 1)
-          spliced = true
+          val fn =
+            if (isExists) "json_exists"
+            else if (isJson) "json_query"
+            else "json_value"
+          s"CAST($fn($src, $pathLit$tail) AS " +
+            s"${trinoTypeToSpark(tpe)})"
+        }
+        guard match {
+          case Some(g) => s"CASE WHEN $g THEN $bare END AS $alias"
+          case None    => s"$bare AS $alias"
         }
       }
-      if (!spliced) return sql
+      val nestedHead = java.util.regex.Pattern.compile(
+        "(?is)^NESTED\\s+(?:PATH\\s+)?('(?:[^']|'')*')\\s*" +
+          "(?:AS\\s+(?:[A-Za-z_][A-Za-z0-9_]*|\"[^\"]+\")\\s*)?" +
+          "COLUMNS\\s*\\((.*)\\)\\s*$")
+      def parseCols(text: String, nodeId: Int, depth: Int): Unit =
+        SqlText.splitTop(text).foreach { mem =>
+          if (mem.matches("(?is)^NESTED\\b.*")) {
+            val nh = nestedHead.matcher(mem)
+            if (!nh.matches()) throw new IllegalArgumentException(
+              "JSON_TABLE: cannot parse NESTED entry (expected " +
+                s"NESTED [PATH] 'path' [AS name] COLUMNS(…)): " +
+                mem.take(80))
+            nextId += 1
+            val id = nextId
+            nodes += ((id, depth + 1, nodeId, nh.group(1)))
+            parseCols(nh.group(2), id, depth + 1)
+          } else outCols += columnExpr(mem, nodeId, depth)
+        }
+      parseCols(colsText, 0, 0)
+      val maxDepth = if (nodes.isEmpty) 0 else nodes.map(_._2).max
+      if (crossSiblings && maxDepth > 1)
+        throw new IllegalArgumentException(
+          "JSON_TABLE: the CROSS sibling combination supports one " +
+            "nesting level only; restructure deeper NESTED levels " +
+            "as separate JSON_TABLE calls")
+      // OUTER: explode_outer — empty concat yields the all-NULL
+      // row (parent kept). INNER: plain explode — empty concat
+      // drops the parent — plus, below level 1, a passthrough
+      // MARKER row (b = -1, never a column's tag) for rows whose
+      // branch has no nodes at this level, so sibling-branch rows
+      // survive their siblings' inner grandchild joins.
+      val explodeFn = if (innerJoin) "explode" else "explode_outer"
+      // CROSS: one level, one slot-struct per row — the sibling
+      // arrays fold into a product via nested transforms (any
+      // empty factor empties the product: P ⋈ (C1 CROSS C2) drops
+      // the parent under INNER, keeps the all-NULL row under
+      // OUTER via explode_outer)
+      val crossLaterals = if (!crossSiblings || nodes.isEmpty) Seq.empty
+      else {
+        val ns = nodes.sortBy(_._1)
+        val ids = ns.map(_._1)
+        def slots(curId: Int, pExpr: String, vExpr: String,
+            accVar: Option[String]): String =
+          ids.map { id =>
+            if (id == curId) s"'p$id', $pExpr, 'v$id', $vExpr"
+            else accVar match {
+              case Some(a) => s"'p$id', $a.p$id, 'v$id', $a.v$id"
+              case None =>
+                s"'p$id', CAST(NULL AS INT), 'v$id', CAST(NULL AS STRING)"
+            }
+          }.mkString("named_struct(", ", ", ")")
+        val h = ns.head
+        var acc = s"transform(${itemsOf(s"$it.col", h._4)}, " +
+          s"(x${h._1}, i${h._1}) -> " +
+          s"${slots(h._1, s"i${h._1}", s"x${h._1}", None)})"
+        ns.tail.foreach { case (id, _, _, pathLit) =>
+          acc = s"flatten(transform($acc, a$id -> " +
+            s"transform(${itemsOf(s"$it.col", pathLit)}, " +
+            s"(x$id, i$id) -> " +
+            s"${slots(id, s"i$id", s"x$id", Some(s"a$id"))})))"
+        }
+        Seq(s"LATERAL (SELECT $explodeFn($acc) AS nx) ${lvlIt(1)}")
+      }
+      val levelLaterals = if (crossSiblings) crossLaterals
+      else (1 to maxDepth).map { d =>
+        val lvlNodes = nodes.filter(_._2 == d)
+        val gens = lvlNodes.map {
+          case (id, _, pid, pathLit) =>
+            def tagged(src: String) =
+              s"coalesce(transform(${itemsOf(src, pathLit)}, " +
+                s"(x, i) -> named_struct('b', $id, 'p', i, 'v', x)), " +
+                s"$emptyArr)"
+            if (d == 1) tagged(s"$it.col")
+            else {
+              val p = lvlIt(d - 1)
+              s"CASE WHEN $p.nx.b = $pid AND $p.nx.v IS NOT NULL " +
+                s"THEN ${tagged(s"$p.nx.v")} ELSE $emptyArr END"
+            }
+        }
+        val marker =
+          if (innerJoin && d > 1) {
+            val p = lvlIt(d - 1)
+            val pids = lvlNodes.map(_._3).distinct.mkString(", ")
+            Seq(s"CASE WHEN $p.nx.b IN ($pids) THEN $emptyArr ELSE " +
+              "array(named_struct('b', -1, 'p', -1, " +
+              "'v', CAST(NULL AS STRING))) END")
+          } else Seq.empty
+        val all = gens ++ marker
+        val arr = if (all.length == 1) all.head
+          else s"concat(${all.mkString(", ")})"
+        s"LATERAL (SELECT $explodeFn($arr) AS nx) ${lvlIt(d)}"
+      }
+      val itemsCall = itemsOf(jsonExpr, rowPath)
+      val repl = (s"LATERAL (SELECT posexplode($itemsCall)) $it" +:
+        levelLaterals :+
+        s"LATERAL (SELECT ${outCols.mkString(", ")})").mkString(", ")
+      Some(repl)
     }
-    sql
   }
 
   // SQL/JSON constructors — `json_object([KEY] k VALUE v | k : v, …
@@ -2849,191 +2671,125 @@ object TrinoFunctions {
     "(?i)\\s*\\b(WITH|WITHOUT)\\s+UNIQUE(\\s+KEYS)?\\s*$")
   private val jsonNestedPattern = java.util.regex.Pattern.compile(
     "(?is)^json_(object|array|parse|query)\\s*\\(.*\\)$")
+  private val jsonMemberValuePattern = java.util.regex.Pattern.compile(
+    "(?i)\\bVALUE\\b")
+  private val jsonMemberColonPattern = java.util.regex.Pattern.compile(":")
 
-  private def rewriteJsonConstructors(sql0: String): String = {
-    if (!jsonCtorPattern.matcher(sql0).find()) return sql0
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val n = sql.length
-      val m = jsonCtorPattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val isObject = m.group(1).equalsIgnoreCase("object")
-          val open = m.end - 1
-          var depth = 0
-          var i = open
-          var close = -1
-          while (close < 0 && i < n) {
-            if (!masked(i)) {
-              if (sql(i) == '(') depth += 1
-              else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
-          }
-          if (close < 0) return sql
-          var content = sql.substring(open + 1, close)
-          // trailing clauses, outermost first: RETURNING, UNIQUE, ON
-          // NULL. RETURNING needs a depth-0 scan (type text may hold
-          // parens — decimal(10,2) — so a $-anchored regex could
-          // swallow a nested json_value(… RETURNING t) member instead)
-          var retType: Option[String] = None
-          locally {
-            val cm0 = maskedRegions(content)
-            val rre = java.util.regex.Pattern
-              .compile("(?i)\\bRETURNING\\b").matcher(content)
-            var at = -1
-            while (rre.find()) if (!cm0(rre.start)) {
-              var d = 0; var q = 0
-              while (q < rre.start) {
-                if (!cm0(q)) {
-                  if (content(q) == '(') d += 1
-                  else if (content(q) == ')') d -= 1
-                }
-                q += 1
-              }
-              if (d == 0) at = rre.start
-            }
-            if (at >= 0) {
-              retType = Some(content.substring(at + 9).trim)
-              content = content.substring(0, at)
-            }
-          }
-          var uniqueKeys = false
-          if (isObject) {
-            val um = jsonCtorUniquePattern.matcher(content)
-            if (um.find() && !maskedRegions(content)(um.start)) {
-              uniqueKeys = um.group(1).equalsIgnoreCase("WITH")
-              content = content.substring(0, um.start)
-            }
-          }
-          var keepNull = isObject // the per-constructor defaults
-          val nm = jsonCtorNullPattern.matcher(content)
-          if (nm.find() && !maskedRegions(content)(nm.start)) {
-            keepNull = nm.group(1).equalsIgnoreCase("NULL")
-            content = content.substring(0, nm.start)
-            // `json_array(1, NULL ON NULL)` is a Trino syntax error
-            // too — the clause attaches to the last member WITHOUT a
-            // comma — but the bare-comma residue would otherwise reach
-            // Spark as a confusing empty named_struct member
-            if (content.trim.endsWith(",")) throw new
-              IllegalArgumentException(
-                s"json_${if (isObject) "object" else "array"}: the " +
-                  "NULL/ABSENT ON NULL clause attaches to the last " +
-                  "member without a comma (drop the comma before it)")
-          }
-          val members =
-            if (content.trim.isEmpty) Seq.empty
-            else topLevelCommaSplit(content).map(_.trim)
-          // member = [KEY] key_expr VALUE value_expr | key_expr :
-          // value_expr — split at the FIRST depth-0 unmasked VALUE
-          // keyword, else the first depth-0 unmasked colon. Keys may
-          // be arbitrary expressions (Trino); string-literal keys take
-          // the named_struct fast path, anything else rides the
-          // dynamic-key carrier with keys as a JSON string array.
-          val fields: Seq[(String, String)] =
-            if (isObject) {
-              members.map { mem =>
-                val mm = maskedRegions(mem)
-                def depth0At(p: Int): Boolean = {
-                  var d = 0; var q = 0
-                  while (q < p) {
-                    if (!mm(q)) {
-                      if (mem(q) == '(') d += 1
-                      else if (mem(q) == ')') d -= 1
-                    }
-                    q += 1
-                  }
-                  d == 0
-                }
-                val vm = java.util.regex.Pattern.compile("(?i)\\bVALUE\\b")
-                  .matcher(mem)
-                var vAt = -1
-                while (vAt < 0 && vm.find())
-                  if (!mm(vm.start) && depth0At(vm.start)) vAt = vm.start
-                val (kRaw, vRaw) =
-                  if (vAt >= 0)
-                    (mem.substring(0, vAt).trim,
-                      mem.substring(vAt + 5).trim)
-                  else {
-                    var cAt = -1; var q = 0; var d = 0
-                    while (cAt < 0 && q < mem.length) {
-                      if (!mm(q)) {
-                        if (mem(q) == '(') d += 1
-                        else if (mem(q) == ')') d -= 1
-                        else if (mem(q) == ':' && d == 0) cAt = q
-                      }
-                      q += 1
-                    }
-                    if (cAt < 0) throw new IllegalArgumentException(
-                      "json_object: each member must be [KEY] key VALUE " +
-                        s"expr or key : expr (got: $mem)")
-                    (mem.substring(0, cAt).trim,
-                      mem.substring(cAt + 1).trim)
-                  }
-                val k = kRaw.replaceFirst("(?is)^KEY\\s+", "")
-                if (k.isEmpty || vRaw.isEmpty)
-                  throw new IllegalArgumentException(
-                    s"json_object: empty key or value in member: $mem")
-                (k, vRaw)
-              }
-            } else members.zipWithIndex.map { case (mem, idx) =>
-              (s"'c$idx'", mem)
-            }
-          val litKeyPattern = java.util.regex.Pattern.compile(
-            "(?s)^'(?:[^']|'')*'$")
-          val allLiteralKeys =
-            fields.forall(f => litKeyPattern.matcher(f._1).matches())
-          if (uniqueKeys && allLiteralKeys) {
-            val dups = fields.groupBy(_._1).collect {
-              case (k, vs) if vs.size > 1 => k }
-            if (dups.nonEmpty) throw new IllegalArgumentException(
-              s"json_object: duplicate key ${dups.head} with WITH UNIQUE KEYS")
-          }
-          val core =
-            if (fields.isEmpty) {
-              if (isObject) "'{}'" else "'[]'"
-            } else if (isObject && !allLiteralKeys) {
-              // dynamic keys: values ride synthetic c0..cN fields so
-              // typing/serialization matches the literal path; keys
-              // ride a parallel JSON string array (a NULL key raises
-              // at runtime like Trino; WITH UNIQUE KEYS checks there)
-              val modes = fields.map { case (_, v) =>
-                if (jsonNestedPattern.matcher(v).matches()) 'J' else 'V'
-              }.mkString
-              val ns = fields.zipWithIndex.map { case ((_, v), i) =>
-                s"'c$i', $v" }.mkString("named_struct(", ", ", ")")
-              val ks = fields.map { case (k, _) => s"CAST($k AS STRING)" }
-                .mkString("array(", ", ", ")")
-              s"graft_json_obj_dyn(to_json($ns, " +
-                s"map('ignoreNullFields', 'false')), to_json($ks), " +
-                s"'${if (keepNull) "N" else "A"}', '$modes', " +
-                s"'${if (uniqueKeys) "U" else "D"}')"
-            } else {
-              val modes = fields.map { case (_, v) =>
-                if (jsonNestedPattern.matcher(v).matches()) 'J' else 'V'
-              }.mkString
-              val ns = fields.map { case (k, v) => s"$k, $v" }
-                .mkString("named_struct(", ", ", ")")
-              val fn = if (isObject) "graft_json_obj" else "graft_json_arr"
-              s"$fn(to_json($ns, map('ignoreNullFields', 'false')), " +
-                s"'${if (keepNull) "N" else "A"}', '$modes')"
-            }
-          val wrapped = retType match {
-            case Some(t) => s"CAST($core AS ${trinoTypeToSpark(t)})"
-            case None => core
-          }
-          sql = sql.substring(0, m.start) + wrapped + sql.substring(close + 1)
-          spliced = true
+  private def rewriteJsonConstructors(sql0: String): String =
+    SqlText.rewriteCalls(sql0, jsonCtorPattern) { call =>
+      val isObject = call.m.group(1).equalsIgnoreCase("object")
+      var content = call.content
+      // trailing clauses, outermost first: RETURNING, UNIQUE, ON
+      // NULL. RETURNING needs a depth-0 scan (type text may hold
+      // parens — decimal(10,2) — so a $-anchored regex could
+      // swallow a nested json_value(… RETURNING t) member instead)
+      var retType: Option[String] = None
+      SqlText.topStarts(content, call.contentMask, returningPattern).lastOption
+        .foreach { at =>
+          retType = Some(content.substring(at + 9).trim)
+          content = content.substring(0, at)
+        }
+      var uniqueKeys = false
+      if (isObject) {
+        val um = jsonCtorUniquePattern.matcher(content)
+        if (um.find() && !SqlText.mask(content)(um.start)) {
+          uniqueKeys = um.group(1).equalsIgnoreCase("WITH")
+          content = content.substring(0, um.start)
         }
       }
-      if (!spliced) return sql
+      var keepNull = isObject // the per-constructor defaults
+      val nm = jsonCtorNullPattern.matcher(content)
+      if (nm.find() && !SqlText.mask(content)(nm.start)) {
+        keepNull = nm.group(1).equalsIgnoreCase("NULL")
+        content = content.substring(0, nm.start)
+        // `json_array(1, NULL ON NULL)` is a Trino syntax error
+        // too — the clause attaches to the last member WITHOUT a
+        // comma — but the bare-comma residue would otherwise reach
+        // Spark as a confusing empty named_struct member
+        if (content.trim.endsWith(",")) throw new
+          IllegalArgumentException(
+            s"json_${if (isObject) "object" else "array"}: the " +
+              "NULL/ABSENT ON NULL clause attaches to the last " +
+              "member without a comma (drop the comma before it)")
+      }
+      val members =
+        if (content.trim.isEmpty) Seq.empty
+        else SqlText.splitTop(content)
+      // member = [KEY] key_expr VALUE value_expr | key_expr :
+      // value_expr — split at the FIRST depth-0 unmasked VALUE
+      // keyword, else the first depth-0 unmasked colon. Keys may
+      // be arbitrary expressions (Trino); string-literal keys take
+      // the named_struct fast path, anything else rides the
+      // dynamic-key carrier with keys as a JSON string array.
+      val fields: Seq[(String, String)] =
+        if (isObject) {
+          members.map { mem =>
+            val mm = SqlText.mask(mem)
+            val (kRaw, vRaw) =
+              SqlText.topStarts(mem, mm, jsonMemberValuePattern).headOption match {
+                case Some(vAt) =>
+                  (mem.substring(0, vAt).trim, mem.substring(vAt + 5).trim)
+                case None =>
+                  val cAt = SqlText.topStarts(mem, mm, jsonMemberColonPattern)
+                    .headOption.getOrElse(throw new IllegalArgumentException(
+                      "json_object: each member must be [KEY] key VALUE " +
+                        s"expr or key : expr (got: $mem)"))
+                  (mem.substring(0, cAt).trim, mem.substring(cAt + 1).trim)
+              }
+            val k = kRaw.replaceFirst("(?is)^KEY\\s+", "")
+            if (k.isEmpty || vRaw.isEmpty)
+              throw new IllegalArgumentException(
+                s"json_object: empty key or value in member: $mem")
+            (k, vRaw)
+          }
+        } else members.zipWithIndex.map { case (mem, idx) =>
+          (s"'c$idx'", mem)
+        }
+      val litKeyPattern = java.util.regex.Pattern.compile(
+        "(?s)^'(?:[^']|'')*'$")
+      val allLiteralKeys =
+        fields.forall(f => litKeyPattern.matcher(f._1).matches())
+      if (uniqueKeys && allLiteralKeys) {
+        val dups = fields.groupBy(_._1).collect {
+          case (k, vs) if vs.size > 1 => k }
+        if (dups.nonEmpty) throw new IllegalArgumentException(
+          s"json_object: duplicate key ${dups.head} with WITH UNIQUE KEYS")
+      }
+      val core =
+        if (fields.isEmpty) {
+          if (isObject) "'{}'" else "'[]'"
+        } else if (isObject && !allLiteralKeys) {
+          // dynamic keys: values ride synthetic c0..cN fields so
+          // typing/serialization matches the literal path; keys
+          // ride a parallel JSON string array (a NULL key raises
+          // at runtime like Trino; WITH UNIQUE KEYS checks there)
+          val modes = fields.map { case (_, v) =>
+            if (jsonNestedPattern.matcher(v).matches()) 'J' else 'V'
+          }.mkString
+          val ns = fields.zipWithIndex.map { case ((_, v), i) =>
+            s"'c$i', $v" }.mkString("named_struct(", ", ", ")")
+          val ks = fields.map { case (k, _) => s"CAST($k AS STRING)" }
+            .mkString("array(", ", ", ")")
+          s"graft_json_obj_dyn(to_json($ns, " +
+            s"map('ignoreNullFields', 'false')), to_json($ks), " +
+            s"'${if (keepNull) "N" else "A"}', '$modes', " +
+            s"'${if (uniqueKeys) "U" else "D"}')"
+        } else {
+          val modes = fields.map { case (_, v) =>
+            if (jsonNestedPattern.matcher(v).matches()) 'J' else 'V'
+          }.mkString
+          val ns = fields.map { case (k, v) => s"$k, $v" }
+            .mkString("named_struct(", ", ", ")")
+          val fn = if (isObject) "graft_json_obj" else "graft_json_arr"
+          s"$fn(to_json($ns, map('ignoreNullFields', 'false')), " +
+            s"'${if (keepNull) "N" else "A"}', '$modes')"
+        }
+      val wrapped = retType match {
+        case Some(t) => s"CAST($core AS ${trinoTypeToSpark(t)})"
+        case None => core
+      }
+      Some(wrapped)
     }
-    sql
-  }
 
   // json_exists {TRUE | FALSE | UNKNOWN | ERROR} ON ERROR — the only
   // behavior clause json_exists takes (an empty match is simply FALSE,
@@ -3043,77 +2799,35 @@ object TrinoFunctions {
   private val jsonExistsBehaviorPattern = java.util.regex.Pattern.compile(
     "(?i)\\s+(TRUE|FALSE|UNKNOWN|ERROR)\\s+ON\\s+(EMPTY|ERROR)\\b")
 
-  private def rewriteJsonExistsClauses(sql0: String): String = {
-    if (!jsonExistsCallPattern.matcher(sql0).find()) return sql0
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val n = sql.length
-      val m = jsonExistsCallPattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val open = m.end - 1
-          var depth = 0
-          var i = open
-          var close = -1
-          while (close < 0 && i < n) {
-            if (!masked(i)) {
-              if (sql(i) == '(') depth += 1
-              else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
-          }
-          if (close < 0) return sql
-          val content = sql.substring(open + 1, close)
-          val cmask = maskedRegions(content)
-          def depth0(at: Int): Boolean = {
-            if (cmask(at)) return false
-            var d = 0; var k = 0
-            while (k < at) {
-              if (!cmask(k)) {
-                if (content(k) == '(') d += 1
-                else if (content(k) == ')') d -= 1
-              }
-              k += 1
-            }
-            d == 0
-          }
-          var behavior = ' '
-          var clauseStart = content.length
-          val bm = jsonExistsBehaviorPattern.matcher(content)
-          while (bm.find()) if (depth0(bm.start)) {
-            if (bm.group(2).equalsIgnoreCase("EMPTY"))
-              throw new IllegalArgumentException(
-                "json_exists: ON EMPTY is not part of its grammar — an " +
-                  "empty match is FALSE; only {TRUE | FALSE | UNKNOWN | " +
-                  "ERROR} ON ERROR is accepted")
-            if (behavior != ' ') throw new IllegalArgumentException(
-              "json_exists: duplicate ON ERROR clause")
-            behavior = bm.group(1).toUpperCase.charAt(0) // T|F|U|E
-            clauseStart = math.min(clauseStart, bm.start)
-          }
-          if (behavior == ' ') {
-            // no clause on this call — leave it for the plain 2-arg shim
-          } else {
-            val args = content.substring(0, clauseStart).trim
-            val residue = jsonExistsBehaviorPattern
-              .matcher(content.substring(clauseStart)).replaceAll("").trim
-            if (residue.nonEmpty) throw new IllegalArgumentException(
-              s"json_exists: unexpected trailing text '$residue' after " +
-                "the ON ERROR clause")
-            sql = sql.substring(0, m.start) +
-              s"json_exists($args, '$behavior')" + sql.substring(close + 1)
-            spliced = true
-          }
-        }
+  private def rewriteJsonExistsClauses(sql0: String): String =
+    SqlText.rewriteCalls(sql0, jsonExistsCallPattern) { call =>
+      val content = call.content
+      val cmask = call.contentMask
+      var behavior = ' '
+      var clauseStart = content.length
+      val bm = jsonExistsBehaviorPattern.matcher(content)
+      while (bm.find()) if (SqlText.atTop(content, cmask, bm.start)) {
+        if (bm.group(2).equalsIgnoreCase("EMPTY"))
+          throw new IllegalArgumentException(
+            "json_exists: ON EMPTY is not part of its grammar — an " +
+              "empty match is FALSE; only {TRUE | FALSE | UNKNOWN | " +
+              "ERROR} ON ERROR is accepted")
+        if (behavior != ' ') throw new IllegalArgumentException(
+          "json_exists: duplicate ON ERROR clause")
+        behavior = bm.group(1).toUpperCase.charAt(0) // T|F|U|E
+        clauseStart = math.min(clauseStart, bm.start)
       }
-      if (!spliced) return sql
+      if (behavior == ' ') None // no clause — leave it for the plain 2-arg shim
+      else {
+        val args = content.substring(0, clauseStart).trim
+        val residue = jsonExistsBehaviorPattern
+          .matcher(content.substring(clauseStart)).replaceAll("").trim
+        if (residue.nonEmpty) throw new IllegalArgumentException(
+          s"json_exists: unexpected trailing text '$residue' after " +
+            "the ON ERROR clause")
+        Some(s"json_exists($args, '$behavior')")
+      }
     }
-    sql
-  }
 
   // SQL/JSON `RETURNING type` clause on json_value and json_query
   // (the 2-arg default forms are served by the JsonFuncs shims): strip
@@ -3126,66 +2840,20 @@ object TrinoFunctions {
     "(?i)\\bjson_value\\s*\\(")
   private val jsonRetFnPattern = java.util.regex.Pattern.compile(
     "(?i)\\bjson_(value|query)\\s*\\(")
+  private val returningPattern = java.util.regex.Pattern.compile(
+    "(?i)\\bRETURNING\\b")
 
-  private def rewriteJsonReturning(sql0: String): String = {
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val n = sql.length
-      val m = jsonRetFnPattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val open = m.end - 1
-          var depth = 0
-          var i = open
-          var close = -1
-          while (close < 0 && i < n) {
-            if (!masked(i)) {
-              if (sql(i) == '(') depth += 1
-              else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
-          }
-          if (close < 0) return sql
-          val content = sql.substring(open + 1, close)
-          val cmask = maskedRegions(content)
-          var d = 0
-          var rp = -1
-          var j = 0
-          while (rp < 0 && j < content.length) {
-            if (!cmask(j)) {
-              content(j) match {
-                case '(' => d += 1
-                case ')' => d -= 1
-                case 'R' | 'r' if d == 0 &&
-                    content.regionMatches(true, j, "RETURNING", 0, 9) &&
-                    (j == 0 || (!content(j - 1).isLetterOrDigit &&
-                      content(j - 1) != '_')) &&
-                    (j + 9 >= content.length ||
-                      (!content(j + 9).isLetterOrDigit && content(j + 9) != '_')) =>
-                  rp = j
-                case _ => ()
-              }
-            }
-            if (rp < 0) j += 1
-          }
-          if (rp >= 0) {
-            val fn = s"json_${m.group(1).toLowerCase}"
-            val args = content.substring(0, rp).trim.stripSuffix(",").trim
-            val tpe = trinoTypeToSpark(content.substring(rp + 9).trim)
-            sql = sql.substring(0, m.start) +
-              s"CAST($fn($args) AS $tpe)" + sql.substring(close + 1)
-            spliced = true
-          }
+  private def rewriteJsonReturning(sql0: String): String =
+    SqlText.rewriteCalls(sql0, jsonRetFnPattern) { call =>
+      val content = call.content
+      SqlText.topStarts(content, call.contentMask, returningPattern).headOption
+        .map { rp =>
+          val fn = s"json_${call.m.group(1).toLowerCase}"
+          val args = content.substring(0, rp).trim.stripSuffix(",").trim
+          val tpe = trinoTypeToSpark(content.substring(rp + 9).trim)
+          s"CAST($fn($args) AS $tpe)"
         }
-      }
-      if (!spliced) return sql
     }
-    sql
-  }
 
   // Trino's `array_agg(expr ORDER BY k1 [ASC|DESC] [NULLS FIRST|LAST],
   // …)` — Spark's grammar has no ORDER BY inside an aggregate call.
@@ -3203,152 +2871,103 @@ object TrinoFunctions {
   // (sort_array(collect_set(…)) covers the DISTINCT-by-value case).
   private val arrayAggPattern = java.util.regex.Pattern.compile(
     "(?i)\\barray_agg\\s*\\(")
+  private val orderByPattern = java.util.regex.Pattern.compile(
+    "(?i)\\bORDER\\s*BY\\b")
 
-  private def rewriteArrayAggOrderBy(sql0: String): String = {
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val n = sql.length
-      val m = arrayAggPattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val open = m.end - 1
-          var depth = 0
-          var i = open
-          var close = -1
-          while (close < 0 && i < n) {
-            if (!masked(i)) {
-              if (sql(i) == '(') depth += 1
-              else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
-          }
-          if (close < 0) return sql // unbalanced — let Spark error
-          val content = sql.substring(open + 1, close)
-          val cmask = maskedRegions(content)
-          // top-level ORDER BY position
-          var d = 0
-          var ob = -1
-          var j = 0
-          while (ob < 0 && j < content.length) {
-            if (!cmask(j)) {
-              content(j) match {
-                case '(' => d += 1
-                case ')' => d -= 1
-                case 'O' | 'o' if d == 0 &&
-                    content.regionMatches(true, j, "ORDER", 0, 5) &&
-                    (j == 0 || !content(j - 1).isLetterOrDigit && content(j - 1) != '_') =>
-                  var k = j + 5
-                  while (k < content.length && content(k).isWhitespace) k += 1
-                  if (content.regionMatches(true, k, "BY", 0, 2) &&
-                      (k + 2 >= content.length ||
-                        (!content(k + 2).isLetterOrDigit && content(k + 2) != '_')))
-                    ob = j
-                case _ => ()
-              }
-            }
-            if (ob < 0) j += 1
-          }
-          if (ob >= 0) {
-            val exprPart0 = content.substring(0, ob).trim
-            // DISTINCT: legal in Trino only when every ORDER BY key IS
-            // the aggregated expression (free expressions cannot be
-            // paired with a deduplicated value) — which makes
-            // collect_set a drop-in for collect_list in the same
-            // sorted-struct machinery (struct equality = value
-            // equality; a NULL element survives as struct('v', NULL))
-            val isDistinct =
-              exprPart0.length >= 9 &&
-                exprPart0.substring(0, 8).equalsIgnoreCase("DISTINCT") &&
-                exprPart0(8).isWhitespace
-            val exprPart =
-              if (isDistinct) exprPart0.substring(9).trim else exprPart0
-            val byIdx = content.toUpperCase.indexOf("BY", ob) + 2
-            val spec = content.substring(byIdx).trim
-            val keys = topLevelCommaSplit(spec)
-            // direction must be whitespace-separated from the key — a
-            // bare `total_desc` is a column name, not `total_` + DESC
-            val dirRe =
-              "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
-            val parsed = keys.map {
-              case dirRe(k, dir, nulls) =>
-                val desc = dir != null && dir.equalsIgnoreCase("DESC")
-                // Trino defaults: ASC → NULLS LAST, DESC → NULLS FIRST
-                val nullsFirst =
-                  if (nulls == null) desc else nulls.equalsIgnoreCase("FIRST")
-                (k.trim, desc, nullsFirst)
-            }
-            if (isDistinct) {
-              val norm = exprPart.replaceAll("\\s+", " ").toLowerCase
-              parsed.foreach { case (k, _, _) =>
-                if (k.replaceAll("\\s+", " ").toLowerCase != norm)
-                  throw new IllegalArgumentException(
-                    "array_agg(DISTINCT expr ORDER BY key): the key must " +
-                      "be the DISTINCT expression itself (Trino's rule — " +
-                      s"a free key cannot pair with deduplicated values); " +
-                      s"got ORDER BY $k")
-              }
-            }
-            val collectFn = if (isDistinct) "collect_set" else "collect_list"
-            var collectTxt = "" // the bare aggregate, for the empty-group gate
-            val body = if (parsed.map(_._2).distinct.size > 1) {
-              // MIXED directions: array_sort's 3-way comparator lambda
-              // expresses per-key direction and null placement exactly
-              // (the default struct ordering + reverse trick can only
-              // flip the whole array). Lexicographic CASE chain, one
-              // level per key.
-              val fields = parsed.zipWithIndex.map { case ((k, _, _), ix) =>
-                s"'k$ix', $k"
-              } :+ s"'v', $exprPart"
-              def cmp(ix: Int): String =
-                if (ix == parsed.length) "0"
-                else {
-                  val (_, desc, nf) = parsed(ix)
-                  val a = s"__sa.k$ix"
-                  val b = s"__sb.k$ix"
-                  val lt = if (desc) "1" else "-1"
-                  val gt = if (desc) "-1" else "1"
-                  val na = if (nf) "-1" else "1"
-                  val nb = if (nf) "1" else "-1"
-                  s"CASE WHEN $a IS NULL AND $b IS NULL THEN ${cmp(ix + 1)} " +
-                    s"WHEN $a IS NULL THEN $na WHEN $b IS NULL THEN $nb " +
-                    s"WHEN $a < $b THEN $lt WHEN $a > $b THEN $gt " +
-                    s"ELSE ${cmp(ix + 1)} END"
-                }
-              collectTxt = s"$collectFn(named_struct(${fields.mkString(", ")}))"
-              s"array_sort($collectTxt, (__sa, __sb) -> ${cmp(0)})"
-            } else {
-              val desc = parsed.head._2
-              val fields = parsed.zipWithIndex.flatMap { case ((k, _, nf), ix) =>
-                // pre-reverse ASC rank: nulls must land FIRST when the
-                // final position is first-under-ASC or last-under-DESC
-                val rank = if (nf != desc) -1 else 1
-                Seq(s"'r$ix', CASE WHEN ($k) IS NULL THEN $rank ELSE 0 END",
-                  s"'k$ix', $k")
-              } :+ s"'v', $exprPart"
-              collectTxt = s"$collectFn(named_struct(${fields.mkString(", ")}))"
-              val sorted = s"array_sort($collectTxt)"
-              if (desc) s"reverse($sorted)" else sorted
-            }
-            // empty-group gate: SQL aggregates over an empty group are
-            // NULL (Trino's array_agg is) where collect_list gives [] —
-            // found by the v7 differential fuzz on grouping-sets ()
-            // rows over filtered-empty input. The two identical
-            // aggregate texts dedup at physical aggregation.
-            val replacement = s"CASE WHEN size($collectTxt) = 0 THEN " +
-              s"NULL ELSE transform($body, __oa -> __oa.v) END"
-            sql = sql.substring(0, m.start) + replacement + sql.substring(close + 1)
-            spliced = true
+  private def rewriteArrayAggOrderBy(sql0: String): String =
+    SqlText.rewriteCalls(sql0, arrayAggPattern) { call =>
+      val content = call.content
+      // top-level ORDER BY position
+      SqlText.topStarts(content, call.contentMask, orderByPattern).headOption.map { ob =>
+        val exprPart0 = content.substring(0, ob).trim
+        // DISTINCT: legal in Trino only when every ORDER BY key IS
+        // the aggregated expression (free expressions cannot be
+        // paired with a deduplicated value) — which makes
+        // collect_set a drop-in for collect_list in the same
+        // sorted-struct machinery (struct equality = value
+        // equality; a NULL element survives as struct('v', NULL))
+        val isDistinct =
+          exprPart0.length >= 9 &&
+            exprPart0.substring(0, 8).equalsIgnoreCase("DISTINCT") &&
+            exprPart0(8).isWhitespace
+        val exprPart =
+          if (isDistinct) exprPart0.substring(9).trim else exprPart0
+        val byIdx = content.toUpperCase.indexOf("BY", ob) + 2
+        val spec = content.substring(byIdx).trim
+        val keys = SqlText.splitTop(spec)
+        // direction must be whitespace-separated from the key — a
+        // bare `total_desc` is a column name, not `total_` + DESC
+        val dirRe =
+          "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
+        val parsed = keys.map {
+          case dirRe(k, dir, nulls) =>
+            val desc = dir != null && dir.equalsIgnoreCase("DESC")
+            // Trino defaults: ASC → NULLS LAST, DESC → NULLS FIRST
+            val nullsFirst =
+              if (nulls == null) desc else nulls.equalsIgnoreCase("FIRST")
+            (k.trim, desc, nullsFirst)
+        }
+        if (isDistinct) {
+          val norm = exprPart.replaceAll("\\s+", " ").toLowerCase
+          parsed.foreach { case (k, _, _) =>
+            if (k.replaceAll("\\s+", " ").toLowerCase != norm)
+              throw new IllegalArgumentException(
+                "array_agg(DISTINCT expr ORDER BY key): the key must " +
+                  "be the DISTINCT expression itself (Trino's rule — " +
+                  s"a free key cannot pair with deduplicated values); " +
+                  s"got ORDER BY $k")
           }
         }
+        val collectFn = if (isDistinct) "collect_set" else "collect_list"
+        var collectTxt = "" // the bare aggregate, for the empty-group gate
+        val body = if (parsed.map(_._2).distinct.size > 1) {
+          // MIXED directions: array_sort's 3-way comparator lambda
+          // expresses per-key direction and null placement exactly
+          // (the default struct ordering + reverse trick can only
+          // flip the whole array). Lexicographic CASE chain, one
+          // level per key.
+          val fields = parsed.zipWithIndex.map { case ((k, _, _), ix) =>
+            s"'k$ix', $k"
+          } :+ s"'v', $exprPart"
+          def cmp(ix: Int): String =
+            if (ix == parsed.length) "0"
+            else {
+              val (_, desc, nf) = parsed(ix)
+              val a = s"__sa.k$ix"
+              val b = s"__sb.k$ix"
+              val lt = if (desc) "1" else "-1"
+              val gt = if (desc) "-1" else "1"
+              val na = if (nf) "-1" else "1"
+              val nb = if (nf) "1" else "-1"
+              s"CASE WHEN $a IS NULL AND $b IS NULL THEN ${cmp(ix + 1)} " +
+                s"WHEN $a IS NULL THEN $na WHEN $b IS NULL THEN $nb " +
+                s"WHEN $a < $b THEN $lt WHEN $a > $b THEN $gt " +
+                s"ELSE ${cmp(ix + 1)} END"
+            }
+          collectTxt = s"$collectFn(named_struct(${fields.mkString(", ")}))"
+          s"array_sort($collectTxt, (__sa, __sb) -> ${cmp(0)})"
+        } else {
+          val desc = parsed.head._2
+          val fields = parsed.zipWithIndex.flatMap { case ((k, _, nf), ix) =>
+            // pre-reverse ASC rank: nulls must land FIRST when the
+            // final position is first-under-ASC or last-under-DESC
+            val rank = if (nf != desc) -1 else 1
+            Seq(s"'r$ix', CASE WHEN ($k) IS NULL THEN $rank ELSE 0 END",
+              s"'k$ix', $k")
+          } :+ s"'v', $exprPart"
+          collectTxt = s"$collectFn(named_struct(${fields.mkString(", ")}))"
+          val sorted = s"array_sort($collectTxt)"
+          if (desc) s"reverse($sorted)" else sorted
+        }
+        // empty-group gate: SQL aggregates over an empty group are
+        // NULL (Trino's array_agg is) where collect_list gives [] —
+        // found by the v7 differential fuzz on grouping-sets ()
+        // rows over filtered-empty input. The two identical
+        // aggregate texts dedup at physical aggregation.
+        s"CASE WHEN size($collectTxt) = 0 THEN " +
+          s"NULL ELSE transform($body, __oa -> __oa.v) END"
       }
-      if (!spliced) return sql
     }
-    sql
-  }
 
   // Trino's quantified subquery comparisons — ALL of them, NULL-
   // faithfully, via an exact three-valued-logic composition:
@@ -3455,28 +3074,6 @@ object TrinoFunctions {
     "RETURNING", "OVER", "UNION", "INTERSECT", "EXCEPT", "VALUES",
     "ESCAPE", "LIMIT", "OFFSET", "FETCH", "ASC", "DESC", "NULLS")
 
-  /** Split at top-level commas only — unmasked, paren-depth 0 — so a
-    * function-call list element (`substr(c, 1, 3)`) stays one piece.
-    * Shared by the array_agg ORDER BY and FETCH WITH TIES key parsers. */
-  private def topLevelCommaSplit(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val smask = maskedRegions(s)
-    var d = 0; var last = 0; var j = 0
-    while (j < s.length) {
-      if (!smask(j)) {
-        s(j) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case ',' if d == 0 => out += s.substring(last, j); last = j + 1
-          case _ => ()
-        }
-      }
-      j += 1
-    }
-    out += s.substring(last)
-    out.map(_.trim).toSeq
-  }
-
   /** Walk a Trino valueExpression backward from `endExcl`: primaries
     * chained by binary arithmetic/concat, with unary-sign absorption.
     * Returns the start index, or -1 when no operand is found. */
@@ -3534,106 +3131,83 @@ object TrinoFunctions {
     "BETWEEN", "LIMIT", "OFFSET", "SET", "VALUES", "UNION", "INTERSECT",
     "EXCEPT", "RETURN", "RETURNING", "JOIN", "FROM")
 
-  private def rewriteQuantified(sql0: String): String = {
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val m = quantifiedPattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val op0 = m.group(1)
-          val op = if (op0 == "!=") "<>" else op0
-          val quant = m.group(2).toUpperCase match {
-            case "SOME" => "ANY"
-            case q => q
-          }
-          {
-            // balanced close of the subquery (the '(' is the last
-            // unmasked '(' before m.end)
-            var open = m.end - 1
-            while (open >= 0 && (masked(open) || sql(open) != '(')) open -= 1
-            var depth = 0
-            var i = open
-            var close = -1
-            val n = sql.length
-            while (close < 0 && i < n) {
-              if (!masked(i)) {
-                if (sql(i) == '(') depth += 1
-                else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-              }
-              i += 1
-            }
-            if (close < 0) throw new IllegalArgumentException(
-              s"unbalanced parentheses in $op0 $quant (subquery)")
-            val q = sql.substring(open + 1, close)
-            // The rewrite splices Q more than once (field accesses on
-            // the struct subquery collapse via ReuseSubquery only when
-            // the copies canonicalize EQUAL; <> ALL scans Q again for
-            // the membership probe). A nondeterministic Q would read
-            // inconsistent values across copies — reject it. Clock
-            // functions are safe: Spark folds the whole query's
-            // now()/current_timestamp to ONE value at plan time.
-            locally {
-              val nd = nondetFnPattern.matcher(q)
-              val qmask = maskedRegions(q)
-              while (nd.find()) if (!qmask(nd.start))
-                throw new IllegalArgumentException(
-                  s"quantified comparison ($op0 ${m.group(2)}) over a " +
-                    s"nondeterministic subquery (${nd.group(1)}) is not " +
-                    "supported — the rewrite evaluates the subquery more " +
-                    "than once; materialize it first (CTE or temp view)")
-            }
-            val lStart = valueExprBackward(sql, masked, m.start)
-            if (lStart < 0) throw new IllegalArgumentException(
-              s"could not determine the left operand of $op0 " +
-                s"${m.group(2)} (subquery); parenthesize it — " +
-                s"(expr) $op0 ${m.group(2)} (…)")
-            val x = sql.substring(lStart, m.start).trim
-            // ANY ≡ NOT (inverse-op ALL), exact under Kleene logic
-            val (allOp, negate) =
-              if (quant == "ANY") (op match {
-                case "=" => "<>"
-                case "<>" => "="
-                case "<" => ">="
-                case "<=" => ">"
-                case ">" => "<="
-                case ">=" => "<"
-              }, true)
-              else (op, false)
-            val common = "'e', count(*) = 0, " +
-              "'nn', count(*) = count(__qv) OR NULL"
-            def structSub(fields: String) =
-              s"(SELECT named_struct($fields) FROM ($q) __qt(__qv))"
-            val (test, s) = allOp match {
-              case "=" =>
-                val sub = structSub(s"'mn', min(__qv), 'mx', max(__qv), $common")
-                (s"($x) = $sub.mn AND ($x) = $sub.mx", sub)
-              case ">" | ">=" =>
-                val sub = structSub(s"'mx', max(__qv), $common")
-                (s"($x) $allOp $sub.mx", sub)
-              case "<" | "<=" =>
-                val sub = structSub(s"'mn', min(__qv), $common")
-                (s"($x) $allOp $sub.mn", sub)
-              case "<>" =>
-                val sub = structSub(common)
-                (s"CASE WHEN ($x) IS NULL THEN CAST(NULL AS BOOLEAN) " +
-                  s"ELSE (SELECT count(*) = 0 FROM ($q) __qt(__qv) " +
-                  s"WHERE __qv = ($x)) END", sub)
-            }
-            val allForm = s"($test AND $s.nn OR $s.e)"
-            val repl = if (negate) s"(NOT $allForm)" else allForm
-            sql = sql.substring(0, lStart) + repl + sql.substring(close + 1)
-            spliced = true
-          }
-        }
+  private def rewriteQuantified(sql0: String): String =
+    SqlText.rewriteMatches(sql0, quantifiedPattern) { hit =>
+      val sql = hit.sql
+      val masked = hit.mask
+      val m = hit.m
+      val op0 = m.group(1)
+      val op = if (op0 == "!=") "<>" else op0
+      val quant = m.group(2).toUpperCase match {
+        case "SOME" => "ANY"
+        case q => q
       }
-      if (!spliced) return sql
+      // balanced close of the subquery (the '(' is the last
+      // unmasked '(' before m.end)
+      var open = m.end - 1
+      while (open >= 0 && (masked(open) || sql(open) != '(')) open -= 1
+      val close = hit.closeParen(open)
+      if (close < 0) throw new IllegalArgumentException(
+        s"unbalanced parentheses in $op0 $quant (subquery)")
+      val q = sql.substring(open + 1, close)
+      // The rewrite splices Q more than once (field accesses on
+      // the struct subquery collapse via ReuseSubquery only when
+      // the copies canonicalize EQUAL; <> ALL scans Q again for
+      // the membership probe). A nondeterministic Q would read
+      // inconsistent values across copies — reject it. Clock
+      // functions are safe: Spark folds the whole query's
+      // now()/current_timestamp to ONE value at plan time.
+      locally {
+        val nd = nondetFnPattern.matcher(q)
+        val qmask = SqlText.mask(q)
+        while (nd.find()) if (!qmask(nd.start))
+          throw new IllegalArgumentException(
+            s"quantified comparison ($op0 ${m.group(2)}) over a " +
+              s"nondeterministic subquery (${nd.group(1)}) is not " +
+              "supported — the rewrite evaluates the subquery more " +
+              "than once; materialize it first (CTE or temp view)")
+      }
+      val lStart = valueExprBackward(sql, masked, m.start)
+      if (lStart < 0) throw new IllegalArgumentException(
+        s"could not determine the left operand of $op0 " +
+          s"${m.group(2)} (subquery); parenthesize it — " +
+          s"(expr) $op0 ${m.group(2)} (…)")
+      val x = sql.substring(lStart, m.start).trim
+      // ANY ≡ NOT (inverse-op ALL), exact under Kleene logic
+      val (allOp, negate) =
+        if (quant == "ANY") (op match {
+          case "=" => "<>"
+          case "<>" => "="
+          case "<" => ">="
+          case "<=" => ">"
+          case ">" => "<="
+          case ">=" => "<"
+        }, true)
+        else (op, false)
+      val common = "'e', count(*) = 0, " +
+        "'nn', count(*) = count(__qv) OR NULL"
+      def structSub(fields: String) =
+        s"(SELECT named_struct($fields) FROM ($q) __qt(__qv))"
+      val (test, s) = allOp match {
+        case "=" =>
+          val sub = structSub(s"'mn', min(__qv), 'mx', max(__qv), $common")
+          (s"($x) = $sub.mn AND ($x) = $sub.mx", sub)
+        case ">" | ">=" =>
+          val sub = structSub(s"'mx', max(__qv), $common")
+          (s"($x) $allOp $sub.mx", sub)
+        case "<" | "<=" =>
+          val sub = structSub(s"'mn', min(__qv), $common")
+          (s"($x) $allOp $sub.mn", sub)
+        case "<>" =>
+          val sub = structSub(common)
+          (s"CASE WHEN ($x) IS NULL THEN CAST(NULL AS BOOLEAN) " +
+            s"ELSE (SELECT count(*) = 0 FROM ($q) __qt(__qv) " +
+            s"WHERE __qv = ($x)) END", sub)
+      }
+      val allForm = s"($test AND $s.nn OR $s.e)"
+      val repl = if (negate) s"(NOT $allForm)" else allForm
+      Some((lStart, close + 1, repl))
     }
-    sql
-  }
 
   // Trino's type grammar inside CAST/TRY_CAST targets, where it differs
   // from Spark's: bare `varchar` (Spark requires STRING or a length),
@@ -3646,55 +3220,31 @@ object TrinoFunctions {
   // UTC). Everything already Spark-legal passes through byte-identical.
   private val castPattern = java.util.regex.Pattern.compile(
     "(?i)\\b(?:TRY_)?CAST\\s*\\(")
+  // the AS before the target type: followed by at least one character
+  private val castAsPattern = java.util.regex.Pattern.compile(
+    "(?is)\\bAS\\b(?=.)")
 
   private def rewriteCastTypes(sql: String): String = {
-    val masked = maskedRegions(sql)
-    val n = sql.length
     val m = castPattern.matcher(sql)
-    while (m.find()) {
+    if (!m.find()) return sql
+    val masked = SqlText.mask(sql)
+    do {
       if (!masked(m.start)) {
         val open = m.end - 1
-        var depth = 0
-        var i = open
-        var close = -1
-        while (close < 0 && i < n) {
-          if (!masked(i)) {
-            if (sql(i) == '(') depth += 1
-            else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-          }
-          i += 1
-        }
+        val close = SqlText.closeParen(sql, masked, open)
         if (close < 0) return sql // unbalanced: let Spark produce the error
         val content = rewriteCastTypes(sql.substring(open + 1, close))
         // the LAST unmasked top-level AS splits expression from type
-        val cmask = maskedRegions(content)
-        var asPos = -1
-        var d = 0
-        var j = 0
-        while (j < content.length) {
-          if (!cmask(j)) {
-            content(j) match {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case 'A' | 'a' if d == 0 && j + 2 <= content.length - 1 &&
-                  (content(j + 1) == 'S' || content(j + 1) == 's') &&
-                  (j == 0 || !content(j - 1).isLetterOrDigit && content(j - 1) != '_') &&
-                  (j + 2 >= content.length ||
-                    !content(j + 2).isLetterOrDigit && content(j + 2) != '_') =>
-                asPos = j
-              case _ => ()
-            }
-          }
-          j += 1
-        }
         val newContent =
-          if (asPos < 0) content
-          else content.substring(0, asPos) + "AS " +
-            trinoTypeToSpark(content.substring(asPos + 2).trim)
+          SqlText.topStarts(content, SqlText.mask(content), castAsPattern).lastOption
+            .fold(content) { asPos =>
+              content.substring(0, asPos) + "AS " +
+                trinoTypeToSpark(content.substring(asPos + 2).trim)
+            }
         return sql.substring(0, open + 1) + newContent + ")" +
           rewriteCastTypes(sql.substring(close + 1))
       }
-    }
+    } while (m.find())
     sql
   }
 
@@ -3708,15 +3258,15 @@ object TrinoFunctions {
     // top-level split of a parenthesized argument list
     def args(s: String): Seq[String] = {
       val inner = s.stripPrefix("(").stripSuffix(")")
+      val mask = SqlText.mask(inner)
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var d = 0; var last = 0; var q = false
+      var d = 0; var last = 0
       var i = 0
       while (i < inner.length) {
-        inner(i) match {
-          case '"' => q = !q
-          case '(' | '<' if !q => d += 1
-          case ')' | '>' if !q => d -= 1
-          case ',' if d == 0 && !q =>
+        if (!mask(i)) inner(i) match {
+          case '(' | '<' => d += 1
+          case ')' | '>' => d -= 1
+          case ',' if d == 0 =>
             out += inner.substring(last, i); last = i + 1
           case _ => ()
         }
@@ -3778,7 +3328,7 @@ object TrinoFunctions {
     "VARCHAR|CHAR|BOOLEAN|UUID|JSON)\\s+('(?:[^']|'')*')")
 
   private def rewriteTypedLiterals(sql: String): String =
-    replaceUnmasked(sql, typedLiteralPattern) { m =>
+    SqlText.replaceUnmasked(sql, typedLiteralPattern) { m =>
       val lit = m.group(2)
       m.group(1).toUpperCase match {
         case "DECIMAL" =>
@@ -3823,200 +3373,165 @@ object TrinoFunctions {
   private val atTimeZonePattern = java.util.regex.Pattern.compile(
     "(?i)\\bAT\\s+TIME\\s+ZONE\\b")
 
-  private def rewriteAtTimeZone(sql0: String): String = {
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val m = atTimeZonePattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val n = sql.length
-          // index AFTER the ')' matching the '(' at `from` (mask-aware)
-          def parenEnd(from: Int): Int = {
-            var depth = 0
-            var i = from
-            while (i < n) {
-              if (!masked(i)) {
-                if (sql(i) == '(') depth += 1
-                else if (sql(i) == ')') {
-                  depth -= 1
-                  if (depth == 0) return i + 1
-                }
-              }
-              i += 1
-            }
-            throw new IllegalArgumentException(
-              "unbalanced parentheses near AT TIME ZONE")
-          }
-          // ---- right operand (forward): literal | paren | ident chain
-          var r = m.end
-          while (r < n && sql(r).isWhitespace) r += 1
-          if (r >= n) throw new IllegalArgumentException(
-            "AT TIME ZONE requires a zone expression")
-          val rStart = r
-          var zoneOverride: Option[String] = None
-          if (sql.regionMatches(true, r, "INTERVAL", 0, 8)) {
-            // INTERVAL '±h[:mm]' HOUR [TO MINUTE] | MINUTE → the same
-            // '+hh:mm' offset-string path the string-zone form rides
-            // (from_utc_timestamp takes zone strings; a fixed offset
-            // IS a zone string). Trino caps zone offsets at ±14:00.
-            var k = r + 8
-            while (k < n && sql(k).isWhitespace) k += 1
-            if (k >= n || sql(k) != '\'') throw new IllegalArgumentException(
-              "AT TIME ZONE INTERVAL requires a quoted interval literal")
-            val litStart = k + 1
-            k += 1
-            var closed = false
-            while (k < n && !closed) {
-              if (sql(k) == '\'' && !(k + 1 < n && sql(k + 1) == '\'')) closed = true
-              else k += 1
-            }
-            if (!closed) throw new IllegalArgumentException(
-              "unterminated interval literal after AT TIME ZONE")
-            val lit = sql.substring(litStart, k)
-            k += 1
-            // unit words: HOUR | MINUTE, optionally TO MINUTE
-            def word(from: Int): (String, Int) = {
-              var w = from
-              while (w < n && sql(w).isWhitespace) w += 1
-              val ws = w
-              while (w < n && (sql(w).isLetter)) w += 1
-              (sql.substring(ws, w).toUpperCase, w)
-            }
-            val (u1, k1) = word(k)
-            var unitEnd = k1
-            var toMinute = false
-            if (u1 != "HOUR" && u1 != "MINUTE")
-              throw new IllegalArgumentException(
-                s"AT TIME ZONE INTERVAL unit must be HOUR or MINUTE, got '$u1'")
-            if (u1 == "HOUR") {
-              val (u2, k2) = word(k1)
-              if (u2 == "TO") {
-                val (u3, k3) = word(k2)
-                if (u3 != "MINUTE") throw new IllegalArgumentException(
-                  "AT TIME ZONE INTERVAL: only HOUR TO MINUTE is supported")
-                toMinute = true
-                unitEnd = k3
-              }
-            }
-            val neg = lit.trim.startsWith("-")
-            val bare = lit.trim.stripPrefix("-").stripPrefix("+").trim
-            val minutes = try {
-              if (toMinute || bare.contains(":")) {
-                val Array(h, mn) = bare.split(":", 2)
-                // canonical interval literal only: the minute field is
-                // an UNSIGNED 0–59 (Trino rejects '8:99' and '8:-30')
-                val mnT = mn.trim
-                if (!mnT.matches("\\d{1,2}") || mnT.toInt > 59)
-                  throw new IllegalArgumentException(
-                    s"AT TIME ZONE INTERVAL: minute field must be an " +
-                      s"unsigned value in 0-59, got '$mn' in '$lit'")
-                if (!h.trim.matches("\\d+"))
-                  throw new IllegalArgumentException(
-                    s"AT TIME ZONE INTERVAL: malformed hour field " +
-                      s"'$h' in '$lit'")
-                h.trim.toInt * 60 + mnT.toInt
-              } else if (u1 == "HOUR") bare.toInt * 60
-              else bare.toInt
-            } catch {
-              case e: IllegalArgumentException
-                if e.getMessage != null &&
-                  e.getMessage.startsWith("AT TIME ZONE INTERVAL") => throw e
-              case _: Exception =>
-              throw new IllegalArgumentException(
-                s"AT TIME ZONE INTERVAL: cannot parse offset '$lit'")
-            }
-            if (minutes > 14 * 60) throw new IllegalArgumentException(
-              s"AT TIME ZONE INTERVAL: zone offset exceeds ±14:00 ('$lit')")
-            zoneOverride = Some("'%s%02d:%02d'".format(
-              if (neg) "-" else "+", minutes / 60, minutes % 60))
-            r = unitEnd
-          } else
-          if (sql(r) == '\'') {
-            r += 1
-            var closed = false
-            while (r < n && !closed) {
-              if (sql(r) == '\'') {
-                if (r + 1 < n && sql(r + 1) == '\'') r += 2
-                else { closed = true; r += 1 }
-              } else r += 1
-            }
-            if (!closed) throw new IllegalArgumentException(
-              "unterminated zone literal after AT TIME ZONE")
-          } else if (sql(r) == '(') {
-            r = parenEnd(r)
-          } else {
-            while (r < n && (sql(r).isLetterOrDigit || sql(r) == '_' ||
-              sql(r) == '.' || sql(r) == '$')) r += 1
-            // a function call: absorb its argument list
-            var k = r
-            while (k < n && sql(k).isWhitespace) k += 1
-            if (k < n && sql(k) == '(') r = parenEnd(k)
-            if (r == rStart) throw new IllegalArgumentException(
-              "AT TIME ZONE requires a zone expression")
-          }
-          val zone = zoneOverride.getOrElse(sql.substring(rStart, r))
-          // ---- left operand (backward): literal | paren+name | chain
-          var l = m.start
-          while (l > 0 && sql(l - 1).isWhitespace) l -= 1
-          if (l == 0) throw new IllegalArgumentException(
-            "AT TIME ZONE requires a timestamp operand on its left")
-          val lEnd = l
-          if (sql(l - 1) == '\'') {
-            // literal: its interior is masked — walk to the start of
-            // the masked run, then absorb a typed-literal keyword
-            // (TIMESTAMP '...' / TIME '...' / DATE '...')
-            l -= 1
-            while (l > 0 && masked(l - 1)) l -= 1
-            var k = l
-            while (k > 0 && sql(k - 1).isWhitespace) k -= 1
-            val kw = k
-            while (k > 0 && (sql(k - 1).isLetterOrDigit || sql(k - 1) == '_')) k -= 1
-            val word = sql.substring(k, kw).toUpperCase
-            if (word == "TIMESTAMP" || word == "DATE" || word == "TIME") l = k
-          } else if (sql(l - 1) == ')') {
-            var depth = 0
-            l -= 1
-            var open = -1
-            while (l >= 0 && open < 0) {
-              if (!masked(l)) {
-                if (sql(l) == ')') depth += 1
-                else if (sql(l) == '(') { depth -= 1; if (depth == 0) open = l }
-              }
-              if (open < 0) l -= 1
-            }
-            if (open < 0) throw new IllegalArgumentException(
-              "unbalanced parentheses before AT TIME ZONE")
-            // function-name chain directly before the open paren
-            var k = open
-            while (k > 0 && sql(k - 1).isWhitespace) k -= 1
-            val ke = k
-            while (k > 0 && (sql(k - 1).isLetterOrDigit || sql(k - 1) == '_' ||
-              sql(k - 1) == '.' || sql(k - 1) == '$')) k -= 1
-            // keywords that are NOT callables (e.g. `WHERE (...) AT …`)
-            val name = sql.substring(k, ke).toUpperCase
-            l = if (k < ke && !Set("WHERE", "AND", "OR", "ON", "WHEN", "THEN",
-              "ELSE", "SELECT", "BY", "HAVING", "IN", "NOT").contains(name)) k
-              else open
-          } else {
-            while (l > 0 && (sql(l - 1).isLetterOrDigit || sql(l - 1) == '_' ||
-              sql(l - 1) == '.' || sql(l - 1) == '$' || sql(l - 1) == '"')) l -= 1
-            if (l == lEnd) throw new IllegalArgumentException(
-              "AT TIME ZONE requires a timestamp operand on its left")
-          }
-          val operand = sql.substring(l, lEnd)
-          sql = sql.substring(0, l) + s"at_timezone($operand, $zone)" +
-            sql.substring(r)
-          spliced = true
-        }
+  private def rewriteAtTimeZone(sql0: String): String =
+    SqlText.rewriteMatches(sql0, atTimeZonePattern) { hit =>
+      val sql = hit.sql
+      val masked = hit.mask
+      val m = hit.m
+      val n = sql.length
+      // index AFTER the ')' matching the '(' at `from` (mask-aware)
+      def parenEnd(from: Int): Int = {
+        val close = hit.closeParen(from)
+        if (close < 0) throw new IllegalArgumentException(
+          "unbalanced parentheses near AT TIME ZONE")
+        close + 1
       }
-      if (!spliced) return sql
+      // ---- right operand (forward): literal | paren | ident chain
+      var r = m.end
+      while (r < n && sql(r).isWhitespace) r += 1
+      if (r >= n) throw new IllegalArgumentException(
+        "AT TIME ZONE requires a zone expression")
+      val rStart = r
+      var zoneOverride: Option[String] = None
+      if (sql.regionMatches(true, r, "INTERVAL", 0, 8)) {
+        // INTERVAL '±h[:mm]' HOUR [TO MINUTE] | MINUTE → the same
+        // '+hh:mm' offset-string path the string-zone form rides
+        // (from_utc_timestamp takes zone strings; a fixed offset
+        // IS a zone string). Trino caps zone offsets at ±14:00.
+        var k = r + 8
+        while (k < n && sql(k).isWhitespace) k += 1
+        if (k >= n || sql(k) != '\'') throw new IllegalArgumentException(
+          "AT TIME ZONE INTERVAL requires a quoted interval literal")
+        val litEnd = SqlText.quotedEnd(sql, k)
+        if (litEnd < 0) throw new IllegalArgumentException(
+          "unterminated interval literal after AT TIME ZONE")
+        val lit = sql.substring(k + 1, litEnd - 1)
+        k = litEnd
+        // unit words: HOUR | MINUTE, optionally TO MINUTE
+        def word(from: Int): (String, Int) = {
+          var w = from
+          while (w < n && sql(w).isWhitespace) w += 1
+          val ws = w
+          while (w < n && (sql(w).isLetter)) w += 1
+          (sql.substring(ws, w).toUpperCase, w)
+        }
+        val (u1, k1) = word(k)
+        var unitEnd = k1
+        var toMinute = false
+        if (u1 != "HOUR" && u1 != "MINUTE")
+          throw new IllegalArgumentException(
+            s"AT TIME ZONE INTERVAL unit must be HOUR or MINUTE, got '$u1'")
+        if (u1 == "HOUR") {
+          val (u2, k2) = word(k1)
+          if (u2 == "TO") {
+            val (u3, k3) = word(k2)
+            if (u3 != "MINUTE") throw new IllegalArgumentException(
+              "AT TIME ZONE INTERVAL: only HOUR TO MINUTE is supported")
+            toMinute = true
+            unitEnd = k3
+          }
+        }
+        val neg = lit.trim.startsWith("-")
+        val bare = lit.trim.stripPrefix("-").stripPrefix("+").trim
+        val minutes = try {
+          if (toMinute || bare.contains(":")) {
+            val Array(h, mn) = bare.split(":", 2)
+            // canonical interval literal only: the minute field is
+            // an UNSIGNED 0–59 (Trino rejects '8:99' and '8:-30')
+            val mnT = mn.trim
+            if (!mnT.matches("\\d{1,2}") || mnT.toInt > 59)
+              throw new IllegalArgumentException(
+                s"AT TIME ZONE INTERVAL: minute field must be an " +
+                  s"unsigned value in 0-59, got '$mn' in '$lit'")
+            if (!h.trim.matches("\\d+"))
+              throw new IllegalArgumentException(
+                s"AT TIME ZONE INTERVAL: malformed hour field " +
+                  s"'$h' in '$lit'")
+            h.trim.toInt * 60 + mnT.toInt
+          } else if (u1 == "HOUR") bare.toInt * 60
+          else bare.toInt
+        } catch {
+          case e: IllegalArgumentException
+            if e.getMessage != null &&
+              e.getMessage.startsWith("AT TIME ZONE INTERVAL") => throw e
+          case _: Exception =>
+          throw new IllegalArgumentException(
+            s"AT TIME ZONE INTERVAL: cannot parse offset '$lit'")
+        }
+        if (minutes > 14 * 60) throw new IllegalArgumentException(
+          s"AT TIME ZONE INTERVAL: zone offset exceeds ±14:00 ('$lit')")
+        zoneOverride = Some("'%s%02d:%02d'".format(
+          if (neg) "-" else "+", minutes / 60, minutes % 60))
+        r = unitEnd
+      } else
+      if (sql(r) == '\'') {
+        r = SqlText.quotedEnd(sql, r)
+        if (r < 0) throw new IllegalArgumentException(
+          "unterminated zone literal after AT TIME ZONE")
+      } else if (sql(r) == '(') {
+        r = parenEnd(r)
+      } else {
+        while (r < n && (sql(r).isLetterOrDigit || sql(r) == '_' ||
+          sql(r) == '.' || sql(r) == '$')) r += 1
+        // a function call: absorb its argument list
+        var k = r
+        while (k < n && sql(k).isWhitespace) k += 1
+        if (k < n && sql(k) == '(') r = parenEnd(k)
+        if (r == rStart) throw new IllegalArgumentException(
+          "AT TIME ZONE requires a zone expression")
+      }
+      val zone = zoneOverride.getOrElse(sql.substring(rStart, r))
+      // ---- left operand (backward): literal | paren+name | chain
+      var l = m.start
+      while (l > 0 && sql(l - 1).isWhitespace) l -= 1
+      if (l == 0) throw new IllegalArgumentException(
+        "AT TIME ZONE requires a timestamp operand on its left")
+      val lEnd = l
+      if (sql(l - 1) == '\'') {
+        // literal: its interior is masked — walk to the start of
+        // the masked run, then absorb a typed-literal keyword
+        // (TIMESTAMP '...' / TIME '...' / DATE '...')
+        l -= 1
+        while (l > 0 && masked(l - 1)) l -= 1
+        var k = l
+        while (k > 0 && sql(k - 1).isWhitespace) k -= 1
+        val kw = k
+        while (k > 0 && (sql(k - 1).isLetterOrDigit || sql(k - 1) == '_')) k -= 1
+        val word = sql.substring(k, kw).toUpperCase
+        if (word == "TIMESTAMP" || word == "DATE" || word == "TIME") l = k
+      } else if (sql(l - 1) == ')') {
+        var depth = 0
+        l -= 1
+        var open = -1
+        while (l >= 0 && open < 0) {
+          if (!masked(l)) {
+            if (sql(l) == ')') depth += 1
+            else if (sql(l) == '(') { depth -= 1; if (depth == 0) open = l }
+          }
+          if (open < 0) l -= 1
+        }
+        if (open < 0) throw new IllegalArgumentException(
+          "unbalanced parentheses before AT TIME ZONE")
+        // function-name chain directly before the open paren
+        var k = open
+        while (k > 0 && sql(k - 1).isWhitespace) k -= 1
+        val ke = k
+        while (k > 0 && (sql(k - 1).isLetterOrDigit || sql(k - 1) == '_' ||
+          sql(k - 1) == '.' || sql(k - 1) == '$')) k -= 1
+        // keywords that are NOT callables (e.g. `WHERE (...) AT …`)
+        val name = sql.substring(k, ke).toUpperCase
+        l = if (k < ke && !Set("WHERE", "AND", "OR", "ON", "WHEN", "THEN",
+          "ELSE", "SELECT", "BY", "HAVING", "IN", "NOT").contains(name)) k
+          else open
+      } else {
+        while (l > 0 && (sql(l - 1).isLetterOrDigit || sql(l - 1) == '_' ||
+          sql(l - 1) == '.' || sql(l - 1) == '$' || sql(l - 1) == '"')) l -= 1
+        if (l == lEnd) throw new IllegalArgumentException(
+          "AT TIME ZONE requires a timestamp operand on its left")
+      }
+      val operand = sql.substring(l, lEnd)
+      Some((l, r, s"at_timezone($operand, $zone)"))
     }
-    sql
-  }
 
   // ANSI row-limiting syntax, which Trino serves and Spark's grammar
   // lacks: `OFFSET n [ROW|ROWS]` and `FETCH {FIRST|NEXT} [n] {ROW|ROWS}
@@ -4059,144 +3574,122 @@ object TrinoFunctions {
     * early-stop like TakeOrderedAndProject; keep n-with-ties shaped
     * queries off the 100 TB hot path or pre-filter the scan.
     */
-  private def rewriteFetchTies(sql0: String, opts: PreprocessOpts): String = {
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskedRegions(sql)
-      val m = fetchTiesPattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val n = Option(m.group(1)).getOrElse("1")
-          val fs = m.start
-          // block start: nearest enclosing unmatched '(' going backward
-          var depth = 0
-          var i = fs - 1
-          var blockStart = 0
-          while (i >= 0 && blockStart == 0) {
-            if (!masked(i)) {
-              if (sql(i) == ')') depth += 1
-              else if (sql(i) == '(') {
-                if (depth == 0) blockStart = i + 1 else depth -= 1
-              }
-            }
-            i -= 1
+  private def rewriteFetchTies(sql0: String, opts: PreprocessOpts): String =
+    SqlText.rewriteMatches(sql0, fetchTiesPattern) { hit =>
+      val sql = hit.sql
+      val masked = hit.mask
+      val m = hit.m
+      val n = Option(m.group(1)).getOrElse("1")
+      val fs = m.start
+      // block start: nearest enclosing unmatched '(' going backward
+      var depth = 0
+      var i = fs - 1
+      var blockStart = 0
+      while (i >= 0 && blockStart == 0) {
+        if (!masked(i)) {
+          if (sql(i) == ')') depth += 1
+          else if (sql(i) == '(') {
+            if (depth == 0) blockStart = i + 1 else depth -= 1
           }
-          // the governing ORDER BY: last depth-0 match inside the block
-          val obRe = java.util.regex.Pattern
-            .compile("(?i)\\bORDER\\s+BY\\b").matcher(sql)
-          obRe.region(blockStart, fs)
-          var obStart = -1
-          var obEnd = -1
-          var d2 = 0
-          var j = blockStart
-          // single forward walk tracking depth; check matches as we go
-          val obHits = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-          while (obRe.find()) if (!masked(obRe.start()))
-            obHits += ((obRe.start(), obRe.end()))
-          for ((hs, he) <- obHits) {
-            while (j < hs) {
-              if (!masked(j)) {
-                if (sql(j) == '(') d2 += 1
-                else if (sql(j) == ')') d2 -= 1
-              }
-              j += 1
-            }
-            if (d2 == 0) { obStart = hs; obEnd = he }
-          }
-          if (obStart < 0) throw new IllegalArgumentException(
-            "FETCH ... WITH TIES requires an ORDER BY in the same " +
-              "query block (ties are defined by the sort key)")
-          val keys0 = sql.substring(obEnd, fs).trim
-          if (keys0.isEmpty) throw new IllegalArgumentException(
-            "FETCH ... WITH TIES: empty ORDER BY key list")
-          // `ORDER BY keys OFFSET k [ROWS] FETCH ... WITH TIES` (ANSI
-          // order): strip a trailing depth-0 OFFSET and apply it inside
-          // the rank rewrite — skip k rows, take n, extend through the
-          // tie group of row k+n
-          var offsetK: Option[String] = None
-          var keys = keys0
-          val om0 = java.util.regex.Pattern
-            .compile("(?i)\\bOFFSET\\s+(\\d+)\\s*(?:ROWS?)?\\s*$")
-            .matcher(keys0)
-          if (om0.find()) {
-            val kmask = maskedRegions(keys0)
-            var kd = 0; var q = 0
-            while (q < om0.start) {
-              if (!kmask(q)) {
-                if (keys0(q) == '(') kd += 1
-                else if (keys0(q) == ')') kd -= 1
-              }
-              q += 1
-            }
-            if (kd == 0 && !kmask(om0.start)) {
-              offsetK = Some(om0.group(1))
-              keys = keys0.substring(0, om0.start).trim
-            }
-          }
-          val kw = java.util.regex.Pattern
-            .compile("(?i)\\b(OFFSET|LIMIT)\\b").matcher(keys)
-          if (kw.find()) throw new IllegalArgumentException(
-            s"FETCH ... WITH TIES cannot be combined with ${kw.group(1)} " +
-              "here; apply the offset in an outer query")
-          val inner = sql.substring(blockStart, obStart).trim
-          // depth-aware key split: `substr(c, 1, 3)` is ONE key, its
-          // literal arguments are not ordinals (r14 ADVICE). Ordinal
-          // keys resolve against the block's select list (alias or bare
-          // column) — inside OVER they would silently become constants.
-          val ordRe = "(?is)^(\\d+)((?:\\s+(?:ASC|DESC))?(?:\\s+NULLS\\s+(?:FIRST|LAST))?)$".r
-          val splitKeys = topLevelCommaSplit(keys)
-          if (splitKeys.exists(k => ordRe.findFirstIn(k.trim).isDefined)) {
-            lazy val items = selectListItems(inner)
-            keys = splitKeys.map { frag =>
-              frag.trim match {
-                case ordRe(digits, suffix) =>
-                  val idx = digits.toInt
-                  val list = items.getOrElse(throw new IllegalArgumentException(
-                    "FETCH ... WITH TIES with ordinal ORDER BY keys needs " +
-                      "a plain SELECT block to resolve them against; name " +
-                      "the sort columns"))
-                  if (idx < 1 || idx > list.length)
-                    throw new IllegalArgumentException(
-                      s"FETCH ... WITH TIES: ORDER BY ordinal $idx is out " +
-                        s"of range (select list has ${list.length} items)")
-                  val col = ordinalKeyName(list(idx - 1)).getOrElse(
-                    throw new IllegalArgumentException(
-                      s"FETCH ... WITH TIES: ORDER BY ordinal $idx names an " +
-                        "unaliased expression — alias it or name the column"))
-                  col + suffix
-                case other => other
-              }
-            }.mkString(", ")
-          }
-          val repl = (offsetK, opts.tiesInBlock) match {
-            case (None, true) => tiesInBlockForm(inner, keys, n, None)
-            case (None, false) =>
-              s"SELECT * EXCEPT (__ties_rnk) FROM (SELECT *, rank() OVER " +
-                s"(ORDER BY $keys) AS __ties_rnk FROM ($inner) __ties_in) " +
-                s"__ties_w WHERE __ties_rnk <= $n ORDER BY $keys"
-            case (Some(k), true) => tiesInBlockForm(inner, keys, n, Some(k))
-            case (Some(k), false) =>
-              val kn = k.toLong + n.toLong
-              s"SELECT * EXCEPT (__ties_rnk, __ties_rn, __ties_brk) FROM (" +
-                s"SELECT *, max(CASE WHEN __ties_rn = $kn THEN __ties_rnk " +
-                s"END) OVER () AS __ties_brk FROM (SELECT *, rank() OVER " +
-                s"(ORDER BY $keys) AS __ties_rnk, row_number() OVER " +
-                s"(ORDER BY $keys) AS __ties_rn FROM ($inner) __ties_in) " +
-                s"__ties_r) __ties_w WHERE __ties_rn > $k AND " +
-                s"(__ties_brk IS NULL OR __ties_rnk <= __ties_brk) " +
-                s"ORDER BY $keys"
-          }
-          sql = sql.substring(0, blockStart) + repl + sql.substring(m.end)
-          spliced = true
         }
+        i -= 1
       }
-      if (!spliced) return sql
+      // the governing ORDER BY: last depth-0 match inside the block
+      val obRe = java.util.regex.Pattern
+        .compile("(?i)\\bORDER\\s+BY\\b").matcher(sql)
+      obRe.region(blockStart, fs)
+      var obStart = -1
+      var obEnd = -1
+      var d2 = 0
+      var j = blockStart
+      // single forward walk tracking depth; check matches as we go
+      val obHits = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      while (obRe.find()) if (!masked(obRe.start()))
+        obHits += ((obRe.start(), obRe.end()))
+      for ((hs, he) <- obHits) {
+        while (j < hs) {
+          if (!masked(j)) {
+            if (sql(j) == '(') d2 += 1
+            else if (sql(j) == ')') d2 -= 1
+          }
+          j += 1
+        }
+        if (d2 == 0) { obStart = hs; obEnd = he }
+      }
+      if (obStart < 0) throw new IllegalArgumentException(
+        "FETCH ... WITH TIES requires an ORDER BY in the same " +
+          "query block (ties are defined by the sort key)")
+      val keys0 = sql.substring(obEnd, fs).trim
+      if (keys0.isEmpty) throw new IllegalArgumentException(
+        "FETCH ... WITH TIES: empty ORDER BY key list")
+      // `ORDER BY keys OFFSET k [ROWS] FETCH ... WITH TIES` (ANSI
+      // order): strip a trailing depth-0 OFFSET and apply it inside
+      // the rank rewrite — skip k rows, take n, extend through the
+      // tie group of row k+n
+      var offsetK: Option[String] = None
+      var keys = keys0
+      val om0 = java.util.regex.Pattern
+        .compile("(?i)\\bOFFSET\\s+(\\d+)\\s*(?:ROWS?)?\\s*$")
+        .matcher(keys0)
+      if (om0.find() && SqlText.atTop(keys0, SqlText.mask(keys0), om0.start)) {
+        offsetK = Some(om0.group(1))
+        keys = keys0.substring(0, om0.start).trim
+      }
+      val kw = java.util.regex.Pattern
+        .compile("(?i)\\b(OFFSET|LIMIT)\\b").matcher(keys)
+      if (kw.find()) throw new IllegalArgumentException(
+        s"FETCH ... WITH TIES cannot be combined with ${kw.group(1)} " +
+          "here; apply the offset in an outer query")
+      val inner = sql.substring(blockStart, obStart).trim
+      // depth-aware key split: `substr(c, 1, 3)` is ONE key, its
+      // literal arguments are not ordinals (r14 ADVICE). Ordinal
+      // keys resolve against the block's select list (alias or bare
+      // column) — inside OVER they would silently become constants.
+      val ordRe = "(?is)^(\\d+)((?:\\s+(?:ASC|DESC))?(?:\\s+NULLS\\s+(?:FIRST|LAST))?)$".r
+      val splitKeys = SqlText.splitTop(keys)
+      if (splitKeys.exists(k => ordRe.findFirstIn(k.trim).isDefined)) {
+        lazy val items = selectListItems(inner)
+        keys = splitKeys.map { frag =>
+          frag.trim match {
+            case ordRe(digits, suffix) =>
+              val idx = digits.toInt
+              val list = items.getOrElse(throw new IllegalArgumentException(
+                "FETCH ... WITH TIES with ordinal ORDER BY keys needs " +
+                  "a plain SELECT block to resolve them against; name " +
+                  "the sort columns"))
+              if (idx < 1 || idx > list.length)
+                throw new IllegalArgumentException(
+                  s"FETCH ... WITH TIES: ORDER BY ordinal $idx is out " +
+                    s"of range (select list has ${list.length} items)")
+              val col = ordinalKeyName(list(idx - 1)).getOrElse(
+                throw new IllegalArgumentException(
+                  s"FETCH ... WITH TIES: ORDER BY ordinal $idx names an " +
+                    "unaliased expression — alias it or name the column"))
+              col + suffix
+            case other => other
+          }
+        }.mkString(", ")
+      }
+      val repl = (offsetK, opts.tiesInBlock) match {
+        case (None, true) => tiesInBlockForm(inner, keys, n, None)
+        case (None, false) =>
+          s"SELECT * EXCEPT (__ties_rnk) FROM (SELECT *, rank() OVER " +
+            s"(ORDER BY $keys) AS __ties_rnk FROM ($inner) __ties_in) " +
+            s"__ties_w WHERE __ties_rnk <= $n ORDER BY $keys"
+        case (Some(k), true) => tiesInBlockForm(inner, keys, n, Some(k))
+        case (Some(k), false) =>
+          val kn = k.toLong + n.toLong
+          s"SELECT * EXCEPT (__ties_rnk, __ties_rn, __ties_brk) FROM (" +
+            s"SELECT *, max(CASE WHEN __ties_rn = $kn THEN __ties_rnk " +
+            s"END) OVER () AS __ties_brk FROM (SELECT *, rank() OVER " +
+            s"(ORDER BY $keys) AS __ties_rnk, row_number() OVER " +
+            s"(ORDER BY $keys) AS __ties_rn FROM ($inner) __ties_in) " +
+            s"__ties_r) __ties_w WHERE __ties_rn > $k AND " +
+            s"(__ties_brk IS NULL OR __ties_rnk <= __ties_brk) " +
+            s"ORDER BY $keys"
+      }
+      Some((blockStart, m.end, repl))
     }
-    sql
-  }
 
   /** The block's top-level select-list items when the block is a plain
     * `SELECT [DISTINCT] ... FROM ...` — None otherwise (set ops and
@@ -4208,7 +3701,7 @@ object TrinoFunctions {
     val dm = java.util.regex.Pattern.compile("(?is)^\\s*DISTINCT\\b")
       .matcher(t.substring(consumed))
     if (dm.find()) consumed += dm.end
-    val im = maskedRegions(t)
+    val im = SqlText.mask(t)
     var d = 0; var j = consumed; var fromPos = -1
     while (j < t.length && fromPos < 0) {
       if (!im(j)) {
@@ -4222,7 +3715,7 @@ object TrinoFunctions {
       j += 1
     }
     if (fromPos < 0) None
-    else Some(topLevelCommaSplit(t.substring(consumed, fromPos).trim))
+    else Some(SqlText.splitTop(t.substring(consumed, fromPos).trim))
   }
 
   /** The name an ORDER BY ordinal resolves to for a select-list item:
@@ -4254,7 +3747,7 @@ object TrinoFunctions {
     * surfaces the FIRST attempt's error. */
   private def tiesInBlockForm(inner: String, keys: String, n: String,
       offset: Option[String]): String = {
-    val im = maskedRegions(inner)
+    val im = SqlText.mask(inner)
     var d = 0; var j = 0
     var fromPos = -1
     var setOp = false
@@ -4311,13 +3804,13 @@ object TrinoFunctions {
       return sql0
     val sql = rewriteFetchTies(sql0, opts)
     // pass 0: OFFSET n LIMIT m (Trino's order) → LIMIT m OFFSET n
-    val sql1 = replaceUnmasked(sql, offsetLimitPattern) { m =>
+    val sql1 = SqlText.replaceUnmasked(sql, offsetLimitPattern) { m =>
       s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}"
     }
     // pass 1: OFFSET n [ROWS] [FETCH ... ONLY] — the combined form must
     // swap to Spark's LIMIT-then-OFFSET order; a bare OFFSET keeps its
     // position and just drops the ROW/ROWS noise word
-    var out = replaceUnmasked(sql1, offsetFetchPattern) { m =>
+    var out = SqlText.replaceUnmasked(sql1, offsetFetchPattern) { m =>
       val off = m.group(1)
       Option(m.group(2)) match {
         case Some(_) =>
@@ -4327,28 +3820,10 @@ object TrinoFunctions {
       }
     }
     // pass 2: bare FETCH FIRST n ROWS ONLY (no OFFSET) → LIMIT n
-    out = replaceUnmasked(out, fetchOnlyPattern) { m =>
+    out = SqlText.replaceUnmasked(out, fetchOnlyPattern) { m =>
       s"LIMIT ${Option(m.group(1)).map(_.trim).getOrElse("1")}"
     }
     out
-  }
-
-  /** Regex-replace every match whose start is OUTSIDE literals/comments
-    * (mask recomputed once per call; replacements must not create new
-    * literals). */
-  private def replaceUnmasked(sql: String,
-      p: java.util.regex.Pattern)(f: java.util.regex.Matcher => String): String = {
-    val masked = maskedRegions(sql)
-    val m = p.matcher(sql)
-    val sb = new StringBuilder
-    var last = 0
-    while (m.find()) {
-      if (!masked(m.start)) {
-        sb.append(sql.substring(last, m.start)).append(f(m))
-        last = m.end
-      }
-    }
-    if (last == 0) sql else { sb.append(sql.substring(last)); sb.toString }
   }
 
   // Trino's relational UNNEST — `CROSS JOIN UNNEST(e1[, e2…]) [WITH
@@ -4378,221 +3853,117 @@ object TrinoFunctions {
     "(\\s*ON\\s+TRUE)?")
 
   private def rewriteUnnest(sql0: String,
-      opts: PreprocessOpts = PreprocessOpts()): String = {
-    var sql = sql0
-    var guard = 0
-    while (guard < 64) { // one splice per pass; offsets shift each time
-      guard += 1
-      val masked = maskedRegions(sql)
-      val m = unnestHeadPattern.matcher(sql)
-      var spliced = false
-      while (!spliced && m.find()) {
-        if (!masked(m.start)) {
-          val open = m.end - 1
-          var depth = 0
-          var i = open
-          var close = -1
-          while (close < 0 && i < sql.length) {
-            if (!masked(i)) {
-              if (sql(i) == '(') depth += 1
-              else if (sql(i) == ')') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
-          }
-          if (close < 0)
-            throw new IllegalArgumentException(
-              "UNNEST: unbalanced parentheses in the argument list")
-          val argsTxt = sql.substring(open + 1, close)
-          // top-level comma split, paren- and mask-aware
-          val args = {
-            val out = scala.collection.mutable.ArrayBuffer.empty[String]
-            var d = 0; var last = 0; var j = 0
-            while (j < argsTxt.length) {
-              if (!masked(open + 1 + j)) {
-                argsTxt(j) match {
-                  case '(' => d += 1
-                  case ')' => d -= 1
-                  case ',' if d == 0 =>
-                    out += argsTxt.substring(last, j); last = j + 1
-                  case _ => ()
-                }
-              }
-              j += 1
-            }
-            out += argsTxt.substring(last)
-            out.map(_.trim).toSeq
-          }
-          val tail = unnestTailPattern.matcher(sql.substring(close + 1))
-          if (!tail.lookingAt())
-            throw new IllegalArgumentException(
-              "UNNEST requires a column alias list — write `… JOIN " +
-                "UNNEST(expr) AS t(col1[, col2…])` (Trino's own required " +
-                "form here)")
-          val ordinality = tail.group(1) != null
-          val alias = tail.group(2)
-          val cols = tail.group(3).split(",").map(_.trim).toSeq
-          val onTrue = tail.group(4) != null
-          val joinTxt = m.group(1).toUpperCase
-          val isLeft = joinTxt.contains("LEFT")
-          val isFrom = joinTxt == "FROM"
-          // LEFT/INNER joins against UNNEST take (only) ON TRUE in
-          // Trino; CROSS JOIN, the comma form, and FROM position take
-          // no condition at all
-          val needsOnTrue = isLeft || joinTxt.endsWith("JOIN") &&
-            !joinTxt.contains("CROSS")
-          if (needsOnTrue && !onTrue)
-            throw new IllegalArgumentException(
-              s"${joinTxt.trim} UNNEST requires ON TRUE (Trino's only " +
-                "supported join condition for UNNEST)")
-          if (!needsOnTrue && onTrue)
-            throw new IllegalArgumentException(
-              "ON TRUE is only valid with LEFT/INNER JOIN UNNEST")
-          val outer = if (isLeft) " OUTER" else ""
-          val gen =
-            if (!ordinality) {
-              // one argument with exactly 2 aliases is textually
-              // ambiguous: a MAP (→ explode, the default reading) or an
-              // ARRAY(ROW(a, b)) splat (→ inline, the retry reading
-              // QueryService picks when explode fails analysis with
-              // UDTF_ALIAS_NUMBER_MISMATCH — the analyzer supplies the
-              // type the text cannot)
-              if (args.size == 1 && cols.size == 2 && opts.unnestRowSplat)
-                s"inline(${args.head})"
-              else if (args.size == 1 && cols.size <= 2) s"explode(${args.head})"
-              else if (args.size == 1) s"inline(${args.head})"
-              else if (cols.size == args.size)
-                s"inline(arrays_zip(${args.mkString(", ")}))"
-              else throw new IllegalArgumentException(
-                s"UNNEST of ${args.size} arrays must alias exactly " +
-                  s"${args.size} columns (got ${cols.size})")
-            } else {
-              if (args.size == 1 && cols.size == 2)
-                s"inline(transform(${args.head}, (__unnest_e, __unnest_i) -> " +
-                  "struct(__unnest_e, CAST(__unnest_i + 1 AS BIGINT))))"
-              else if (args.size == 1 && cols.size == 3)
-                // map WITH ORDINALITY → (key, value, ordinal); Trino
-                // iterates map entries in map order, Spark's map_entries
-                // preserves insertion order — same contract
-                s"inline(transform(map_entries(${args.head}), " +
-                  "(__unnest_e, __unnest_i) -> struct(__unnest_e.key, " +
-                  "__unnest_e.value, CAST(__unnest_i + 1 AS BIGINT))))"
-              else if (args.size >= 2 && cols.size == args.size + 1) {
-                // K arrays zipped WITH ORDINALITY: append an ordinal
-                // array sized to the LONGEST input (arrays_zip NULL-pads
-                // the shorter ones, and the ordinal column itself is
-                // never NULL — Trino's exact shape). size() is guarded
-                // against both its null-input conventions (-1 legacy,
-                // NULL ansi) so a NULL array behaves as empty.
-                val sizes = args.map(a =>
-                  s"coalesce(nullif(size($a), -1), 0)").mkString(", ")
-                val g = if (args.size == 1) sizes else s"greatest($sizes)"
-                val ord = s"CASE WHEN $g > 0 THEN sequence(CAST(1 AS " +
-                  s"BIGINT), CAST($g AS BIGINT)) ELSE CAST(array() AS " +
-                  "ARRAY<BIGINT>) END"
-                s"inline(arrays_zip(${args.mkString(", ")}, $ord))"
-              } else throw new IllegalArgumentException(
-                s"UNNEST … WITH ORDINALITY column count must be " +
-                  s"#arrays + 1 (or 2 for one array / 3 for a map); got " +
-                  s"${args.size} argument(s) with ${cols.size} columns")
-            }
-          val replacement =
-            if (isFrom) {
-              // standalone table function → a one-select subquery (the
-              // generator sits in the select list, aliased positionally)
-              val aliased =
-                if (cols.size == 1) s"AS ${cols.head}"
-                else s"AS (${cols.mkString(", ")})"
-              s"FROM (SELECT $gen $aliased) AS $alias"
-            } else
-              s" LATERAL VIEW$outer $gen $alias AS ${cols.mkString(", ")}"
-          val end = close + 1 + tail.end
-          sql = sql.substring(0, m.start) + replacement + sql.substring(end)
-          spliced = true
+      opts: PreprocessOpts = PreprocessOpts()): String =
+    SqlText.rewriteMatches(sql0, unnestHeadPattern) { hit =>
+      val sql = hit.sql
+      val m = hit.m
+      val close = hit.closeParen(m.end - 1)
+      if (close < 0)
+        throw new IllegalArgumentException(
+          "UNNEST: unbalanced parentheses in the argument list")
+      val args = SqlText.splitTop(sql.substring(m.end, close))
+      val tail = unnestTailPattern.matcher(sql.substring(close + 1))
+      if (!tail.lookingAt())
+        throw new IllegalArgumentException(
+          "UNNEST requires a column alias list — write `… JOIN " +
+            "UNNEST(expr) AS t(col1[, col2…])` (Trino's own required " +
+            "form here)")
+      val ordinality = tail.group(1) != null
+      val alias = tail.group(2)
+      val cols = tail.group(3).split(",").map(_.trim).toSeq
+      val onTrue = tail.group(4) != null
+      val joinTxt = m.group(1).toUpperCase
+      val isLeft = joinTxt.contains("LEFT")
+      val isFrom = joinTxt == "FROM"
+      // LEFT/INNER joins against UNNEST take (only) ON TRUE in
+      // Trino; CROSS JOIN, the comma form, and FROM position take
+      // no condition at all
+      val needsOnTrue = isLeft || joinTxt.endsWith("JOIN") &&
+        !joinTxt.contains("CROSS")
+      if (needsOnTrue && !onTrue)
+        throw new IllegalArgumentException(
+          s"${joinTxt.trim} UNNEST requires ON TRUE (Trino's only " +
+            "supported join condition for UNNEST)")
+      if (!needsOnTrue && onTrue)
+        throw new IllegalArgumentException(
+          "ON TRUE is only valid with LEFT/INNER JOIN UNNEST")
+      val outer = if (isLeft) " OUTER" else ""
+      val gen =
+        if (!ordinality) {
+          // one argument with exactly 2 aliases is textually
+          // ambiguous: a MAP (→ explode, the default reading) or an
+          // ARRAY(ROW(a, b)) splat (→ inline, the retry reading
+          // QueryService picks when explode fails analysis with
+          // UDTF_ALIAS_NUMBER_MISMATCH — the analyzer supplies the
+          // type the text cannot)
+          if (args.size == 1 && cols.size == 2 && opts.unnestRowSplat)
+            s"inline(${args.head})"
+          else if (args.size == 1 && cols.size <= 2) s"explode(${args.head})"
+          else if (args.size == 1) s"inline(${args.head})"
+          else if (cols.size == args.size)
+            s"inline(arrays_zip(${args.mkString(", ")}))"
+          else throw new IllegalArgumentException(
+            s"UNNEST of ${args.size} arrays must alias exactly " +
+              s"${args.size} columns (got ${cols.size})")
+        } else {
+          if (args.size == 1 && cols.size == 2)
+            s"inline(transform(${args.head}, (__unnest_e, __unnest_i) -> " +
+              "struct(__unnest_e, CAST(__unnest_i + 1 AS BIGINT))))"
+          else if (args.size == 1 && cols.size == 3)
+            // map WITH ORDINALITY → (key, value, ordinal); Trino
+            // iterates map entries in map order, Spark's map_entries
+            // preserves insertion order — same contract
+            s"inline(transform(map_entries(${args.head}), " +
+              "(__unnest_e, __unnest_i) -> struct(__unnest_e.key, " +
+              "__unnest_e.value, CAST(__unnest_i + 1 AS BIGINT))))"
+          else if (args.size >= 2 && cols.size == args.size + 1) {
+            // K arrays zipped WITH ORDINALITY: append an ordinal
+            // array sized to the LONGEST input (arrays_zip NULL-pads
+            // the shorter ones, and the ordinal column itself is
+            // never NULL — Trino's exact shape). size() is guarded
+            // against both its null-input conventions (-1 legacy,
+            // NULL ansi) so a NULL array behaves as empty.
+            val sizes = args.map(a =>
+              s"coalesce(nullif(size($a), -1), 0)").mkString(", ")
+            val g = if (args.size == 1) sizes else s"greatest($sizes)"
+            val ord = s"CASE WHEN $g > 0 THEN sequence(CAST(1 AS " +
+              s"BIGINT), CAST($g AS BIGINT)) ELSE CAST(array() AS " +
+              "ARRAY<BIGINT>) END"
+            s"inline(arrays_zip(${args.mkString(", ")}, $ord))"
+          } else throw new IllegalArgumentException(
+            s"UNNEST … WITH ORDINALITY column count must be " +
+              s"#arrays + 1 (or 2 for one array / 3 for a map); got " +
+              s"${args.size} argument(s) with ${cols.size} columns")
         }
-      }
-      if (!spliced) return sql
+      val replacement =
+        if (isFrom) {
+          // standalone table function → a one-select subquery (the
+          // generator sits in the select list, aliased positionally)
+          val aliased =
+            if (cols.size == 1) s"AS ${cols.head}"
+            else s"AS (${cols.mkString(", ")})"
+          s"FROM (SELECT $gen $aliased) AS $alias"
+        } else
+          s" LATERAL VIEW$outer $gen $alias AS ${cols.mkString(", ")}"
+      Some((m.start, close + 1 + tail.end, replacement))
     }
-    sql
-  }
 
-  /** Bitmask of positions inside 'literals', "identifiers" or comments. */
-  /** Double every backslash inside SINGLE-quoted literals (see the
-    * preprocess header note): the same Trino-rules scan as
-    * maskedRegions ('' doubling, no backslash escapes), but comments
-    * and double-quoted identifiers copy through untouched — only
-    * string-literal content is rewritten. A literal that ENDS in a
-    * backslash ('C:\') terminates at its closing quote under Trino
-    * rules and round-trips correctly ('C:\\' → Spark → C:\). */
+  /** Double every backslash inside single-quoted literals (see the
+    * preprocess header note). The literals are the ones SqlText finds;
+    * comments and quoted identifiers copy through untouched. A literal
+    * that ends in a backslash ('C:\') closes at its quote under Trino's
+    * rules and round-trips ('C:\\' → Spark → C:\). */
   private def escapeLiteralBackslashes(q: String): String = {
     if (q.indexOf('\\') < 0) return q
-    val n = q.length
-    val sb = new StringBuilder(n + 8)
-    var i = 0
-    while (i < n) {
-      val c = q(i)
-      if (c == '-' && i + 1 < n && q(i + 1) == '-') {
-        while (i < n && q(i) != '\n' && q(i) != '\r') { sb.append(q(i)); i += 1 }
-      } else if (c == '/' && i + 1 < n && q(i + 1) == '*') {
-        sb.append("/*"); i += 2
-        while (i + 1 < n && !(q(i) == '*' && q(i + 1) == '/')) {
-          sb.append(q(i)); i += 1
-        }
-        if (i + 1 < n) { sb.append("*/"); i += 2 }
-        else while (i < n) { sb.append(q(i)); i += 1 } // unterminated: copy tail
-      } else if (c == '\'' || c == '"') {
-        val quote = c
-        sb.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = q(i)
-          if (d == quote) {
-            sb.append(d); i += 1
-            if (i < n && q(i) == quote) { sb.append(quote); i += 1 }
-            else done = true
-          } else {
-            if (d == '\\' && quote == '\'') sb.append("\\\\") else sb.append(d)
-            i += 1
-          }
-        }
-      } else { sb.append(c); i += 1 }
+    val sb = new java.lang.StringBuilder(q.length + 8)
+    var last = 0
+    SqlText.scan(q) { (opener, start, end) =>
+      if (opener == '\'') {
+        sb.append(q, last, start).append(q.substring(start, end).replace("\\", "\\\\"))
+        last = end
+      }
     }
-    sb.toString
-  }
-
-  private def maskedRegions(q: String): Array[Boolean] = {
-    val mask = new Array[Boolean](q.length)
-    var i = 0
-    val n = q.length
-    def fill(from: Int, until: Int): Unit = {
-      var j = from
-      while (j < until && j < n) { mask(j) = true; j += 1 }
-    }
-    while (i < n) {
-      if (i + 1 < n && q(i) == '-' && q(i + 1) == '-') {
-        val start = i
-        while (i < n && q(i) != '\n' && q(i) != '\r') i += 1
-        fill(start, i)
-      } else if (i + 1 < n && q(i) == '/' && q(i + 1) == '*') {
-        val start = i
-        i += 2
-        while (i + 1 < n && !(q(i) == '*' && q(i + 1) == '/')) i += 1
-        i = math.min(i + 2, n)
-        fill(start, i)
-      } else if (q(i) == '\'' || q(i) == '"') {
-        val quote = q(i)
-        val start = i
-        i += 1
-        var done = false
-        while (i < n && !done) {
-          if (q(i) == quote) {
-            i += 1
-            if (i < n && q(i) == quote) i += 1 else done = true
-          } else i += 1
-        }
-        fill(start, i)
-      } else i += 1
-    }
-    mask
+    sb.append(q, last, q.length).toString
   }
 
   private def litInt(e: Expression, what: String): Int = e match {

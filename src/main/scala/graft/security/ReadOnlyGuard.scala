@@ -2,6 +2,8 @@ package graft.security
 
 import java.util.regex.Pattern
 
+import graft.dialect.SqlText
+
 /** Read-only SQL guard: pre-parse string classification gating
   * execute_query, ported behavior-for-behavior from the reference
   * (reference internal/trino/client.go:262-471). Deliberately NOT a
@@ -39,8 +41,30 @@ object ReadOnlyGuard {
     "^\\s*show\\s+create\\s+schema\\b",
     "^\\s*show\\s+create\\s+materialized\\s+view\\b")
 
-  /** client.go:262-322. */
-  def isReadOnly(query: String): Boolean = {
+  /** client.go:262-322, plus one rule for Spark's backtick identifiers,
+    * which the reference's sanitizer does not know: it reads a quote
+    * inside one as the start of a literal, and a write after it would
+    * be hidden in that "literal". So a statement with backticks must
+    * also pass with each backtick identifier replaced by a plain one
+    * (the regions `SqlText` finds); the check only ever adds
+    * rejections. */
+  def isReadOnly(query: String): Boolean =
+    classify(query) &&
+      (query.indexOf('`') < 0 || classify(backticksAsIdentifiers(query)))
+
+  private def backticksAsIdentifiers(q: String): String = {
+    val sb = new java.lang.StringBuilder
+    var last = 0
+    SqlText.scan(q) { (opener, start, end) =>
+      if (opener == '`') {
+        sb.append(q, last, start).append("\"IDENTIFIER\"")
+        last = end
+      }
+    }
+    sb.append(q, last, q.length).toString
+  }
+
+  private def classify(query: String): Boolean = {
     val sanitized = sanitize(query)
     val queryLower = sanitized.toLowerCase.trim
       .replace("\n", " ").replace("\r", " ").trim
@@ -121,4 +145,13 @@ object ReadOnlyGuard {
     val t = query.trim
     if (t.endsWith(";")) t.dropRight(1) else t
   }
+
+  /** The error execute_query and explain_query return for a statement
+    * the guard rejects; None when writes are allowed or the statement
+    * is read-only. */
+  def denial(query: String, allowWrites: Boolean): Option[String] =
+    if (allowWrites || isReadOnly(query)) None
+    else Some("security restriction: only SELECT, SHOW, DESCRIBE, and EXPLAIN " +
+      "queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to enable write " +
+      "operations (at your own risk)")
 }

@@ -31,10 +31,8 @@ class ExplainService(engine: Engine) {
     val stripped = ReadOnlyGuard.stripTrailingSemicolon(query)
     // EXPLAIN goes through the guard too ("explain" is an allowed
     // prefix, client.go:288) — the target query must itself be read-only.
-    if (!engine.config.allowWriteQueries && !ReadOnlyGuard.isReadOnly(stripped))
-      return Left("security restriction: only SELECT, SHOW, DESCRIBE, and EXPLAIN " +
-        "queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to enable write " +
-        "operations (at your own risk)")
+    ReadOnlyGuard.denial(stripped, engine.config.allowWriteQueries)
+      .foreach(err => return Left(err))
 
     // the plan execute_query would run (one statement pipeline), then
     // rendered in the requested format

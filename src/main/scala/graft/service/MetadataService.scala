@@ -16,6 +16,7 @@ import graft.security.Allowlists
   * (the embedded equivalent of the reference's memory.default).
   */
 class MetadataService(engine: Engine) {
+  import MetadataService.quote
 
   private def cfg = engine.config
   private def spark = engine.spark
@@ -60,17 +61,12 @@ class MetadataService(engine: Engine) {
     * (client.go:729-769; shape of reference docs/tools.md:113-157). */
   def getTableSchema(catalog: String, schema: String, table: String):
       Either[String, Seq[Map[String, Any]]] = {
-    val (c, s, t) = Allowlists.resolveTable(catalog, schema, table,
-      engine.sessionCatalog, engine.sessionSchema)
+    val (c, s, t) = MetadataService.resolve(engine, table, catalog, schema)
     engine.allowlists.tableAccessError(c, s, t) match {
       case Some(err) => Left(err)
       case None =>
-        val target =
-          if (c.equalsIgnoreCase(cfg.catalog) && s.equalsIgnoreCase(cfg.schema) &&
-            spark.catalog.tableExists(t)) quote(t) // session temp view
-          else s"${quote(c)}.${quote(s)}.${quote(t)}"
         try {
-          val df = spark.table(target)
+          val df = MetadataService.table(engine, c, s, t)
           Right(df.schema.fields.toSeq.map(f =>
             scala.collection.immutable.ListMap[String, Any](
               "Column" -> f.name,
@@ -83,8 +79,31 @@ class MetadataService(engine: Engine) {
         }
     }
   }
+}
 
-  private def quote(ident: String): String = s"`${ident.replace("`", "``")}`"
+object MetadataService {
+
+  private[service] def quote(ident: String): String = s"`${ident.replace("`", "``")}`"
+
+  /** (catalog, schema, table) a 1/2/3-part Trino table name denotes in
+    * this session: missing parts come from `catalog`/`schema` when
+    * given, else from the session namespace (USE). */
+  def resolve(engine: Engine, name: String, catalog: String = "",
+      schema: String = ""): (String, String, String) =
+    Allowlists.resolveTable(catalog, schema, name,
+      engine.sessionCatalog, engine.sessionSchema)
+
+  /** The relation catalog.schema.table: the configured default
+    * namespace's tables are session views, read by their bare name;
+    * any other namespace is read from its own catalog. */
+  def table(engine: Engine, catalog: String, schema: String,
+      table: String): org.apache.spark.sql.DataFrame = {
+    val cfg = engine.config
+    engine.spark.table(
+      if (catalog.equalsIgnoreCase(cfg.catalog) && schema.equalsIgnoreCase(cfg.schema))
+        quote(table)
+      else s"${quote(catalog)}.${quote(schema)}.${quote(table)}")
+  }
 }
 
 /** Spark → Trino type-name mapping (reference docs/tools.md:117-155

@@ -1,5 +1,7 @@
 package graft.service
 
+import graft.dialect.SqlText
+
 /** Trino's prepared-statement surface: `PREPARE name FROM statement`,
   * `EXECUTE name [USING expr, …]`, `EXECUTE IMMEDIATE 'sql'`,
   * `DEALLOCATE PREPARE name`, `DESCRIBE INPUT/OUTPUT name`.
@@ -50,112 +52,41 @@ object PreparedStatements {
     case _ => None
   }
 
-  /** Positional `?` parameters outside string literals / quoted
-    * identifiers / comments (same masking concerns as the read-only
-    * sanitizer: a '?' inside 'text' is data, not a parameter). */
-  def paramCount(sql: String): Int = scanParams(sql)
+  /** Positional `?` parameters: the ones in code, outside literals,
+    * quoted identifiers and comments (a '?' inside 'text' is data). */
+  def paramCount(sql: String): Int = params(sql).length
+
+  private def params(sql: String): Seq[Int] = {
+    val mask = SqlText.mask(sql)
+    sql.indices.filter(i => sql.charAt(i) == '?' && !mask(i))
+  }
 
   /** Substitute args for the `?` parameters (each wrapped in parens to
     * keep expression precedence). Trino's error text on mismatch. */
   def substitute(sql: String, args: Seq[String]): Either[String, String] = {
-    val n = paramCount(sql)
-    if (n != args.length)
-      Left(s"Incorrect number of parameters: expected $n but found ${args.length}")
+    val at = params(sql)
+    if (at.length != args.length)
+      Left(s"Incorrect number of parameters: expected ${at.length} but found ${args.length}")
     else {
-      val out = new StringBuilder
-      var idx = 0
-      var i = 0
-      var state: Char = 'n' // n=normal, q=single-quote, d=double-quote, b=backtick, l=line comment, c=block comment
-      while (i < sql.length) {
-        val ch = sql.charAt(i)
-        state match {
-          case 'n' =>
-            if (ch == '\'') { state = 'q'; out.append(ch) }
-            else if (ch == '"') { state = 'd'; out.append(ch) }
-            else if (ch == '`') { state = 'b'; out.append(ch) }
-            else if (ch == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-              state = 'l'; out.append(ch) }
-            else if (ch == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-              state = 'c'; out.append(ch) }
-            else if (ch == '?') { out.append('(').append(args(idx)).append(')'); idx += 1 }
-            else out.append(ch)
-          case 'q' =>
-            out.append(ch)
-            if (ch == '\'')
-              if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-              else state = 'n'
-          case 'd' => out.append(ch); if (ch == '"') state = 'n'
-          case 'b' => out.append(ch); if (ch == '`') state = 'n'
-          case 'l' => out.append(ch); if (ch == '\n') state = 'n'
-          case 'c' =>
-            out.append(ch)
-            if (ch == '*' && i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-              out.append('/'); i += 1; state = 'n' }
-        }
-        i += 1
+      val out = new java.lang.StringBuilder
+      var last = 0
+      at.zip(args).foreach { case (i, arg) =>
+        out.append(sql, last, i).append('(').append(arg).append(')')
+        last = i + 1
       }
-      Right(out.toString)
+      Right(out.append(sql, last, sql.length).toString)
     }
-  }
-
-  private def scanParams(sql: String): Int = {
-    var count = 0
-    var i = 0
-    var state: Char = 'n'
-    while (i < sql.length) {
-      val ch = sql.charAt(i)
-      state match {
-        case 'n' =>
-          if (ch == '\'') state = 'q'
-          else if (ch == '"') state = 'd'
-          else if (ch == '`') state = 'b'
-          else if (ch == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') state = 'l'
-          else if (ch == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') state = 'c'
-          else if (ch == '?') count += 1
-        case 'q' =>
-          if (ch == '\'')
-            if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 1
-            else state = 'n'
-        case 'd' => if (ch == '"') state = 'n'
-        case 'b' => if (ch == '`') state = 'n'
-        case 'l' => if (ch == '\n') state = 'n'
-        case 'c' =>
-          if (ch == '*' && i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-            i += 1; state = 'n' }
-      }
-      i += 1
-    }
-    count
   }
 
   /** Top-level comma split of a USING argument list (commas inside
-    * parens / quotes belong to the expression). */
+    * brackets, literals and comments belong to the expression). */
   def splitArgs(s: String): Either[String, Seq[String]] = {
-    val out = collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQ = false
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inQ) {
-        cur.append(ch)
-        if (ch == '\'')
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { cur.append('\''); i += 1 }
-          else inQ = false
-      } else ch match {
-        case '\'' => inQ = true; cur.append(ch)
-        case '(' | '[' => depth += 1; cur.append(ch)
-        case ')' | ']' => depth -= 1; cur.append(ch)
-        case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
-        case c => cur.append(c)
-      }
-      i += 1
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    if (inQ || depth != 0) Left(s"malformed USING argument list: $s")
-    else if (out.exists(_.isEmpty)) Left(s"malformed USING argument list: $s")
-    else Right(out.toSeq)
+    val mask = SqlText.mask(s)
+    val args = SqlText.splitTop(s)
+    val unterminated = SqlText.scan(s)((_, _, _) => ())
+    if (unterminated || SqlText.depth(s, mask, s.length) != 0 || args.exists(_.isEmpty))
+      Left(s"malformed USING argument list: $s")
+    else Right(args)
   }
 
   /** `EXECUTE IMMEDIATE` takes a single-quoted SQL literal ('' = '). */

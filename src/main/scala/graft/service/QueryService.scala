@@ -102,10 +102,8 @@ class QueryService(engine: Engine) {
       case Right(PreparedStatements.DescribeOutput(name)) =>
         val sql = engine.preparedStatements.getOrElse(name,
           return Left(s"Prepared statement not found: $name"))
-        if (!engine.config.allowWriteQueries && !ReadOnlyGuard.isReadOnly(sql))
-          return Left("security restriction: only SELECT, SHOW, DESCRIBE, and " +
-            "EXPLAIN queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to " +
-            "enable write operations (at your own risk)")
+        ReadOnlyGuard.denial(sql, engine.config.allowWriteQueries)
+          .foreach(err => return Left(err))
         // substitute NULL for parameters: analysis-only, never executed
         val probed = PreparedStatements.substitute(sql,
           Seq.fill(PreparedStatements.paramCount(sql))("NULL"))
@@ -152,10 +150,8 @@ class QueryService(engine: Engine) {
         case SessionProps.Rollback => return ok("ROLLBACK")
       }
     }
-    if (!engine.config.allowWriteQueries && !ReadOnlyGuard.isReadOnly(stripped))
-      return Left("security restriction: only SELECT, SHOW, DESCRIBE, and EXPLAIN " +
-        "queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to enable write " +
-        "operations (at your own risk)")
+    ReadOnlyGuard.denial(stripped, engine.config.allowWriteQueries)
+      .foreach(err => return Left(err))
 
     // One error path for the SHOW routes below: a throwing catalog or
     // listing surfaces as a tool error, never an exception out of
@@ -173,8 +169,7 @@ class QueryService(engine: Engine) {
     def showGate(t: String): Option[String] =
       if (!engine.config.enforceSqlAllowlists) None
       else {
-        val (c, s, tbl) = graft.security.Allowlists.resolveTable("", "", t,
-          engine.sessionCatalog, engine.sessionSchema)
+        val (c, s, tbl) = MetadataService.resolve(engine, t)
         val lists = engine.allowlists
         if (lists.allowedCatalogs.nonEmpty && !lists.isCatalogAllowed(c))
           Some(s"catalog access denied: $c not in allowlist")

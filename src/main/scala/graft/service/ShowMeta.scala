@@ -120,17 +120,8 @@ object ShowMeta {
   }
 
   def createTable(engine: Engine, table: String): DataFrame = {
-    val (c, s, t) = Allowlists.resolveTable("", "", table,
-      engine.sessionCatalog, engine.sessionSchema)
-    def quote(i: String) = s"`${i.replace("`", "``")}`"
-    // same multi-catalog routing as describeTable: only the default
-    // namespace resolves through the temp views
-    val df =
-      if (c.equalsIgnoreCase(engine.config.catalog) &&
-          s.equalsIgnoreCase(engine.config.schema))
-        engine.spark.table(quote(t))
-      else engine.spark.table(s"${quote(c)}.${quote(s)}.${quote(t)}")
-    val cols = df.schema.fields
+    val (c, s, t) = MetadataService.resolve(engine, table)
+    val cols = MetadataService.table(engine, c, s, t).schema.fields
       .map(f => s"   ${f.name} ${TypeNames.trino(f.dataType)}")
       .mkString(",\n")
     val ddl = s"CREATE TABLE $c.$s.$t (\n$cols\n)"
@@ -143,17 +134,11 @@ object ShowMeta {
     * client.go:767), so the tool and the statement always agree. */
   def describeTable(engine: Engine, table: String,
       like: Option[String] = None): DataFrame = {
-    val (c, s, t) = Allowlists.resolveTable("", "", table,
-      engine.sessionCatalog, engine.sessionSchema)
     // qualified names outside the default namespace must hit THAT
     // catalog (DESCRIBE tpch.tiny.customer served the default catalog's
     // temp view before — statement-fuzz finding, r11)
-    def quote(i: String) = s"`${i.replace("`", "``")}`"
-    val target =
-      if (c.equalsIgnoreCase(engine.config.catalog) &&
-          s.equalsIgnoreCase(engine.config.schema)) quote(t)
-      else s"${quote(c)}.${quote(s)}.${quote(t)}"
-    val fields = engine.spark.table(target).schema.fields.toSeq
+    val (c, s, t) = MetadataService.resolve(engine, table)
+    val fields = MetadataService.table(engine, c, s, t).schema.fields.toSeq
     val filtered = like match {
       case Some(p) => fields.filter(f => f.name.matches(likeToRegex(p)))
       case None => fields

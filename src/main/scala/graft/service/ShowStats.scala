@@ -44,8 +44,12 @@ object ShowStats {
     case _ => None
   }
 
-  def forTable(engine: Engine, table: String): DataFrame =
-    forDataFrame(engine, engine.spark.table(table))
+  /** Statistics of the table `table` names in this session (USE applies,
+    * as for DESCRIBE). */
+  def forTable(engine: Engine, table: String): DataFrame = {
+    val (c, s, t) = MetadataService.resolve(engine, table)
+    forDataFrame(engine, MetadataService.table(engine, c, s, t))
+  }
 
   def forDataFrame(engine: Engine, df: DataFrame): DataFrame = {
     val spark = engine.spark

@@ -637,10 +637,6 @@ object Streams {
             rows.map(r => MrRow(r._2.getTime, r._3, r._4))
           val wm = state.getCurrentWatermarkMs()
           val (matches, kept, matchNo, wake) = advance(buf, st.matchNo, wm)
-          if (sys.env.contains("GRAFT_MR_DEBUG"))
-            System.err.println(s"[mr] user=$user timedOut=${state.hasTimedOut} " +
-              s"wm=$wm buf=${buf.size} kept=${kept.size} " +
-              s"emit=${matches.size} wake=$wake")
           if (kept.isEmpty) {
             // buffer drained: drop the key's state entirely (bounded
             // state over unbounded keys beats preserving the counter —

@@ -210,6 +210,17 @@ class ReadOnlyGuardSpec extends AnyFunSuite {
     })
   }
 
+  test("backtick identifiers: a quote inside one cannot hide a write") {
+    // the sanitizer alone reads `q'` as opening a literal that swallows
+    // the INSERT up to the next quote; Spark runs it as a CTE + write
+    assert(!ro("WITH `q'` AS (SELECT 1 AS a) INSERT OVERWRITE DIRECTORY " +
+      "'/tmp/x' USING parquet SELECT a FROM `q'` --'"))
+    assert(!ro("SELECT `a\"` FROM t; DROP TABLE t --\""))
+    assert(ro("SELECT 1 AS `it's`, 'x' AS `y` FROM t"))
+    // a write keyword spelled as a backtick identifier is still refused
+    assert(!ro("SELECT `delete` FROM t"))
+  }
+
   test("stripTrailingSemicolon removes exactly one trailing semicolon") {
     assert(ReadOnlyGuard.stripTrailingSemicolon("SELECT 1;") == "SELECT 1")
     assert(ReadOnlyGuard.stripTrailingSemicolon("SELECT 1") == "SELECT 1")

@@ -335,6 +335,44 @@ class ServicesSpec extends SparkSpec {
     assert(!text.contains("Location") && text.toLowerCase.contains("customer"), text)
   }
 
+  test("execute: SHOW STATS after USE reads the session namespace's table") {
+    val qs = new QueryService(engine(Map(
+      "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_TABLES" -> "tpch.tiny.customer")))
+    assert(qs.execute("USE tpch.tiny").isRight)
+    val stats = qs.execute("SHOW STATS FOR customer")
+    val cols = stats.toOption.getOrElse(fail(stats.toString)).rows
+      .flatMap(r => Option(r.head)).map(_.toString)
+    // tpch.tiny.customer's columns, never the default catalog's c_* view
+    assert(cols.contains("custkey") && !cols.exists(_.startsWith("c_")), cols)
+    val described = qs.execute("DESCRIBE customer").toOption.get.rows.map(_.head.toString)
+    assert(cols.toSet == described.toSet, described)
+  }
+
+  test("execute: a backtick identifier holding a quote keeps Trino's literal rules") {
+    val qs = new QueryService(engine())
+    def d(alias: String) = {
+      val r = qs.execute(s"SELECT 1 AS $alias, regexp_extract('a1', '\\d') AS d")
+      r.toOption.getOrElse(fail(r.toString)).rows.head(1)
+    }
+    assert(d("`it's`") == "1")
+    assert(d("`it's`") == d("\"it's\""))
+  }
+
+  test("execute: a quoted relation name before MATCH_RECOGNIZE is found, backticks included") {
+    val qs = new QueryService(engine())
+    val counts = Seq("events", "`events`", "\"events\"").map { rel =>
+      val r = qs.execute(
+        s"""SELECT COUNT(*) AS n FROM $rel MATCH_RECOGNIZE (
+           |  PARTITION BY user_id ORDER BY ts, event_id
+           |  MEASURES FIRST(A.ts) AS start_ts
+           |  PATTERN (A B+)
+           |  DEFINE A AS event_type = 'view', B AS event_type = 'click')""".stripMargin)
+      r.toOption.getOrElse(fail(s"$rel: $r")).rows
+    }
+    assert(counts.distinct.size == 1, counts)
+  }
+
   test("explain: build errors carry execute_query's text, UNNEST hint included") {
     val e = engine()
     Seq("SELECT missing_col FROM region" -> "UNRESOLVED_COLUMN",
