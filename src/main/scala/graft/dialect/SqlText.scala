@@ -11,7 +11,10 @@ import java.util.regex.{Matcher, Pattern}
   *    quote (`''`, `""`, ` `` `) belongs to the text. A backslash is an
   *    ordinary character (Trino's rule).
   *  - `--` runs to the end of the line; a block comment runs from
-  *    its opening slash-star to the first star-slash (no nesting).
+  *    its opening slash-star to its matching star-slash: block comments
+  *    nest, as Spark's lexer reads them (Trino's ends at the first
+  *    star-slash; the text goes to Spark's parser, so Spark's reading
+  *    is the one that decides what is code).
   *  - An unterminated literal, identifier or block comment masks to the
   *    end of the text.
   * The quotes and comment markers are masked too.
@@ -40,10 +43,14 @@ object SqlText {
         while (i < n && sql.charAt(i) != '\n' && sql.charAt(i) != '\r') i += 1
         region(c, start, i)
       } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val close = sql.indexOf("*/", i + 2)
-        open = close < 0
-        i = if (open) n else close + 2
+        val end = commentEnd(sql, i)
+        open = end < 0
+        i = if (open) n else end
         region(c, start, i)
+      } else if (c == '*' && i + 1 < n && sql.charAt(i + 1) == '/') {
+        // Spark lexes a star-slash outside a comment as one token (a
+        // hint's end), so its slash opens no comment
+        i += 2
       } else if (c == '\'' || c == '"' || c == '`') {
         val end = quotedEnd(sql, i)
         open = end < 0
@@ -52,6 +59,28 @@ object SqlText {
       } else i += 1
     }
     open
+  }
+
+  /** End (exclusive) of the block comment opening at `at`, or -1 when
+    * it never closes. Comments nest, as in Spark's lexer: inside one,
+    * each slash-star opens a level (a hint's slash-star-plus does not)
+    * and each star-slash closes one. */
+  private def commentEnd(sql: String, at: Int): Int = {
+    var depth = 1
+    var i = at + 2
+    while (i + 1 < sql.length) {
+      val pair = (sql.charAt(i), sql.charAt(i + 1))
+      if (pair == ('*', '/')) {
+        depth -= 1
+        i += 2
+        if (depth == 0) return i
+      } else if (pair == ('/', '*') &&
+          !(i + 2 < sql.length && sql.charAt(i + 2) == '+')) {
+        depth += 1
+        i += 2
+      } else i += 1
+    }
+    -1
   }
 
   /** End (exclusive) of the literal or quoted identifier whose opening

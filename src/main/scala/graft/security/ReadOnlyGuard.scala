@@ -2,6 +2,9 @@ package graft.security
 
 import java.util.regex.Pattern
 
+import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, InsertIntoStatement, LogicalPlan}
+import org.apache.spark.sql.execution.command.ExplainCommand
+
 import graft.dialect.SqlText
 
 /** Read-only SQL guard: pre-parse string classification gating
@@ -150,8 +153,35 @@ object ReadOnlyGuard {
     * the guard rejects; None when writes are allowed or the statement
     * is read-only. */
   def denial(query: String, allowWrites: Boolean): Option[String] =
-    if (allowWrites || isReadOnly(query)) None
-    else Some("security restriction: only SELECT, SHOW, DESCRIBE, and EXPLAIN " +
+    if (allowWrites || isReadOnly(query)) None else Some(DenialText)
+
+  /** The same verdict on the PARSED plan, unless writes are allowed: a
+    * plan holding a write (`InsertIntoDir`, `InsertIntoStatement`, or a
+    * command — V2 writes are commands) other than the read-only SHOW /
+    * DESCRIBE / EXPLAIN forms is denied with `denial`'s text. Spark's
+    * own lexer built this plan, so no lexical difference between the
+    * text rules above and Spark's (nested block comments, backticks)
+    * can hide a write from it. It only adds rejections: the text guard
+    * still runs first. */
+  def planDenial(plan: LogicalPlan, allowWrites: Boolean): Option[String] =
+    if (allowWrites || !writes(plan)) None else Some(DenialText)
+
+  // CTE bodies and subqueries are queries in Spark's grammar, so a
+  // write is the statement's root or the child of a WITH
+  private def writes(plan: LogicalPlan): Boolean = plan.exists {
+    case _: InsertIntoDir | _: InsertIntoStatement => true
+    // EXPLAIN holds its query as a field, not a child
+    case e: ExplainCommand => writes(e.logicalPlan)
+    // Spark names its read-only statement plans Show…/Describe…
+    // (SHOW TABLES, SHOW CREATE TABLE, DESCRIBE QUERY, …); no write is
+    case c: Command =>
+      val name = c.getClass.getSimpleName
+      !name.startsWith("Show") && !name.startsWith("Describe")
+    case _ => false
+  }
+
+  private val DenialText =
+    "security restriction: only SELECT, SHOW, DESCRIBE, and EXPLAIN " +
       "queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to enable write " +
-      "operations (at your own risk)")
+      "operations (at your own risk)"
 }

@@ -34,10 +34,10 @@ class ExplainService(engine: Engine) {
     ReadOnlyGuard.denial(stripped, engine.config.allowWriteQueries)
       .foreach(err => return Left(err))
 
-    // the plan execute_query would run (one statement pipeline), then
-    // rendered in the requested format
-    Statements.build(engine, stripped).flatMap { df =>
-      try Right(Seq(render(df.queryExecution, f)))
+    // the plan execute_query would run (one statement pipeline), never
+    // run itself, then rendered in the requested format
+    Statements.analyze(engine, stripped).flatMap { qe =>
+      try Right(Seq(render(qe, f)))
       catch { case e: Throwable =>
         Left(s"query explanation failed: ${Option(e.getMessage).getOrElse(e.toString).linesIterator.take(3).mkString(" ")}")
       }

@@ -1,6 +1,8 @@
 package graft.service
 
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.AliasIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
@@ -14,12 +16,13 @@ import graft.engine.Engine
   * internal/trino/client.go:284-290 — the remote Trino serves these
   * natively). Spark's session catalog has no such schema, so the
   * statement pipeline ([[Statements]]) renames those relations in the
-  * parsed plan to four session temp views rebuilt from `spark.catalog`
-  * listings at query time, allowlist-filtered exactly like the metadata
-  * tools.
+  * parsed plan to four session temp views over driver-side rows
+  * (`LocalRelation`s) listed from the catalogs at query time,
+  * allowlist-filtered exactly like the metadata tools.
   *
-  * The listings are driver-side metadata (bounded by table count, never
-  * by data volume), so refresh-per-query is safe at any corpus scale.
+  * The listings are catalog reads (bounded by table count, never by
+  * data volume, and starting no SQL execution), so listing per query is
+  * safe at any corpus scale; only a change re-registers a view.
   * Supported spellings: `information_schema.tables`, an optional
   * catalog qualifier (`memory.information_schema.columns`), any case,
   * quoted or not. Text elsewhere (string literals, comments) is never
@@ -64,11 +67,37 @@ object InfoSchema {
     StructField("is_nullable", StringType, nullable = false),
     StructField("data_type", StringType, nullable = false)))
 
-  /** Rebuild the four views from the current catalog state (allowlist-
+  /** `body` (the analysis of a statement that reads the shims) with
+    * the four views holding the current catalog state, allowlist-
     * filtered via MetadataService — the same trust boundary as
-    * list_tables / get_table_schema). */
-  def refresh(engine: Engine): Unit = {
+    * list_tables / get_table_schema. The catalog is listed on every
+    * call, so no listing is stale; a view is re-registered only when its
+    * rows differ from the rows last published to this session. The lock
+    * spans the analysis, so a concurrent statement of an engine with
+    * other allowlists cannot swap the views under this one. */
+  def withShims[T](engine: Engine)(body: => T): T = {
     val spark = engine.spark
+    val rows = current(engine)
+    published.synchronized {
+      val last = published.computeIfAbsent(spark, _ => new java.util.HashMap)
+      rows.foreach { case (view, (schema, viewRows)) =>
+        if (last.get(view) != viewRows ||
+            spark.sessionState.catalog.getRawTempView(view).isEmpty) {
+          spark.createDataFrame(viewRows.asJava, schema).createOrReplaceTempView(view)
+          last.put(view, viewRows)
+        }
+      }
+      body
+    }
+  }
+
+  /** Per session: each view's rows as last registered. */
+  private val published =
+    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, Seq[Row]]]()
+
+  /** Each view's schema and rows for the current catalog state; every
+    * listing is read once. */
+  private def current(engine: Engine): Seq[(String, (StructType, Seq[Row]))] = {
     val meta = new MetadataService(engine)
     val cat = engine.config.catalog
     val sch = engine.config.schema
@@ -79,16 +108,12 @@ object InfoSchema {
     // filters with WHERE table_catalog = '…' exactly as in Trino.
     // (Divergence kept: Trino scopes information_schema PER catalog;
     // this shim serves one merged relation — DIALECT.md.)
-    val namespaces: Seq[(String, String)] =
-      (cat, sch) +: meta.listCatalogs().filterNot(_.equalsIgnoreCase(cat))
-        .flatMap(c => meta.listSchemas(c).map(s => (c, s)))
-    val byNs = namespaces.map { case (c, s) => (c, s, meta.listTables(c, s)) }
+    val others = meta.listCatalogs().filterNot(_.equalsIgnoreCase(cat))
+      .flatMap(c => meta.listSchemas(c).map(s => (c, s)))
+    val byNs = ((cat, sch) +: others).map { case (c, s) => (c, s, meta.listTables(c, s)) }
 
     val tRows = byNs.flatMap { case (c, s, tables) =>
       tables.map(t => Row(c, s, t, "BASE TABLE")) }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(tRows, 1), tablesSchema)
-      .createOrReplaceTempView(TablesView)
 
     val cRows = byNs.flatMap { case (c, s, tables) =>
       tables.flatMap { t =>
@@ -99,25 +124,17 @@ object InfoSchema {
         }
       }
     }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(cRows, 1), columnsSchema)
-      .createOrReplaceTempView(ColumnsView)
 
     // schemata: allowlist-filtered schema listing (Trino shape:
     // catalog_name, schema_name) across the same catalogs
-    val sRows = meta.listSchemas(cat).map(s => Row(cat, s)) ++
-      meta.listCatalogs().filterNot(_.equalsIgnoreCase(cat))
-        .flatMap(c => meta.listSchemas(c).map(s => Row(c, s)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(sRows, 1), schemataSchema)
-      .createOrReplaceTempView(SchemataView)
+    val sRows = (meta.listSchemas(cat).map(s => (cat, s)) ++ others)
+      .map { case (c, s) => Row(c, s) }
 
     // views: no SQL views exist in the embedded catalog (testdata
     // relations surface as BASE TABLEs) — an EMPTY relation with
     // Trino's column shape, not an unsupported-reference error
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq.empty[Row], 1), viewsSchema)
-      .createOrReplaceTempView(ViewsView)
+    Seq(TablesView -> (tablesSchema, tRows), ColumnsView -> (columnsSchema, cRows),
+      SchemataView -> (schemataSchema, sRows), ViewsView -> (viewsSchema, Nil))
   }
 
   private val schemataSchema = StructType(Seq(

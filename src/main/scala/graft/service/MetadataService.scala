@@ -1,5 +1,6 @@
 package graft.service
 
+import org.apache.spark.sql.graft.CatalogBridge
 import org.apache.spark.sql.types._
 
 import graft.engine.Engine
@@ -8,8 +9,9 @@ import graft.security.Allowlists
 /** Metadata surface: list_catalogs / list_schemas / list_tables /
   * get_table_schema with allowlist filtering and Trino-style type
   * names, mirroring reference internal/trino/client.go:635-769 over
-  * Spark's catalog (`SHOW CATALOGS` / `SHOW NAMESPACES` /
-  * `SHOW TABLES` / schema inspection).
+  * Spark's catalog. The listings are plain catalog reads
+  * ([[CatalogBridge]]): the names, order and errors of `SHOW CATALOGS`
+  * / `SHOW NAMESPACES` / `SHOW TABLES`, without a SQL execution.
   *
   * Namespace mapping: the engine's registered parquet views are session
   * temp views, addressed as `<defaultCatalog>.<defaultSchema>.<name>`
@@ -21,38 +23,42 @@ class MetadataService(engine: Engine) {
   private def cfg = engine.config
   private def spark = engine.spark
 
-  /** SHOW CATALOGS → names, allowlist-filtered (client.go:635-659). */
-  def listCatalogs(): Seq[String] = {
-    val cats = spark.sql("SHOW CATALOGS").collect().map(_.getString(0)).toSeq
-    engine.allowlists.filterCatalogs(cats)
-  }
+  /** Catalog names, allowlist-filtered (client.go:635-659). */
+  def listCatalogs(): Seq[String] =
+    engine.allowlists.filterCatalogs(CatalogBridge.catalogs(spark))
 
-  /** SHOW NAMESPACES IN c → names, filtered (client.go:662-691). */
+  /** Schema names in catalog c, filtered (client.go:662-691). A name
+    * that is no catalog keeps Spark's own reading (a namespace of the
+    * current catalog) and its error text, through the statement. */
   def listSchemas(catalog: String): Seq[String] = {
     val c = if (catalog.isEmpty) engine.sessionCatalog else catalog
-    val schemas = spark.sql(s"SHOW NAMESPACES IN ${quote(c)}")
-      .collect().map(_.getString(0)).toSeq
+    val schemas = CatalogBridge.catalog(spark, c) match {
+      case Some(plugin) => CatalogBridge.namespaces(plugin)
+      case None => spark.sql(s"SHOW NAMESPACES IN ${quote(c)}")
+        .collect().map(_.getString(0)).toSeq
+    }
     engine.allowlists.filterSchemas(schemas, c)
   }
 
-  /** SHOW TABLES IN c.s (plus session temp views when targeting the
-    * default namespace) → names, filtered (client.go:694-726). */
+  /** Table names in c.s (plus session temp views when targeting the
+    * default namespace), filtered (client.go:694-726). */
   def listTables(catalog: String, schema: String): Seq[String] = {
     val c = if (catalog.isEmpty) engine.sessionCatalog else catalog
     val s = if (schema.isEmpty) engine.sessionSchema else schema
-    val rows = spark.sql(s"SHOW TABLES IN ${quote(c)}.${quote(s)}").collect()
-    // SHOW TABLES emits (namespace, tableName, isTemporary); temp views
-    // belong to the engine's default namespace.
-    val names = rows.flatMap { r =>
-      val name = r.getString(1)
-      val isTemp = r.getBoolean(2)
+    val tables = CatalogBridge.catalog(spark, c) match {
+      case Some(plugin) => CatalogBridge.tables(spark, plugin, s)
+      case None => spark.sql(s"SHOW TABLES IN ${quote(c)}.${quote(s)}")
+        .collect().toSeq.map(r => (r.getString(1), r.getBoolean(2)))
+    }
+    // temp views belong to the engine's default namespace
+    val names = tables.flatMap { case (name, isTemp) =>
       // graft_src_* are the engine's internal per-directory relation
       // caches (Tables.load) — implementation detail, not user tables
       if (name.startsWith("graft_src_")) None
       else if (!isTemp || (c.equalsIgnoreCase(cfg.catalog) && s.equalsIgnoreCase(cfg.schema)))
         Some(name)
       else None
-    }.distinct.sorted.toSeq
+    }.distinct.sorted
     engine.allowlists.filterTables(names, c, s)
   }
 

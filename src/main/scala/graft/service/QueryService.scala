@@ -107,8 +107,8 @@ class QueryService(engine: Engine) {
         // substitute NULL for parameters: analysis-only, never executed
         val probed = PreparedStatements.substitute(sql,
           Seq.fill(PreparedStatements.paramCount(sql))("NULL"))
-        return probed.flatMap(Statements.build(engine, _)).flatMap { df =>
-          val rows = df.schema.fields.toSeq.map(f =>
+        return probed.flatMap(Statements.analyze(engine, _)).flatMap { qe =>
+          val rows = qe.analyzed.schema.fields.toSeq.map(f =>
             org.apache.spark.sql.Row(f.name, "", "", "",
               TypeNames.trino(f.dataType), 0, false))
           val st = org.apache.spark.sql.types.StructType(Seq(

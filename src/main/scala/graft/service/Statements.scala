@@ -1,12 +1,13 @@
 package graft.service
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.dialect.{MatchRecognize, TrinoFunctions}
 import graft.engine.Engine
-import graft.security.SqlAllowlist
+import graft.security.{ReadOnlyGuard, SqlAllowlist}
 
 /** The one "SQL text → DataFrame" pipeline. execute_query's plain path,
   * EXPLAIN ANALYZE, DESCRIBE OUTPUT, `SHOW STATS FOR (SELECT …)`, the
@@ -20,14 +21,27 @@ import graft.security.SqlAllowlist
   *  3. one parse;
   *  4. each placeholder replaced by its span's plan — no temp view, so
   *     a concurrent listing never sees one;
-  *  5. the opt-in SQL allowlist gate;
+  *  5. the parsed plan's read-only check ([[ReadOnlyGuard.planDenial]])
+  *     and the opt-in SQL allowlist gate;
   *  6. one relation walk ([[UseStatement.qualify]]: information_schema
   *     shims, USE qualification), then analysis.
   */
 object Statements {
 
-  def build(engine: Engine, sql: String): Either[String, DataFrame] = {
-    val first = buildWith(engine, sql, TrinoFunctions.PreprocessOpts())
+  /** The statement as a DataFrame, analyzed; a command it holds has
+    * run (`Dataset.ofRows` runs commands eagerly). */
+  def build(engine: Engine, sql: String): Either[String, DataFrame] =
+    statement(engine, sql)(ColumnBridge.ofRows(engine.spark, _))
+
+  /** The statement analyzed but never run: a command it holds (an
+    * allowed write included) is planned, not executed. What explain_query
+    * and DESCRIBE OUTPUT read. */
+  def analyze(engine: Engine, sql: String): Either[String, QueryExecution] =
+    statement(engine, sql)(ColumnBridge.analyzed(engine.spark, _))
+
+  private def statement[T](engine: Engine, sql: String)(
+      finish: LogicalPlan => T): Either[String, T] = {
+    val first = buildWith(engine, sql, TrinoFunctions.PreprocessOpts(), finish)
     first match {
       case Left(err) =>
         // Type-aware retry: two textual forms are ambiguous without
@@ -42,14 +56,15 @@ object Statements {
             err.contains("MISSING_GROUP_BY"))        // key is an aggregate
         if (!wantSplat && !wantTies) first
         else buildWith(engine, sql, TrinoFunctions.PreprocessOpts(
-            unnestRowSplat = wantSplat, tiesInBlock = wantTies))
+            unnestRowSplat = wantSplat, tiesInBlock = wantTies), finish)
           .orElse(first)
       case ok => ok
     }
   }
 
-  private def buildWith(engine: Engine, sql: String,
-      opts: TrinoFunctions.PreprocessOpts): Either[String, DataFrame] = {
+  private def buildWith[T](engine: Engine, sql: String,
+      opts: TrinoFunctions.PreprocessOpts,
+      finish: LogicalPlan => T): Either[String, T] = {
     // preprocess rejects constructs with no Spark translation (e.g.
     // `time with time zone`) via IllegalArgumentException → clean Left
     val pre =
@@ -59,16 +74,18 @@ object Statements {
       val spliced =
         if (!MatchRecognize.contains(pre)) Right((pre, Nil))
         else MatchRecognize.spliceAll(pre, (relation, earlier) =>
-          plan(engine, s"SELECT * FROM $relation", earlier)
+          plan(engine, s"SELECT * FROM $relation", earlier)(
+              ColumnBridge.ofRows(engine.spark, _))
             .fold(err => throw new IllegalArgumentException(err), identity))
-      spliced.flatMap { case (text, spans) => plan(engine, text, spans) }
+      spliced.flatMap { case (text, spans) => plan(engine, text, spans)(finish) }
     } catch { case e: Throwable => Left(failed(e)) }
   }
 
   /** Steps 3–6 for preprocessed text whose MATCH_RECOGNIZE spans are
-    * placeholders; Left = an allowlist denial. */
-  private def plan(engine: Engine, text: String,
-      spans: Seq[(String, DataFrame)]): Either[String, DataFrame] = {
+    * placeholders; Left = a write the config does not allow, or an
+    * allowlist denial. */
+  private def plan[T](engine: Engine, text: String,
+      spans: Seq[(String, DataFrame)])(finish: LogicalPlan => T): Either[String, T] = {
     val parsed = engine.spark.sessionState.sqlParser.parsePlan(text)
     val byName = spans.toMap
     val substituted =
@@ -81,17 +98,18 @@ object Statements {
         }
       }
     val denied =
-      if (!engine.config.enforceSqlAllowlists) None
-      else SqlAllowlist.check(substituted, engine.allowlists,
-        engine.sessionCatalog, engine.sessionSchema)
+      ReadOnlyGuard.planDenial(substituted, engine.config.allowWriteQueries).orElse(
+        if (!engine.config.enforceSqlAllowlists) None
+        else SqlAllowlist.check(substituted, engine.allowlists,
+          engine.sessionCatalog, engine.sessionSchema))
     denied.toLeft {
       val ns =
         if (engine.sessionCatalog.equalsIgnoreCase(engine.config.catalog) &&
             engine.sessionSchema.equalsIgnoreCase(engine.config.schema)) None
         else Some((engine.sessionCatalog, engine.sessionSchema))
       val (resolved, shims) = UseStatement.qualify(substituted, ns)
-      if (shims) InfoSchema.refresh(engine)
-      ColumnBridge.ofRows(engine.spark, resolved)
+      if (shims) InfoSchema.withShims(engine)(finish(resolved))
+      else finish(resolved)
     }
   }
 

@@ -1,0 +1,40 @@
+package org.apache.spark.sql.graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.catalog.{CatalogNotFoundException, CatalogPlugin, CatalogV2Util}
+import org.apache.spark.sql.connector.catalog.CatalogV2Implicits._
+
+/** Direct reads of a session's catalogs: the names `SHOW CATALOGS`,
+  * `SHOW NAMESPACES IN c` and `SHOW TABLES IN c.s` list, read from the
+  * [[org.apache.spark.sql.connector.catalog.CatalogManager]] without
+  * starting a SQL execution (no parse, analysis, planning or listener
+  * events). `CatalogV2Implicits` is private[sql]; this subpackage is
+  * how graft reaches it. */
+object CatalogBridge {
+
+  /** SHOW CATALOGS: the catalogs loaded so far, sorted. */
+  def catalogs(spark: SparkSession): Seq[String] =
+    spark.sessionState.catalogManager.listCatalogs(None)
+
+  /** The catalog `name` denotes, or None when Spark would read `name`
+    * as a namespace of the current catalog instead (it names no
+    * configured catalog). */
+  def catalog(spark: SparkSession, name: String): Option[CatalogPlugin] =
+    try Some(spark.sessionState.catalogManager.catalog(name))
+    catch { case _: CatalogNotFoundException => None }
+
+  /** SHOW NAMESPACES IN `catalog`: its top-level namespaces, each
+    * quoted the way that statement quotes it. */
+  def namespaces(catalog: CatalogPlugin): Seq[String] =
+    catalog.asNamespaceCatalog.listNamespaces().toSeq.map(_.quoted)
+
+  /** SHOW TABLES IN `catalog`.`schema`: (name, isTemporary) per table.
+    * The session catalog lists its temp views with its tables. */
+  def tables(spark: SparkSession, catalog: CatalogPlugin,
+      schema: String): Seq[(String, Boolean)] =
+    if (CatalogV2Util.isSessionCatalog(catalog)) {
+      val session = spark.sessionState.catalog
+      session.listTables(schema).map(t => (t.table, session.isTempView(t)))
+    } else
+      catalog.asTableCatalog.listTables(Array(schema)).toSeq.map(t => (t.name, false))
+}

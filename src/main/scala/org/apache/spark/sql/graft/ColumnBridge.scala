@@ -21,6 +21,20 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `plan` analyzed, as `ofRows` would, but with commands left
+    * unexecuted (`CommandExecutionMode.SKIP`, as Spark's own EXPLAIN
+    * plans them): its optimized and physical plans are built on
+    * demand, and nothing runs. */
+  def analyzed(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.execution.QueryExecution = {
+    val qe = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.executePlan(plan,
+        org.apache.spark.sql.execution.CommandExecutionMode.SKIP)
+    qe.assertAnalyzed()
+    qe
+  }
 }
 
 /** [[ImplicitCastInputTypes]] re-exposed to expressions outside the sql

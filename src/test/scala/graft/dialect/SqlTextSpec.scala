@@ -21,10 +21,64 @@ class SqlTextSpec extends AnyFunSuite {
     assert(shape("'C:\\' x") == "#####..")
   }
 
-  test("comments mask to their end; block comments do not nest") {
+  test("comments mask to their end; block comments nest") {
     assert(shape("a -- c\nb") == "..####..")
     assert(shape("a -- c\rb") == "..####..")
-    assert(shape("a /* x /* y */ b") == "..############..")
+    assert(shape("a /* x */ b") == "..#######..")
+    assert(shape("a /* x /* y */ z */ b") == "..#################..")
+    // one level still open: the comment runs to the end of the text
+    assert(shape("a /* x /* y */ b") == "..##############")
+    assert(SqlText.scan("a /* x /* y */ b")((_, _, _) => ()))
+    // a hint opener inside a comment opens no level (Spark: `/*+` is
+    // never a comment)
+    assert(shape("a /* /*+ x */ b") == "..###########..")
+  }
+
+  test("the mask agrees with Spark's lexer on 10,000 generated texts") {
+    // fragments that open, close and hide one another; no backslash
+    // (Spark escapes with it, Trino does not) and no `+` (Spark lexes
+    // a top-level `/*+` as a hint, not a comment)
+    val pieces = Vector("/*", "*/", "--", "'", "\"", "`", "\n", "a", " ", "*", "/", "-", "(")
+    val rnd = new scala.util.Random(20261018L)
+    var compared = 0
+    for (_ <- 1 to 10000) {
+      val sql = Seq.fill(1 + rnd.nextInt(14))(pieces(rnd.nextInt(pieces.length))).mkString
+      sparkMask(sql).foreach { spark =>
+        compared += 1
+        val ours = SqlText.mask(sql)
+        // Spark's `--` comment token also holds the line break
+        val differ = sql.indices.filter(i =>
+          sql(i) != '\n' && ours(i) != spark(i))
+        assert(differ.isEmpty, s"[$sql] differs at $differ")
+      }
+    }
+    // most texts lex cleanly (the rest hold an unterminated quote)
+    assert(compared > 5000, compared)
+  }
+
+  /** The characters Spark's own lexer puts in a comment, string or
+    * quoted identifier; None when it reports an error or a character
+    * no token matches. */
+  private def sparkMask(sql: String): Option[Array[Boolean]] = {
+    import org.antlr.v4.runtime._
+    import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+    val lexer = new SqlBaseLexer(CharStreams.fromString(sql))
+    var failed = false
+    lexer.removeErrorListeners()
+    lexer.addErrorListener(new BaseErrorListener {
+      override def syntaxError(r: Recognizer[_, _], o: Any, line: Int,
+          col: Int, msg: String, e: RecognitionException): Unit = failed = true
+    })
+    val masked = Set(SqlBaseLexer.BRACKETED_COMMENT, SqlBaseLexer.SIMPLE_COMMENT,
+      SqlBaseLexer.STRING_LITERAL, SqlBaseLexer.DOUBLEQUOTED_STRING,
+      SqlBaseLexer.BACKQUOTED_IDENTIFIER)
+    val m = new Array[Boolean](sql.length)
+    lexer.getAllTokens.forEach { t =>
+      if (t.getType == SqlBaseLexer.UNRECOGNIZED) failed = true
+      else if (masked(t.getType))
+        java.util.Arrays.fill(m, t.getStartIndex, t.getStopIndex + 1, true)
+    }
+    if (failed) None else Some(m)
   }
 
   test("an unterminated literal, identifier or comment masks to the end") {
@@ -93,6 +147,14 @@ class SqlTextSpec extends AnyFunSuite {
     val out = TrinoFunctions.preprocess(
       "SELECT 1 AS `it's`, json_exists(j, 'strict $.a' FALSE ON ERROR) AS e FROM t")
     assert(out.contains("json_exists(j, 'strict $.a', 'F')"), out)
+  }
+
+  test("pre-pass: a quote inside a nested block comment opens no literal") {
+    // Spark reads `/* a /* b */ it's */` as one comment, so the regex
+    // literal after it is code whose backslash must be doubled
+    val out = TrinoFunctions.preprocess(
+      "SELECT /* a /* b */ it's */ regexp_extract('a1', '\\d') AS d")
+    assert(out.endsWith("regexp_extract('a1', '\\\\d') AS d"), out)
   }
 
   test("MATCH_RECOGNIZE inside backticks is data; a real span after one is found") {

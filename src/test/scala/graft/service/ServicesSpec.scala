@@ -1,10 +1,17 @@
 package graft.service
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.config.EngineConfig
 import graft.engine.Engine
+import graft.mcp.StdioServer
 
 /** End-to-end service behavior over the sf0.001 testdata: the
   * execute_query lifecycle (guard → sql → bounded collect), metadata
@@ -120,6 +127,56 @@ class ServicesSpec extends SparkSpec {
     assert(r == Left("security restriction: only SELECT, SHOW, DESCRIBE, and EXPLAIN " +
       "queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to enable write " +
       "operations (at your own risk)"))
+  }
+
+  // Spark's lexer nests block comments: the text guard reads `' */) … --'`
+  // as a literal, so only the parsed plan shows the write
+  private def nestedCommentWrite(dir: String) =
+    s"WITH q AS (SELECT 1 AS a /* x /* y */ ' */) INSERT OVERWRITE DIRECTORY " +
+      s"'$dir' USING parquet SELECT a FROM q --'"
+
+  private val denied = Left("security restriction: only SELECT, SHOW, DESCRIBE, and EXPLAIN " +
+    "queries are allowed. Set TRINO_ALLOW_WRITE_QUERIES=true to enable write " +
+    "operations (at your own risk)")
+
+  /** `body` with a path under the temp directory that does not exist
+    * yet; whatever is written there is removed afterwards. */
+  private def withFreshDir(body: java.io.File => Unit): Unit = {
+    val d = java.nio.file.Files.createTempDirectory("graft-write-").toFile
+    d.delete()
+    try body(d) finally org.apache.commons.io.FileUtils.deleteDirectory(d)
+  }
+
+  test("execute: a write hidden from the text guard by a nested comment is denied") {
+    withFreshDir { out =>
+      assert(new QueryService(engine()).execute(nestedCommentWrite(out.getPath)) == denied)
+      assert(!out.exists(), s"$out was written")
+    }
+  }
+
+  test("explain: a write hidden from the text guard by a nested comment is denied") {
+    withFreshDir { out =>
+      assert(new ExplainService(engine()).explain(nestedCommentWrite(out.getPath), "LOGICAL") == denied)
+      assert(!out.exists(), s"$out was written")
+    }
+  }
+
+  test("explain and DESCRIBE OUTPUT of an allowed write write nothing") {
+    val e = engine(Map("TRINO_ALLOW_WRITE_QUERIES" -> "true"))
+    withFreshDir { out =>
+      val write = s"INSERT OVERWRITE DIRECTORY '${out.getPath}' USING parquet SELECT 1 AS a"
+      for (format <- Seq("", "LOGICAL", "VALIDATE", "IO")) {
+        val r = new ExplainService(e).explain(write, format)
+        assert(r.isRight, s"$format: $r")
+      }
+      val qs = new QueryService(e)
+      assert(qs.execute(s"PREPARE w FROM $write").isRight)
+      assert(qs.execute("DESCRIBE OUTPUT w").isRight)
+      assert(!out.exists(), s"$out was written")
+      // executed, the same statement writes
+      assert(qs.execute(write).isRight)
+      assert(out.exists())
+    }
   }
 
   test("execute: multi-statement rejected") {
@@ -382,6 +439,136 @@ class ServicesSpec extends SparkSpec {
       assert(ran.swap.exists(_.contains(text)), ran.toString)
       assert(new ExplainService(e).explain(q, "") == ran)
     }
+  }
+
+  // --- catalog reads: the listings and information_schema start no SQL
+  // execution of their own, and list what the SHOW statements list ---
+
+  private def q(ident: String) = s"`${ident.replace("`", "``")}`"
+
+  // The listings as the SHOW statements produce them, with the same
+  // defaults, filtering and graft_src_ exclusion as MetadataService.
+  private def showCatalogs(e: Engine): Seq[String] =
+    e.allowlists.filterCatalogs(
+      spark.sql("SHOW CATALOGS").collect().map(_.getString(0)).toSeq)
+
+  private def showSchemas(e: Engine, c: String): Seq[String] =
+    e.allowlists.filterSchemas(
+      spark.sql(s"SHOW NAMESPACES IN ${q(c)}").collect().map(_.getString(0)).toSeq, c)
+
+  private def showTables(e: Engine, c: String, s: String): Seq[String] = {
+    val default = c.equalsIgnoreCase(e.config.catalog) && s.equalsIgnoreCase(e.config.schema)
+    val names = spark.sql(s"SHOW TABLES IN ${q(c)}.${q(s)}").collect().toSeq
+      .filter(r => !r.getString(1).startsWith("graft_src_") && (!r.getBoolean(2) || default))
+      .map(_.getString(1)).distinct.sorted
+    e.allowlists.filterTables(names, c, s)
+  }
+
+  /** The listing, or the message it fails with. */
+  private def outcome(f: => Seq[String]): Either[String, Seq[String]] =
+    try Right(f) catch { case e: Throwable => Left(e.getMessage) }
+
+  test("listings: equal the SHOW statements' results, allowlists and errors included") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_parity")
+    try {
+      val engines = Seq(
+        engine(),
+        // hides the tpch catalog
+        engine(Map("TRINO_ALLOWED_CATALOGS" -> "spark_catalog")),
+        // hides spark_catalog.default's sibling schema and tpch.tiny
+        engine(Map("TRINO_ALLOWED_SCHEMAS" -> "spark_catalog.default")),
+        engine(Map("TRINO_ALLOWED_TABLES" -> "spark_catalog.default.region,tpch.tiny.nation")))
+      for (e <- engines) {
+        val meta = new MetadataService(e)
+        assert(meta.listCatalogs() == showCatalogs(e))
+        // "nope" and "default" name no catalog: Spark reads them as
+        // namespaces of the current catalog, errors included
+        for (c <- Seq("spark_catalog", "tpch", "SPARK_CATALOG", "nope", "default")) {
+          assert(outcome(meta.listSchemas(c)) == outcome(showSchemas(e, c)), c)
+          for (s <- Seq("default", "tiny", "graft_parity", "missing"))
+            assert(outcome(meta.listTables(c, s)) == outcome(showTables(e, c, s)), s"$c.$s")
+        }
+      }
+      val meta = new MetadataService(engine())
+      assert(meta.listCatalogs().contains("tpch"))
+      assert(meta.listSchemas("spark_catalog").contains("graft_parity"))
+      val views = meta.listTables("spark_catalog", "default")
+      assert(views.contains("customer") && !views.exists(_.startsWith("graft_src_")), views)
+      assert(meta.listTables("tpch", "tiny").contains("nation"))
+      assert(new MetadataService(engine(Map("TRINO_ALLOWED_CATALOGS" -> "spark_catalog")))
+        .listCatalogs() == Seq("spark_catalog"))
+      assert(outcome(meta.listSchemas("nope")).left.exists(_.contains("SCHEMA_NOT_FOUND")))
+    } finally spark.sql("DROP DATABASE IF EXISTS graft_parity")
+  }
+
+  /** SQL executions started while `body` runs on this thread (and the
+    * threads it starts), counted by a job tag. */
+  private def executions(body: => Unit): Int = {
+    val seen = new ConcurrentLinkedQueue[Set[String]]()
+    val listener = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case s: SparkListenerSQLExecutionStart => seen.add(s.jobTags)
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    val tag = s"graft-count-${java.util.UUID.randomUUID()}"
+    val marker = s"$tag-marker"
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+      // events arrive in order: once the marker's is seen, so are all
+      // of body's
+      sc.addJobTag(marker)
+      try spark.range(1).collect() finally sc.removeJobTag(marker)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_(marker)) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.asScala.exists(_(marker)), "listener saw no marker")
+      seen.asScala.count(_(tag))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("listings: the metadata tools start no SQL execution; a repeated information_schema query starts one") {
+    val e = engine()
+    e.spark // registers the data set's views
+    val server = new StdioServer(e)
+    val tools = Seq(
+      "list_catalogs" -> Map.empty[String, Any],
+      "list_schemas" -> Map("catalog" -> "tpch"),
+      "list_tables" -> Map.empty[String, Any],
+      "list_tables" -> Map("catalog" -> "tpch", "schema" -> "tiny"),
+      "get_table_schema" -> Map("table" -> "customer"),
+      "get_table_schema" -> Map("catalog" -> "tpch", "schema" -> "tiny", "table" -> "nation"))
+    for ((name, args) <- tools) {
+      var reply: Either[String, String] = Left("not called")
+      assert(executions { reply = server.callTool(name, args) } == 0, name)
+      assert(reply.isRight, s"$name: $reply")
+    }
+
+    val qs = new QueryService(e)
+    val sql = "SELECT column_name FROM information_schema.columns " +
+      "WHERE table_schema = 'default' AND table_name = 'region' ORDER BY ordinal_position"
+    // the first statements publish the views (the second lists the
+    // shim views the first registered)
+    qs.execute(sql); qs.execute(sql)
+    val before = spark.sessionState.catalog.getRawTempView(InfoSchema.ColumnsView)
+    var rows: Seq[Seq[Any]] = Nil
+    assert(executions { rows = qs.execute(sql).toOption.get.rows } == 1)
+    assert(rows.map(_.head) == Seq("r_regionkey", "r_name"))
+    val after = spark.sessionState.catalog.getRawTempView(InfoSchema.ColumnsView)
+    assert(before.isDefined && after.exists(_ eq before.get), "the view was registered again")
+  }
+
+  test("execute: information_schema follows the catalog: a new view is listed at once") {
+    val qs = new QueryService(engine())
+    val sql = "SELECT table_name FROM information_schema.tables WHERE table_name = 'graft_fresh_view'"
+    assert(qs.execute(sql).toOption.get.rows.isEmpty)
+    spark.range(3).createOrReplaceTempView("graft_fresh_view")
+    try assert(qs.execute(sql).toOption.get.rows == Seq(Seq("graft_fresh_view")))
+    finally spark.catalog.dropTempView("graft_fresh_view")
+    assert(qs.execute(sql).toOption.get.rows.isEmpty)
   }
 
   // --- Json round-trip ---
