@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
 import org.apache.spark.sql.types.{DateType, DayTimeIntervalType, Decimal, DecimalType, DoubleType, IntegerType, LongType, StringType, TimestampType}
 
+import graft.functions.ThetaExprs.SetDigestTheta
+
 /** Trino SQL dialect shims (SURVEY.md §4 custom piece 1): function
   * names and argument orders the reference's promised surface uses that
   * Spark spells differently. Registered per-session in the engine's
@@ -3971,6 +3973,16 @@ object TrinoFunctions {
     case _ => throw new IllegalArgumentException(s"$what must be an integer literal")
   }
 
+  /** Spark's KLL aggregate takes FLOAT/DOUBLE only; Trino's digests
+    * also take integers and decimals. */
+  private def kllAgg(x: Expression): Expression =
+    aggregate.KllSketchAggDouble(Cast(x, DoubleType), Some(Literal(200)))
+
+  /** `read` of sketch `sk`, NULL for an empty sketch (as Trino gives),
+    * where Spark's KLL readers throw. */
+  private def kllRead(sk: Expression, read: Expression): Expression =
+    If(EqualTo(KllSketchGetNDouble(sk), Literal(0L)), Literal(null, read.dataType), read)
+
   /** The engine's own native expressions, exposed to SQL users of
     * execute_query (graft.functions.NativeExprs) — the extension
     * function surface a pipeline author scripts against. */
@@ -4022,32 +4034,38 @@ object TrinoFunctions {
         case args => throw new IllegalArgumentException(
           s"cosine_similarity expects 2 args, got ${args.length}")
       },
-      // Trino quantile-digest surface over the KLL sketches
-      // (functions/KllExprs.scala). qdigest_agg's optional weight /
-      // accuracy args are not supported — KLL fixes accuracy via k.
-      // `merge` here merges KLL sketch binaries (Trino's merge() is
-      // generic over digest types; this engine's stored sketches are
-      // KLL, see DIALECT.md).
+      // Trino quantile-digest surface on Spark's DataSketches KLL
+      // built-ins (k = 200). qdigest_agg's optional weight / accuracy
+      // args are not supported — KLL fixes accuracy via k. tdigest_agg
+      // builds the same sketch (DIALECT.md — the engine's one mergeable
+      // quantile sketch answers both Trino digest surfaces), and `merge`
+      // merges these sketches (Trino's merge() is generic over digest
+      // types; this engine's stored sketches are KLL).
       "qdigest_agg" -> {
-        case Seq(x) => graft.functions.KllExprs.KllSketchAgg(x, 200)
+        case Seq(x) => kllAgg(x)
         case args => throw new IllegalArgumentException(
           s"qdigest_agg expects 1 arg (weights/accuracy unsupported), got ${args.length}")
       },
-      // tdigest_agg: same KLL store as qdigest_agg (DIALECT.md — the
-      // engine's one mergeable quantile sketch answers both Trino
-      // digest surfaces; value_at_quantile & co. read either)
       "tdigest_agg" -> {
-        case Seq(x) => graft.functions.KllExprs.KllSketchAgg(x, 200)
+        case Seq(x) => kllAgg(x)
         case args => throw new IllegalArgumentException(
           s"tdigest_agg expects 1 arg (weights unsupported), got ${args.length}")
       },
       "values_at_quantiles" -> {
-        case Seq(sk, qs) => graft.functions.KllExprs.KllQuantiles(sk, qs)
+        case Seq(sk, qs) => kllRead(sk, KllSketchGetQuantileDouble(sk, qs))
         case args => throw new IllegalArgumentException(
           s"values_at_quantiles expects (qdigest, array<double>), got ${args.length} args")
       },
+      // Spark's rank is 0.0 / 1.0 outside the sketch's [min, max]; Trino's
+      // is NULL there
       "quantile_at_value" -> {
-        case Seq(sk, v) => graft.functions.KllExprs.KllRank(sk, v)
+        case Seq(sk, v) =>
+          val x = Cast(v, DoubleType)
+          kllRead(sk, If(
+            Or(LessThan(x, KllSketchGetQuantileDouble(sk, Literal(0.0))),
+              GreaterThan(x, KllSketchGetQuantileDouble(sk, Literal(1.0)))),
+            Literal(null, DoubleType),
+            KllSketchGetRankDouble(sk, x)))
         case args => throw new IllegalArgumentException(
           s"quantile_at_value expects (qdigest, value), got ${args.length} args")
       },
@@ -4063,19 +4081,20 @@ object TrinoFunctions {
           s"numeric_histogram expects (buckets, value[, weight]), got ${args.length} args")
       },
       "merge" -> {
-        case Seq(sk) => graft.functions.KllExprs.KllUnionAgg(sk, 200)
+        case Seq(sk) => aggregate.KllMergeAggDouble(sk, Some(Literal(200)))
         case args => throw new IllegalArgumentException(
           s"merge expects 1 arg, got ${args.length}")
       },
       "value_at_quantile" -> {
-        case Seq(sk, q) => graft.functions.KllExprs.KllQuantile(sk, q)
+        case Seq(sk, q) => kllRead(sk, KllSketchGetQuantileDouble(sk, q))
         case args => throw new IllegalArgumentException(
           s"value_at_quantile expects (qdigest, quantile), got ${args.length} args")
       },
-      // Trino setdigest surface (functions/ThetaExprs.scala): a
-      // composite carrier — theta sketch (estimates + set algebra) plus
-      // the bounded hash→count map that serves hash_counts (r15; the
-      // theta part alone tracks no counts).
+      // Trino setdigest surface: a composite carrier
+      // (functions/ThetaExprs.scala) — theta sketch plus the bounded
+      // hash→count map that serves hash_counts (the theta part alone
+      // tracks no counts). Estimates and set algebra run on Spark's
+      // theta built-ins over the theta part.
       "make_set_digest" -> {
         case Seq(x) => graft.functions.ThetaExprs.SetDigestAgg(x)
         case args => throw new IllegalArgumentException(
@@ -4092,14 +4111,19 @@ object TrinoFunctions {
           s"hash_counts expects 1 arg, got ${args.length}")
       },
       "intersection_cardinality" -> {
-        case Seq(a, b) => Cast(Round(
-          graft.functions.ThetaExprs.ThetaIntersectEstimate(a, b),
-          Literal(0)), LongType)
+        case Seq(a, b) => ThetaSketchEstimate(ThetaIntersection(SetDigestTheta(a), SetDigestTheta(b)))
         case args => throw new IllegalArgumentException(
           s"intersection_cardinality expects 2 args, got ${args.length}")
       },
+      // |A ∩ B| / |A ∪ B| of the (rounded) estimates; two empty sets have
+      // Jaccard 1.0 (identical), matching the limit convention
       "jaccard_index" -> {
-        case Seq(a, b) => graft.functions.ThetaExprs.ThetaJaccard(a, b)
+        case Seq(a, b) =>
+          val (ta, tb) = (SetDigestTheta(a), SetDigestTheta(b))
+          val union = ThetaSketchEstimate(new ThetaUnion(ta, tb))
+          If(EqualTo(union, Literal(0L)), Literal(1.0),
+            Divide(Cast(ThetaSketchEstimate(ThetaIntersection(ta, tb)), DoubleType),
+              Cast(union, DoubleType)))
         case args => throw new IllegalArgumentException(
           s"jaccard_index expects 2 args, got ${args.length}")
       })

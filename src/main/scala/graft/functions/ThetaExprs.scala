@@ -1,25 +1,23 @@
 package graft.functions
 
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{SetOperation, Sketches, Union}
+import org.apache.datasketches.theta.{SetOperation, Union}
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.graft.{ColumnBridge, DeclaredInputTypes}
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.graft.DeclaredInputTypes
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
-/** Theta sketches (DataSketches): mergeable distinct-count sketches
-  * that ALSO support set algebra — intersection and difference
-  * cardinalities HLL cannot answer — matching the reference engine's
-  * setdigest surface (Trino: approx_set / merge_set_digest /
-  * intersection_cardinality). "Distinct users in A ∩ B" across
-  * pre-sketched partitions is the canonical audience-overlap query at
-  * 100 TB: sketch once per partition/day, answer any overlap later from
-  * the stored KBs.
+/** The set_digest carrier behind Trino's setdigest surface
+  * (make_set_digest / merge_set_digest / hash_counts): a theta sketch
+  * (DataSketches) plus the per-hash counts that Spark's own theta
+  * sketches do not track. Estimates and set algebra over these blobs
+  * (intersection_cardinality, jaccard_index) run on Spark's built-in
+  * `theta_*` expressions, which read the theta part through
+  * [[SetDigestTheta]].
   *
   * A theta sketch retains the k smallest value hashes under a fixed
   * seed, so sketches, unions and intersections are DETERMINISTIC and
@@ -30,9 +28,6 @@ object ThetaExprs {
 
   private def newUnion(): Union = SetOperation.builder().buildUnion()
 
-  private def wrap(bytes: Array[Byte]) =
-    Sketches.wrapSketch(Memory.wrap(thetaPart(bytes)))
-
   // ---- the set_digest carrier -------------------------------------
   // Trino's SetDigest is an HLL plus a minhash whose K smallest hashes
   // carry per-hash COUNTS (served by hash_counts). The theta sketch
@@ -40,7 +35,7 @@ object ThetaExprs {
   // make_set_digest emits a COMPOSITE blob — [magic "GSD1"][int theta
   // length][theta bytes][int n][n × (long hash, int count)] — and every
   // theta-side consumer unwraps via [[thetaPart]]. A raw theta blob
-  // (the theta_* library functions, or digests persisted before this
+  // (Spark's theta_sketch_agg, or digests persisted before this
   // carrier) still works everywhere counts aren't needed: the magic
   // byte 0x47 is not a valid DataSketches preamble-longs value, so the
   // two formats cannot be confused.
@@ -122,15 +117,12 @@ object ThetaExprs {
 
   private def sdDeserialize(bytes: Array[Byte]): SdBuf = {
     val u = newUnion()
+    val theta = thetaPart(bytes)
+    u.union(Memory.wrap(theta))
     val m = scala.collection.mutable.HashMap.empty[Long, Int]
-    if (!isComposite(bytes)) u.union(Memory.wrap(bytes))
-    else {
+    if (isComposite(bytes)) {
       val bb = java.nio.ByteBuffer.wrap(bytes)
-      bb.position(4)
-      val len = bb.getInt
-      val theta = new Array[Byte](len)
-      bb.get(theta)
-      u.union(Memory.wrap(theta))
+      bb.position(8 + theta.length)
       var n = bb.getInt
       while (n > 0) { sdAdd(m, bb.getLong, bb.getInt); n -= 1 }
     }
@@ -240,119 +232,19 @@ object ThetaExprs {
       copy(child = newChild)
   }
 
-  /** `theta_sketch_agg(x)`: theta sketch of a LONG column → binary
-    * compact sketch. */
-  case class ThetaSketchAgg(child: Expression,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends TypedImperativeAggregate[Union] with UnaryLike[Expression]
-      with DeclaredInputTypes {
-    override def prettyName: String = "theta_sketch_agg"
-    override def dataType: DataType = BinaryType
-    override def declaredInputTypes: Seq[DataType] = Seq(LongType)
-    override def nullable: Boolean = false
-
-    override def createAggregationBuffer(): Union = newUnion()
-
-    override def update(buf: Union, input: InternalRow): Union = {
-      val v = child.eval(input)
-      if (v != null) buf.update(v.asInstanceOf[Long])
-      buf
-    }
-
-    override def merge(buf: Union, other: Union): Union = {
-      buf.union(other.getResult)
-      buf
-    }
-
-    override def eval(buf: Union): Any = buf.getResult.toByteArray
-
-    override def serialize(buf: Union): Array[Byte] = buf.getResult.toByteArray
-    override def deserialize(bytes: Array[Byte]): Union = {
-      val u = newUnion()
-      u.union(Memory.wrap(bytes))
-      u
-    }
-
-    override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-      copy(mutableAggBufferOffset = newOffset)
-    override def withNewInputAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-      copy(inputAggBufferOffset = newOffset)
-    override protected def withNewChildInternal(newChild: Expression): ThetaSketchAgg =
-      copy(child = newChild)
-  }
-
-  /** `theta_estimate(sk)`: distinct-count estimate of a binary sketch.
-    * Runs once per output row (CodegenFallback is fine off the hot
-    * path). */
-  case class ThetaEstimate(child: Expression)
+  /** The theta sketch inside a set_digest blob (identity on a raw
+    * theta blob), for Spark's `theta_*` expressions, which read theta
+    * sketches only. */
+  case class SetDigestTheta(child: Expression)
       extends UnaryExpression with DeclaredInputTypes with CodegenFallback {
-    override def dataType: DataType = DoubleType
+    override def dataType: DataType = BinaryType
     override def declaredInputTypes: Seq[DataType] = Seq(BinaryType)
-    override def prettyName: String = "theta_estimate"
+    override def prettyName: String = "set_digest_theta"
 
     protected override def nullSafeEval(sk: Any): Any =
-      wrap(sk.asInstanceOf[Array[Byte]]).getEstimate
+      thetaPart(sk.asInstanceOf[Array[Byte]])
 
-    override protected def withNewChildInternal(newChild: Expression): ThetaEstimate =
+    override protected def withNewChildInternal(newChild: Expression): SetDigestTheta =
       copy(child = newChild)
   }
-
-  /** `theta_intersect_estimate(a, b)`: estimated |A ∩ B| from two
-    * binary sketches — the set-algebra step HLL lacks. */
-  case class ThetaIntersectEstimate(left: Expression, right: Expression)
-      extends BinaryExpression with DeclaredInputTypes with CodegenFallback {
-    override def dataType: DataType = DoubleType
-    override def declaredInputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-    override def prettyName: String = "theta_intersect_estimate"
-
-    protected override def nullSafeEval(a: Any, b: Any): Any = {
-      val i = SetOperation.builder().buildIntersection()
-      i.intersect(wrap(a.asInstanceOf[Array[Byte]]))
-      i.intersect(wrap(b.asInstanceOf[Array[Byte]]))
-      i.getResult.getEstimate
-    }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): ThetaIntersectEstimate =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** `theta_jaccard(a, b)`: estimated |A ∩ B| / |A ∪ B| from two binary
-    * sketches — Trino's setdigest `jaccard_index`. Two empty sets have
-    * Jaccard 1.0 (identical), matching the limit convention. */
-  case class ThetaJaccard(left: Expression, right: Expression)
-      extends BinaryExpression with DeclaredInputTypes with CodegenFallback {
-    override def dataType: DataType = DoubleType
-    override def declaredInputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-    override def prettyName: String = "theta_jaccard"
-
-    protected override def nullSafeEval(a: Any, b: Any): Any = {
-      val sa = wrap(a.asInstanceOf[Array[Byte]])
-      val sb = wrap(b.asInstanceOf[Array[Byte]])
-      val u = newUnion()
-      u.union(sa); u.union(sb)
-      val union = u.getResult.getEstimate
-      if (union == 0.0) 1.0
-      else {
-        val i = SetOperation.builder().buildIntersection()
-        i.intersect(sa); i.intersect(sb)
-        i.getResult.getEstimate / union
-      }
-    }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): ThetaJaccard =
-      copy(left = newLeft, right = newRight)
-  }
-
-  def thetaSketchAgg(x: Column): Column =
-    ColumnBridge.column(
-      ThetaSketchAgg(ColumnBridge.expression(x)).toAggregateExpression())
-
-  def thetaEstimate(sk: Column): Column =
-    ColumnBridge.column(ThetaEstimate(ColumnBridge.expression(sk)))
-
-  def thetaIntersectEstimate(a: Column, b: Column): Column =
-    ColumnBridge.column(ThetaIntersectEstimate(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

@@ -417,42 +417,39 @@ object Relational {
     // exact. Runs as SQL TEXT through the engine = its own oracle.
     "agg_corr_regr" -> ((s, d) => graft.engine.Tables.sql(s, d, corrRegrSql)),
 
-    // Mergeable KLL quantile sketches (functions/KllExprs.scala): build
-    // per-group, persistable binary sketches, merge them, query the
-    // merged quantile — the reference's qdigest_agg surface. KLL
+    // Mergeable KLL quantile sketches (Spark's DataSketches built-ins):
+    // build per-group, persistable binary sketches, merge them, query
+    // the merged quantile — the reference's qdigest_agg surface. KLL
     // compaction is randomized (within guaranteed rank error), so like
     // the other sketch rows this is bounds-pinned in ApproxSpec, not
     // oracle-hashed.
     "agg_kll_mergeable" -> ((s, d) => {
       val perGroup = t(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
-        .agg(graft.functions.KllExprs.kllSketchAgg(col("l_extendedprice")).as("sk"))
+        .agg(kll_sketch_agg_double(col("l_extendedprice"), 200).as("sk"))
       perGroup.agg(
-        graft.functions.KllExprs
-          .kllQuantile(graft.functions.KllExprs.kllUnionAgg(col("sk")), lit(0.5))
+        kll_sketch_get_quantile_double(kll_merge_agg_double(col("sk"), 200), lit(0.5))
           .as("est_p50"))
     }),
 
-    // Theta sketches (functions/ThetaExprs.scala): mergeable distinct
-    // counts WITH set algebra — the audience-overlap query ("distinct
-    // parts shipped under BOTH flags") answered from per-group
-    // sketches, never rescanning rows. Deterministic (fixed-seed KMV)
-    // but not DuckDB-reproducible → rows-only; estimate-vs-exact pinned
-    // in ApproxSpec.
+    // Theta sketches (Spark's DataSketches built-ins): mergeable
+    // distinct counts WITH set algebra — the audience-overlap query
+    // ("distinct parts shipped under BOTH flags") answered from
+    // per-group sketches, never rescanning rows. Deterministic
+    // (fixed-seed KMV) but not DuckDB-reproducible → rows-only;
+    // estimate-vs-exact pinned in ApproxSpec.
     "agg_theta_intersect" -> ((s, d) => {
-      import graft.functions.ThetaExprs._
       val li = t(s, d, "lineitem")
       val sk = li.filter(col("l_returnflag").isin("A", "R"))
         .groupBy(col("l_returnflag"))
-        .agg(thetaSketchAgg(col("l_partkey")).as("sk"))
+        .agg(theta_sketch_agg(col("l_partkey")).as("sk"))
       val wide = sk.agg(
         first(when(col("l_returnflag") === "A", col("sk")), ignoreNulls = true).as("sk_a"),
         first(when(col("l_returnflag") === "R", col("sk")), ignoreNulls = true).as("sk_r"))
       wide.select(
-        round(thetaEstimate(col("sk_a"))).cast("long").as("est_a"),
-        round(thetaEstimate(col("sk_r"))).cast("long").as("est_r"),
-        round(thetaIntersectEstimate(col("sk_a"), col("sk_r")))
-          .cast("long").as("est_both"))
+        theta_sketch_estimate(col("sk_a")).as("est_a"),
+        theta_sketch_estimate(col("sk_r")).as("est_r"),
+        theta_sketch_estimate(theta_intersection(col("sk_a"), col("sk_r"))).as("est_both"))
     }),
 
     // Frequent-items sketch via Spark 4's native approx_top_k

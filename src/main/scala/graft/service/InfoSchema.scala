@@ -1,7 +1,5 @@
 package graft.service
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.AliasIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
@@ -17,7 +15,7 @@ import graft.engine.Engine
   * natively). Spark's session catalog has no such schema, so the
   * statement pipeline ([[Statements]]) renames those relations in the
   * parsed plan to four session temp views over driver-side rows
-  * (`LocalRelation`s) listed from the catalogs at query time,
+  * (one-partition RDDs) listed from the catalogs at query time,
   * allowlist-filtered exactly like the metadata tools.
   *
   * The listings are catalog reads (bounded by table count, never by
@@ -83,7 +81,11 @@ object InfoSchema {
       rows.foreach { case (view, (schema, viewRows)) =>
         if (last.get(view) != viewRows ||
             spark.sessionState.catalog.getRawTempView(view).isEmpty) {
-          spark.createDataFrame(viewRows.asJava, schema).createOrReplaceTempView(view)
+          // one partition whose row count the optimizer cannot read:
+          // over a LocalRelation it drops the row cap's limit, and an
+          // ORDER BY then plans a range exchange (3 jobs, not 1)
+          spark.createDataFrame(spark.sparkContext.parallelize(viewRows, 1), schema)
+            .createOrReplaceTempView(view)
           last.put(view, viewRows)
         }
       }

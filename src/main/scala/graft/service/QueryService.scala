@@ -255,7 +255,9 @@ class QueryService(engine: Engine) {
       case Right(ExplainStatements.Plain(q)) =>
         return explainToResult(q, "")
     }
-    Statements.build(engine, stripped).flatMap(collectBounded)
+    // planned inside the runner: an eager command (an allowed write)
+    // runs under the query's job group and deadline too
+    bounded(Statements.build(engine, stripped))
   }
 
   /** ExplainService output (rows of single-key maps) → QueryResult. */
@@ -267,17 +269,23 @@ class QueryService(engine: Engine) {
     }
 
   /** Run an already-built DataFrame through the same timeout/cap path. */
-  def collectBounded(df: DataFrame): Either[String, QueryResult] = {
+  def collectBounded(df: DataFrame): Either[String, QueryResult] = bounded(Right(df))
+
+  /** Build `built` and take at most the row cap of it, both in one job
+    * group under the query deadline. */
+  private def bounded(built: => Either[String, DataFrame]): Either[String, QueryResult] = {
     val cap = engine.sessionMaxResultRows
     val group = s"graft-query-${UUID.randomUUID()}"
     val start = System.nanoTime()
     withTimeoutAndCancel(group) {
-      val taken = df.take(cap + 1)
-      val truncated = taken.length > cap
-      val rows = taken.take(cap).toSeq.map(_.toSeq)
-      QueryResult(df.schema.fieldNames.toSeq, rows, truncated,
-        queryId = group, wallMillis = (System.nanoTime() - start) / 1000000L)
-    }
+      built.map { df =>
+        val taken = df.take(cap + 1)
+        val truncated = taken.length > cap
+        val rows = taken.take(cap).toSeq.map(_.toSeq)
+        QueryResult(df.schema.fieldNames.toSeq, rows, truncated,
+          queryId = group, wallMillis = (System.nanoTime() - start) / 1000000L)
+      }
+    }.flatten
   }
 
   /** Deadline enforcement with job-group cancel (client.go:525 moved to

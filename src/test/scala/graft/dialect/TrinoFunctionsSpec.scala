@@ -1156,6 +1156,33 @@ class TrinoFunctionsSpec extends SparkSpec {
       "FROM (VALUES 1, 2, 3) AS t(x)") == 1.0)
   }
 
+  test("digest blobs from graft's earlier sketch aggregates read as they did then") {
+    // digest_blobs.tsv: hex blobs, then each read and the value it gave
+    // when the blobs were written
+    val (blobs, reads) = scala.io.Source.fromResource("digest_blobs.tsv").getLines()
+      .filterNot(_.startsWith("#")).map(_.split("\t", 2)).map(a => (a(0), a(1))).toSeq
+      .partition { case (name, _) => !name.contains("(") }
+    spark.sql("SELECT " + blobs.map { case (name, hex) => s"unhex('$hex') AS $name" }
+      .mkString(", ")).createOrReplaceTempView("digest_fixture")
+    assert(reads.nonEmpty)
+    for ((read, want) <- reads)
+      assert(String.valueOf(one(s"SELECT CAST($read AS STRING) FROM digest_fixture")) == want,
+        read)
+  }
+
+  test("empty digests: quantile reads are NULL, set-digest estimates 0 and 1.0; BIGINT and DECIMAL inputs are cast") {
+    val empty = "(SELECT qdigest_agg(x) AS sk FROM range(0) AS t(x))"
+    assert(one(s"SELECT value_at_quantile(sk, 0.5) FROM $empty") == null)
+    assert(one(s"SELECT values_at_quantiles(sk, array(0.5)) FROM $empty") == null)
+    assert(one(s"SELECT quantile_at_value(sk, 1.0) FROM $empty") == null)
+    val emptySet = "(SELECT make_set_digest(x) AS sd FROM range(0) AS t(x))"
+    assert(one(s"SELECT intersection_cardinality(sd, sd) FROM $emptySet") == 0L)
+    assert(one(s"SELECT jaccard_index(sd, sd) FROM $emptySet") == 1.0)
+    assert(one("SELECT value_at_quantile(qdigest_agg(x), 0.0) FROM range(7, 9) AS t(x)") == 7.0)
+    assert(one("SELECT value_at_quantile(tdigest_agg(CAST(x AS DECIMAL(5, 2))), 1.0) " +
+      "FROM range(7, 9) AS t(x)") == 8.0)
+  }
+
   test("repeat builds an n-element array on the guarded surface (Trino semantics)") {
     assert(one("SELECT repeat('x', 3)").asInstanceOf[scala.collection.Seq[String]]
       .toSeq == Seq("x", "x", "x"))

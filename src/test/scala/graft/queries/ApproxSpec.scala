@@ -68,12 +68,11 @@ class ApproxSpec extends SparkSpec {
   }
 
   test("merged KLL sketches land within rank-error bounds of the exact median") {
-    import graft.functions.KllExprs
     val li = Tables.load(spark, dir, "lineitem")
     // per-group sketches → union → quantile (the agg_kll_mergeable path)
     val merged = li.groupBy(col("l_returnflag"))
-      .agg(KllExprs.kllSketchAgg(col("l_extendedprice")).as("sk"))
-      .agg(KllExprs.kllQuantile(KllExprs.kllUnionAgg(col("sk")), lit(0.5)).as("q"))
+      .agg(kll_sketch_agg_double(col("l_extendedprice"), 200).as("sk"))
+      .agg(kll_sketch_get_quantile_double(kll_merge_agg_double(col("sk"), 200), lit(0.5)).as("q"))
       .collect().head.getDouble(0)
     // KLL guarantees RANK error (~1.65% at k=200, ~2.2% merged): the
     // estimate's true rank must be within eps of 0.5 — assert via the
@@ -86,18 +85,17 @@ class ApproxSpec extends SparkSpec {
   }
 
   test("KLL sketch column round-trips through parquet and still merges") {
-    import graft.functions.KllExprs
     val li = Tables.load(spark, dir, "lineitem")
     val tmp = java.nio.file.Files.createTempDirectory("graft-kll").toFile
     tmp.deleteOnExit()
     val path = s"${tmp.getAbsolutePath}/sketches"
     // store per-group sketches (the build-once artifact)...
     li.groupBy(col("l_returnflag"))
-      .agg(KllExprs.kllSketchAgg(col("l_extendedprice")).as("sk"))
+      .agg(kll_sketch_agg_double(col("l_extendedprice"), 200).as("sk"))
       .write.mode("overwrite").parquet(path)
     // ...and answer a quantile later purely from the stored sketches
     val q = spark.read.parquet(path)
-      .agg(KllExprs.kllQuantile(KllExprs.kllUnionAgg(col("sk")), lit(0.9)).as("q"))
+      .agg(kll_sketch_get_quantile_double(kll_merge_agg_double(col("sk"), 200), lit(0.9)).as("q"))
       .collect().head.getDouble(0)
     val total = li.count().toDouble
     val rank = li.filter(col("l_extendedprice") <= q).count().toDouble / total
@@ -106,18 +104,17 @@ class ApproxSpec extends SparkSpec {
   }
 
   test("theta intersection estimate tracks the exact overlap (and is run-to-run stable)") {
-    import graft.functions.ThetaExprs._
     val li = Tables.load(spark, dir, "lineitem")
     def runOnce(): (Long, Long, Long) = {
       val sk = li.filter(col("l_returnflag").isin("A", "R"))
         .groupBy(col("l_returnflag"))
-        .agg(thetaSketchAgg(col("l_partkey")).as("sk"))
+        .agg(theta_sketch_agg(col("l_partkey")).as("sk"))
       val r = sk.agg(
         first(when(col("l_returnflag") === "A", col("sk")), ignoreNulls = true).as("a"),
         first(when(col("l_returnflag") === "R", col("sk")), ignoreNulls = true).as("r"))
-        .select(round(thetaEstimate(col("a"))).cast("long"),
-          round(thetaEstimate(col("r"))).cast("long"),
-          round(thetaIntersectEstimate(col("a"), col("r"))).cast("long"))
+        .select(theta_sketch_estimate(col("a")),
+          theta_sketch_estimate(col("r")),
+          theta_sketch_estimate(theta_intersection(col("a"), col("r"))))
         .collect().head
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -501,13 +501,16 @@ class ServicesSpec extends SparkSpec {
     } finally spark.sql("DROP DATABASE IF EXISTS graft_parity")
   }
 
-  /** SQL executions started while `body` runs on this thread (and the
-    * threads it starts), counted by a job tag. */
-  private def executions(body: => Unit): Int = {
-    val seen = new ConcurrentLinkedQueue[Set[String]]()
+  /** The SQL-execution and job starts of the work `body` does on this
+    * thread (and the threads it starts), found by a job tag. */
+  private def started(body: => Unit): Seq[SparkListenerEvent] = {
+    val seen = new ConcurrentLinkedQueue[(SparkListenerEvent, Set[String])]()
     val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add((j, Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet)))
       override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case s: SparkListenerSQLExecutionStart => seen.add(s.jobTags)
+        case s: SparkListenerSQLExecutionStart => seen.add((s, s.jobTags))
         case _ => ()
       }
     }
@@ -523,12 +526,15 @@ class ServicesSpec extends SparkSpec {
       sc.addJobTag(marker)
       try spark.range(1).collect() finally sc.removeJobTag(marker)
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_(marker)) && System.nanoTime() < deadline)
+      while (!seen.asScala.exists(_._2(marker)) && System.nanoTime() < deadline)
         Thread.sleep(10)
-      assert(seen.asScala.exists(_(marker)), "listener saw no marker")
-      seen.asScala.count(_(tag))
+      assert(seen.asScala.exists(_._2(marker)), "listener saw no marker")
+      seen.asScala.collect { case (e, tags) if tags(tag) => e }.toSeq
     } finally sc.removeSparkListener(listener)
   }
+
+  private def executions(body: => Unit): Int =
+    started(body).count(_.isInstanceOf[SparkListenerSQLExecutionStart])
 
   test("listings: the metadata tools start no SQL execution; a repeated information_schema query starts one") {
     val e = engine()
@@ -559,6 +565,33 @@ class ServicesSpec extends SparkSpec {
     assert(rows.map(_.head) == Seq("r_regionkey", "r_name"))
     val after = spark.sessionState.catalog.getRawTempView(InfoSchema.ColumnsView)
     assert(before.isDefined && after.exists(_ eq before.get), "the view was registered again")
+  }
+
+  test("execute: an ORDER BY over information_schema runs one job") {
+    val qs = new QueryService(engine())
+    val sql = "SELECT column_name, data_type FROM information_schema.columns " +
+      "WHERE table_name = 'orders' ORDER BY ordinal_position"
+    qs.execute(sql)
+    var rows: Seq[Seq[Any]] = Nil
+    val jobs = started { rows = qs.execute(sql).toOption.get.rows }
+      .count(_.isInstanceOf[SparkListenerJobStart])
+    assert(jobs == 1)
+    assert(rows.headOption.exists(_.head == "o_orderkey"), rows)
+  }
+
+  test("execute: an allowed write runs under the query's job group") {
+    val qs = new QueryService(engine(Map("TRINO_ALLOW_WRITE_QUERIES" -> "true")))
+    withFreshDir { out =>
+      val groups = started {
+        assert(qs.execute(
+          s"INSERT OVERWRITE DIRECTORY '${out.getPath}' USING parquet SELECT 1 AS a").isRight)
+      }.collect { case j: SparkListenerJobStart =>
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+      }
+      assert(out.exists())
+      assert(groups.nonEmpty && groups.forall(g => g != null && g.startsWith("graft-query-")),
+        groups)
+    }
   }
 
   test("execute: information_schema follows the catalog: a new view is listed at once") {
