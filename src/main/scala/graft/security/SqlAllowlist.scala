@@ -1,9 +1,9 @@
 package graft.security
 
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.analysis.{PlanWithUnresolvedIdentifier, UnresolvedNamespace, UnresolvedRelation, UnresolvedTableOrView}
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
-import org.apache.spark.sql.execution.command.ExplainCommand
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ShowTablesExtended, ShowViews, UnresolvedWith}
+import org.apache.spark.sql.execution.command.{DescribeQueryCommand, ExplainCommand}
 
 /** OPT-IN allowlist enforcement inside arbitrary SQL — hardening BEYOND
   * the reference, which gates only the metadata tools (listings +
@@ -24,9 +24,25 @@ import org.apache.spark.sql.execution.command.ExplainCommand
   * WITH does not exempt uses at the outer level where it would resolve
   * to a real table. `information_schema` references are exempt: the
   * shim views are rebuilt allowlist-filtered on every query.
-  * `EXPLAIN <q>` walks the explained query.
+  * `EXPLAIN <q>` and `DESCRIBE QUERY <q>` walk their query. The
+  * namespace-wide listings Spark serves itself (`SHOW TABLE EXTENDED`,
+  * which prints each matching table's schema, and `SHOW VIEWS`) are
+  * judged as the table their pattern names in that namespace (`*`
+  * without one), so a table allowlist admits only an exact allowed
+  * name. The SHOW SCHEMAS / SHOW TABLES routes are not judged: they
+  * answer from the allowlist-filtered listings, as the metadata tools do.
   */
 object SqlAllowlist {
+
+  /** (catalog, schema, table) a parsed 1/2/3-part name denotes: the
+    * reading every check here judges, and the one the SHOW/DESCRIBE
+    * routes read, so what is judged is what is served. */
+  def qualified(parts: Seq[String], defaultCatalog: String,
+      defaultSchema: String): (String, String, String) = parts match {
+    case Seq(t) => (defaultCatalog, defaultSchema, t)
+    case Seq(s, t) => (defaultCatalog, s, t)
+    case _ => (parts(0), parts(1), parts.drop(2).mkString("."))
+  }
 
   /** First allowlist violation in the plan, or None when clean. */
   def check(plan: LogicalPlan, lists: Allowlists,
@@ -37,11 +53,7 @@ object SqlAllowlist {
       if (parts.length == 1 && scope(lower.head)) None
       else if (lower.contains("information_schema")) None
       else {
-        val (c, s, t) = parts match {
-          case Seq(t1) => (defaultCatalog, defaultSchema, t1)
-          case Seq(s1, t1) => (defaultCatalog, s1, t1)
-          case _ => (parts(0), parts(1), parts.drop(2).mkString("."))
-        }
+        val (c, s, t) = qualified(parts, defaultCatalog, defaultSchema)
         if (lists.allowedCatalogs.nonEmpty && !lists.isCatalogAllowed(c))
           Some(s"catalog access denied: $c not in allowlist")
         else if (lists.allowedSchemas.nonEmpty && !lists.isSchemaAllowed(c, s))
@@ -56,6 +68,14 @@ object SqlAllowlist {
     def walk(p: LogicalPlan, scope: Set[String]): Option[String] = p match {
       // EXPLAIN wraps its query as a non-child field — surface it.
       case e: ExplainCommand => walk(e.logicalPlan, scope)
+      case d: DescribeQueryCommand => walk(d.plan, scope)
+      // the statement pipeline reads constant IDENTIFIER(...) names
+      // before this gate; any other is not known until analysis
+      case i: PlanWithUnresolvedIdentifier =>
+        Some(s"table access denied: ${i.identifierExpr.sql} is not a constant name")
+      case ShowTablesExtended(ns, pattern, _) => checkName(namespace(ns) :+ pattern, scope)
+      case ShowViews(ns, pattern, _) =>
+        checkName(namespace(ns) :+ pattern.getOrElse("*"), scope)
       case w: UnresolvedWith =>
         // Bodies are walked with the scope accumulated left-to-right
         // (SQL lets a CTE reference the ones defined before it; adding
@@ -79,5 +99,12 @@ object SqlAllowlist {
     }
 
     walk(plan, Set.empty)
+  }
+
+  /** The parts of a parsed namespace; empty for the session's own
+    * (`CurrentNamespace`). */
+  def namespace(ns: LogicalPlan): Seq[String] = ns match {
+    case UnresolvedNamespace(parts, _) => parts
+    case _ => Nil
   }
 }

@@ -67,7 +67,8 @@ class MetadataService(engine: Engine) {
     * (client.go:729-769; shape of reference docs/tools.md:113-157). */
   def getTableSchema(catalog: String, schema: String, table: String):
       Either[String, Seq[Map[String, Any]]] = {
-    val (c, s, t) = MetadataService.resolve(engine, table, catalog, schema)
+    val (c, s, t) = Allowlists.resolveTable(catalog, schema, table,
+      engine.sessionCatalog, engine.sessionSchema)
     engine.allowlists.tableAccessError(c, s, t) match {
       case Some(err) => Left(err)
       case None =>
@@ -90,14 +91,6 @@ class MetadataService(engine: Engine) {
 object MetadataService {
 
   private[service] def quote(ident: String): String = s"`${ident.replace("`", "``")}`"
-
-  /** (catalog, schema, table) a 1/2/3-part Trino table name denotes in
-    * this session: missing parts come from `catalog`/`schema` when
-    * given, else from the session namespace (USE). */
-  def resolve(engine: Engine, name: String, catalog: String = "",
-      schema: String = ""): (String, String, String) =
-    Allowlists.resolveTable(catalog, schema, name,
-      engine.sessionCatalog, engine.sessionSchema)
 
   /** The relation catalog.schema.table: the configured default
     * namespace's tables are session views, read by their bare name;

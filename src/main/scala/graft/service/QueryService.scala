@@ -70,13 +70,11 @@ class QueryService(engine: Engine) {
         if (PreparedStatements.matchStatement(sql).isDefined)
           return Left(s"invalid statement for PREPARE: $sql")
         engine.preparedStatements(name) = sql
-        return collectBounded(ShowMeta.oneCol(engine.spark, "Result",
-          Seq(org.apache.spark.sql.Row("PREPARE"))))
+        return done("PREPARE")
       case Right(PreparedStatements.Deallocate(name)) =>
         if (engine.preparedStatements.remove(name).isEmpty)
           return Left(s"Prepared statement not found: $name")
-        return collectBounded(ShowMeta.oneCol(engine.spark, "Result",
-          Seq(org.apache.spark.sql.Row("DEALLOCATE"))))
+        return done("DEALLOCATE")
       case Right(PreparedStatements.Execute(name, args)) =>
         val sql = engine.preparedStatements.getOrElse(name,
           return Left(s"Prepared statement not found: $name"))
@@ -89,16 +87,8 @@ class QueryService(engine: Engine) {
           return Left(s"Prepared statement not found: $name"))
         // parameter types are not inferred (Trino reports "unknown" for
         // untyped positions; every position is untyped here)
-        val rows = (1 to PreparedStatements.paramCount(sql))
-          .map(i => org.apache.spark.sql.Row(i, "unknown"))
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("Position",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("Type",
-            org.apache.spark.sql.types.StringType)))
-        return collectBounded(engine.spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema))
+        return answer(Seq("Position", "Type"),
+          (1 to PreparedStatements.paramCount(sql)).map(i => Seq(i, "unknown")))
       case Right(PreparedStatements.DescribeOutput(name)) =>
         val sql = engine.preparedStatements.getOrElse(name,
           return Left(s"Prepared statement not found: $name"))
@@ -108,124 +98,52 @@ class QueryService(engine: Engine) {
         val probed = PreparedStatements.substitute(sql,
           Seq.fill(PreparedStatements.paramCount(sql))("NULL"))
         return probed.flatMap(Statements.analyze(engine, _)).flatMap { qe =>
-          val rows = qe.analyzed.schema.fields.toSeq.map(f =>
-            org.apache.spark.sql.Row(f.name, "", "", "",
-              TypeNames.trino(f.dataType), 0, false))
-          val st = org.apache.spark.sql.types.StructType(Seq(
-            ("Column Name", org.apache.spark.sql.types.StringType: org.apache.spark.sql.types.DataType),
-            ("Catalog", org.apache.spark.sql.types.StringType),
-            ("Schema", org.apache.spark.sql.types.StringType),
-            ("Table", org.apache.spark.sql.types.StringType),
-            ("Type", org.apache.spark.sql.types.StringType),
-            ("Type Size", org.apache.spark.sql.types.IntegerType),
-            ("Aliased", org.apache.spark.sql.types.BooleanType)
-          ).map { case (n, t) => org.apache.spark.sql.types.StructField(n, t) })
-          collectBounded(engine.spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](
-              scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), st))
+          answer(Seq("Column Name", "Catalog", "Schema", "Table", "Type",
+              "Type Size", "Aliased"),
+            qe.analyzed.schema.fields.toSeq.map(f =>
+              Seq(f.name, "", "", "", TypeNames.trino(f.dataType), 0, false)))
         }
     }
     // USE catalog.schema / USE schema — session-namespace switch
     // (validated against the allowlist-filtered metadata surface; only
     // engine state changes, nothing executes)
     UseStatement.matchUse(stripped).foreach { case (c, s) =>
-      return UseStatement(engine, c, s).flatMap(_ =>
-        collectBounded(ShowMeta.oneCol(engine.spark, "Result",
-          Seq(org.apache.spark.sql.Row("USE")))))
+      return UseStatement(engine, c, s).flatMap(_ => done("USE"))
     }
     // SET/RESET SESSION over the live engine properties, and the
     // transaction statements BI clients issue unconditionally (no-ops:
     // read-only single-statement engine — every query is its own
     // transaction). All engine-state only, nothing executes.
-    SessionProps.matchStatement(stripped).foreach { stmt =>
-      def ok(label: String) = collectBounded(ShowMeta.oneCol(engine.spark,
-        "Result", Seq(org.apache.spark.sql.Row(label))))
-      stmt match {
-        case SessionProps.SetProp(n, v) =>
-          return SessionProps.set(engine, n, v).flatMap(_ => ok("SET SESSION"))
-        case SessionProps.ResetProp(n) =>
-          return SessionProps.reset(engine, n).flatMap(_ => ok("RESET SESSION"))
-        case SessionProps.StartTransaction => return ok("START TRANSACTION")
-        case SessionProps.Commit => return ok("COMMIT")
-        case SessionProps.Rollback => return ok("ROLLBACK")
-      }
+    SessionProps.matchStatement(stripped).foreach {
+      case SessionProps.SetProp(n, v) =>
+        return SessionProps.set(engine, n, v).flatMap(_ => done("SET SESSION"))
+      case SessionProps.ResetProp(n) =>
+        return SessionProps.reset(engine, n).flatMap(_ => done("RESET SESSION"))
+      case SessionProps.StartTransaction => return done("START TRANSACTION")
+      case SessionProps.Commit => return done("COMMIT")
+      case SessionProps.Rollback => return done("ROLLBACK")
     }
     ReadOnlyGuard.denial(stripped, engine.config.allowWriteQueries)
       .foreach(err => return Left(err))
 
-    // One error path for the SHOW routes below: a throwing catalog or
-    // listing surfaces as a tool error, never an exception out of
-    // execute() (SHOW SCHEMAS FROM nonexistent_catalog, r10 ADVICE).
-    def serve(df: => DataFrame): Either[String, QueryResult] =
-      (try Right(df) catch { case e: Throwable => Left(Statements.failed(e)) })
-        .flatMap(collectBounded)
-    // SHOW STATS FOR t — Trino's statistics surface (pass-through in the
-    // reference); computed here since Spark's SHOW has no STATS form.
-    // Under the opt-in SQL allowlist flag the same table gate applies.
-    // Shared gate for the SHOW statement paths: the SAME catalog/schema
-    // checks SqlAllowlist.check applies to regular SQL, then the table
-    // check — a deployment using only catalog/schema allowlists must
-    // still gate here (SHOW STATS reveals actual column min/max values).
-    def showGate(t: String): Option[String] =
-      if (!engine.config.enforceSqlAllowlists) None
-      else {
-        val (c, s, tbl) = MetadataService.resolve(engine, t)
-        val lists = engine.allowlists
-        if (lists.allowedCatalogs.nonEmpty && !lists.isCatalogAllowed(c))
-          Some(s"catalog access denied: $c not in allowlist")
-        else if (lists.allowedSchemas.nonEmpty && !lists.isSchemaAllowed(c, s))
-          Some(s"schema access denied: $c.$s not in allowlist")
-        else lists.tableAccessError(c, s, tbl)
-      }
-    ShowStats.matchStats(stripped).foreach { t =>
-      showGate(t).foreach(err => return Left(err))
-      return serve(ShowStats.forTable(engine, t))
+    // The Trino statements Spark's parser rejects. Every SHOW/DESCRIBE
+    // form it reads is answered from its parsed plan instead
+    // (ShowMeta.route, inside Statements).
+    // SHOW STATS FOR t / FOR (SELECT ...): the query is planned like a
+    // standalone statement (allowlist gate and USE included), then the
+    // one-pass stats aggregate runs over its result, both under the
+    // query's job group and deadline. (The whole statement already
+    // passed the read-only guard above — its write-keyword scan covers
+    // the inner text too.)
+    ShowStats.matchStats(stripped).foreach { q =>
+      return bounded(Statements.build(engine, q).map(ShowStats.forDataFrame(engine, _)))
     }
-    // SHOW STATS FOR (SELECT ...): the inner query is planned like a
-    // standalone statement, then the one-pass stats aggregate runs over
-    // its result. (The whole statement already passed the read-only
-    // guard above — its write-keyword scan covers the inner text too.)
-    ShowStats.matchStatsQuery(stripped).foreach { inner =>
-      return Statements.build(engine, inner)
-        .flatMap(df => serve(ShowStats.forDataFrame(engine, df)))
-    }
-    // SHOW CREATE TABLE / SHOW SESSION — also reference pass-throughs
-    // Spark can't serve on temp-view-backed relations (ShowMeta).
-    ShowMeta.matchCreateTable(stripped).foreach { t =>
-      showGate(t).foreach(err => return Left(err))
-      return serve(ShowMeta.createTable(engine, t))
+    // SHOW COLUMNS FROM t LIKE 'p': SHOW COLUMNS FROM t, filtered
+    ShowMeta.matchColumnsLike(stripped).foreach { case (stmt, like) =>
+      return bounded(Statements.build(engine, stmt).map(ShowMeta.filterLike(_, like)))
     }
     ShowMeta.matchSession(stripped).foreach { like =>
       return collectBounded(ShowMeta.session(engine, like))
-    }
-    // DESCRIBE t / DESC t / SHOW COLUMNS FROM t — Trino treats these as
-    // synonyms emitting Column/Type/Extra/Comment; Spark's own DESCRIBE
-    // has a different shape (col_name/data_type/comment), so route to
-    // the same renderer get_table_schema uses. Multi-token DESCRIBE
-    // forms (FUNCTION/QUERY/EXTENDED) still pass through to Spark.
-    ShowMeta.matchDescribe(stripped).foreach { case (t, like) =>
-      showGate(t).foreach(err => return Left(err))
-      return serve(ShowMeta.describeTable(engine, t, like))
-    }
-    // SHOW CATALOGS / SCHEMAS / TABLES — Trino's single-column listing
-    // shapes (Catalog / Schema / Table); Spark's own forms emit
-    // different columns, so intercept and serve from the allowlist-
-    // filtered metadata surface (same listings as the MCP tools).
-    ShowMeta.matchCatalogs(stripped).foreach { like =>
-      return serve(ShowMeta.catalogs(engine, like))
-    }
-    ShowMeta.matchSchemas(stripped).foreach { case (c, like) =>
-      return serve(ShowMeta.schemas(engine, c, like))
-    }
-    ShowMeta.matchTables(stripped).foreach { case (q, like) =>
-      return serve(ShowMeta.tables(engine, q, like))
-    }
-    // SHOW FUNCTIONS — function discovery over the dialect surface
-    // (reference pass-through; Spark's own SHOW FUNCTIONS has the wrong
-    // shape and lists Spark-spelling names). No allowlist gate: the
-    // function surface is engine-global, not relation data.
-    ShowFunctions.matchFunctions(stripped).foreach { like =>
-      return collectBounded(ShowFunctions.functions(engine, like))
     }
     // EXPLAIN statement forms Spark's parser rejects — Trino's
     // (TYPE ...) options and EXPLAIN ANALYZE — plus plain EXPLAIN q,
@@ -259,6 +177,17 @@ class QueryService(engine: Engine) {
     // runs under the query's job group and deadline too
     bounded(Statements.build(engine, stripped))
   }
+
+  /** A fixed answer, built here: no plan, no Spark SQL execution. */
+  private def answer(columns: Seq[String], rows: Seq[Seq[Any]]): Either[String, QueryResult] = {
+    val cap = engine.sessionMaxResultRows
+    Right(QueryResult(columns, rows.take(cap), truncated = rows.length > cap,
+      queryId = s"graft-query-${UUID.randomUUID()}"))
+  }
+
+  /** The one-row answer of a statement that only changes engine state. */
+  private def done(label: String): Either[String, QueryResult] =
+    answer(Seq("Result"), Seq(Seq(label)))
 
   /** ExplainService output (rows of single-key maps) → QueryResult. */
   private def explainToResult(inner: String, tpe: String): Either[String, QueryResult] =

@@ -6,10 +6,10 @@ import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructT
 import graft.dialect.FunctionCatalog
 import graft.engine.Engine
 
-/** `SHOW FUNCTIONS [LIKE 'pattern']` — the discovery statement a Trino
-  * client runs first against a 200-name dialect surface. The reference
-  * serves it by pass-through (allowed `show` prefix,
-  * `internal/trino/client.go:287`); Spark's own SHOW FUNCTIONS lists
+/** `SHOW FUNCTIONS [LIKE 'pattern']` ([[ShowMeta.route]]) — the
+  * discovery statement a Trino client runs first against a 200-name
+  * dialect surface. The reference serves it by pass-through (allowed
+  * `show` prefix, `internal/trino/client.go:287`); Spark's own SHOW FUNCTIONS lists
   * Spark names in a one-column shape, so this engine serves the
   * dialect surface from [[FunctionCatalog]] in Trino's six-column
   * shape: function_name, return_type, argument_types, function_type,
@@ -21,31 +21,11 @@ import graft.engine.Engine
   */
 object ShowFunctions {
 
-  private val Pat =
-    """(?is)^\s*SHOW\s+FUNCTIONS(?:\s+LIKE\s+'([^']*)')?\s*$""".r
-
-  /** Some(pattern Option) when the SQL is SHOW FUNCTIONS [LIKE '...'];
-    * the pattern uses SQL LIKE wildcards (% and _) on function_name. */
-  def matchFunctions(sql: String): Option[Option[String]] = sql match {
-    case Pat(p) => Some(Option(p))
-    case _ => None
-  }
-
   def functions(engine: Engine, like: Option[String] = None): DataFrame = {
     val all = FunctionCatalog.entries
       .sortBy(e => (e.name, e.argumentTypes))
       .map(e => Row(e.name, e.returnType, e.argumentTypes, e.functionType,
         e.deterministic, e.description))
-    val filtered = like match {
-      case Some(p) =>
-        val rx = p.flatMap {
-          case '%' => ".*"
-          case '_' => "."
-          case c => java.util.regex.Pattern.quote(c.toString)
-        }
-        all.filter(_.getString(0).matches(rx))
-      case None => all
-    }
     val schema = StructType(Seq(
       StructField("function_name", StringType),
       StructField("return_type", StringType),
@@ -53,7 +33,6 @@ object ShowFunctions {
       StructField("function_type", StringType),
       StructField("deterministic", BooleanType),
       StructField("description", StringType)))
-    engine.spark.createDataFrame(new java.util.ArrayList[Row](
-      scala.jdk.CollectionConverters.SeqHasAsJava(filtered).asJava), schema)
+    ShowMeta.frame(engine, schema, ShowMeta.matching(all, like)(_.getString(0)))
   }
 }

@@ -1,79 +1,74 @@
 package graft.service
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.plans.logical.{DescribeRelation, LogicalPlan, ShowColumns, ShowCreateTable, ShowFunctions, ShowTables}
+import org.apache.spark.sql.execution.command.{ShowCatalogsCommand, ShowNamespacesCommand}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.engine.Engine
-import graft.security.Allowlists
+import graft.security.SqlAllowlist
 
-/** `SHOW CREATE TABLE t` and `SHOW SESSION` — two more statements the
-  * reference serves by Trino pass-through that Spark cannot serve for
-  * this engine's relations (temp-view-backed tables reject Spark's own
-  * SHOW CREATE TABLE; SHOW SESSION does not exist in Spark SQL).
+/** Trino's SHOW / DESCRIBE statements, in Trino's output shapes. Spark's
+  * parser reads most of them, but its own answers have other columns
+  * (`catalog`; `namespace`; `namespace, tableName, isTemporary`;
+  * `col_name, data_type, comment`; a one-column function list) or do not
+  * work on this engine's temp-view-backed tables (SHOW CREATE TABLE). So
+  * [[route]] answers the plan Spark's parser built, after the statement
+  * pipeline ([[Statements]]) has gated it: however the statement is
+  * spelled, one parse decides what it is. Listings come from the
+  * allowlist-filtered metadata surface, so they equal the MCP tools'.
+  *
+  * Two forms Spark's grammar lacks stay text rules: `SHOW COLUMNS FROM t
+  * LIKE 'p'` (planned as `SHOW COLUMNS FROM t`, then filtered) and `SHOW
+  * SESSION`, the engine's live session properties in Trino's five-column
+  * shape (Name, Value, Default, Type, Description).
   *
   * SHOW CREATE TABLE renders the single-column ("Create Table") DDL row
   * Trino emits, with Trino type names from the same mapper DESCRIBE
   * uses — so DESCRIBE, typeof() and SHOW CREATE TABLE always agree.
-  * SHOW SESSION lists the engine's live session properties in Trino's
-  * five-column shape (Name, Value, Default, Type, Description).
   */
 object ShowMeta {
 
-  private val CreatePat =
-    """(?is)^\s*SHOW\s+CREATE\s+TABLE\s+([A-Za-z_][\w.]*)\s*$""".r
+  /** Graft's answer to a parsed, gated SHOW/DESCRIBE plan; None for every
+    * other statement, Spark-only spellings included (DESCRIBE EXTENDED,
+    * DESCRIBE QUERY, SHOW CREATE TABLE … AS SERDE, SHOW TABLE EXTENDED,
+    * SHOW SCHEMAS of a multi-part namespace, SHOW FUNCTIONS FROM ns),
+    * which Spark answers itself. */
+  def route(engine: Engine, plan: LogicalPlan): Option[DataFrame] = plan match {
+    case ShowCatalogsCommand(like) => Some(catalogs(engine, like))
+    case ShowNamespacesCommand(ns, like, _) if SqlAllowlist.namespace(ns).length <= 1 =>
+      Some(schemas(engine, SqlAllowlist.namespace(ns).headOption, like))
+    case ShowTables(ns, like, _) => Some(tables(engine, SqlAllowlist.namespace(ns), like))
+    case DescribeRelation(UnresolvedTableOrView(t, _, _), spec, false, _) if spec.isEmpty =>
+      Some(describeTable(engine, t))
+    case ShowColumns(UnresolvedTableOrView(t, _, _), None, _) => Some(describeTable(engine, t))
+    case ShowCreateTable(UnresolvedTableOrView(t, _, _), false, _) => Some(createTable(engine, t))
+    case ShowFunctions(CurrentNamespace, true, true, like, _) =>
+      Some(graft.service.ShowFunctions.functions(engine, like))
+    case _ => None
+  }
+
   private val SessionPat =
     """(?is)^\s*SHOW\s+SESSION(?:\s+LIKE\s+'([^']*)')?\s*$""".r
-  // DESCRIBE t / DESC t and Trino's synonym SHOW COLUMNS FROM|IN t
-  // [LIKE '...']. Single-identifier target only, so Spark's own
-  // DESCRIBE FUNCTION / DESCRIBE QUERY / DESCRIBE EXTENDED forms still
-  // pass through to spark.sql untouched.
-  private val DescribePat =
-    """(?is)^\s*(?:DESC|DESCRIBE)\s+([A-Za-z_][\w.]*)\s*$""".r
-  private val ColumnsPat =
-    """(?is)^\s*SHOW\s+COLUMNS\s+(?:FROM|IN)\s+([A-Za-z_][\w.]*)(?:\s+LIKE\s+'([^']*)')?\s*$""".r
+  private val ColumnsLikePat =
+    """(?is)^\s*SHOW\s+COLUMNS\s+(?:FROM|IN)\s+([A-Za-z_][\w.]*)\s+LIKE\s+'([^']*)'\s*$""".r
 
-  def matchCreateTable(sql: String): Option[String] = sql match {
-    case CreatePat(t) => Some(t)
+  /** Some((`SHOW COLUMNS FROM t`, pattern)) for Trino's `SHOW COLUMNS
+    * FROM|IN t LIKE 'p'`: the statement to plan, and the SQL LIKE
+    * pattern its Column values must match. */
+  def matchColumnsLike(sql: String): Option[(String, String)] = sql match {
+    case ColumnsLikePat(t, p) => Some((s"SHOW COLUMNS FROM $t", p))
     case _ => None
   }
 
-  /** Some((table, like-pattern Option)) for DESCRIBE t / DESC t /
-    * SHOW COLUMNS FROM t [LIKE '...'] — the statement spellings Trino
-    * treats as synonyms (all emit Column/Type/Extra/Comment). */
-  def matchDescribe(sql: String): Option[(String, Option[String])] = sql match {
-    case DescribePat(t) => Some((t, None))
-    case ColumnsPat(t, p) => Some((t, Option(p)))
-    case _ => None
+  /** The rows of `df` whose first column matches SQL LIKE `pattern`. */
+  def filterLike(df: DataFrame, pattern: String): DataFrame = {
+    val rx = likeToRegex(pattern)
+    df.filter((r: Row) => r.getString(0).matches(rx))
   }
-
-  // Trino's listing statements: single-column shapes (Catalog / Schema
-  // / Table) where Spark's own SHOW CATALOGS/SCHEMAS/TABLES emit
-  // different columns (catalog; namespace; namespace+tableName+
-  // isTemporary) — so execute_query must intercept and serve the
-  // Trino shape from the allowlist-filtered metadata surface.
-  private val CatalogsPat =
-    """(?is)^\s*SHOW\s+CATALOGS(?:\s+LIKE\s+'([^']*)')?\s*$""".r
-  private val SchemasPat =
-    """(?is)^\s*SHOW\s+SCHEMAS(?:\s+(?:FROM|IN)\s+([A-Za-z_]\w*))?(?:\s+LIKE\s+'([^']*)')?\s*$""".r
-  private val TablesPat =
-    """(?is)^\s*SHOW\s+TABLES(?:\s+(?:FROM|IN)\s+([A-Za-z_][\w.]*))?(?:\s+LIKE\s+'([^']*)')?\s*$""".r
-
-  def matchCatalogs(sql: String): Option[Option[String]] = sql match {
-    case CatalogsPat(p) => Some(Option(p))
-    case _ => None
-  }
-  /** Some((catalog Option, like Option)). */
-  def matchSchemas(sql: String): Option[(Option[String], Option[String])] =
-    sql match {
-      case SchemasPat(c, p) => Some((Option(c), Option(p)))
-      case _ => None
-    }
-  /** Some((schema-qualifier Option — `s` or `c.s`, like Option)). */
-  def matchTables(sql: String): Option[(Option[String], Option[String])] =
-    sql match {
-      case TablesPat(q, p) => Some((Option(q), Option(p)))
-      case _ => None
-    }
 
   def catalogs(engine: Engine, like: Option[String]): DataFrame =
     listing(engine, "Catalog",
@@ -84,26 +79,21 @@ object ShowMeta {
     listing(engine, "Schema",
       new MetadataService(engine).listSchemas(catalog.getOrElse("")), like)
 
-  def tables(engine: Engine, qualifier: Option[String],
-      like: Option[String]): DataFrame = {
-    val (c, s) = qualifier match {
-      case Some(q) if q.contains(".") =>
-        val parts = q.split("\\.", 2); (parts(0), parts(1))
-      case Some(q) => ("", q)
-      case None => ("", "")
+  /** The tables of namespace `ns` (`s` or `c.s…`; empty for the
+    * session's). */
+  def tables(engine: Engine, ns: Seq[String], like: Option[String]): DataFrame = {
+    val (c, s) = ns match {
+      case Seq() => ("", "")
+      case Seq(s1) => ("", s1)
+      case _ => (ns.head, ns.tail.mkString("."))
     }
     listing(engine, "Table",
       new MetadataService(engine).listTables(c, s), like)
   }
 
   private def listing(engine: Engine, colName: String, names: Seq[String],
-      like: Option[String]): DataFrame = {
-    val filtered = like match {
-      case Some(p) => names.filter(_.matches(likeToRegex(p)))
-      case None => names
-    }
-    oneCol(engine.spark, colName, filtered.map(Row(_)))
-  }
+      like: Option[String]): DataFrame =
+    frame(engine, strings(colName), matching(names, like)(identity).map(Row(_)))
 
   /** Some(pattern Option) when the SQL is SHOW SESSION [LIKE '...'];
     * the pattern uses SQL LIKE wildcards (% and _) against Name. */
@@ -112,49 +102,53 @@ object ShowMeta {
     case _ => None
   }
 
-  private[service] def oneCol(spark: org.apache.spark.sql.SparkSession,
-      colName: String, rows: Seq[Row], extra: Seq[StructField] = Nil): DataFrame = {
-    val schema = StructType(StructField(colName, StringType) +: extra)
-    spark.createDataFrame(new java.util.ArrayList[Row](
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-  }
+  /** `rows` under `schema`, as a DataFrame over a local relation. */
+  private[service] def frame(engine: Engine, schema: StructType, rows: Seq[Row]): DataFrame =
+    engine.spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava), schema)
 
-  def createTable(engine: Engine, table: String): DataFrame = {
-    val (c, s, t) = MetadataService.resolve(engine, table)
-    val cols = MetadataService.table(engine, c, s, t).schema.fields
-      .map(f => s"   ${f.name} ${TypeNames.trino(f.dataType)}")
-      .mkString(",\n")
-    val ddl = s"CREATE TABLE $c.$s.$t (\n$cols\n)"
-    oneCol(engine.spark, "Create Table", Seq(Row(ddl)))
-  }
-
-  /** Trino's DESCRIBE shape (Column, Type, Extra, Comment) — the same
-    * four columns the reference's get_table_schema renders (the
-    * reference itself issues `DESCRIBE c.s.t` to Trino,
-    * client.go:767), so the tool and the statement always agree. */
-  def describeTable(engine: Engine, table: String,
-      like: Option[String] = None): DataFrame = {
-    // qualified names outside the default namespace must hit THAT
-    // catalog (DESCRIBE tpch.tiny.customer served the default catalog's
-    // temp view before — statement-fuzz finding, r11)
-    val (c, s, t) = MetadataService.resolve(engine, table)
-    val fields = MetadataService.table(engine, c, s, t).schema.fields.toSeq
-    val filtered = like match {
-      case Some(p) => fields.filter(f => f.name.matches(likeToRegex(p)))
-      case None => fields
-    }
-    val rows = filtered.map(f => Row(f.name, TypeNames.trino(f.dataType), "", ""))
-    val schema = StructType(Seq("Column", "Type", "Extra", "Comment")
-      .map(StructField(_, StringType)))
-    engine.spark.createDataFrame(new java.util.ArrayList[Row](
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-  }
+  private def strings(names: String*): StructType =
+    StructType(names.map(StructField(_, StringType)))
 
   /** SQL LIKE → regex: % = .*, _ = ., everything else literal. */
   private def likeToRegex(p: String): String = p.flatMap {
     case '%' => ".*"
     case '_' => "."
     case c => java.util.regex.Pattern.quote(c.toString)
+  }
+
+  /** The `xs` whose key matches SQL LIKE `like`; all of them without one. */
+  private[service] def matching[A](xs: Seq[A], like: Option[String])(key: A => String): Seq[A] =
+    like.fold(xs) { p =>
+      val rx = likeToRegex(p)
+      xs.filter(x => key(x).matches(rx))
+    }
+
+  /** (catalog, schema, table) of a parsed name in this session: the
+    * reading the SQL allowlist judged. */
+  private def resolve(engine: Engine, name: Seq[String]): (String, String, String) =
+    SqlAllowlist.qualified(name, engine.sessionCatalog, engine.sessionSchema)
+
+  def createTable(engine: Engine, name: Seq[String]): DataFrame = {
+    val (c, s, t) = resolve(engine, name)
+    val cols = MetadataService.table(engine, c, s, t).schema.fields
+      .map(f => s"   ${f.name} ${TypeNames.trino(f.dataType)}")
+      .mkString(",\n")
+    val ddl = s"CREATE TABLE $c.$s.$t (\n$cols\n)"
+    frame(engine, strings("Create Table"), Seq(Row(ddl)))
+  }
+
+  /** Trino's DESCRIBE shape (Column, Type, Extra, Comment) — the same
+    * four columns the reference's get_table_schema renders (the
+    * reference itself issues `DESCRIBE c.s.t` to Trino,
+    * client.go:767), so the tool and the statement always agree. */
+  def describeTable(engine: Engine, name: Seq[String]): DataFrame = {
+    // qualified names outside the default namespace must hit THAT
+    // catalog (DESCRIBE tpch.tiny.customer served the default catalog's
+    // temp view before — statement-fuzz finding, r11)
+    val (c, s, t) = resolve(engine, name)
+    val rows = MetadataService.table(engine, c, s, t).schema.fields.toSeq
+      .map(f => Row(f.name, TypeNames.trino(f.dataType), "", ""))
+    frame(engine, strings("Column", "Type", "Extra", "Comment"), rows)
   }
 
   def session(engine: Engine, like: Option[String] = None): DataFrame = {
@@ -179,13 +173,7 @@ object ShowMeta {
       row("enforce_sql_allowlists", cfg.enforceSqlAllowlists.toString,
         "false", "boolean",
         "Apply catalog/schema/table allowlists to relations inside SQL"))
-    val filtered = like match {
-      case Some(p) => rows.filter(_.getString(0).matches(likeToRegex(p)))
-      case None => rows
-    }
-    val schema = StructType(Seq("Name", "Value", "Default", "Type",
-      "Description").map(StructField(_, StringType)))
-    engine.spark.createDataFrame(new java.util.ArrayList[Row](
-      scala.jdk.CollectionConverters.SeqHasAsJava(filtered).asJava), schema)
+    frame(engine, strings("Name", "Value", "Default", "Type", "Description"),
+      matching(rows, like)(_.getString(0)))
   }
 }

@@ -24,35 +24,20 @@ import graft.engine.Engine
 object ShowStats {
 
   private val Pattern =
-    """(?is)^\s*SHOW\s+STATS\s+FOR\s+([A-Za-z_][\w.]*)\s*$""".r
-  private val QueryPattern =
-    """(?is)^\s*SHOW\s+STATS\s+FOR\s*\((.*)\)\s*$""".r
+    """(?is)^\s*SHOW\s+STATS\s+FOR(?:\s*\((.*)\)|\s+([A-Za-z_][\w.]*))\s*$""".r
 
-  /** Some(tableName) when the SQL is SHOW STATS FOR <table>. */
+  /** Some(query) whose statistics the SQL asks for: the inner query of
+    * Trino's `SHOW STATS FOR (SELECT ...)`, or `SELECT * FROM t` for
+    * `SHOW STATS FOR t`. QueryService plans it through the SAME
+    * dialect/allowlist/info_schema pipeline as a standalone query, then
+    * the one-pass aggregation below runs over the derived relation. */
   def matchStats(sql: String): Option[String] = sql match {
-    case Pattern(t) => Some(t)
+    case Pattern(q, null) => Some(q.trim)
+    case Pattern(null, t) => Some(s"SELECT * FROM $t")
     case _ => None
-  }
-
-  /** Some(innerQuery) when the SQL is Trino's subquery form
-    * `SHOW STATS FOR (SELECT ...)`. The inner text goes through the
-    * SAME dialect/allowlist/info_schema pipeline as a standalone query
-    * (QueryService wires that), then the one-pass aggregation below
-    * runs over the derived relation. */
-  def matchStatsQuery(sql: String): Option[String] = sql match {
-    case QueryPattern(q) => Some(q.trim)
-    case _ => None
-  }
-
-  /** Statistics of the table `table` names in this session (USE applies,
-    * as for DESCRIBE). */
-  def forTable(engine: Engine, table: String): DataFrame = {
-    val (c, s, t) = MetadataService.resolve(engine, table)
-    forDataFrame(engine, MetadataService.table(engine, c, s, t))
   }
 
   def forDataFrame(engine: Engine, df: DataFrame): DataFrame = {
-    val spark = engine.spark
     val cols = df.schema.fields
 
     def isNumericish(dt: DataType): Boolean = dt match {
@@ -109,8 +94,6 @@ object ShowStats {
       StructField("row_count", DoubleType),
       StructField("low_value", StringType),
       StructField("high_value", StringType)))
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(out.toSeq).asJava), schema)
+    ShowMeta.frame(engine, schema, out.toSeq)
   }
 }

@@ -1,30 +1,36 @@
 package graft.service
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.{IdentifierResolution, PlanWithUnresolvedIdentifier}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.command.{DescribeQueryCommand, ExplainCommand}
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.dialect.{MatchRecognize, TrinoFunctions}
 import graft.engine.Engine
 import graft.security.{ReadOnlyGuard, SqlAllowlist}
 
-/** The one "SQL text → DataFrame" pipeline. execute_query's plain path,
-  * EXPLAIN ANALYZE, DESCRIBE OUTPUT, `SHOW STATS FOR (SELECT …)`, the
+/** The one "SQL text → DataFrame" pipeline. execute_query's plain path
+  * and its SHOW/DESCRIBE forms, EXPLAIN ANALYZE, DESCRIBE OUTPUT, the
   * EXPLAIN statement forms and the explain_query tool all plan their
   * query here, so what is explained is what would run. In order:
   *
   *  1. dialect preprocess, with the type-aware retry below;
   *  2. each `<relation> MATCH_RECOGNIZE (…)` span: its relation planned
-  *     by steps 3, 5 and 6, the matcher run over it, the span replaced
+  *     by steps 3, 5 and 7, the matcher run over it, the span replaced
   *     by a placeholder relation name;
-  *  3. one parse;
+  *  3. one parse, with constant `IDENTIFIER(…)` names read;
   *  4. each placeholder replaced by its span's plan — no temp view, so
   *     a concurrent listing never sees one;
   *  5. the parsed plan's read-only check ([[ReadOnlyGuard.planDenial]])
   *     and the opt-in SQL allowlist gate;
-  *  6. one relation walk ([[UseStatement.qualify]]: information_schema
-  *     shims, USE qualification), then analysis.
+  *  6. a SHOW/DESCRIBE plan graft answers in Trino's shape
+  *     ([[ShowMeta.route]]) becomes that answer, before Spark could run
+  *     its own command;
+  *  7. otherwise one relation walk ([[UseStatement.qualify]]:
+  *     information_schema shims, the default namespace's views, USE
+  *     qualification), then analysis.
   */
 object Statements {
 
@@ -81,12 +87,12 @@ object Statements {
     } catch { case e: Throwable => Left(failed(e)) }
   }
 
-  /** Steps 3–6 for preprocessed text whose MATCH_RECOGNIZE spans are
+  /** Steps 3–7 for preprocessed text whose MATCH_RECOGNIZE spans are
     * placeholders; Left = a write the config does not allow, or an
     * allowlist denial. */
   private def plan[T](engine: Engine, text: String,
       spans: Seq[(String, DataFrame)])(finish: LogicalPlan => T): Either[String, T] = {
-    val parsed = engine.spark.sessionState.sqlParser.parsePlan(text)
+    val parsed = named(engine.spark.sessionState.sqlParser.parsePlan(text))
     val byName = spans.toMap
     val substituted =
       if (spans.isEmpty) parsed
@@ -102,15 +108,25 @@ object Statements {
         if (!engine.config.enforceSqlAllowlists) None
         else SqlAllowlist.check(substituted, engine.allowlists,
           engine.sessionCatalog, engine.sessionSchema))
-    denied.toLeft {
-      val ns =
-        if (engine.sessionCatalog.equalsIgnoreCase(engine.config.catalog) &&
-            engine.sessionSchema.equalsIgnoreCase(engine.config.schema)) None
-        else Some((engine.sessionCatalog, engine.sessionSchema))
-      val (resolved, shims) = UseStatement.qualify(substituted, ns)
-      if (shims) InfoSchema.withShims(engine)(finish(resolved))
-      else finish(resolved)
-    }
+    denied.toLeft(ShowMeta.route(engine, substituted) match {
+      case Some(answer) => finish(answer.queryExecution.logical)
+      case None =>
+        val (resolved, shims) = UseStatement.qualify(substituted,
+          (engine.sessionCatalog, engine.sessionSchema),
+          (engine.config.catalog, engine.config.schema))
+        if (shims) InfoSchema.withShims(engine)(finish(resolved))
+        else finish(resolved)
+    })
+  }
+
+  /** `plan` with each `IDENTIFIER(<constant>)` clause replaced by the plan
+    * its name builds, as Spark's analyzer would replace it, so that the
+    * gate, the routes and USE qualification see the name itself. */
+  private def named(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case i: PlanWithUnresolvedIdentifier if i.identifierExpr.foldable =>
+      i.planBuilder(IdentifierResolution.evalIdentifierExpr(i.identifierExpr), i.children)
+    case e: ExplainCommand => e.copy(logicalPlan = named(e.logicalPlan))
+    case d: DescribeQueryCommand => d.copy(plan = named(d.plan))
   }
 
   /** The tool-error text for a failed statement. */

@@ -3,7 +3,7 @@ package graft.service
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
-import org.apache.spark.sql.execution.command.ExplainCommand
+import org.apache.spark.sql.execution.command.{DescribeQueryCommand, ExplainCommand}
 
 import graft.engine.Engine
 
@@ -62,22 +62,35 @@ object UseStatement {
       Left(s"query execution failed: ${String.valueOf(e.getMessage).take(300)}")
   }
 
-  /** Step 6 of [[Statements]]: one walk over the parsed relations.
+  /** Step 7 of [[Statements]]: one walk over the parsed relations.
     * `[catalog.]information_schema.<t>` becomes its shim view (the flag
-    * says whether any did, so the caller refreshes the shims first);
-    * with `ns` set (USE moved the session off the configured default),
-    * every other 1/2-part name is qualified to it (3-part names resolve
-    * as written). */
-  def qualify(plan: LogicalPlan, ns: Option[(String, String)]): (LogicalPlan, Boolean) = {
+    * says whether any did, so the caller refreshes the shims first).
+    * Every other name is read as the allowlist gate judged it: a name in
+    * the configured `default` namespace by its bare table name (that
+    * namespace's tables are session views, which Spark reads only
+    * unqualified, as [[MetadataService.table]] does); with the `session`
+    * namespace moved off the default (USE), 1/2-part names qualified to
+    * it; any other name as written. */
+  def qualify(plan: LogicalPlan, session: (String, String),
+      default: (String, String)): (LogicalPlan, Boolean) = {
+    def isDefault(c: String, s: String) =
+      c.equalsIgnoreCase(default._1) && s.equalsIgnoreCase(default._2)
+    val moved = !isDefault(session._1, session._2)
     var shims = false
     val out = mapRelations(plan) { r =>
       InfoSchema.relation(r.multipartIdentifier) match {
         case Some(shim) => shims = true; shim
-        case None => (ns, r.multipartIdentifier) match {
-          case (Some((c, s)), Seq(t)) => r.copy(multipartIdentifier = Seq(c, s, t))
-          case (Some((c, _)), Seq(s, t)) => r.copy(multipartIdentifier = Seq(c, s, t))
-          case _ => r
-        }
+        case None =>
+          val full = r.multipartIdentifier match {
+            case Seq(t) => Seq(session._1, session._2, t)
+            case Seq(s, t) => Seq(session._1, s, t)
+            case parts => parts
+          }
+          full match {
+            case Seq(c, s, t) if isDefault(c, s) => r.copy(multipartIdentifier = Seq(t))
+            case _ if moved => r.copy(multipartIdentifier = full)
+            case _ => r
+          }
       }
     }
     (out, shims)
@@ -86,12 +99,14 @@ object UseStatement {
   /** `plan` with `f` applied to every unresolved relation that is not a
     * CTE name in scope — the scope-aware walk SqlAllowlist uses (a CTE
     * body sees the names defined before it, the main query sees them
-    * all), into expression subqueries and EXPLAIN targets. Resolved
+    * all), into expression subqueries and EXPLAIN / DESCRIBE QUERY
+    * targets. Resolved
     * subtrees (a substituted MATCH_RECOGNIZE result) are left as they
     * are. */
   def mapRelations(plan: LogicalPlan)(f: UnresolvedRelation => LogicalPlan): LogicalPlan = {
     def rew(p: LogicalPlan, scope: Set[String]): LogicalPlan = p match {
       case e: ExplainCommand => e.copy(logicalPlan = rew(e.logicalPlan, scope))
+      case d: DescribeQueryCommand => d.copy(plan = rew(d.plan, scope))
       case w: UnresolvedWith =>
         var s = scope
         val newRels = w.cteRelations.map { rel =>

@@ -594,6 +594,81 @@ class ServicesSpec extends SparkSpec {
     }
   }
 
+  test("execute: statements that only change engine state start no SQL execution") {
+    val qs = new QueryService(engine())
+    for ((sql, label) <- Seq(
+        "USE tpch.tiny" -> "USE",
+        "USE spark_catalog.default" -> "USE",
+        "SET SESSION max_result_rows = 7" -> "SET SESSION",
+        "RESET SESSION max_result_rows" -> "RESET SESSION",
+        "START TRANSACTION" -> "START TRANSACTION",
+        "COMMIT" -> "COMMIT",
+        "ROLLBACK" -> "ROLLBACK",
+        "PREPARE q FROM SELECT 1" -> "PREPARE",
+        "DEALLOCATE PREPARE q" -> "DEALLOCATE")) {
+      var reply: Either[String, qs.QueryResult] = Left("not run")
+      assert(executions { reply = qs.execute(sql) } == 0, sql)
+      val r = reply.fold(err => fail(s"$sql: $err"), identity)
+      assert(r.columns == Seq("Result") && r.rows == Seq(Seq(label)), sql)
+      assert(r.queryId.startsWith("graft-query-") && !r.truncated, sql)
+    }
+  }
+
+  test("execute: the enforced allowlists gate Spark's own DESCRIBE QUERY and SHOW TABLE EXTENDED") {
+    // both would print the columns of a table a SELECT may not read
+    val qs = new QueryService(engine(Map(
+      "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_CATALOGS" -> "spark_catalog",
+      "TRINO_ALLOWED_SCHEMAS" -> "spark_catalog.default")))
+    val denied = Left("catalog access denied: tpch not in allowlist")
+    assert(qs.execute("SELECT * FROM tpch.tiny.customer") == denied)
+    assert(qs.execute("DESCRIBE QUERY SELECT * FROM tpch.tiny.customer") == denied)
+    assert(qs.execute("SHOW TABLE EXTENDED IN tpch.tiny LIKE 'cust*'") == denied)
+    assert(qs.execute("SHOW VIEWS IN tpch.tiny") == denied)
+    // allowed namespaces still reach Spark's own statements
+    assert(qs.execute("DESCRIBE QUERY SELECT * FROM region").isRight)
+    assert(qs.execute("SHOW TABLE EXTENDED LIKE 'reg*'").toOption.get
+      .rows.map(_(1)) == Seq("region"))
+    // a table allowlist admits only an allowed table's exact name
+    val tables = new QueryService(engine(Map(
+      "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_TABLES" -> "spark_catalog.default.region")))
+    assert(tables.execute("SHOW TABLE EXTENDED LIKE 'region'").isRight)
+    assert(tables.execute("SHOW TABLE EXTENDED LIKE 're*'") ==
+      Left("table access denied: spark_catalog.default.re* not in allowlist"))
+  }
+
+  test("execute: an IDENTIFIER(...) relation is judged and routed by its name") {
+    val qs = new QueryService(engine(Map(
+      "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_CATALOGS" -> "spark_catalog",
+      "TRINO_ALLOWED_SCHEMAS" -> "spark_catalog.default")))
+    val denied = Left("catalog access denied: tpch not in allowlist")
+    assert(qs.execute("SELECT * FROM IDENTIFIER('tpch.tiny.customer')") == denied)
+    assert(qs.execute("EXPLAIN SELECT * FROM IDENTIFIER('tpch.tiny.' || 'customer')") == denied)
+    assert(qs.execute("DESCRIBE IDENTIFIER('tpch.tiny.customer')") == denied)
+    assert(qs.execute("SELECT COUNT(*) AS n FROM IDENTIFIER('region')")
+      .toOption.get.rows == Seq(Seq(5L)))
+    assert(qs.execute("DESCRIBE IDENTIFIER('region')").toOption.get.columns ==
+      Seq("Column", "Type", "Extra", "Comment"))
+  }
+
+  test("execute: the default namespace's tables read by their qualified names too") {
+    // list_tables lists them as spark_catalog.default.<t>; DESCRIBE and
+    // SHOW STATS FOR (planned as SELECT * FROM t) read them so
+    val qs = new QueryService(engine())
+    for (name <- Seq("region", "default.region", "spark_catalog.default.region",
+        "`SPARK_CATALOG`.Default.region"))
+      assert(qs.execute(s"SELECT COUNT(*) AS n FROM $name").toOption.get.rows == Seq(Seq(5L)), name)
+    assert(qs.execute("SHOW STATS FOR spark_catalog.default.region").toOption.get
+      .rows.last(4) == 5.0)
+    // after USE, a 3-part default name still reads the view
+    assert(qs.execute("USE tpch.tiny").isRight)
+    assert(qs.execute("SELECT * FROM spark_catalog.default.region LIMIT 1").toOption.get
+      .columns.contains("r_regionkey"))
+    assert(qs.execute("SELECT * FROM region LIMIT 1").toOption.get.columns.contains("regionkey"))
+  }
+
   test("execute: information_schema follows the catalog: a new view is listed at once") {
     val qs = new QueryService(engine())
     val sql = "SELECT table_name FROM information_schema.tables WHERE table_name = 'graft_fresh_view'"

@@ -201,4 +201,58 @@ class ShowStatsSpec extends SparkSpec {
     assert(schemaOnly.execute("SHOW STATS FOR region") ==
       Left("schema access denied: spark_catalog.default not in allowlist"))
   }
+
+  test("a routed SHOW / DESCRIBE statement answers the same however it is spelled") {
+    // each canonical statement, with the spellings beyond the three every
+    // statement gets (a block comment first, a line comment first, lower case)
+    val forms = Seq(
+      "SHOW CATALOGS" -> Nil,
+      "SHOW CATALOGS LIKE 'sp%'" -> Nil,
+      "SHOW SCHEMAS" -> Seq("SHOW NAMESPACES"),
+      "SHOW SCHEMAS FROM tpch" -> Seq("SHOW SCHEMAS FROM `tpch`", "SHOW NAMESPACES IN tpch"),
+      "SHOW TABLES" -> Nil,
+      "SHOW TABLES FROM tpch.tiny" -> Seq("SHOW TABLES FROM `tpch`.`tiny`", "SHOW TABLES IN tpch.tiny"),
+      "SHOW TABLES FROM default LIKE 'reg%'" -> Seq("SHOW TABLES IN `default` LIKE 'reg%'"),
+      "DESCRIBE region" -> Seq("DESCRIBE `region`", "DESCRIBE TABLE region", "DESCRIBE \"region\""),
+      "DESCRIBE tpch.tiny.customer" ->
+        Seq("DESCRIBE `tpch`.`tiny`.`customer`", "DESCRIBE TABLE tpch.tiny.customer"),
+      "SHOW COLUMNS FROM region" -> Seq("SHOW COLUMNS IN `region`"),
+      "SHOW COLUMNS FROM tpch.tiny.nation" -> Seq("SHOW COLUMNS FROM `tpch`.tiny.`nation`"),
+      "SHOW CREATE TABLE region" -> Seq("SHOW CREATE TABLE `region`"),
+      "SHOW CREATE TABLE tpch.tiny.nation" -> Seq("SHOW CREATE TABLE `tpch`.`tiny`.`nation`"),
+      "SHOW FUNCTIONS LIKE 'url_e%'" -> Seq("SHOW FUNCTIONS 'url_e%'"))
+    // Trino's shape for each, whatever the config
+    val shape = Map("SHOW CATALOGS" -> Seq("Catalog"), "SHOW SCHEMAS" -> Seq("Schema"),
+      "SHOW TABLES" -> Seq("Table"), "DESCRIBE" -> Seq("Column", "Type", "Extra", "Comment"),
+      "SHOW COLUMNS" -> Seq("Column", "Type", "Extra", "Comment"),
+      "SHOW CREATE TABLE" -> Seq("Create Table"), "SHOW FUNCTIONS" -> Seq("function_name",
+        "return_type", "argument_types", "function_type", "deterministic", "description"))
+    val probe = Map(
+      "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_CATALOGS" -> "spark_catalog",
+      "TRINO_ALLOWED_SCHEMAS" -> "spark_catalog.default")
+    for ((config, env) <- Seq("default" -> Map.empty[String, String], "probe" -> probe)) {
+      val s = qs(env)
+      def answer(sql: String) = s.execute(sql).map(r => (r.columns, r.rows))
+      for ((canonical, extra) <- forms) {
+        val want = answer(canonical)
+        val names = canonical.startsWith("DESCRIBE") || canonical.startsWith("SHOW COLUMNS") ||
+          canonical.startsWith("SHOW CREATE")
+        if (config == "probe" && names && canonical.contains("tpch"))
+          assert(want == Left("catalog access denied: tpch not in allowlist"), canonical)
+        else {
+          val cols = want.fold(err => fail(s"[$config] $canonical: $err"), _._1)
+          assert(cols == shape.collectFirst { case (k, v) if canonical.startsWith(k) => v }.get,
+            s"[$config] $canonical")
+        }
+        for (sql <- Seq(s"/* c */ $canonical", s"-- c\n$canonical", canonical.toLowerCase) ++ extra)
+          assert(answer(sql) == want, s"[$config] $sql vs $canonical")
+      }
+      // the listings filter under the probe config, as the tools do
+      if (config == "probe") {
+        assert(answer("SHOW CATALOGS") == Right((Seq("Catalog"), Seq(Seq("spark_catalog")))))
+        assert(answer("SHOW SCHEMAS FROM tpch") == Right((Seq("Schema"), Nil)))
+      }
+    }
+  }
 }
