@@ -39,21 +39,17 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   *    per-function whitelist to drift.
   *  - The guard branch is ONE extra count(1) pass over the un-expanded
   *    child; column pruning makes it a zero-column scan. That is the
-  *    honest price of standard semantics; disable per-session with
-  *    `spark.graft.standardEmptyGroupingSets=false` if a hot path
-  *    can prove its input non-empty.
+  *    honest price of standard semantics.
   *  - GROUPING SETS lists without `()` are standard-compatible in
   *    Spark already (both return zero rows) and are not rewritten: the
   *    rewrite triggers only when an Expand projection carries the
   *    all-bits grouping id.
   */
 object EmptyGroupingSetsRule extends Rule[LogicalPlan] {
-  val ConfKey = "spark.graft.standardEmptyGroupingSets"
   private val done = TreeNodeTag[Boolean]("graft.emptyGroupingSetsDone")
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(ConfKey, "true") != "true") plan
-    else plan.resolveOperatorsUp {
+    plan.resolveOperatorsUp {
       case agg: Aggregate if agg.resolved && agg.getTagValue(done).isEmpty =>
         agg.child match {
           case expand: Expand =>

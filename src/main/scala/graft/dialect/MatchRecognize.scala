@@ -625,34 +625,19 @@ object MatchRecognize {
   private def navColName(isPrev: Boolean, c: String, n: Int): String =
     s"__mr_${if (isPrev) "prev" else "next"}${n}_$c"
 
-  /** Rewrite variable V's DEFINE predicate for per-row evaluation:
-    * strip V's OWN qualifier (`V.c` denotes the current row), but
-    * REJECT a qualifier naming any other pattern variable — used by the
-    * STREAMING face, whose flag-array state cannot evaluate
-    * cross-variable references (the batch planner routes such defines
-    * to the interpreted [[MrPredicate]] path instead). Scans and strips
+  /** Rewrite variable V's current-row DEFINE predicate for Catalyst:
+    * strip V's OWN qualifier (`V.c` denotes the current row). Callers
+    * route predicates naming another variable to [[MrPredicate]]
+    * first ([[MrPredicate.needsInterpreter]]). Scans and strips
     * literal-aware, so a 'B.foo' inside a string constant is never
     * touched. */
-  private[graft] def rewriteDefinePred(v: String, pred0: String,
-      vars: Seq[String]): String = {
+  private[graft] def rewriteDefinePred(v: String, pred0: String): String = {
     val masked = SqlText.mask(pred0)
-    def qualMatches(name: String): Iterator[scala.util.matching.Regex.Match] = {
-      val re = ("(?i)(?<![A-Za-z0-9_])" +
-        java.util.regex.Pattern.quote(name) + "\\s*\\.").r
-      re.findAllMatchIn(pred0).filterNot(m => masked(m.start))
-    }
-    vars.filterNot(_.equalsIgnoreCase(v)).foreach { other =>
-      if (qualMatches(other).nonEmpty)
-        fail(s"DEFINE $v references pattern variable $other " +
-          s"(e.g. $other.col) — cross-variable references are not " +
-          "available on the flag-only streaming face; batch queries " +
-          "evaluate them in the matcher, and the streaming " +
-          "matchRecognizeRows face (buffered row values) supports " +
-          "them over a stream")
-    }
+    val re = ("(?i)(?<![A-Za-z0-9_])" +
+      java.util.regex.Pattern.quote(v) + "\\s*\\.").r
     val sb = new StringBuilder
     var last = 0
-    qualMatches(v).foreach { m =>
+    re.findAllMatchIn(pred0).filterNot(m => masked(m.start)).foreach { m =>
       sb.append(pred0.substring(last, m.start)); last = m.end
     }
     sb.append(pred0.substring(last))
@@ -755,9 +740,8 @@ object MatchRecognize {
       val navved = rewriteNav(v, pred0)
       if (!MrPredicate.needsInterpreter(navved, others))
         // own qualifier (V.c = the current row) stripped, full SQL
-        // surface via expr(); rewriteDefinePred's foreign-var rejection
-        // is unreachable here (the detection above routed those away)
-        simpleDefs(v) = rewriteDefinePred(v, navved, allVarNames)
+        // surface via expr()
+        simpleDefs(v) = rewriteDefinePred(v, navved)
       else
         crossAsts(v) = MrPredicate.parse(navved, v, allVarNames)
     }
@@ -790,20 +774,13 @@ object MatchRecognize {
       }
     val w = Window.partitionBy(spec.partitionBy.map(col): _*)
       .orderBy(orderColumns: _*)
-    var prepared = df
-    navCols.foreach { case (isPrev, c, n) =>
-      prepared = prepared.withColumn(navColName(isPrev, c, n),
+    val lagged = navCols.foldLeft(df) { case (d, (isPrev, c, n)) =>
+      d.withColumn(navColName(isPrev, c, n),
         (if (isPrev) lag(col(c), n) else lead(col(c), n)).over(w))
     }
-    varNames.foreach { v =>
-      // cross-variable defines evaluate in the matcher; their flag
-      // column is a constant TRUE so the scan shape stays uniform
-      val flag = simpleDefs.get(v)
-        .map(p => expr(p).cast("boolean"))
-        .getOrElse(lit(true)) // undefined variable matches any row
-      prepared = prepared.withColumn(DefPrefix + v,
-        coalesce(flag, lit(false))) // NULL predicate = no match (SQL semantics)
-    }
+    // cross-variable defines evaluate in the matcher; their flag column
+    // is a constant TRUE so the scan shape stays uniform
+    val prepared = withFlags(lagged, varNames, simpleDefs.get)
     // 2. ONE shuffle on the partition keys + secondary sort — rows of a
     //    key group arrive contiguous and ordered inside each partition
     val sortCols = spec.partitionBy.map(col) ++ orderColumns
@@ -834,15 +811,6 @@ object MatchRecognize {
       (if (spec.allRows) inputCols else spec.partitionBy)
         .map(inSchema.fieldIndex)
     val partIdx = spec.partitionBy.map(inSchema.fieldIndex)
-    val orderIdx = spec.orderBy.map(inSchema.fieldIndex)
-    val flagIdx: Map[String, Int] =
-      varNames.map(v => v -> inSchema.fieldIndex(DefPrefix + v)).toMap
-    val measureIdx: Seq[MeasureExec] = measureExecs
-    val pattern = spec.pattern
-    val skip = spec.skip
-    val allRows = spec.allRows
-    val withUnmatched = spec.withUnmatched
-    val subsetMap = spec.subsets.toMap
     // bind the cross-variable ASTs' column references to the scan
     // schema (current-row columns AND the lag/lead nav columns exist
     // there) — resolution errors surface at plan time, not mid-scan
@@ -857,7 +825,8 @@ object MatchRecognize {
             s"(got ${dt.simpleString}); add a comparison")
         v -> resolved
       }.toMap
-    val omitEmpty = spec.omitEmpty
+    val matcher = new GroupMatcher(spec, keyIdx, flagIdx(varNames, inSchema),
+      crossPreds, measureExecs)
     // Skew insurance at 100 TB: the operator buffers ONE partition-key
     // group in memory (Trino's operator has the identical bound), so a
     // pathologically hot key (one user with 10^8 events) would pressure
@@ -867,11 +836,26 @@ object MatchRecognize {
       .get("spark.graft.matchRecognize.maxGroupRows", "10000000").toInt
     val enc = org.apache.spark.sql.Encoders.row(outSchema)
     arranged.mapPartitions { it =>
-      new MatchIterator(it, partIdx, keyIdx, flagIdx, pattern, measureIdx,
-        skip, allRows, withUnmatched, subsetMap, crossPreds, omitEmpty,
-        maxGroupRows)
+      new MatchIterator(it, partIdx, matcher, maxGroupRows)
     }(enc)
   }
+
+  /** Each pattern variable's index in `schema`: the boolean column
+    * `withFlags` added for it. */
+  private[graft] def flagIdx(vars: Seq[String], schema: StructType): Map[String, Int] =
+    vars.map(v => v -> schema.fieldIndex(DefPrefix + v)).toMap
+
+  /** `df` plus one boolean column per pattern variable: its Catalyst
+    * DEFINE (`simpleDefs`, by variable) coalesced to false, or TRUE for
+    * a variable without one there (undefined, or evaluated in the
+    * matcher). */
+  private[graft] def withFlags(df: DataFrame, vars: Seq[String],
+      simpleDefs: String => Option[String]): DataFrame =
+    vars.foldLeft(df) { (d, v) =>
+      d.withColumn(DefPrefix + v, coalesce( // NULL predicate = no match
+        simpleDefs(v).map(p => expr(p).cast("boolean")).getOrElse(lit(true)),
+        lit(false)))
+    }
 
   /** Resolved execution form of one measure: field index instead of
     * name, output type attached for the aggregate fold, the resolved
@@ -913,152 +897,6 @@ object MatchRecognize {
         m.offset, f.dataType, m.finalSem, m.ast)
     }
     (execs, fields)
-  }
-
-  /** ONE-ROW-PER-MATCH measure evaluation over a COMPLETED match —
-    * shared by the batch iterator's emitOne and the streaming measures
-    * face ([[graft.streaming.Streams]] matchRecognizeRows). `assigned`
-    * is the matcher's reverse-order assignment list (exclusion marks
-    * intact — excluded rows still feed navigation/aggregates);
-    * `membersOf` expands a SUBSET name to its member variables. */
-  private[graft] def oneRowMeasureValues(g: Array[Row],
-      assigned: List[(Int, String)], start: Int, end: Int, matchNo: Long,
-      measures: Seq[MeasureExec],
-      membersOf: String => Seq[String],
-      // expression measures compiled once per task by the batch
-      // iterator (index-aligned with `measures`, null slots for
-      // non-MExpr); null = compile-free callers (streaming) fall back
-      // to the interpreted eval — identical semantics
-      compiled: Array[MrPredicate.Ctx => Any] = null): Array[Any] = {
-    // ascending row order; exclusion marks stripped
-    val asc = assigned.reverse.map { case (r, v) => (r, stripExcl(v)) }
-    val byVar = asc.groupBy(_._2).map { case (k, l) => k -> l.map(_._1) }
-    // "" = the universal variable (every matched row); a subset name
-    // expands to the sorted union of its members' rows
-    def varRows(v: String): Seq[Int] =
-      if (v.isEmpty) asc.map(_._1)
-      else membersOf(v) match {
-        case Seq(one) => byVar.getOrElse(one, Nil)
-        case ms => ms.flatMap(m => byVar.getOrElse(m, Nil)).sorted
-      }
-    measures.zipWithIndex.map { case (MeasureExec(kind, v, cIdx, off, dt, _, ast), mi) =>
-      kind match {
-        case MFirst =>
-          varRows(v).lift(off).map(r => g(r).get(cIdx)).orNull
-        case MLast  =>
-          val l = varRows(v)
-          l.lift(l.length - 1 - off).map(r => g(r).get(cIdx)).orNull
-        case MCountVar    => varRows(v).length.toLong
-        case MCountStar   => (end - start).toLong
-        case MMatchNumber => matchNo
-        case MClassifier  => // last row's var, mark-stripped; with an
-          // argument, the last row mapped to that variable/SUBSET
-          if (v.isEmpty) assigned.headOption.map(a => stripExcl(a._2)).orNull
-          else {
-            val ms = membersOf(v).map(_.toLowerCase).toSet
-            asc.reverseIterator.find(p => ms(p._2.toLowerCase))
-              .map(_._2).orNull
-          }
-        case MSum | MAvg | MMin | MMax =>
-          aggOver(kind, dt, varRows(v).map(r => g(r).get(cIdx)))
-        case MExpr => // FINAL: the whole match; unqualified cols = last row
-          val ctx = new MrPredicate.MatchCtx(g, asc,
-            if (asc.isEmpty) -1 else asc.last._1, membersOf)
-          MrPredicate.coerce(
-            if (compiled != null && compiled(mi) != null) compiled(mi)(ctx)
-            else MrPredicate.eval(ast.get, ctx), dt)
-      }
-    }.toArray
-  }
-
-  /** ALL-ROWS-PER-MATCH measure evaluation over a COMPLETED match —
-    * the per-row (RUNNING-default) twin of [[oneRowMeasureValues]],
-    * extracted from the batch iterator's emitAll so the streaming
-    * values face emits IDENTICAL rows. Returns (rowIndex,
-    * measureValues) for each non-excluded matched row, ascending; an
-    * excluded row updates the RUNNING state but yields nothing. */
-  private[graft] def allRowsMeasureValues(g: Array[Row],
-      assigned: List[(Int, String)], matchNo: Long,
-      measures: Seq[MeasureExec],
-      membersOf: String => Seq[String],
-      // see oneRowMeasureValues — null = interpreted-eval fallback
-      compiled: Array[MrPredicate.Ctx => Any] = null): Seq[(Int, Array[Any])] = {
-    val ascRaw = assigned.reverse // ascending row order, marks intact
-    val asc = ascRaw.map { case (r, v) => (r, stripExcl(v)) }
-    // whole-match structures for FINAL-prefixed measures
-    val fullByVar = asc.groupBy(_._2).map { case (k, l) => k -> l.map(_._1) }
-    val fullAll = asc.map(_._1)
-    val total = asc.length.toLong
-    val rowsOf = scala.collection.mutable
-      .HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-    val allSoFar = scala.collection.mutable.ArrayBuffer.empty[Int]
-    // ascending (row, strippedVar) prefix for RUNNING expression
-    // measures — an immutable Vector so each row's snapshot is O(1)
-    // structural sharing, not an O(n) copy per output row
-    var soFarPairs = Vector.empty[(Int, String)]
-    var seen = 0L
-    ascRaw.flatMap { case (rowI, rawName) =>
-      // an excluded row updates the RUNNING state (it is part of the
-      // match) but produces no output row
-      val excluded = rawName.nonEmpty && rawName.charAt(0) == ExclMark
-      val varName = stripExcl(rawName)
-      rowsOf.getOrElseUpdate(varName,
-        scala.collection.mutable.ArrayBuffer.empty[Int]) += rowI
-      allSoFar += rowI
-      soFarPairs :+= ((rowI, varName))
-      seen += 1L
-      if (excluded) None else {
-      val vals = new Array[Any](measures.length)
-      measures.zipWithIndex.foreach { case (MeasureExec(kind, v, cIdx, off, dt, fin, ast), mi) =>
-        // RUNNING (the ALL-mode default): state as of this row;
-        // FINAL: the whole match on every row. "" = universal;
-        // subset names expand to the union of their members' rows.
-        def varRows: Seq[Int] =
-          if (v.isEmpty) { if (fin) fullAll else allSoFar.toSeq }
-          else membersOf(v) match {
-            case Seq(one) =>
-              if (fin) fullByVar.getOrElse(one, Nil)
-              else rowsOf.get(one).map(_.toSeq).getOrElse(Nil)
-            case ms =>
-              if (fin) ms.flatMap(m => fullByVar.getOrElse(m, Nil)).sorted
-              else ms.flatMap(m =>
-                rowsOf.get(m).map(_.toSeq).getOrElse(Nil)).sorted
-          }
-        vals(mi) = kind match {
-          case MFirst => varRows.lift(off)
-            .map(r => g(r).get(cIdx)).orNull
-          case MLast  =>
-            val l = varRows
-            l.lift(l.length - 1 - off).map(r => g(r).get(cIdx)).orNull
-          case MCountVar    => varRows.length.toLong
-          case MCountStar   => if (fin) total else seen
-          case MMatchNumber => matchNo
-          case MClassifier  =>
-            // RUNNING (CLASSIFIER takes no FINAL prefix — rejected at
-            // parse, as in Trino): this row's own variable; with an
-            // argument, the last row mapped to it so far
-            if (v.isEmpty) varName
-            else {
-              val ms = membersOf(v).map(_.toLowerCase).toSet
-              soFarPairs.reverseIterator.find(p => ms(p._2.toLowerCase))
-                .map(_._2).orNull
-            }
-          case MSum | MAvg | MMin | MMax =>
-            aggOver(kind, dt, varRows.map(r => g(r).get(cIdx)))
-          case MExpr =>
-            // RUNNING (default): rows so far, unqualified cols = this
-            // row; FINAL: the whole match, cols = its last row
-            val ctx =
-              if (fin) new MrPredicate.MatchCtx(g, asc, asc.last._1, membersOf)
-              else new MrPredicate.MatchCtx(g, soFarPairs, rowI, membersOf)
-            MrPredicate.coerce(
-              if (compiled != null && compiled(mi) != null) compiled(mi)(ctx)
-              else MrPredicate.eval(ast.get, ctx), dt)
-        }
-      }
-      Some((rowI, vals))
-      }
-    }
   }
 
   /** Output type of SUM(c): integral → bigint (Trino's widening),
@@ -1113,12 +951,6 @@ object MatchRecognize {
     }
   }
 
-  /** The backtracking engine itself, over an abstract flag relation —
-    * shared by the batch iterator and the streaming CEP face
-    * ([[graft.streaming.Streams]] matchRecognizeStream). Returns
-    * (endExclusive, assignments-in-reverse) of the PREFERRED match
-    * starting at `start`, or null: quantifiers greedy, alternation
-    * leftmost — Trino's preference order. */
   /** Assignments inside a `{- … -}` exclusion carry this prefix on the
     * variable name: the row is part of the match (measures/navigation
     * see it after stripping) but ALL-ROWS output skips it. */
@@ -1126,16 +958,15 @@ object MatchRecognize {
   private[graft] def stripExcl(v: String): String =
     if (v.nonEmpty && v.charAt(0) == ExclMark) v.substring(1) else v
 
-  /** AFTER MATCH resume index — shared by the batch iterator and both
-    * streaming faces so the skip semantics can never drift: PAST LAST
-    * consumes the match; TO NEXT ROW resumes right after the match
-    * START (overlap allowed); TO [FIRST|LAST] v resumes AT that row of
-    * the match (Trino raises when the target is the match start —
-    * infinite loop — or the variable unmatched). Every mode returns an
-    * index strictly greater than `start`, which is what lets the
-    * streaming faces keep their retention rule (rows before the next
-    * attempt index are droppable — matches only extend forward). */
-  private[graft] def resumeIndex(skip: SkipMode, start: Int, end: Int,
+  /** AFTER MATCH resume index: PAST LAST consumes the match; TO NEXT
+    * ROW resumes right after the match START (overlap allowed); TO
+    * [FIRST|LAST] v resumes AT that row of the match (Trino raises when
+    * the target is the match start — infinite loop — or the variable
+    * unmatched). Every mode returns an index strictly greater than
+    * `start`, which is what lets the streaming face keep its retention
+    * rule (rows before the next attempt index are droppable — matches
+    * only extend forward). */
+  private def resumeIndex(skip: SkipMode, start: Int, end: Int,
       assigned: List[(Int, String)],
       membersOf: String => Seq[String]): Int = skip match {
     case SkipPastLast => end
@@ -1154,14 +985,13 @@ object MatchRecognize {
       target
   }
 
-  private[graft] def matchFlags(pattern: Pat, n: Int,
-      flag: (Int, String) => Boolean, start: Int): (Int, List[(Int, String)]) =
-    matchFlagsCtx(pattern, n, (i, v, _) => flag(i, v), start)
-
-  /** Assignment-aware variant: `flag` additionally receives the
-    * in-flight assignment list (reverse order, exclusion marks intact)
-    * so cross-variable DEFINE predicates can navigate the rows mapped
-    * so far in THIS hypothesis — backtracking re-tests a row with the
+  /** The backtracking engine: (endExclusive, assignments in reverse
+    * order, exclusion marks intact) of the PREFERRED match starting at
+    * `start` over rows [0, n), or null. Preference: quantifiers greedy
+    * (reluctant ones lazy), alternation leftmost — Trino's order.
+    * `flag` also receives the in-flight assignment list so
+    * cross-variable DEFINE predicates can navigate the rows mapped so
+    * far in THIS hypothesis — backtracking re-tests a row with the
     * assignment state of each alternative, as SQL:2016 requires. */
   private[graft] def matchFlagsCtx(pattern: Pat, n: Int,
       flag: (Int, String, List[(Int, String)]) => Boolean,
@@ -1206,39 +1036,250 @@ object MatchRecognize {
     go(pattern, start, Nil, (j, a) => (j, a), excl = false)
   }
 
-  /** Streams one partition-key GROUP at a time out of the sorted
-    * partition iterator, runs leftmost-greedy matching with SKIP PAST
-    * LAST ROW, emits one output row per match. */
-  private class MatchIterator(rows: Iterator[Row], partIdx: Seq[Int],
-      outIdx: Seq[Int], flagIdx: Map[String, Int], pattern: Pat,
-      measures: Seq[MeasureExec], skip: SkipMode,
-      allRows: Boolean, withUnmatched: Boolean = false,
-      subsets: Map[String, Seq[String]] = Map.empty,
-      crossPreds: Map[String, MrPredicate.Node] = Map.empty,
-      omitEmpty: Boolean = false, maxGroupRows: Int = Int.MaxValue)
-      extends Iterator[Row] {
+  /** The one start → match → emit → resume loop over a partition-key
+    * group, shared by the batch operator ([[MatchIterator]], every row
+    * sealed) and the streaming face
+    * ([[graft.streaming.Streams.matchRecognizeRows]], sealed up to its
+    * watermark and horizon), so the two cannot drift.
+    *
+    * A group row carries its input columns and, at `flagIdx(v)`, the
+    * Catalyst flag of each pattern variable's current-row DEFINE
+    * ([[withFlags]]); `crossPreds` are the DEFINEs evaluated against
+    * the in-flight assignment. An output row is the `outIdx` columns of
+    * its row (the match start in ONE ROW PER MATCH, each matched row in
+    * ALL ROWS PER MATCH), then the measures.
+    *
+    * The cross-variable DEFINEs and expression measures are compiled to
+    * closure trees once per deserialized copy — once per task on an
+    * executor: the ASTs are what serialize, never the closures. */
+  private[graft] final class GroupMatcher(spec: Spec, outIdx: Seq[Int],
+      flagIdx: Map[String, Int], crossPreds: Map[String, MrPredicate.Node],
+      measures: Seq[MeasureExec]) extends Serializable {
+
+    @transient private lazy val preds: Map[String, MrPredicate.Ctx => Boolean] =
+      crossPreds.map { case (v, ast) => v -> MrPredicate.compileBool(ast) }
+    @transient private lazy val compiled: Array[MrPredicate.Ctx => Any] =
+      measures.map(m => m.ast.map(MrPredicate.compile).orNull).toArray
 
     /** Real variables a measure/skip target stands for: a subset name
       * expands to its members, anything else to itself. Case-insensitive
       * (SQL identifier semantics — a DEFINE may spell a SUBSET name in
       * any case). */
     private def membersOf(v: String): Seq[String] =
-      subsets.collectFirst {
+      spec.subsets.collectFirst {
         case (k, ms) if k.equalsIgnoreCase(v) => ms
       }.getOrElse(Seq(v))
+
+    private def flag(g: Array[Row], i: Int, v: String,
+        acc: List[(Int, String)]): Boolean = {
+      val fi = flagIdx(v)
+      !g(i).isNullAt(fi) && g(i).getBoolean(fi) && (preds.get(v) match {
+        case Some(pred) => pred(new MrPredicate.RowCtx(g, i, v, acc, membersOf))
+        case None => true
+      })
+    }
+
+    /** Scan group `g` from start row `from`, numbering matches from
+      * `matchNo` and handing each output row to `out`. `bound(i)` is
+      * (end, closed) for an attempt starting at row i: it reads rows
+      * [i, end) only, and `closed` says no later row can join it. An
+      * open attempt that reaches `end` — matched or not — is
+      * undecided (a later row could extend or alter the preferred
+      * match), and the scan stops there. Returns the first undecided
+      * start (g.length when none) and the next match number. */
+    def scan(g: Array[Row], from: Int, matchNo: Long,
+        bound: Int => (Int, Boolean), out: Row => Unit): (Int, Long) = {
+      var i = from
+      var mn = matchNo
+      while (i < g.length) {
+        val (end, closed) = bound(i)
+        var probed = false
+        val m = matchFlagsCtx(spec.pattern, if (closed) end else end + 1,
+          (j, v, acc) =>
+            if (j >= end) { probed = true; false } else flag(g, j, v, acc), i)
+        if (probed && !closed) return (i, mn)
+        if (m == null) {
+          // WITH UNMATCHED ROWS (SKIP PAST LAST ROW only: matches are
+          // disjoint, so a dead scan position is exactly an unmatched
+          // row): the row with every measure NULL, as in Trino
+          if (spec.withUnmatched) out(row(g, i, new Array[Any](measures.length)))
+          i += 1
+        } else if (m._2.isEmpty) {
+          // EMPTY match (nullable pattern; greedy preference already
+          // tried every non-empty alternative first): one output row in
+          // ONE-ROW mode and in ALL-ROWS SHOW (suppressed by OMIT EMPTY
+          // MATCHES); consumes nothing, so the scan always resumes at
+          // the NEXT row (SQL:2016's empty-match rule, regardless of
+          // AFTER MATCH SKIP mode)
+          if (!spec.allRows || !spec.omitEmpty) out(row(g, i, emptyMeasures(g, mn)))
+          mn += 1
+          i += 1
+        } else {
+          if (spec.allRows)
+            allRowsMeasures(g, m._2, mn).foreach { case (r, vals) => out(row(g, r, vals)) }
+          else out(row(g, i, oneRowMeasures(g, m._2, i, m._1, mn)))
+          mn += 1
+          i = resumeIndex(spec.skip, i, m._1, m._2, membersOf)
+        }
+      }
+      (g.length, mn)
+    }
+
+    /** The `outIdx` columns of row `r`, then `mvals`. */
+    private def row(g: Array[Row], r: Int, mvals: Array[Any]): Row = {
+      val vals = new Array[Any](outIdx.length + mvals.length)
+      outIdx.indices.foreach(k => vals(k) = g(r).get(outIdx(k)))
+      System.arraycopy(mvals, 0, vals, outIdx.length, mvals.length)
+      Row.fromSeq(vals.toIndexedSeq)
+    }
+
+    /** An EMPTY match's measures: navigation, CLASSIFIER() and
+      * aggregates are NULL over the empty set, COUNT is 0,
+      * MATCH_NUMBER() is assigned (SQL:2016 / Trino). */
+    private def emptyMeasures(g: Array[Row], matchNo: Long): Array[Any] =
+      measures.zipWithIndex.map { case (m, mi) =>
+        m.kind match {
+          case MCountVar | MCountStar => 0L
+          case MMatchNumber => matchNo
+          case MExpr => MrPredicate.coerce(compiled(mi)(
+            new MrPredicate.MatchCtx(g, Nil, -1, membersOf)), m.dt)
+          case _ => null
+        }
+      }.toArray
+
+    /** ONE ROW PER MATCH: FINAL semantics over the whole match.
+      * `assigned` is the matcher's reverse-order assignment list
+      * (exclusion marks intact — excluded rows still feed
+      * navigation/aggregates). */
+    private def oneRowMeasures(g: Array[Row], assigned: List[(Int, String)],
+        start: Int, end: Int, matchNo: Long): Array[Any] = {
+      // ascending row order; exclusion marks stripped
+      val asc = assigned.reverse.map { case (r, v) => (r, stripExcl(v)) }
+      val byVar = asc.groupBy(_._2).map { case (k, l) => k -> l.map(_._1) }
+      // "" = the universal variable (every matched row); a subset name
+      // expands to the sorted union of its members' rows
+      def varRows(v: String): Seq[Int] =
+        if (v.isEmpty) asc.map(_._1)
+        else membersOf(v) match {
+          case Seq(one) => byVar.getOrElse(one, Nil)
+          case ms => ms.flatMap(m => byVar.getOrElse(m, Nil)).sorted
+        }
+      measures.zipWithIndex.map { case (MeasureExec(kind, v, cIdx, off, dt, _, _), mi) =>
+        kind match {
+          case MFirst =>
+            varRows(v).lift(off).map(r => g(r).get(cIdx)).orNull
+          case MLast  =>
+            val l = varRows(v)
+            l.lift(l.length - 1 - off).map(r => g(r).get(cIdx)).orNull
+          case MCountVar    => varRows(v).length.toLong
+          case MCountStar   => (end - start).toLong
+          case MMatchNumber => matchNo
+          case MClassifier  => // last row's var, mark-stripped; with an
+            // argument, the last row mapped to that variable/SUBSET
+            if (v.isEmpty) assigned.headOption.map(a => stripExcl(a._2)).orNull
+            else {
+              val ms = membersOf(v).map(_.toLowerCase).toSet
+              asc.reverseIterator.find(p => ms(p._2.toLowerCase))
+                .map(_._2).orNull
+            }
+          case MSum | MAvg | MMin | MMax =>
+            aggOver(kind, dt, varRows(v).map(r => g(r).get(cIdx)))
+          case MExpr => // FINAL: the whole match; unqualified cols = last row
+            MrPredicate.coerce(compiled(mi)(new MrPredicate.MatchCtx(g, asc,
+              if (asc.isEmpty) -1 else asc.last._1, membersOf)), dt)
+        }
+      }.toArray
+    }
+
+    /** ALL ROWS PER MATCH: (rowIndex, measures) for each non-excluded
+      * matched row, ascending, measures in RUNNING semantics (state as
+      * of that row) unless FINAL-prefixed, CLASSIFIER() = the row's own
+      * variable — Trino's ALL-mode defaults. An excluded row updates the
+      * RUNNING state but yields nothing. */
+    private def allRowsMeasures(g: Array[Row], assigned: List[(Int, String)],
+        matchNo: Long): Seq[(Int, Array[Any])] = {
+      val ascRaw = assigned.reverse // ascending row order, marks intact
+      val asc = ascRaw.map { case (r, v) => (r, stripExcl(v)) }
+      // whole-match structures for FINAL-prefixed measures
+      val fullByVar = asc.groupBy(_._2).map { case (k, l) => k -> l.map(_._1) }
+      val fullAll = asc.map(_._1)
+      val total = asc.length.toLong
+      val rowsOf = scala.collection.mutable
+        .HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
+      val allSoFar = scala.collection.mutable.ArrayBuffer.empty[Int]
+      // ascending (row, strippedVar) prefix for RUNNING expression
+      // measures — an immutable Vector so each row's snapshot is O(1)
+      // structural sharing, not an O(n) copy per output row
+      var soFarPairs = Vector.empty[(Int, String)]
+      var seen = 0L
+      ascRaw.flatMap { case (rowI, rawName) =>
+        val excluded = rawName.nonEmpty && rawName.charAt(0) == ExclMark
+        val varName = stripExcl(rawName)
+        rowsOf.getOrElseUpdate(varName,
+          scala.collection.mutable.ArrayBuffer.empty[Int]) += rowI
+        allSoFar += rowI
+        soFarPairs :+= ((rowI, varName))
+        seen += 1L
+        if (excluded) None else {
+        val vals = new Array[Any](measures.length)
+        measures.zipWithIndex.foreach { case (MeasureExec(kind, v, cIdx, off, dt, fin, _), mi) =>
+          // RUNNING (the ALL-mode default): state as of this row;
+          // FINAL: the whole match on every row. "" = universal;
+          // subset names expand to the union of their members' rows.
+          def varRows: Seq[Int] =
+            if (v.isEmpty) { if (fin) fullAll else allSoFar.toSeq }
+            else membersOf(v) match {
+              case Seq(one) =>
+                if (fin) fullByVar.getOrElse(one, Nil)
+                else rowsOf.get(one).map(_.toSeq).getOrElse(Nil)
+              case ms =>
+                if (fin) ms.flatMap(m => fullByVar.getOrElse(m, Nil)).sorted
+                else ms.flatMap(m =>
+                  rowsOf.get(m).map(_.toSeq).getOrElse(Nil)).sorted
+            }
+          vals(mi) = kind match {
+            case MFirst => varRows.lift(off)
+              .map(r => g(r).get(cIdx)).orNull
+            case MLast  =>
+              val l = varRows
+              l.lift(l.length - 1 - off).map(r => g(r).get(cIdx)).orNull
+            case MCountVar    => varRows.length.toLong
+            case MCountStar   => if (fin) total else seen
+            case MMatchNumber => matchNo
+            case MClassifier  =>
+              // RUNNING (CLASSIFIER takes no FINAL prefix — rejected at
+              // parse, as in Trino): this row's own variable; with an
+              // argument, the last row mapped to it so far
+              if (v.isEmpty) varName
+              else {
+                val ms = membersOf(v).map(_.toLowerCase).toSet
+                soFarPairs.reverseIterator.find(p => ms(p._2.toLowerCase))
+                  .map(_._2).orNull
+              }
+            case MSum | MAvg | MMin | MMax =>
+              aggOver(kind, dt, varRows.map(r => g(r).get(cIdx)))
+            case MExpr =>
+              // RUNNING (default): rows so far, unqualified cols = this
+              // row; FINAL: the whole match, cols = its last row
+              val ctx =
+                if (fin) new MrPredicate.MatchCtx(g, asc, asc.last._1, membersOf)
+                else new MrPredicate.MatchCtx(g, soFarPairs, rowI, membersOf)
+              MrPredicate.coerce(compiled(mi)(ctx), dt)
+          }
+        }
+        Some((rowI, vals))
+        }
+      }
+    }
+  }
+
+  /** The batch operator over one sorted partition: streams one
+    * partition-key GROUP at a time and scans it with every row sealed. */
+  private class MatchIterator(rows: Iterator[Row], partIdx: Seq[Int],
+      matcher: GroupMatcher, maxGroupRows: Int) extends Iterator[Row] {
+
     private val buf = rows.buffered
     private val out = scala.collection.mutable.Queue.empty[Row]
-
-    // Cross-variable DEFINEs and expression measures compiled ONCE per
-    // iterator (= per task) to closure trees — the matcher evaluates a
-    // DEFINE once per row hypothesis and a measure once per mapped row,
-    // and the interpreted eval()'s per-node pattern-match dispatch was
-    // pure per-row overhead. The Node ASTs are what serialize; the
-    // closures are built executor-side here.
-    private val compiledPreds: Map[String, MrPredicate.Ctx => Boolean] =
-      crossPreds.map { case (v, ast) => v -> MrPredicate.compileBool(ast) }
-    private val compiledMeasures: Array[MrPredicate.Ctx => Any] =
-      measures.map(m => m.ast.map(MrPredicate.compile).orNull).toArray
 
     private def groupKey(r: Row): Seq[Any] = partIdx.map(r.get)
 
@@ -1276,110 +1317,11 @@ object MatchRecognize {
       g.toArray
     }
 
-    /** Backtracking matcher: returns (endExclusive, assignments) of the
-      * PREFERRED match starting at `start`, or null. Preference:
-      * quantifiers greedy, alternation leftmost — Trino's order. A
-      * variable with a cross-variable DEFINE additionally evaluates its
-      * interpreted predicate against the hypothesis' assignments. */
-    private def matchAt(g: Array[Row], start: Int): (Int, List[(Int, String)]) = {
-      def flag(i: Int, v: String, acc: List[(Int, String)]): Boolean = {
-        val fi = flagIdx(v)
-        val base = !g(i).isNullAt(fi) && g(i).getBoolean(fi)
-        base && (compiledPreds.get(v) match {
-          case Some(pred) =>
-            pred(new MrPredicate.RowCtx(g, i, v, acc, membersOf))
-          case None => true
-        })
-      }
-      matchFlagsCtx(pattern, g.length, flag, start)
-    }
-
-    /** ONE ROW PER MATCH: FINAL semantics over the whole match. */
-    private def emitOne(g: Array[Row], start: Int, end: Int,
-        assigned: List[(Int, String)], matchNo: Long): Row = {
-      val vals = new Array[Any](outIdx.length + measures.length)
-      outIdx.indices.foreach(i => vals(i) = g(start).get(outIdx(i)))
-      val mvals = oneRowMeasureValues(g, assigned, start, end, matchNo,
-        measures, membersOf, compiledMeasures)
-      mvals.indices.foreach(mi => vals(outIdx.length + mi) = mvals(mi))
-      Row.fromSeq(vals.toIndexedSeq)
-    }
-
-    /** ALL ROWS PER MATCH: one output row per MATCHED row, measures in
-      * RUNNING semantics (state as of that row), CLASSIFIER() = the
-      * row's own variable — Trino's ALL-mode defaults. */
-    private def emitAll(g: Array[Row], assigned: List[(Int, String)],
-        matchNo: Long): Seq[Row] =
-      MatchRecognize.allRowsMeasureValues(g, assigned, matchNo, measures,
-        membersOf, compiledMeasures).map { case (rowI, mvals) =>
-        val vals = new Array[Any](outIdx.length + mvals.length)
-        outIdx.indices.foreach(i => vals(i) = g(rowI).get(outIdx(i)))
-        System.arraycopy(mvals, 0, vals, outIdx.length, mvals.length)
-        Row.fromSeq(vals.toIndexedSeq)
-      }
-
-    /** An EMPTY match in ALL ROWS PER MATCH (SHOW EMPTY MATCHES): one
-      * output row carrying the site row's input columns; navigation,
-      * CLASSIFIER() and aggregates are NULL over the empty set, COUNT
-      * is 0, MATCH_NUMBER() is assigned (SQL:2016 / Trino). */
-    private def emitEmptyMatch(g: Array[Row], rowI: Int, matchNo: Long): Row = {
-      val vals = new Array[Any](outIdx.length + measures.length)
-      outIdx.indices.foreach(i => vals(i) = g(rowI).get(outIdx(i)))
-      measures.zipWithIndex.foreach { case (MeasureExec(kind, _, _, _, dt, _, ast), mi) =>
-        val slot = outIdx.length + mi
-        vals(slot) = kind match {
-          case MCountVar | MCountStar => 0L
-          case MMatchNumber => matchNo
-          case MExpr => MrPredicate.coerce(compiledMeasures(mi)(
-            new MrPredicate.MatchCtx(g, Nil, -1, membersOf)), dt)
-          case _ => null
-        }
-      }
-      Row.fromSeq(vals.toIndexedSeq)
-    }
-
-    /** WITH UNMATCHED ROWS: the row itself with every measure NULL
-      * (Trino: measures, MATCH_NUMBER() and CLASSIFIER() are all null
-      * on unmatched rows). Only reachable under SKIP PAST LAST ROW,
-      * where matches are disjoint and a non-matching scan position is
-      * exactly an unmatched row. */
-    private def emitUnmatched(g: Array[Row], rowI: Int): Row = {
-      val vals = new Array[Any](outIdx.length + measures.length)
-      outIdx.indices.foreach(i => vals(i) = g(rowI).get(outIdx(i)))
-      Row.fromSeq(vals.toIndexedSeq) // measure slots stay null
-    }
-
-    private def fill(): Unit = {
+    private def fill(): Unit =
       while (out.isEmpty && buf.hasNext) {
         val g = nextGroup()
-        var i = 0
-        var matchNo = 1L
-        while (i < g.length) {
-          val m = matchAt(g, i)
-          if (m != null && m._2.isEmpty) {
-            // EMPTY match (nullable pattern; greedy preference already
-            // tried every non-empty alternative first): one output row
-            // in ONE-ROW mode and in ALL-ROWS SHOW (suppressed by
-            // OMIT EMPTY MATCHES); consumes nothing, so the scan always
-            // resumes at the NEXT row (SQL:2016's empty-match rule,
-            // regardless of AFTER MATCH SKIP mode)
-            if (!allRows || !omitEmpty) out += emitEmptyMatch(g, i, matchNo)
-            matchNo += 1
-            i += 1
-          } else if (m != null) {
-            if (allRows) out ++= emitAll(g, m._2, matchNo)
-            else out += emitOne(g, i, m._1, m._2, matchNo)
-            matchNo += 1
-            // resume per AFTER MATCH SKIP mode (resumeIndex — shared
-            // with the streaming faces; always advances past `i`)
-            i = resumeIndex(skip, i, m._1, m._2, membersOf)
-          } else {
-            if (withUnmatched) out += emitUnmatched(g, i)
-            i += 1
-          }
-        }
+        matcher.scan(g, 0, 1L, _ => (g.length, true), r => out += r)
       }
-    }
 
     override def hasNext: Boolean = { fill(); out.nonEmpty }
     override def next(): Row = { fill(); out.dequeue() }

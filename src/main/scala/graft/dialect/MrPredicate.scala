@@ -688,7 +688,7 @@ object MrPredicate {
   /** Lower every [[PNav]] (PREV/NEXT physical navigation) onto the
     * current-row column named by `rename` — the planner registers the
     * matching window lag/lead column at the same time. Must run before
-    * [[resolve]]/[[exprType]]/[[eval]], which treat PNav as internal. */
+    * [[resolve]]/[[exprType]]/[[compile]], which treat PNav as internal. */
   def lowerPNav(n: Node, rename: (Boolean, String, Int) => String): Node =
     n match {
       case PNav(p, c, k) => Cur(rename(p, c, k))
@@ -738,7 +738,7 @@ object MrPredicate {
       def groupSize: Int = fail("internal: fold touched the group")
     }
     def fold(m: Node): Node = m match {
-      case Arith(_, _: Lit, _: Lit) | Neg(_: Lit) => Lit(eval(m, NoCtx))
+      case Arith(_, _: Lit, _: Lit) | Neg(_: Lit) => Lit(compile(m)(NoCtx))
       case other => other
     }
     n match {
@@ -993,8 +993,6 @@ object MrPredicate {
       s"${a.getClass.getSimpleName} $op ${b.getClass.getSimpleName}")
   }
 
-  /** Three-valued evaluation; a null result means UNKNOWN (the caller
-    * coalesces to no-match, SQL's WHERE semantics). */
   /** SQL aggregate fold over mapped-row values (row order): nulls
     * skipped; empty/all-null → NULL (COUNT → 0). Sums dispatch on the
     * runtime class — decimal exactly, floating as double, else long —
@@ -1021,15 +1019,14 @@ object MrPredicate {
       }
   }
 
-  /** Compile a RESOLVED AST to a closure tree — the same evaluation,
-    * with node dispatch and operator selection hoisted out of the
-    * per-row path (guide §4: the matcher evaluates a DEFINE predicate
-    * once per row HYPOTHESIS and an expression measure once per mapped
-    * row; [[eval]]'s pattern match re-dispatches every node on every
-    * evaluation). Each case body is copied from [[eval]] verbatim, so
-    * the two forms are structurally identical; MrPredicateDifferentialSpec
-    * additionally pins compile ≡ eval on the fuzz corpus. Compile on
-    * the EXECUTOR (once per MatchIterator) — the Node is what
+  /** Compile a RESOLVED AST to a closure tree: three-valued evaluation,
+    * a null result meaning UNKNOWN (the caller coalesces to no-match,
+    * SQL's WHERE semantics). Node dispatch and operator selection
+    * happen once here, not on the per-row path — the matcher evaluates
+    * a DEFINE predicate once per row HYPOTHESIS and an expression
+    * measure once per mapped row. MrPredicateDifferentialSpec pins the
+    * result to Catalyst's on its fuzz corpus. Compile on the EXECUTOR
+    * (once per [[MatchRecognize.GroupMatcher]] copy) — the Node is what
     * serializes, never the closures. */
   def compile(n: Node): Ctx => Any = n match {
     case Lit(v)  => _ => v
@@ -1064,8 +1061,10 @@ object MrPredicate {
     case Cmp(op, l, r) =>
       val cl = compile(l)
       val cr = compile(r)
-      // operator selected ONCE; cmpVals and the lazy left-first null
-      // propagation are identical to eval's Cmp case
+      // operator selected ONCE; left-first lazy null propagation, as
+      // Spark's BinaryComparison evaluates: a null LEFT operand never
+      // evaluates the right (so a zero-divisor there stays unobserved,
+      // exactly like Catalyst)
       val test: Int => Boolean = op match {
         case "="  => _ == 0
         case "<>" => _ != 0
@@ -1150,7 +1149,7 @@ object MrPredicate {
         s"${if (p) "PREV" else "NEXT"}(…$c…) reached compilation")
   }
 
-  /** Compiled twin of [[evalBool]]. */
+  /** Compile to the match decision: UNKNOWN → false. */
   def compileBool(n: Node): Ctx => Boolean = {
     val ce = compile(n)
     ctx => ce(ctx) match {
@@ -1159,107 +1158,6 @@ object MrPredicate {
       case other => fail(s"DEFINE predicate is not boolean-valued " +
         s"(got ${other.getClass.getSimpleName})")
     }
-  }
-
-  def eval(n: Node, ctx: Ctx): Any = n match {
-    case Lit(v)  => v
-    case Cur(_, idx) => ctx.cur(idx)
-    case Nav(v, _, first, off, idx) => ctx.nav(v, idx, first, off)
-    case Agg(fn, v, _, idx) => aggFold(fn, ctx.aggVals(v, idx))
-    case NavX(v, first, off, e, step) =>
-      // resolve the logical row, apply the outer physical step inside
-      // the group, then evaluate the argument AT that row
-      val r0 = ctx.navRowIdx(v, first, off)
-      if (r0 < 0) null
-      else {
-        val r = r0 + step
-        if (r < 0 || r >= ctx.groupSize) null
-        else eval(e, new PinnedCtx(ctx, r))
-      }
-    case AggX(fn, v, e) =>
-      aggFold(fn,
-        ctx.aggRowIdxs(v).map(r => eval(e, new PinnedCtx(ctx, r))))
-    case PNavX(step, e) =>
-      val a = ctx.curRowIdx
-      if (a < 0) null
-      else {
-        val r = a + step
-        if (r < 0 || r >= ctx.groupSize) null
-        else eval(e, new PinnedCtx(ctx, r))
-      }
-    case QCol(v, c) =>
-      fail(s"internal: argument-scoped column $v.$c reached evaluation")
-    case Cmp(op, l, r) =>
-      // left-first lazy null propagation, as Spark's BinaryComparison
-      // evaluates: a null LEFT operand never evaluates the right (so a
-      // zero-divisor there stays unobserved, exactly like Catalyst)
-      val a = eval(l, ctx)
-      if (a == null) return null
-      val b = eval(r, ctx)
-      if (b == null) null
-      else {
-        val c = cmpVals(a, b)
-        java.lang.Boolean.valueOf(op match {
-          case "="  => c == 0
-          case "<>" => c != 0
-          case "<"  => c < 0
-          case "<=" => c <= 0
-          case ">"  => c > 0
-          case ">=" => c >= 0
-        })
-      }
-    case Arith(op, l, r) =>
-      val a = eval(l, ctx)
-      if (a == null) return null // lazy, mirroring Spark's BinaryArithmetic
-      val b = eval(r, ctx)
-      if (b == null) null else arith(op, a, b)
-    case Neg(e) => eval(e, ctx) match {
-      case null => null
-      case b: java.math.BigDecimal => b.negate
-      case d: java.lang.Double => java.lang.Double.valueOf(-d.doubleValue)
-      case f: java.lang.Float  => java.lang.Double.valueOf(-f.doubleValue)
-      case x: Number => java.lang.Long.valueOf(Math.negateExact(x.longValue))
-      case other => fail(s"cannot negate ${other.getClass.getSimpleName}")
-    }
-    case And(l, r) =>
-      val a = eval(l, ctx)
-      if (a == java.lang.Boolean.FALSE) java.lang.Boolean.FALSE
-      else {
-        val b = eval(r, ctx)
-        if (b == java.lang.Boolean.FALSE) java.lang.Boolean.FALSE
-        else if (a == null || b == null) null
-        else java.lang.Boolean.TRUE
-      }
-    case Or(l, r) =>
-      val a = eval(l, ctx)
-      if (a == java.lang.Boolean.TRUE) java.lang.Boolean.TRUE
-      else {
-        val b = eval(r, ctx)
-        if (b == java.lang.Boolean.TRUE) java.lang.Boolean.TRUE
-        else if (a == null || b == null) null
-        else java.lang.Boolean.FALSE
-      }
-    case Not(e) => eval(e, ctx) match {
-      case null => null
-      case b: java.lang.Boolean => java.lang.Boolean.valueOf(!b.booleanValue)
-      case other => fail(s"NOT over a non-boolean in DEFINE: $other")
-    }
-    case IsNull(e, negated) =>
-      java.lang.Boolean.valueOf((eval(e, ctx) == null) != negated)
-    case PNav(p, c, _) =>
-      fail(s"internal: un-lowered ${if (p) "PREV" else "NEXT"}($c) " +
-        "reached evaluation")
-    case NestNav(p, _, c, _, _, _) =>
-      fail(s"internal: un-lowered nested " +
-        s"${if (p) "PREV" else "NEXT"}(…$c…) reached evaluation")
-  }
-
-  /** Evaluate to the match decision: UNKNOWN → false. */
-  def evalBool(n: Node, ctx: Ctx): Boolean = eval(n, ctx) match {
-    case b: java.lang.Boolean => b.booleanValue
-    case null => false
-    case other => fail(s"DEFINE predicate is not boolean-valued " +
-      s"(got ${other.getClass.getSimpleName})")
   }
 
   /** Ctx over a COMPLETED (or prefix of a) match, for expression

@@ -116,20 +116,13 @@ object TrinoFunctions {
         s"json_extract expects (json, path), got ${args.length} args")
     },
     // luhn_check(s): mod-10 checksum validation of a digit string;
-    // NULL input → NULL, non-digit content → false by default (kept
-    // total for the guarded surface). Trino RAISES on non-digit input
-    // — opt into that error parity with spark.graft.strictErrors=true
-    // (read at resolution time, baked into the plan).
+    // NULL input → NULL, non-digit content → false (Trino raises; kept
+    // total for the guarded surface)
     "luhn_check" -> {
       case Seq(s) =>
-        val strict =
-          try org.apache.spark.sql.internal.SQLConf.get
-            .getConfString("spark.graft.strictErrors", "false").toBoolean
-          catch { case _: Exception => false }
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           BinFuncs.getClass, org.apache.spark.sql.types.BooleanType,
-          if (strict) "luhnCheckStrict" else "luhnCheck",
-          Seq(Cast(s, StringType)), Seq(StringType))
+          "luhnCheck", Seq(Cast(s, StringType)), Seq(StringType))
       case args => throw new IllegalArgumentException(
         s"luhn_check expects 1 arg, got ${args.length}")
     },
@@ -4366,17 +4359,6 @@ object BinFuncs {
     * Empty or non-digit input → false (Trino raises INVALID_FUNCTION_
     * ARGUMENT; kept total here — the guarded surface maps argument
     * errors to false under try()-less usage, documented in DIALECT.md). */
-  /** Trino error parity for luhn_check (spark.graft.strictErrors):
-    * non-digit input raises like Trino's INVALID_FUNCTION_ARGUMENT
-    * instead of returning false; the empty string is false in both. */
-  def luhnCheckStrict(s: UTF8String): Boolean = {
-    val str = s.toString
-    str.foreach(c => if (!c.isDigit) throw new IllegalArgumentException(
-      s"luhn_check: input contains a non-digit character '$c' " +
-        "(strict mode, matching Trino's INVALID_FUNCTION_ARGUMENT)"))
-    luhnCheck(s)
-  }
-
   def luhnCheck(s: UTF8String): Boolean = {
     val str = s.toString
     if (str.isEmpty || !str.forall(_.isDigit)) return false

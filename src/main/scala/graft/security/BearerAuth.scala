@@ -1,10 +1,6 @@
 package graft.security
 
 import java.nio.charset.StandardCharsets
-import java.util.Base64
-
-import javax.crypto.Mac
-import javax.crypto.spec.SecretKeySpec
 
 /** Bearer-token validation for the HTTP transport's /mcp endpoint.
   *
@@ -14,10 +10,8 @@ import javax.crypto.spec.SecretKeySpec
   * All four providers are supported:
   *
   *  - `hmac`: self-contained shared-secret validation, no network.
-  *    Native format is a standard HS256 JWT (docs/jwt.md pins
-  *    HMAC-SHA256 signatures and required claims sub/exp); the
-  *    pre-r8 two-segment legacy format (`b64(payload).b64(sig)`,
-  *    payload `subject[:expiry]`) is still accepted.
+  *    The token is a standard HS256 JWT (docs/jwt.md pins HMAC-SHA256
+  *    signatures and required claims sub/exp).
   *  - `okta` / `google` / `azure`: full OIDC resource-server
   *    validation (signature via the issuer's JWKS, iss/aud/exp/nbf
   *    claims) through [[OidcValidator]]. Key material comes from
@@ -52,19 +46,11 @@ final class BearerAuth(provider: String, secret: String,
         }
     }
 
-  private def validateHmac(token: String): Either[String, Attribution.User] = {
-    if (secret.isEmpty) return Left("JWT_SECRET is not configured")
-    token.count(_ == '.') match {
-      case 2 => validateHmacJwt(token)
-      case 1 => validateHmacLegacy(token)
-      case _ => Left("invalid token format")
-    }
-  }
-
   /** Standard HS256 JWT (docs/jwt.md: HMAC-SHA256 signature; required
     * claims sub, exp). No iss/aud for the hmac provider. */
-  private def validateHmacJwt(token: String): Either[String, Attribution.User] =
-    for {
+  private def validateHmac(token: String): Either[String, Attribution.User] =
+    if (secret.isEmpty) Left("JWT_SECRET is not configured")
+    else for {
       parts <- Jwt.parse(token)
       _ <- Jwt.verifyHmac(parts, secret)
       _ <- Jwt.validateClaims(parts.payload, issuer = None, audience = None,
@@ -74,48 +60,9 @@ final class BearerAuth(provider: String, secret: String,
         if (u.subject.isEmpty) Left("token has no sub claim") else Right(u)
       }
     } yield user
-
-  private def validateHmacLegacy(token: String): Either[String, Attribution.User] =
-    token.split('.') match {
-      case Array(p64, s64) =>
-        val payload =
-          try Base64.getUrlDecoder.decode(p64)
-          catch { case _: IllegalArgumentException => return Left("invalid token encoding") }
-        val expected =
-          try Base64.getUrlDecoder.decode(s64)
-          catch { case _: IllegalArgumentException => return Left("invalid token encoding") }
-        if (!java.security.MessageDigest.isEqual(sign(payload), expected))
-          Left("invalid token signature")
-        else {
-          val subject = new String(payload, StandardCharsets.UTF_8)
-          subject.split(':') match {
-            case Array(sub, exp) if exp.forall(_.isDigit) =>
-              if (exp.toLong < nowEpochSeconds()) Left("token expired")
-              else Right(Attribution.User(subject = sub))
-            case _ => Right(Attribution.User(subject = subject))
-          }
-        }
-      case _ => Left("invalid token format")
-    }
-
-  private def sign(payload: Array[Byte]): Array[Byte] = {
-    val mac = Mac.getInstance("HmacSHA256")
-    mac.init(new SecretKeySpec(secret.getBytes(StandardCharsets.UTF_8), "HmacSHA256"))
-    mac.doFinal(payload)
-  }
 }
 
 object BearerAuth {
-  /** Mint a legacy two-segment token (tests and local tooling). */
-  def mint(secret: String, subject: String, expiry: Option[Long] = None): String = {
-    val payload = (subject + expiry.map(e => s":$e").getOrElse(""))
-      .getBytes(StandardCharsets.UTF_8)
-    val mac = Mac.getInstance("HmacSHA256")
-    mac.init(new SecretKeySpec(secret.getBytes(StandardCharsets.UTF_8), "HmacSHA256"))
-    val enc = Base64.getUrlEncoder.withoutPadding()
-    enc.encodeToString(payload) + "." + enc.encodeToString(mac.doFinal(payload))
-  }
-
   /** Mint a reference-native HS256 JWT for the hmac provider. */
   def mintJwt(secret: String, subject: String, expiry: Long,
       extraClaims: Map[String, Any] = Map.empty): String =

@@ -25,12 +25,10 @@ class QueryService(engine: Engine) {
     * end-to-end wall time. */
   final case class QueryResult(columns: Seq[String], rows: Seq[Seq[Any]],
       truncated: Boolean, queryId: String = "", wallMillis: Long = 0L) {
-    /** JSON array of objects in schema column order (the reference's
-      * exact result shape, handlers.go:83). */
-    def toJson: String =
-      Json.write(rows.map(r => scala.collection.immutable.ListMap(columns.zip(r): _*)), indent = 2)
-    /** Rows plus the query-feedback envelope Trino users expect (query
-      * id + basic stats; Trino's REST shape has id/stats/data). */
+    /** Rows — objects in schema column order, the reference's result
+      * shape (handlers.go:83) — plus the query-feedback envelope Trino
+      * users expect (query id + basic stats; Trino's REST shape has
+      * id/stats/data). */
     def toJsonWithStats: String =
       Json.write(scala.collection.immutable.ListMap(
         "queryId" -> queryId,

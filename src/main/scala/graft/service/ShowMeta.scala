@@ -4,8 +4,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace, UnresolvedTableOrView}
-import org.apache.spark.sql.catalyst.plans.logical.{DescribeRelation, LogicalPlan, ShowColumns, ShowCreateTable, ShowFunctions, ShowTables}
+import org.apache.spark.sql.catalyst.plans.logical.{DescribeRelation, LogicalPlan, ShowColumns, ShowCreateTable, ShowFunctions, ShowTables, ShowTablesExtended, ShowViews}
 import org.apache.spark.sql.execution.command.{ShowCatalogsCommand, ShowNamespacesCommand}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.engine.Engine
@@ -21,6 +22,11 @@ import graft.security.SqlAllowlist
   * spelled, one parse decides what it is. Listings come from the
   * allowlist-filtered metadata surface, so they equal the MCP tools'.
   *
+  * SHOW VIEWS and SHOW TABLE EXTENDED keep Spark's own columns, but
+  * only the rows of the names the metadata surface lists in their
+  * namespace: Spark's answer lists every session temp view in every
+  * namespace, the engine's internal `graft_src_*` relations included.
+  *
   * Two forms Spark's grammar lacks stay text rules: `SHOW COLUMNS FROM t
   * LIKE 'p'` (planned as `SHOW COLUMNS FROM t`, then filtered) and `SHOW
   * SESSION`, the engine's live session properties in Trino's five-column
@@ -34,14 +40,17 @@ object ShowMeta {
 
   /** Graft's answer to a parsed, gated SHOW/DESCRIBE plan; None for every
     * other statement, Spark-only spellings included (DESCRIBE EXTENDED,
-    * DESCRIBE QUERY, SHOW CREATE TABLE … AS SERDE, SHOW TABLE EXTENDED,
-    * SHOW SCHEMAS of a multi-part namespace, SHOW FUNCTIONS FROM ns),
+    * DESCRIBE QUERY, SHOW CREATE TABLE … AS SERDE, SHOW SCHEMAS of a
+    * multi-part namespace, SHOW FUNCTIONS FROM ns),
     * which Spark answers itself. */
   def route(engine: Engine, plan: LogicalPlan): Option[DataFrame] = plan match {
     case ShowCatalogsCommand(like) => Some(catalogs(engine, like))
     case ShowNamespacesCommand(ns, like, _) if SqlAllowlist.namespace(ns).length <= 1 =>
       Some(schemas(engine, SqlAllowlist.namespace(ns).headOption, like))
     case ShowTables(ns, like, _) => Some(tables(engine, SqlAllowlist.namespace(ns), like))
+    case ShowViews(ns, _, _) => Some(listedOnly(engine, plan, SqlAllowlist.namespace(ns)))
+    case ShowTablesExtended(ns, _, _) =>
+      Some(listedOnly(engine, plan, SqlAllowlist.namespace(ns)))
     case DescribeRelation(UnresolvedTableOrView(t, _, _), spec, false, _) if spec.isEmpty =>
       Some(describeTable(engine, t))
     case ShowColumns(UnresolvedTableOrView(t, _, _), None, _) => Some(describeTable(engine, t))
@@ -82,13 +91,29 @@ object ShowMeta {
   /** The tables of namespace `ns` (`s` or `c.s…`; empty for the
     * session's). */
   def tables(engine: Engine, ns: Seq[String], like: Option[String]): DataFrame = {
-    val (c, s) = ns match {
-      case Seq() => ("", "")
-      case Seq(s1) => ("", s1)
-      case _ => (ns.head, ns.tail.mkString("."))
-    }
+    val (c, s) = catalogSchema(ns)
     listing(engine, "Table",
       new MetadataService(engine).listTables(c, s), like)
+  }
+
+  /** Spark's answer to `plan`, a listing of namespace `ns` whose second
+    * column is a table name, keeping the rows of the names
+    * [[MetadataService.listTables]] lists there. */
+  private def listedOnly(engine: Engine, plan: LogicalPlan,
+      ns: Seq[String]): DataFrame = {
+    val answer = ColumnBridge.ofRows(engine.spark, plan)
+    val (c, s) = catalogSchema(ns)
+    val listed = new MetadataService(engine).listTables(c, s).toSet
+    frame(engine, answer.schema,
+      answer.collect().toSeq.filter(r => listed(r.getString(1))))
+  }
+
+  /** (catalog, schema) of a parsed namespace (`s` or `c.s…`); empty
+    * parts mean the session's. */
+  private def catalogSchema(ns: Seq[String]): (String, String) = ns match {
+    case Seq() => ("", "")
+    case Seq(s1) => ("", s1)
+    case _ => (ns.head, ns.tail.mkString("."))
   }
 
   private def listing(engine: Engine, colName: String, names: Seq[String],

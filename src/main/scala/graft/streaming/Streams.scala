@@ -455,30 +455,42 @@ object Streams {
       .select(col("new_id"), col("index_id"), col("jaccard"))
   }
 
-  /** A pattern match emitted by [[matchRecognizeStream]]. */
-  final case class MrMatch(user_id: Long, start_ts: Timestamp,
-      end_ts: Timestamp, n_rows: Long, match_number: Long)
+  /** One buffered row for [[matchRecognizeRows]]: event time, tiebreak
+    * id, and the row's values — the input columns, then one DEFINE flag
+    * per pattern variable (Spark external types, all Serializable). */
+  final case class MrRowV(tsMillis: Long, eventId: Long, vals: Seq[Any])
 
-  /** One buffered row: event time, tiebreak id, DEFINE flags in
-    * pattern-variable order. */
-  final case class MrRow(tsMillis: Long, eventId: Long, flags: Seq[Boolean])
-
-  /** Per-user CEP state: the sorted row buffer + the match counter. */
-  final case class MrState(rows: Seq[MrRow], matchNo: Long)
+  /** Per-user state for [[matchRecognizeRows]]. The first `ctxRows`
+    * buffered rows are CONTEXT — already matched or dead, retained only
+    * so PREV at a live attempt's start can read its true predecessors;
+    * attempts never start inside them. */
+  final case class MrStateV(rows: Seq[MrRowV], matchNo: Long,
+      ctxRows: Int = 0)
 
   /** Streaming MATCH_RECOGNIZE — the CEP face of
     * [[graft.dialect.MatchRecognize]] (what Flink calls CEP / pattern
     * streams; Trino and Spark have no streaming row-pattern surface at
-    * all). Same clause grammar, same backtracking engine
-    * (`MatchRecognize.matchFlags` — the batch and streaming faces
-    * share the matcher), restricted to the streaming-meaningful form:
-    * `PARTITION BY user_id ORDER BY ts[, event_id]`, ONE ROW PER
-    * MATCH, every AFTER MATCH SKIP mode (PAST LAST ROW / TO NEXT ROW /
-    * TO [FIRST|LAST] var — all resume strictly after the match START
-    * via the shared MatchRecognize.resumeIndex, so an emitted start is
-    * final and the retention rule is unchanged under overlap), DEFINE
-    * without PREV (lag needs a window — carry a previous-value column
-    * upstream if needed).
+    * all). Same clause grammar, and the same scan, DEFINE evaluation and
+    * measure emission as the batch operator
+    * ([[graft.dialect.MatchRecognize.GroupMatcher]]), so the two faces
+    * cannot drift: FIRST/LAST(V.c[, n]), bare V.c, COUNT(*)/COUNT(V.*),
+    * SUM/AVG/MIN/MAX over columns or expressions
+    * (`SUM(A.price * (1 - A.disc))`), expression measures,
+    * MATCH_NUMBER(), CLASSIFIER([U]); ONE ROW and ALL ROWS PER MATCH
+    * (WITH UNMATCHED ROWS too); every AFTER MATCH SKIP mode (each
+    * resumes strictly after the match START, so an emitted start is
+    * final and the retention rule holds under overlap). Cross-variable
+    * DEFINEs (`DEFINE C AS price <= A.price`), running aggregates and
+    * FIRST/LAST navigation are re-tested under each hypothesis' own
+    * assignment, as in batch. PREV (any depth, simple or composite
+    * argument, nested under FIRST/LAST) works in DEFINE: the state
+    * buffer IS the ordered partition prefix, so PREV(col, n) at buffer
+    * row j reads row j-n — the same value the batch lag() column
+    * carries. NEXT stays rejected: its target row may not have arrived.
+    * Restricted to `PARTITION BY user_id ORDER BY ts[, event_id]`
+    * ascending, without anchors, exclusions or patterns that can match
+    * empty; output = user_id + the measures (ONE ROW) or every input
+    * column + the measures (ALL ROWS), schema derived at plan time.
     *
     * `horizonSeconds` is the CEP `within` contract (Flink's
     * `Pattern.within`): a match must COMPLETE within the horizon of
@@ -488,7 +500,7 @@ object Streams {
     * horizon no greedy match could ever be emitted.
     *
     * Emission discipline (correctness under any micro-batch slicing,
-    * pinned by the batch-convergence test in StreamsSpec):
+    * pinned by the batch-convergence tests in StreamsSpec):
     *  - rows are buffered per user and processed in (ts, event_id)
     *    order; only rows at or below the WATERMARK are matched
     *    (later-arriving rows above it would change positions);
@@ -497,207 +509,21 @@ object Streams {
     *    horizon (a future row could extend or alter the preferred
     *    match); an attempt decided strictly inside sealed rows emits
     *    immediately;
-    *  - consumed and dead rows are dropped from state on every call;
-    *    an event-time timeout re-wakes the group when the oldest
-    *    pending window seals, so matches resolve without new traffic.
-    *
-    * State bound: rows within one horizon per user — the same bound
-    * Flink CEP keeps. */
-  def matchRecognizeStream(events: Dataset[Event], clause: String,
-      horizonSeconds: Long = 3600L, watermark: String = "2 hours"): Dataset[MrMatch] = {
-    import events.sparkSession.implicits._
-    import graft.dialect.MatchRecognize
-    val spec = MatchRecognize.parseClause(clause)
-    require(spec.partitionBy == Seq("user_id") &&
-      spec.orderBy.headOption.contains("ts"),
-      "matchRecognizeStream: PARTITION BY user_id ORDER BY ts[, event_id] required")
-    require(spec.orderDirs.forall(_._1),
-      "matchRecognizeStream: descending ORDER BY is not available over " +
-        "a stream (event time only moves forward)")
-    require(!spec.allRows,
-      "matchRecognizeStream: ONE ROW PER MATCH only")
-    // every AFTER MATCH SKIP mode is available: resumeIndex (shared
-    // with the batch iterator) always advances past the match START,
-    // so the buffer-retention rule (drop rows before the first
-    // undecided attempt index) holds for the overlapping modes too —
-    // later matches only extend FORWARD from their own start row.
-    val skipMode = spec.skip
-    val streamSubsets = spec.subsets.toMap
-    def streamMembersOf(v: String): Seq[String] =
-      streamSubsets.collectFirst {
-        case (k, ms) if k.equalsIgnoreCase(v) => ms
-      }.getOrElse(Seq(v))
-    require(!spec.defines.exists(d => d._2.toUpperCase.contains("PREV") ||
-        d._2.toUpperCase.contains("NEXT")),
-      "matchRecognizeStream: PREV/NEXT are not available on the " +
-        "flags-only face (state keeps booleans, not values) — use " +
-        "matchRecognizeRows, whose buffered values serve PREV directly")
-    // the batch planner routes these to the interpreted matcher, which
-    // needs row VALUES — the stream's state keeps only boolean flags,
-    // so reject with the same clear message style as the other limits
-    // (otherwise expr() would die later on an opaque AnalysisException
-    // about aggregates in a row-level projection)
-    spec.defines.foreach { case (v, pred) =>
-      require(!graft.dialect.MrPredicate.needsInterpreter(pred,
-          spec.vars.filterNot(_.equalsIgnoreCase(v)) ++ spec.subsets.map(_._1)),
-        s"matchRecognizeStream: DEFINE $v uses cross-variable references, " +
-          "FIRST/LAST navigation, or aggregates — not available over a " +
-          "stream (state keeps flags, not row values)")
-    }
-    require(!spec.hasAnchor && !spec.hasExclusion,
-      "matchRecognizeStream: ^/$ anchors and {- -} exclusions are not " +
-        "available over a stream (no partition end exists)")
-    require(!MatchRecognize.nullable(spec.pattern),
-      "matchRecognizeStream: patterns that can match empty are not " +
-        "available over a stream (every row would host an empty match, " +
-        "and the buffer-advance logic assumes progress)")
-    // the output shape is the FIXED MrMatch record (start/end ts, row
-    // count, match number) — validate that the clause's MEASURES stay
-    // inside that set instead of silently ignoring them: a caller
-    // writing MEASURES COUNT(B.*) AS n would otherwise get the total
-    // match row count as n_rows with no warning
-    spec.measures.foreach { m =>
-      import graft.dialect.MatchRecognize._
-      val ok = m.kind match {
-        case MFirst | MLast => m.colName.equalsIgnoreCase("ts") && m.offset == 0
-        case MCountStar | MMatchNumber => true
-        case _ => false
-      }
-      require(ok, "matchRecognizeStream emits the fixed MrMatch shape; " +
-        "MEASURES must be FIRST/LAST of the order column ts, COUNT(*), " +
-        s"or MATCH_NUMBER() (got: ${m.alias} = ${m.kind} " +
-        s"${if (m.varName.nonEmpty) m.varName + "." else ""}${m.colName})")
-    }
-    val vars = spec.vars
-    val pattern = spec.pattern
-    val horizonMs = horizonSeconds * 1000L
-    // DEFINE flags as Catalyst projections, exactly like the batch
-    // planner (own qualifier stripped, cross-variable references
-    // rejected — MatchRecognize.rewriteDefinePred) — the matcher
-    // consumes booleans
-    val defMap = spec.defines.map { case (v, pred0) =>
-      (v, MatchRecognize.rewriteDefinePred(v, pred0, vars))
-    }.toMap
-    val flagCols = vars.map(v =>
-      coalesce(defMap.get(v).map(p => expr(p).cast("boolean"))
-        .getOrElse(lit(true)), lit(false)))
-    val prepared = events.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        array(flagCols: _*).as("flags"))
-      .as[(Long, Timestamp, Long, Seq[Boolean])]
-
-    // one user's buffer against the current watermark → emissions,
-    // surviving buffer, and the wake-up time of the oldest pending row
-    def advance(buf0: Vector[MrRow], matchNo0: Long, wm: Long)
-        : (Seq[MrMatch], Vector[MrRow], Long, Long) = {
-      val buf = buf0.sortBy(r => (r.tsMillis, r.eventId))
-      val flagAt = (i: Int, v: String) => buf(i).flags(vars.indexOf(v))
-      val out = Seq.newBuilder[MrMatch]
-      var matchNo = matchNo0
-      var i = 0
-      var pending = -1
-      while (i < buf.length && pending < 0) {
-        if (buf(i).tsMillis > wm) pending = i // unsealed start: wait
-        else {
-          val horizonEnd = buf(i).tsMillis + horizonMs
-          val limitTs = math.min(wm, horizonEnd)
-          val windowSealed = wm >= horizonEnd
-          var b = i
-          while (b < buf.length && buf(b).tsMillis <= limitTs) b += 1
-          var hitBoundary = false
-          val m = MatchRecognize.matchFlags(pattern, b + 1,
-            (j, v) => if (j >= b) { hitBoundary = true; false }
-                      else flagAt(j, v), i)
-          val decided = windowSealed || !hitBoundary
-          if (m != null && decided) {
-            out += MrMatch(0L, new Timestamp(buf(i).tsMillis),
-              new Timestamp(buf(m._1 - 1).tsMillis),
-              (m._1 - i).toLong, matchNo)
-            matchNo += 1
-            i = MatchRecognize.resumeIndex(skipMode, i, m._1, m._2,
-              streamMembersOf)
-          } else if (decided) i += 1 // final non-match: this start is dead
-          else pending = i           // boundary-dependent: defer
-        }
-      }
-      val keepFrom = if (pending >= 0) pending else i
-      val kept = buf.drop(keepFrom)
-      val wake = kept.headOption.map(_.tsMillis + horizonMs + 1L).getOrElse(-1L)
-      (out.result(), kept, matchNo, wake)
-    }
-
-    prepared
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MrState, MrMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, rows, state) =>
-          val st = state.getOption.getOrElse(MrState(Vector.empty, 1L))
-          val buf = st.rows.toVector ++
-            rows.map(r => MrRow(r._2.getTime, r._3, r._4))
-          val wm = state.getCurrentWatermarkMs()
-          val (matches, kept, matchNo, wake) = advance(buf, st.matchNo, wm)
-          if (kept.isEmpty) {
-            // buffer drained: drop the key's state entirely (bounded
-            // state over unbounded keys beats preserving the counter —
-            // match_number restarts when a user goes idle past all
-            // pending windows; documented)
-            if (state.exists) state.remove()
-          } else {
-            state.update(MrState(kept, matchNo))
-            // re-wake when the oldest pending window seals (timeout must
-            // sit strictly above the current watermark)
-            state.setTimeoutTimestamp(math.max(wake, wm + 1L))
-          }
-          matches.iterator.map(_.copy(user_id = user))
-      }
-  }
-
-  /** One buffered row for [[matchRecognizeRows]]: event time, tiebreak
-    * id, DEFINE flags, and the row's COLUMN VALUES (Spark external
-    * types — all Serializable) so measures and interpreted DEFINEs can
-    * read them at emission. */
-  final case class MrRowV(tsMillis: Long, eventId: Long,
-      flags: Seq[Boolean], vals: Seq[Any])
-
-  /** Per-user state for [[matchRecognizeRows]]. The first `ctxRows`
-    * buffered rows are CONTEXT — already matched or dead, retained only
-    * so PREV at a live attempt's start can read its true predecessors;
-    * attempts never start inside them. */
-  final case class MrStateV(rows: Seq[MrRowV], matchNo: Long,
-      ctxRows: Int = 0)
-
-  /** Streaming MATCH_RECOGNIZE with the clause's REAL measures — the
-    * full-output sibling of [[matchRecognizeStream]] (which emits the
-    * fixed [[MrMatch]] shape from boolean flags alone). This face
-    * buffers the ROW VALUES inside the horizon too, which unlocks, per
-    * match, everything the batch ONE-ROW emitter supports:
-    * FIRST/LAST(V.c[, n]), bare V.c, COUNT(*)/COUNT(V.*),
-    * SUM/AVG/MIN/MAX over columns or expressions
-    * (`SUM(A.price * (1 - A.disc))`), expression measures,
-    * MATCH_NUMBER(), CLASSIFIER([U]) — evaluated by the SAME code as
-    * the batch path ([[graft.dialect.MatchRecognize.oneRowMeasureValues]]),
-    * so the two faces cannot drift. Interpreted DEFINEs (cross-variable
-    * references `DEFINE C AS price <= A.price`, running aggregates,
-    * FIRST/LAST navigation) work too — the matcher re-tests rows under
-    * each hypothesis' own assignment exactly as the batch matcher does.
-    * PREV (any depth, simple or composite argument, nested under
-    * FIRST/LAST) works in DEFINE: the state buffer IS the ordered
-    * partition prefix, so PREV(col, n) at buffer row j reads row j-n —
-    * the same value the batch lag() column carries; eviction keeps
-    * maxPrevDepth CONTEXT rows behind the first live attempt so those
-    * reads never truncate (a PREV-using clause therefore pins at most
-    * maxPrevDepth rows per idle user instead of dropping drained
-    * state). NEXT stays rejected: its target row may not have arrived.
-    * Emission, watermark, and `within`-horizon discipline are
-    * identical to [[matchRecognizeStream]]; output = user_id + the
-    * measure columns, schema derived from the clause at plan time.
+    *  - consumed and dead rows are dropped from state on every call,
+    *    except the deepest PREV step's worth of CONTEXT rows behind the
+    *    first live attempt; a user whose buffer drains is dropped
+    *    entirely (match_number then restarts, as bounded state over
+    *    unbounded keys requires), and an event-time timeout re-wakes the
+    *    group when the oldest pending window seals, so matches resolve
+    *    without new traffic.
     *
     * State bound: rows within one horizon per user (values included) —
-    * still Flink CEP's bound, just wider rows. */
+    * Flink CEP's bound. */
   def matchRecognizeRows(events: Dataset[Event], clause: String,
       horizonSeconds: Long = 3600L, watermark: String = "2 hours"): DataFrame = {
     import graft.dialect.{MatchRecognize, MrPredicate}
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spec = MatchRecognize.parseClause(clause)
     require(spec.partitionBy == Seq("user_id") &&
       spec.orderBy.headOption.contains("ts"),
@@ -705,24 +531,6 @@ object Streams {
     require(spec.orderDirs.forall(_._1),
       "matchRecognizeRows: descending ORDER BY is not available over " +
         "a stream (event time only moves forward)")
-    // ALL ROWS PER MATCH (r15): a decided match emits one output row
-    // per matched row — input columns + RUNNING-default measures,
-    // evaluated by the SAME extracted code as the batch emitter
-    // (MatchRecognize.allRowsMeasureValues), so the faces cannot
-    // drift. Emission/watermark discipline is unchanged: rows of a
-    // match surface only when the match is decided, exactly like the
-    // one-row face. WITH UNMATCHED ROWS rides the same discipline: the
-    // parser already restricts it to SKIP PAST LAST ROW, where matches
-    // are disjoint and a DEAD scan position is exactly an unmatched
-    // row — final the moment it is decided, because later matches only
-    // start at or after the scan frontier (the batch emitter's own
-    // argument, MatchRecognize.emitUnmatched).
-    val allRows = spec.allRows
-    val withUnmatched = spec.withUnmatched
-    // every AFTER MATCH SKIP mode — see matchRecognizeStream: the
-    // resume index always advances past the match start, so retention
-    // is unchanged under the overlapping modes
-    val skipMode = spec.skip
     require(!spec.hasAnchor && !spec.hasExclusion,
       "matchRecognizeRows: ^/$ anchors and {- -} exclusions are not " +
         "available over a stream (no partition end exists)")
@@ -733,14 +541,9 @@ object Streams {
     val inSchema = df.schema
     val vars = spec.vars
     val allVarNames = vars ++ spec.subsets.map(_._1)
-    val subsetMap = spec.subsets.toMap
-    def membersOf(v: String): Seq[String] =
-      subsetMap.collectFirst {
-        case (k, ms) if k.equalsIgnoreCase(v) => ms
-      }.getOrElse(Seq(v))
     // DEFINE classes, as in the batch planner: current-row-only →
-    // Catalyst flag projections; hypothesis-dependent → interpreted
-    // ASTs over the buffered values. Physical navigation → reject.
+    // Catalyst flag projections; hypothesis-dependent or PREV → ASTs
+    // over the buffered values. NEXT → reject.
     val simpleDefs = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val crossPreds = scala.collection.mutable.LinkedHashMap.empty[String, MrPredicate.Node]
     // Deepest PREV step across the DEFINEs: the state keeps this many
@@ -752,12 +555,9 @@ object Streams {
       val hasPhysical =
         "(?i)\\b(PREV|NEXT)\\s*\\(".r.findFirstIn(pred).isDefined
       if (!MrPredicate.needsInterpreter(pred, others) && !hasPhysical)
-        simpleDefs(v) = MatchRecognize.rewriteDefinePred(v, pred, allVarNames)
+        simpleDefs(v) = MatchRecognize.rewriteDefinePred(v, pred)
       else {
         val ast = MrPredicate.parse(pred, v, allVarNames)
-        // PREV evaluates against the buffered partition prefix (the
-        // state buffer is the ordered stream history within retention);
-        // NEXT stays rejected — its target row may not have arrived
         require(!MrPredicate.usesNextNav(ast),
           s"matchRecognizeRows: DEFINE $v uses NEXT — forward physical " +
             "navigation is not available over a stream (the target row " +
@@ -768,7 +568,7 @@ object Streams {
         require(MrPredicate.exprType(resolved, inSchema) ==
           org.apache.spark.sql.types.BooleanType,
           s"matchRecognizeRows: DEFINE $v must be a boolean predicate")
-        crossPreds(v.toLowerCase) = resolved
+        crossPreds(v) = resolved
       }
     }
     // measures: resolve ASTs, reject physical navigation, derive the
@@ -785,133 +585,64 @@ object Streams {
     }
     val (measureExecs, measureFields) =
       MatchRecognize.planMeasures(resolvedMeasures, inSchema)
+    val uidIdx = inSchema.fieldIndex("user_id")
     // ONE ROW = partition key + measures; ALL ROWS = every input
     // column + measures (the batch output contract)
-    val outSchema =
-      if (allRows)
-        org.apache.spark.sql.types.StructType(inSchema.fields ++ measureFields)
-      else org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType, nullable = false) +: measureFields)
-    val pattern = spec.pattern
+    val (outSchema, outIdx) =
+      if (spec.allRows) (StructType(inSchema.fields ++ measureFields), inSchema.indices)
+      else (StructType(StructField("user_id", LongType, nullable = false) +: measureFields),
+        Seq(uidIdx))
+    val prepared = MatchRecognize.withFlags(
+      df.withWatermark("ts", watermark), vars, simpleDefs.get)
+    val matcher = new MatchRecognize.GroupMatcher(spec, outIdx,
+      MatchRecognize.flagIdx(vars, prepared.schema), crossPreds.toMap,
+      measureExecs)
     val horizonMs = horizonSeconds * 1000L
-    val flagCols = vars.map(v =>
-      coalesce(simpleDefs.get(v).map(p => expr(p).cast("boolean"))
-        // interpreted defines evaluate in the matcher; TRUE placeholder
-        // keeps the flag array aligned with the variable order
-        .getOrElse(lit(true)), lit(false)))
-    val uidIdx = inSchema.fieldIndex("user_id")
     val tsIdx = inSchema.fieldIndex("ts")
     val eidIdx = inSchema.fieldIndex("event_id")
-    val nCols = inSchema.length
-    val prepared = df
-      .withWatermark("ts", watermark)
-      .withColumn("__mr_flags", array(flagCols: _*))
-    val crossMap = crossPreds.toMap
     implicit val stateEnc: org.apache.spark.sql.Encoder[MrStateV] =
-      org.apache.spark.sql.Encoders.javaSerialization[MrStateV]
-    implicit val outEnc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-
-    // one user's buffer vs the watermark → emitted measure rows; same
-    // discipline as matchRecognizeStream (sealed rows only, boundary
-    // probes defer until the start's horizon seals)
-    def advance(user: Long, buf0: Vector[MrRowV], matchNo0: Long,
-        ctxRows0: Int, wm: Long)
-        : (Seq[org.apache.spark.sql.Row], Vector[MrRowV], Long, Long, Int) = {
-      // context rows are the oldest (sealed below any prior watermark),
-      // so they stay a sorted prefix when new rows append
-      val buf = buf0.sortBy(r => (r.tsMillis, r.eventId))
-      val g: Array[org.apache.spark.sql.Row] =
-        buf.iterator.map(r =>
-          org.apache.spark.sql.Row.fromSeq(r.vals.toIndexedSeq)).toArray
-      val varPos = vars.zipWithIndex.map { case (v, i) => v.toLowerCase -> i }.toMap
-      def flagOf(j: Int, v: String, acc: List[(Int, String)]): Boolean =
-        crossMap.get(v.toLowerCase) match {
-          case Some(ast) => MrPredicate.evalBool(ast,
-            new MrPredicate.RowCtx(g, j, v, acc, membersOf))
-          case None => buf(j).flags(varPos(v.toLowerCase))
-        }
-      val out = Seq.newBuilder[org.apache.spark.sql.Row]
-      var matchNo = matchNo0
-      var i = ctxRows0 // attempts never start inside retained context
-      var pending = -1
-      while (i < buf.length && pending < 0) {
-        if (buf(i).tsMillis > wm) pending = i
-        else {
-          val horizonEnd = buf(i).tsMillis + horizonMs
-          val limitTs = math.min(wm, horizonEnd)
-          val windowSealed = wm >= horizonEnd
-          var b = i
-          while (b < buf.length && buf(b).tsMillis <= limitTs) b += 1
-          var hitBoundary = false
-          val m = MatchRecognize.matchFlagsCtx(pattern, b + 1,
-            (j, v, acc) => if (j >= b) { hitBoundary = true; false }
-                           else flagOf(j, v, acc), i)
-          val decided = windowSealed || !hitBoundary
-          if (m != null && decided) {
-            if (allRows)
-              MatchRecognize.allRowsMeasureValues(
-                  g, m._2, matchNo, measureExecs, membersOf)
-                .foreach { case (rowI, mvals) =>
-                  out += org.apache.spark.sql.Row.fromSeq(
-                    g(rowI).toSeq ++ mvals)
-                }
-            else {
-              val mvals = MatchRecognize.oneRowMeasureValues(
-                g, m._2, i, m._1, matchNo, measureExecs, membersOf)
-              out += org.apache.spark.sql.Row.fromSeq(
-                java.lang.Long.valueOf(user) +: mvals.toIndexedSeq)
-            }
-            matchNo += 1
-            i = MatchRecognize.resumeIndex(skipMode, i, m._1, m._2, membersOf)
-          } else if (decided) {
-            // a decided non-match under SKIP PAST LAST ROW is final:
-            // no later match can reach back to this row
-            if (allRows && withUnmatched)
-              out += org.apache.spark.sql.Row.fromSeq(
-                g(i).toSeq ++ Seq.fill[Any](measureExecs.length)(null))
-            i += 1
-          } else pending = i
-        }
-      }
-      val keepFrom = if (pending >= 0) pending else i
-      // retain maxPrevDepth context rows behind the first live attempt
-      // so PREV still reads true predecessors after eviction
-      val retainFrom = math.max(0, keepFrom - maxPrevDepth)
-      val kept = buf.drop(retainFrom)
-      val newCtx = keepFrom - retainFrom
-      val wake = kept.drop(newCtx).headOption
-        .map(_.tsMillis + horizonMs + 1L).getOrElse(-1L)
-      (out.result(), kept, matchNo, wake, newCtx)
-    }
+      Encoders.javaSerialization[MrStateV]
+    implicit val outEnc: org.apache.spark.sql.Encoder[Row] = Encoders.row(outSchema)
 
     prepared
-      .groupByKey(_.getLong(uidIdx))(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[MrStateV, org.apache.spark.sql.Row](
+      .groupByKey(_.getLong(uidIdx))(Encoders.scalaLong)
+      .flatMapGroupsWithState[MrStateV, Row](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[org.apache.spark.sql.Row],
-         state: GroupState[MrStateV]) =>
+        (_: Long, rows: Iterator[Row], state: GroupState[MrStateV]) =>
           val st = state.getOption.getOrElse(MrStateV(Vector.empty, 1L))
-          val buf = st.rows.toVector ++ rows.map { r =>
-            MrRowV(r.getTimestamp(tsIdx).getTime, r.getLong(eidIdx),
-              r.getSeq[Boolean](nCols), // __mr_flags rides after the input cols
-              (0 until nCols).map(r.get))
-          }
+          // context rows are the oldest (sealed below any prior
+          // watermark), so they stay a sorted prefix when rows append
+          val buf = (st.rows.toVector ++ rows.map(r => MrRowV(
+              r.getTimestamp(tsIdx).getTime, r.getLong(eidIdx), r.toSeq)))
+            .sortBy(r => (r.tsMillis, r.eventId))
           val wm = state.getCurrentWatermarkMs()
-          val (matches, kept, matchNo, wake, newCtx) =
-            advance(user, buf, st.matchNo, st.ctxRows, wm)
+          // an attempt reads the sealed rows within its start's
+          // horizon; once the watermark passes the horizon, no later
+          // row can join it
+          def bound(i: Int): (Int, Boolean) = {
+            val horizonEnd = buf(i).tsMillis + horizonMs
+            val limitTs = math.min(wm, horizonEnd)
+            var b = i
+            while (b < buf.length && buf(b).tsMillis <= limitTs) b += 1
+            (b, wm >= horizonEnd)
+          }
+          val out = Seq.newBuilder[Row]
+          val (keepFrom, matchNo) = matcher.scan(
+            buf.iterator.map(r => Row.fromSeq(r.vals)).toArray,
+            st.ctxRows, st.matchNo, bound, r => out += r)
+          val retainFrom = math.max(0, keepFrom - maxPrevDepth)
+          val kept = buf.drop(retainFrom)
           if (kept.isEmpty) { if (state.exists) state.remove() }
           else {
-            state.update(MrStateV(kept, matchNo, newCtx))
-            // context-only state (wake < 0) has no pending work: keep it
-            // (bounded at maxPrevDepth rows — the PREV history a future
-            // attempt may read) without an event-time wake-up; the
-            // match counter then survives the idle gap too (documented
-            // deviation from the flags face, which drops drained state)
-            if (wake >= 0) state.setTimeoutTimestamp(math.max(wake, wm + 1L))
+            state.update(MrStateV(kept, matchNo, keepFrom - retainFrom))
+            // re-wake when the oldest pending window seals (the timeout
+            // must sit strictly above the current watermark); context
+            // alone has no pending work and needs no wake-up
+            if (keepFrom < buf.length)
+              state.setTimeoutTimestamp(
+                math.max(buf(keepFrom).tsMillis + horizonMs + 1L, wm + 1L))
           }
-          matches.iterator
+          out.result().iterator
       }
   }
 }

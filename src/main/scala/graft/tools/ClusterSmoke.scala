@@ -27,16 +27,16 @@ import org.apache.spark.sql.SparkSession
 object ClusterSmoke {
   private val Queries =
     Seq("dedup_components", "dedup_minhash", "dedup_index_merge",
-      // the MATCH_RECOGNIZE matcher: its Pat AST and MatchIterator
-      // closures must serialize to executor JVMs that did not define
+      // the MATCH_RECOGNIZE matcher: its Pat AST and GroupMatcher
+      // must serialize to executor JVMs that did not define
       // them — a local[32] run never proves that
       "mr_funnel",
       // aggregate MEASURES: the aggOver fold (BigDecimal sums) runs
-      // inside the executor-side MatchIterator
+      // inside the executor-side GroupMatcher
       "mr_funnel_agg",
       // interpreted DEFINE/MEASURES paths (r13): the MrPredicate AST
       // (cross-variable refs, running aggregates, expression measures)
-      // must serialize into executor-side MatchIterators too
+      // must serialize into executor-side GroupMatchers too
       "mr_vshape", "mr_pack_runs", "mr_funnel_delta",
       // r13 second wave: nested navigation (NestNav lowered onto lag
       // columns) and expression arguments (NavX/AggX/PNavX with the

@@ -58,14 +58,6 @@ class EmptyGroupingSetsSpec extends SparkSpec {
     assert(r.head.toSeq.drop(1) == g.head.toSeq, "() row must equal the global aggregate on empty input")
   }
 
-  test("the rewrite is disabled by spark.graft.standardEmptyGroupingSets=false") {
-    spark.conf.set(EmptyGroupingSetsRule.ConfKey, "false")
-    try {
-      val r = rows("SELECT x, count(*) AS c FROM VALUES (1) t(x) WHERE x > 5 GROUP BY ROLLUP(x)")
-      assert(r.isEmpty) // vanilla Spark behavior restored
-    } finally spark.conf.unset(EmptyGroupingSetsRule.ConfKey)
-  }
-
   test("nested/derived uses still work (rollup inside a subquery with outer filter)") {
     val r = rows("SELECT * FROM (SELECT x, count(*) AS c FROM VALUES (1) t(x) WHERE x > 5 " +
       "GROUP BY ROLLUP(x)) sub WHERE c = 0")

@@ -250,32 +250,21 @@ class MatchRecognizeSpec extends SparkSpec {
         // reluctant forms map to java.util.regex's native lazy suffix
         "(?:" + toRegex(q) + ")" + suffix + (if (greedy) "" else "?")
     }
-    def randPat(depth: Int): Pat = rnd.nextInt(6) match {
-      case 0 | 1 => PVar(if (rnd.nextBoolean()) "A" else "B")
-      case 2 if depth < 3 => PCat(Seq.fill(1 + rnd.nextInt(2))(randPat(depth + 1)))
-      case 3 if depth < 3 => PAlt(Seq.fill(2)(randPat(depth + 1)))
-      case 4 if depth < 3 =>
-        val min = rnd.nextInt(3)
-        val max = if (rnd.nextBoolean()) None
-          else Some(math.max(1, min + rnd.nextInt(3)))
-        PQuant(randPat(depth + 1), min, max, greedy = rnd.nextBoolean())
-      case _ => PVar("A")
-    }
     var tested = 0
     (1 to 800).foreach { _ =>
-      val pat = MatchRecognize.normalize(randPat(0))
+      val pat = MatchRecognize.normalize(MrPatternGen.randPat(rnd))
       if (!nullablePat(pat)) {
         tested += 1
         val n = 1 + rnd.nextInt(10)
         val masks = Array.fill(n)(rnd.nextInt(4)) // bit0=A, bit1=B
         val text = masks.map(m => ('a' + m).toChar).mkString
         // our matcher, skip-past-last-row scan
-        val flag = (i: Int, v: String) =>
+        val flag = (i: Int, v: String, _: List[(Int, String)]) =>
           (masks(i) & (if (v == "A") 1 else 2)) != 0
         val ours = Seq.newBuilder[(Int, Int)]
         var i = 0
         while (i < n) {
-          val m = MatchRecognize.matchFlags(pat, n, flag, i)
+          val m = MatchRecognize.matchFlagsCtx(pat, n, flag, i)
           if (m != null) { ours += ((i, m._1)); i = m._1 } else i += 1
         }
         // java regex find() loop: leftmost, greedy, resumes at end
@@ -779,10 +768,9 @@ class MatchRecognizeSpec extends SparkSpec {
         |PATTERN (A B) DEFINE A AS ev = 'view', B AS ev <> 'A.x'""".stripMargin))
       .collect()
     assert(lit.length == 3) // every view+any pair: (1,2) (3,4) (2:1,2)
-    // the STREAMING face has no row values in state → still rejects
-    val se = intercept[IllegalArgumentException](
-      MatchRecognize.rewriteDefinePred("B", "B.price > A.price", Seq("A", "B")))
-    assert(se.getMessage.contains("cross-variable"))
+    // the Catalyst rewrite strips only the variable's own qualifier
+    assert(MatchRecognize.rewriteDefinePred("B", "B.price > 'B.x' AND b .v") ==
+      "price > 'B.x' AND v")
   }
 
   test("cross-variable DEFINE: the Trino docs V-shape with A.price cap") {

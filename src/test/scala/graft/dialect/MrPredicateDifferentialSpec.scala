@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
-/** Differential check of the MrPredicate interpreter against Catalyst
+/** Differential check of the MrPredicate interpreter (its compiled
+  * closure trees, the form the matcher runs) against Catalyst
   * on their SHARED surface: random boolean expressions over current-row
   * columns (no pattern navigation) must evaluate to the same
   * true/false/UNKNOWN as Spark's `expr(...)` on the same single-row
@@ -156,28 +157,15 @@ class MrPredicateDifferentialSpec extends SparkSpec {
       val resolved =
         MrPredicate.resolve(MrPredicate.parse(text, "X", Nil), schema)
       val mine: Either[String, Option[Boolean]] =
-        try MrPredicate.eval(resolved, ctxOf(row)) match {
+        try MrPredicate.compile(resolved)(ctxOf(row)) match {
           case null => Right(None)
           case b: java.lang.Boolean => Right(Some(b.booleanValue))
           case other => fail(s"non-boolean from interpreter: $other ($text)")
         } catch {
           case e: ArithmeticException => Left("arith")
         }
-      // the compiled closure tree is a third evaluator of the same AST
-      // (the batch matcher's per-task form) — must match eval exactly,
-      // error outcomes included
-      val compiledOut: Either[String, Option[Boolean]] =
-        try MrPredicate.compile(resolved)(ctxOf(row)) match {
-          case null => Right(None)
-          case b: java.lang.Boolean => Right(Some(b.booleanValue))
-          case other => fail(s"non-boolean from compiled form: $other ($text)")
-        } catch {
-          case e: ArithmeticException => Left("arith")
-        }
       assert(mine == sparkOut,
         s"case $i diverged: $text over $vals — interpreter=$mine catalyst=$sparkOut")
-      assert(compiledOut == mine,
-        s"case $i diverged: $text over $vals — compiled=$compiledOut interpreter=$mine")
       checked += 1
     }
     assert(checked == 400)

@@ -1141,6 +1141,9 @@ class TrinoFunctionsSpec extends SparkSpec {
     assert(one("SELECT luhn_check('79927398714')") == false)
     assert(one("SELECT luhn_check('4242424242424242')") == true)
     assert(one("SELECT luhn_check('not-digits')") == false)
+    // non-digit and empty input are false (Trino raises; kept total)
+    assert(one("SELECT luhn_check('7992a')") == false)
+    assert(one("SELECT luhn_check('')") == false)
     assert(one("SELECT luhn_check(CAST(NULL AS STRING))") == null)
   }
 
@@ -1810,21 +1813,6 @@ class TrinoFunctionsSpec extends SparkSpec {
     // ON EMPTY is not in json_exists's grammar
     val e2 = qs.execute("""SELECT json_exists('{}', '$.a' TRUE ON EMPTY)""")
     assert(e2.isLeft && e2.left.exists(_.contains("not part of its grammar")), e2)
-  }
-
-  test("luhn_check: strict mode raises on non-digit input like Trino") {
-    // default (total) mode: non-digit → false
-    assert(one("SELECT luhn_check('79927398713')") == true)
-    assert(one("SELECT luhn_check('79927398714')") == false)
-    assert(one("SELECT luhn_check('7992a')") == false)
-    spark.conf.set("spark.graft.strictErrors", "true")
-    try {
-      val e = qs.execute("SELECT luhn_check('7992a')")
-      assert(e.isLeft && e.left.exists(_.contains("non-digit")), e)
-      // digits still validate in strict mode; empty is false in both
-      assert(one("SELECT luhn_check('79927398713')") == true)
-      assert(one("SELECT luhn_check('')") == false)
-    } finally spark.conf.unset("spark.graft.strictErrors")
   }
 
   test("WITH TIES: function-call ORDER BY keys with literal args work") {

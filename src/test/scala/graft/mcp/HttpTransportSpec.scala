@@ -170,7 +170,8 @@ class HttpTransportSpec extends SparkSpec {
         .startsWith("""Bearer realm="OAuth""""))
       val badToken = call(Seq("Authorization" -> "Bearer bogus.token"))
       assert(badToken.statusCode() == 401)
-      val good = graft.security.BearerAuth.mint("s3cret", "alice")
+      val good = graft.security.BearerAuth.mintJwt("s3cret", "alice",
+        System.currentTimeMillis() / 1000L + 3600L)
       val ok = call(Seq("Authorization" -> s"Bearer $good"))
       assert(ok.statusCode() == 200)
     } finally t.stop(0)

@@ -8,8 +8,11 @@ class BearerAuthSpec extends AnyFunSuite {
 
   private val auth = new BearerAuth("hmac", "s3cret", () => 1_000_000L)
 
+  private def mint(secret: String, subject: String, expiry: Long = 2_000_000L) =
+    BearerAuth.mintJwt(secret, subject, expiry)
+
   test("valid token yields the subject") {
-    assert(auth.validate(Some(s"Bearer ${BearerAuth.mint("s3cret", "alice")}"))
+    assert(auth.validate(Some(s"Bearer ${mint("s3cret", "alice")}"))
       == Right("alice"))
   }
 
@@ -17,34 +20,43 @@ class BearerAuthSpec extends AnyFunSuite {
     assert(auth.validate(None) == Left("missing bearer token"))
     assert(auth.validate(Some("Basic Zm9v")) == Left("malformed Authorization header"))
     assert(auth.validate(Some("Bearer notdotted")) == Left("invalid token format"))
-    // three segments route to the JWT path now; 'a' is not valid base64url
+    // 'a' is not valid base64url
     assert(auth.validate(Some("Bearer a.b.c")) == Left("invalid token encoding"))
-    assert(auth.validate(Some("Bearer %%%.%%%")) == Left("invalid token encoding"))
+    assert(auth.validate(Some("Bearer %%%.%%%")) == Left("invalid token format"))
+  }
+
+  test("a two-segment token (payload.signature, no expiry) is refused") {
+    // a validly signed never-expiring token of the old two-segment form
+    val payload = "alice".getBytes("UTF-8")
+    val mac = javax.crypto.Mac.getInstance("HmacSHA256")
+    mac.init(new javax.crypto.spec.SecretKeySpec("s3cret".getBytes("UTF-8"), "HmacSHA256"))
+    val enc = java.util.Base64.getUrlEncoder.withoutPadding()
+    val token = enc.encodeToString(payload) + "." + enc.encodeToString(mac.doFinal(payload))
+    assert(auth.validate(Some(s"Bearer $token")) == Left("invalid token format"))
   }
 
   test("wrong secret rejected") {
-    assert(auth.validate(Some(s"Bearer ${BearerAuth.mint("other", "alice")}"))
+    assert(auth.validate(Some(s"Bearer ${mint("other", "alice")}"))
       == Left("invalid token signature"))
   }
 
   test("tampered payload rejected") {
-    val good = BearerAuth.mint("s3cret", "alice")
-    val Array(_, sig) = good.split('.')
-    val forged = java.util.Base64.getUrlEncoder.withoutPadding()
-      .encodeToString("mallory".getBytes) + "." + sig
+    val Array(header, _, sig) = mint("s3cret", "alice").split('.')
+    val Array(_, payload, _) = mint("other", "mallory").split('.')
+    val forged = s"$header.$payload.$sig"
     assert(auth.validate(Some(s"Bearer $forged")) == Left("invalid token signature"))
   }
 
   test("expiry honored when present") {
-    val live = BearerAuth.mint("s3cret", "alice", Some(2_000_000L))
-    val dead = BearerAuth.mint("s3cret", "alice", Some(999L))
+    val live = mint("s3cret", "alice", 2_000_000L)
+    val dead = mint("s3cret", "alice", 999L)
     assert(auth.validate(Some(s"Bearer $live")) == Right("alice"))
     assert(auth.validate(Some(s"Bearer $dead")) == Left("token expired"))
   }
 
   test("empty secret fails closed") {
     val noSecret = new BearerAuth("hmac", "")
-    assert(noSecret.validate(Some(s"Bearer ${BearerAuth.mint("s3cret", "alice")}"))
+    assert(noSecret.validate(Some(s"Bearer ${mint("s3cret", "alice")}"))
       == Left("JWT_SECRET is not configured"))
   }
 

@@ -205,7 +205,8 @@ class ServicesSpec extends SparkSpec {
   test("execute: JSON output is objects in schema column order") {
     val r = new QueryService(engine()).execute(
       "SELECT 1 AS b_first, 2 AS a_second").toOption.get
-    assert(r.toJson.replaceAll("\\s", "") == """[{"b_first":1,"a_second":2}]""")
+    assert(r.toJsonWithStats.replaceAll("\\s", "")
+      .endsWith(""""data":[{"b_first":1,"a_second":2}]}"""))
   }
 
   test("execute: concurrent queries run in isolated job groups") {
@@ -636,6 +637,28 @@ class ServicesSpec extends SparkSpec {
     assert(tables.execute("SHOW TABLE EXTENDED LIKE 'region'").isRight)
     assert(tables.execute("SHOW TABLE EXTENDED LIKE 're*'") ==
       Left("table access denied: spark_catalog.default.re* not in allowlist"))
+  }
+
+  test("execute: SHOW VIEWS and SHOW TABLE EXTENDED list only the tables list_tables lists") {
+    // Spark's own answers list every session temp view in every
+    // namespace, the engine's internal graft_src_* relations included
+    for (env <- Seq(Map.empty[String, String], Map(
+        "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+        "TRINO_ALLOWED_SCHEMAS" -> "spark_catalog.default"))) {
+      val e = engine(env)
+      val qs = new QueryService(e)
+      val listed = new MetadataService(e).listTables("", "").toSet
+      assert(listed.contains("region"), env)
+      for (sql <- Seq("SHOW VIEWS", "SHOW VIEWS IN default",
+          "SHOW TABLE EXTENDED LIKE '*'", "SHOW TABLE EXTENDED IN default LIKE 're*'")) {
+        val r = qs.execute(sql).fold(err => fail(s"$sql: $err"), identity)
+        val names = r.rows.map(_(1).toString)
+        assert(names.contains("region") && names.forall(listed), s"$env $sql: $names")
+        assert(!names.exists(_.startsWith("graft_src_")), s"$env $sql: $names")
+      }
+      assert(qs.execute("SHOW VIEWS").toOption.get.columns ==
+        Seq("namespace", "viewName", "isTemporary"))
+    }
   }
 
   test("execute: an IDENTIFIER(...) relation is judged and routed by its name") {

@@ -626,11 +626,13 @@ class StreamsSpec extends SparkSpec {
     val clause =
       """PARTITION BY user_id ORDER BY ts, event_id
         |MEASURES FIRST(A.ts) AS start_ts, LAST(B.ts) AS end_ts,
-        |         COUNT(*) AS n_rows
+        |         COUNT(*) AS n_rows, MATCH_NUMBER() AS mn
         |PATTERN (A B+)
         |DEFINE A AS event_type = 'view', B AS event_type = 'click'""".stripMargin
+    val flush = Seq(Event(100, ts(90), 99, "noop", 0.0),
+      Event(101, ts(95), 99, "noop", 0.0))
     val mem = MemoryStream[Event]
-    val q = Streams.matchRecognizeStream(mem.toDS(), clause,
+    val q = Streams.matchRecognizeRows(mem.toDS(), clause,
         horizonSeconds = 1800L, watermark = "10 seconds")
       .writeStream.format("memory").queryName("mr_stream")
       .outputMode("append").start()
@@ -639,64 +641,101 @@ class StreamsSpec extends SparkSpec {
       // watermark are DROPPED by the engine, as in any stateful
       // streaming op): batch 1 = both users' rows through 10:02,
       // batch 2 = the rest
-      val batch1 = mr.filter(_.ts.getTime <= ts(2).getTime)
-      val batch2 = mr.filterNot(_.ts.getTime <= ts(2).getTime)
-      mem.addData(batch1: _*)
+      mem.addData(mr.filter(_.ts.getTime <= ts(2).getTime): _*)
       q.processAllAvailable()
-      mem.addData(batch2: _*)
+      mem.addData(mr.filterNot(_.ts.getTime <= ts(2).getTime): _*)
       q.processAllAvailable()
       // push the watermark past every start's horizon so pending
       // windows seal (watermark advances one batch behind the data)
-      mem.addData(Event(100, ts(90), 99, "noop", 0.0))
-      q.processAllAvailable()
-      mem.addData(Event(101, ts(95), 99, "noop", 0.0))
-      q.processAllAvailable()
-      val streaming = spark.table("mr_stream")
-        .orderBy("user_id", "start_ts")
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1),
-          r.getTimestamp(2), r.getLong(3), r.getLong(4))).toSeq
-      // batch reference: the SAME clause through the batch matcher,
-      // match_number = per-user rank by start (emission order)
-      val batchDf = graft.dialect.MatchRecognize.run(
-        (mr :+ Event(100, ts(90), 99, "noop", 0.0)
-            :+ Event(101, ts(95), 99, "noop", 0.0)).toDF(),
-        graft.dialect.MatchRecognize.parseClause(clause))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("start_ts"))
-      val batch = batchDf
-        .withColumn("mn", row_number().over(w).cast("long"))
-        .orderBy("user_id", "start_ts")
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1),
-          r.getTimestamp(2), r.getLong(3), r.getLong(4))).toSeq
+      flush.foreach { e => mem.addData(e); q.processAllAvailable() }
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("user_id", "start_ts")
+          .collect().map(r => (r.getLong(0), r.getTimestamp(1),
+            r.getTimestamp(2), r.getLong(3), r.getLong(4))).toSeq
+      val streaming = canon(spark.table("mr_stream"))
+      // batch reference: the SAME clause through the batch matcher
+      val batch = canon(graft.dialect.MatchRecognize.run((mr ++ flush).toDF(),
+        graft.dialect.MatchRecognize.parseClause(clause)))
       assert(streaming.nonEmpty && streaming == batch, s"$streaming vs $batch")
       assert(streaming.map(_._1).toSet == Set(1L, 2L)) // dangling A absent
     } finally q.stop()
   }
 
-  test("streaming MATCH_RECOGNIZE rejects measures outside the MrMatch shape") {
-    // the stream emits the FIXED MrMatch record; a clause asking for
-    // COUNT(B.*) or a non-order column would be silently misread, so
-    // it must be rejected up front (r12 ADVICE)
-    def mk(measures: String) =
-      Streams.matchRecognizeStream(spark.emptyDataset[Streams.Event],
-        s"""PARTITION BY user_id ORDER BY ts, event_id
-           |MEASURES $measures
-           |PATTERN (A B+)
-           |DEFINE A AS event_type = 'view', B AS event_type = 'click'""".stripMargin)
-    assert(intercept[IllegalArgumentException](mk("COUNT(B.*) AS n"))
-      .getMessage.contains("MrMatch"))
-    assert(intercept[IllegalArgumentException](mk("FIRST(A.value) AS v"))
-      .getMessage.contains("MrMatch"))
-    // the supported fixed set still parses
-    mk("FIRST(A.ts) AS s, LAST(B.ts) AS e, COUNT(*) AS n, MATCH_NUMBER() AS m")
-    // cross-variable DEFINE now rejected here too (shared rewrite)
-    assert(intercept[IllegalArgumentException](
-      Streams.matchRecognizeStream(spark.emptyDataset[Streams.Event],
-        """PARTITION BY user_id ORDER BY ts
-          |MEASURES COUNT(*) AS n
-          |PATTERN (A B+)
-          |DEFINE A AS event_type = 'view', B AS value > A.value""".stripMargin))
-      .getMessage.contains("cross-variable"))
+  test("property: matchRecognizeRows over random micro-batches equals batch") {
+    // random non-nullable A/B patterns (MatchRecognizeSpec's generator)
+    // under every AFTER MATCH SKIP mode, one PREV DEFINE and one
+    // cross-variable DEFINE each; events cut into 2-4 micro-batches at
+    // random event times. The horizon outlasts the data, so every
+    // batch match completes within it and the outputs must be equal.
+    implicit val sqlCtx = spark.sqlContext
+    import graft.dialect.{MatchRecognize, MrPatternGen}
+    import graft.dialect.MatchRecognize.{PCat, PVar}
+    val rnd = new scala.util.Random(20261019L)
+    val flush = Seq(Event(10000, ts(300), 99, "noop", 0.0),
+      Event(10001, ts(305), 99, "noop", 0.0))
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.filter(col("user_id") < 90).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    var compared, matched = 0
+    while (compared < 24) {
+      val gen = MatchRecognize.normalize(MrPatternGen.randPat(rnd))
+      if (!MatchRecognize.nullable(gen)) {
+        val (prevVar, crossVar) = if (rnd.nextBoolean()) ("A", "B") else ("B", "A")
+        val target = if (rnd.nextBoolean()) "A" else "B"
+        val other = if (target == "A") "B" else "A"
+        // SKIP TO FIRST/LAST v raises when a match lacks v or v is its
+        // first row: the generated pattern is framed so neither happens
+        val (skip, framed) = rnd.nextInt(4) match {
+          case 0 => ("SKIP PAST LAST ROW", gen)
+          case 1 => ("SKIP TO NEXT ROW", gen)
+          case 2 => (s"SKIP TO FIRST $target", PCat(Seq(PVar(other), gen, PVar(target))))
+          case _ => (s"SKIP TO LAST $target", PCat(Seq(gen, PVar(target))))
+        }
+        // both variables appear, so both DEFINEs name pattern variables
+        val pat = Seq("A", "B").foldLeft(framed) { (p, v) =>
+          if (MatchRecognize.Spec(Nil, Nil, Nil, p, Nil).vars.contains(v)) p
+          else PCat(Seq(p, PVar(v)))
+        }
+        val allRows = rnd.nextInt(3) == 0
+        val events = (1 to 30 + rnd.nextInt(20)).map { i =>
+          Event(i.toLong, ts(rnd.nextInt(60)), 1L + rnd.nextInt(3),
+            Seq("a", "b", "c")(rnd.nextInt(3)), rnd.nextInt(5).toDouble)
+        }
+        val clause =
+          s"""PARTITION BY user_id ORDER BY ts, event_id
+             |MEASURES FIRST(A.event_id) AS fa, LAST(B.value) AS lb,
+             |         COUNT(A.*) AS na, COUNT(*) AS n, SUM(value) AS s,
+             |         CLASSIFIER() AS cls, MATCH_NUMBER() AS mn
+             |${if (allRows) "ALL ROWS PER MATCH" else "ONE ROW PER MATCH"}
+             |AFTER MATCH $skip
+             |PATTERN (${MrPatternGen.text(pat)})
+             |DEFINE $prevVar AS event_type <> 'c' AND value >= PREV(value),
+             |       $crossVar AS value > $prevVar.value OR event_type = 'b'""".stripMargin
+        val cuts = Seq.fill(1 + rnd.nextInt(3))(1 + rnd.nextInt(59)).distinct.sorted
+        val slices = (0 +: cuts :+ 60).map(m => ts(m).getTime).sliding(2)
+          .map { case Seq(lo, hi) =>
+            events.filter(e => e.ts.getTime >= lo && e.ts.getTime < hi) }.toSeq
+        val batch = canon(MatchRecognize.run((events ++ flush).toDF(),
+          MatchRecognize.parseClause(clause)))
+        val mem = MemoryStream[Event]
+        val q = Streams.matchRecognizeRows(mem.toDS(), clause,
+            horizonSeconds = 7200L, watermark = "10 seconds")
+          .writeStream.format("memory").queryName(s"mr_prop_$compared")
+          .outputMode("append").start()
+        val stream =
+          try {
+            (slices ++ flush.map(Seq(_))).foreach { b =>
+              mem.addData(b: _*); q.processAllAvailable()
+            }
+            canon(spark.table(s"mr_prop_$compared"))
+          } finally q.stop()
+        assert(stream == batch,
+          s"case $compared: $clause\ncuts=$cuts\nstream=$stream\nbatch=$batch")
+        compared += 1
+        if (batch.nonEmpty) matched += 1
+      }
+    }
+    assert(matched >= 20, s"only $matched of $compared clauses matched anything")
   }
 
   test("matchRecognizeRows: real measures + cross DEFINE converge to batch") {
