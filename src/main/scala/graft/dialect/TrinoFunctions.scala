@@ -4802,16 +4802,19 @@ object JsonFuncs {
     * probe is O(len) byte compare vs the ~10-50× costlier parse, and
     * 4 slots cover the document plus the items in flight at each
     * nesting level of the deepest declared table. Keys are DEFENSIVE
-    * COPIES (UTF8String may view a reused scan buffer); trees are safe
-    * to share because every caller only READS parsed nodes — the
-    * constructor finishers build fresh Object/ArrayNodes and only
-    * re-reference parsed subtrees. Only successful parses are cached,
-    * so error behavior is unchanged. */
+    * COPIES (UTF8String may view a reused scan buffer); trees are
+    * shared, read-only (see [[parse]]). Only successful parses are
+    * cached, so error behavior is unchanged. */
   private val parseMemo = new ThreadLocal[Array[AnyRef]] {
     override def initialValue(): Array[AnyRef] = new Array[AnyRef](8)
   }
 
-  private def parse(j: UTF8String): JsonNode = {
+  /** The parsed tree of `j`. Contract: the tree is READ-ONLY. Callers
+    * walk it and may re-reference its subtrees under nodes they build,
+    * never set/put/add/remove on it: the next call with the same text on
+    * this thread returns the same instance (JsonFuncsSpec checks every
+    * function). */
+  private[dialect] def parse(j: UTF8String): JsonNode = {
     val memo = parseMemo.get()
     var s = 0
     while (s < 8) {

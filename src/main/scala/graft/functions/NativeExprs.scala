@@ -1263,6 +1263,17 @@ object NativeExprs {
     ColumnBridge.column(PqCodesQuant(ColumnBridge.expression(vec), bc, dsub))
   }
 
+  /** `action`, then a non-blocking destroy of the model broadcasts of
+    * the kernels in `models`: an iterative trainer's pass model, unread
+    * once the pass's action is done, need not wait for garbage collection. */
+  def withModels[T](models: Column*)(action: => T): T =
+    try action
+    finally models.flatMap(m => ColumnBridge.expression(m).collect {
+      case e: PqCodes => e.bc
+      case e: NearestCellQuant => e.bc
+      case e: PqCodesQuant => e.bc
+    }).foreach(_.destroy())
+
   def minhashSig(shingleHashes: Column, numHashes: Int): Column =
     ColumnBridge.column(MinHashSig(ColumnBridge.expression(shingleHashes), numHashes))
 

@@ -450,7 +450,7 @@ object Similarity {
   def ivfTopKMd5(embeddings: DataFrame, idCol: String, vecCol: String,
       anchorId: Long, k: Int, nCells: Int, nProbe: Int): DataFrame = {
     val vecs = quantVecs(embeddings, idCol, vecCol)
-    probeTopKMd5(vecs, md5SeedCents(vecs, nCells), idCol, anchorId, k, nProbe)
+    probeTopKMd5(vecs, collectQCents(md5SeedCents(vecs, nCells)), idCol, anchorId, k, nProbe)
   }
 
   /** (graft_id, graft_v, graft_dd): the twin's working relation. */
@@ -609,9 +609,8 @@ object Similarity {
     * embed_ivf_topk_md5_{before,after}.txt). Every arithmetic step is
     * the same IEEE/BIGINT sequence, so results — and the DuckDB
     * oracle hashes — are unchanged. */
-  private def probeTopKMd5(vecs: DataFrame, cents: DataFrame, idCol: String,
+  private def probeTopKMd5(vecs: DataFrame, centArr: Array[Cent], idCol: String,
       anchorId: Long, k: Int, nProbe: Int): DataFrame = {
-    val centArr = collectQCents(cents)
     val anchorRow = vecs.filter(col("graft_id") === anchorId)
       .select(col("graft_v"), col("graft_dd")).collect().headOption
     anchorRow match {
@@ -665,10 +664,9 @@ object Similarity {
     // Project ABOVE Generate, which would re-evaluate the assignment
     // once per exploded element (the ChunkSplit lesson — measured 64×
     // here); as a pass-through attribute it computes once per vector
+    val seedCell = cellExprQuant(seedArr, col("graft_v"), col("graft_dd"))
     val means = vecs
-      .select(cellExprQuant(seedArr, col("graft_v"), col("graft_dd"))
-          .as("cell_id"),
-        col("graft_v"))
+      .select(seedCell.as("cell_id"), col("graft_v"))
       .select(col("cell_id"), posexplode(col("graft_v")))
       .groupBy(col("cell_id"), col("pos"))
       .agg(((sum(floor(col("col").cast("double") * lit(1e7) + lit(0.5))
@@ -680,10 +678,12 @@ object Similarity {
         s => s.getField("m")).as("cent_v"))
       .select(col("cell_id").as("cent_id"), col("cent_v"),
         dotQuant(col("cent_v"), col("cent_v")).cast("double").as("cent_dd"))
-    // probeTopKMd5 collects the (≤ nCells-row) updated centroids to
-    // the driver — that collect IS the materialization the former
-    // Lineage.cut provided, one job instead of two
-    probeTopKMd5(vecs, cents1, idCol, anchorId, k, nProbe)
+    // the (≤ nCells-row) updated centroids are collected — that
+    // collect IS the materialization the former Lineage.cut
+    // provided, one job instead of two, and the seed model's last use
+    probeTopKMd5(vecs,
+      graft.functions.NativeExprs.withModels(seedCell)(collectQCents(cents1)),
+      idCol, anchorId, k, nProbe)
   }
 
   /** Incremental IVF index maintenance — the ANN analog of
@@ -836,8 +836,9 @@ object Similarity {
     // graft_codes materializes BELOW the generator (the ChunkSplit
     // lesson, see ivfKmeansMd5): in the same select as posexplode it
     // would re-evaluate all m·ksub argmin distances per exploded element
-    val updated = vecs
-      .select(codesCol(books0).as("graft_codes"), col("graft_v"))
+    val codes0 = codesCol(books0)
+    val updated = graft.functions.NativeExprs.withModels(codes0)(vecs
+      .select(codes0.as("graft_codes"), col("graft_v"))
       .select(col("graft_codes"), posexplode(col("graft_v")))
       .select((col("pos") / lit(dsub)).cast("int").as("graft_sub"),
         element_at(col("graft_codes"),
@@ -847,7 +848,7 @@ object Similarity {
       .agg(((sum(floor(col("col").cast("double") * lit(1e7) + lit(0.5))
           .cast("long")).cast("double") / count(lit(1)).cast("double")) /
         lit(1e7)).cast("float").as("mval"))
-      .collect()
+      .collect())
     val books1: Array[Array[(Long, Seq[Float])]] = {
       val bySub = updated.groupBy(_.getInt(0))
       Array.tabulate(m)(s =>
@@ -1036,7 +1037,7 @@ object Similarity {
       // the books are bit-identical). Assembling on the driver drops a
       // whole shuffle stage per Lloyd iteration: the second groupBy
       // bought nothing but wire format.
-      val updated = train
+      val updated = graft.functions.NativeExprs.withModels(codesExpr)(train
         .select(codesExpr.as("codes"),
           posexplode(array((0 until m).map(s =>
             slice(col("v"), s * dsub + 1, dsub)): _*)))
@@ -1046,7 +1047,7 @@ object Similarity {
         .groupBy(col("sub"), col("cell"), col("pos"))
         .agg((sum(col("col").cast(org.apache.spark.sql.types.DecimalType(28, 14)))
           .cast("double") / count(lit(1)).cast("double")).cast("float").as("mv"))
-        .collect()
+        .collect())
       books = updated.groupBy(_.getInt(0)).toArray.sortBy(_._1).map(_._2
         .groupBy(_.getLong(1)).toArray
         .map { case (cell, rows) =>

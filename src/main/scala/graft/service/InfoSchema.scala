@@ -117,15 +117,10 @@ object InfoSchema {
     val tRows = byNs.flatMap { case (c, s, tables) =>
       tables.map(t => Row(c, s, t, "BASE TABLE")) }
 
-    val cRows = byNs.flatMap { case (c, s, tables) =>
-      tables.flatMap { t =>
-        meta.getTableSchema(c, s, t).toOption.toSeq.flatten.zipWithIndex.map {
-          case (col, i) =>
-            Row(c, s, t, col("Column").toString, (i + 1).toLong,
-              null, "YES", col("Type").toString)
-        }
-      }
-    }
+    val cRows = for {
+      (c, s, tables) <- byNs; t <- tables
+      (col, i) <- meta.getTableSchema(c, s, t).getOrElse(Nil).zipWithIndex
+    } yield Row(c, s, t, col("Column"), (i + 1).toLong, null, "YES", col("Type"))
 
     // schemata: allowlist-filtered schema listing (Trino shape:
     // catalog_name, schema_name) across the same catalogs

@@ -73,8 +73,7 @@ class MetadataService(engine: Engine) {
       case Some(err) => Left(err)
       case None =>
         try {
-          val df = MetadataService.table(engine, c, s, t)
-          Right(df.schema.fields.toSeq.map(f =>
+          Right(MetadataService.schemaOf(engine, c, s, t).fields.toSeq.map(f =>
             scala.collection.immutable.ListMap[String, Any](
               "Column" -> f.name,
               "Type" -> TypeNames.trino(f.dataType),
@@ -92,16 +91,16 @@ object MetadataService {
 
   private[service] def quote(ident: String): String = s"`${ident.replace("`", "``")}`"
 
-  /** The relation catalog.schema.table: the configured default
-    * namespace's tables are session views, read by their bare name;
-    * any other namespace is read from its own catalog. */
-  def table(engine: Engine, catalog: String, schema: String,
-      table: String): org.apache.spark.sql.DataFrame = {
+  /** The columns of catalog.schema.table, from the catalog alone (no
+    * parse, analysis or Dataset): the configured default namespace's
+    * tables are session views, read by their bare name; any other
+    * namespace is read from its own catalog. A name the catalog does
+    * not hold throws Spark's error for it. */
+  def schemaOf(engine: Engine, catalog: String, schema: String, table: String): StructType = {
     val cfg = engine.config
-    engine.spark.table(
-      if (catalog.equalsIgnoreCase(cfg.catalog) && schema.equalsIgnoreCase(cfg.schema))
-        quote(table)
-      else s"${quote(catalog)}.${quote(schema)}.${quote(table)}")
+    CatalogBridge.schemaOf(engine.spark,
+      if (catalog.equalsIgnoreCase(cfg.catalog) && schema.equalsIgnoreCase(cfg.schema)) Seq(table)
+      else Seq(catalog, schema, table))
   }
 }
 

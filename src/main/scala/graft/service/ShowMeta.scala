@@ -155,7 +155,7 @@ object ShowMeta {
 
   def createTable(engine: Engine, name: Seq[String]): DataFrame = {
     val (c, s, t) = resolve(engine, name)
-    val cols = MetadataService.table(engine, c, s, t).schema.fields
+    val cols = MetadataService.schemaOf(engine, c, s, t).fields
       .map(f => s"   ${f.name} ${TypeNames.trino(f.dataType)}")
       .mkString(",\n")
     val ddl = s"CREATE TABLE $c.$s.$t (\n$cols\n)"
@@ -167,11 +167,8 @@ object ShowMeta {
     * reference itself issues `DESCRIBE c.s.t` to Trino,
     * client.go:767), so the tool and the statement always agree. */
   def describeTable(engine: Engine, name: Seq[String]): DataFrame = {
-    // qualified names outside the default namespace must hit THAT
-    // catalog (DESCRIBE tpch.tiny.customer served the default catalog's
-    // temp view before — statement-fuzz finding, r11)
     val (c, s, t) = resolve(engine, name)
-    val rows = MetadataService.table(engine, c, s, t).schema.fields.toSeq
+    val rows = MetadataService.schemaOf(engine, c, s, t).fields.toSeq
       .map(f => Row(f.name, TypeNames.trino(f.dataType), "", ""))
     frame(engine, strings("Column", "Type", "Extra", "Comment"), rows)
   }

@@ -68,7 +68,7 @@ object UseStatement {
     * Every other name is read as the allowlist gate judged it: a name in
     * the configured `default` namespace by its bare table name (that
     * namespace's tables are session views, which Spark reads only
-    * unqualified, as [[MetadataService.table]] does); with the `session`
+    * unqualified, as [[MetadataService.schemaOf]] does); with the `session`
     * namespace moved off the default (USE), 1/2-part names qualified to
     * it; any other name as written. */
   def qualify(plan: LogicalPlan, session: (String, String),

@@ -1,15 +1,19 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{CatalogNotFoundException, CatalogPlugin, CatalogV2Util}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+import org.apache.spark.sql.connector.catalog.{CatalogNotFoundException, CatalogPlugin, CatalogV2Util, LookupCatalog}
 import org.apache.spark.sql.connector.catalog.CatalogV2Implicits._
+import org.apache.spark.sql.types.StructType
 
 /** Direct reads of a session's catalogs: the names `SHOW CATALOGS`,
-  * `SHOW NAMESPACES IN c` and `SHOW TABLES IN c.s` list, read from the
+  * `SHOW NAMESPACES IN c` and `SHOW TABLES IN c.s` list, and a table's
+  * columns, read from the
   * [[org.apache.spark.sql.connector.catalog.CatalogManager]] without
   * starting a SQL execution (no parse, analysis, planning or listener
-  * events). `CatalogV2Implicits` is private[sql]; this subpackage is
-  * how graft reaches it. */
+  * events). `CatalogV2Implicits`, `CatalogV2Util` and `LookupCatalog`
+  * are private[sql]; this subpackage is how graft reaches them. */
 object CatalogBridge {
 
   /** SHOW CATALOGS: the catalogs loaded so far, sorted. */
@@ -37,4 +41,25 @@ object CatalogBridge {
       session.listTables(schema).map(t => (t.table, session.isTempView(t)))
     } else
       catalog.asTableCatalog.listTables(Array(schema)).toSeq.map(t => (t.name, false))
+
+  /** The columns of the relation `parts` names as the analyzer outputs
+    * them, from the catalogs alone: a 1-part name's session temp view
+    * (the schema stored with it), else the table the analyzer's own
+    * lookup loads, CHAR/VARCHAR read as STRING. A name no catalog holds
+    * throws the analyzer's error for it. */
+  def schemaOf(spark: SparkSession, parts: Seq[String]): StructType = {
+    val lookup = new LookupCatalog {
+      override protected val catalogManager = spark.sessionState.catalogManager
+    }
+    val lookup.CatalogAndIdentifier(catalog, ident) = parts
+    Some(parts).collect { case Seq(t) => t }.flatMap(spark.sessionState.catalog.getRawTempView)
+      .map(_.tableMeta.schema)
+      .orElse(CatalogV2Util.loadTable(catalog, ident, None, None)
+        .map(t => CatalogV2Util.v2ColumnsToStructType(t.columns)))
+      .map(CharVarcharUtils.replaceCharVarcharWithStringInSchema)
+      .getOrElse {
+        spark.sessionState.analyzer.checkAnalysis(UnresolvedRelation(parts))
+        throw new IllegalStateException(s"${parts.quoted} is missing, yet passed analysis")
+      }
+  }
 }

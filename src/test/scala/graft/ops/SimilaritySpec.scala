@@ -49,6 +49,31 @@ class SimilaritySpec extends SparkSpec {
     assert((brute & ivf).nonEmpty, s"no overlap: brute=$brute ivf=$ivf")
   }
 
+  test("the quantizer trainers destroy each pass's model broadcast, whatever iters") {
+    // a quantizer model broadcast is a tuple of parallel arrays (ids,
+    // vectors, norms); task binaries and relations are not
+    def liveModels(): Set[Long] = org.apache.spark.graft.LiveBroadcasts.values(spark.sparkContext).collect {
+      case (id, p: Product) if p.productArity > 1 &&
+          p.productIterator.forall(_.isInstanceOf[Array[_]]) => id
+    }.toSet
+    // the models `run` leaves live while its result is held: a returned
+    // plan keeps the one its last projection reads
+    def newModels(expected: Int)(run: => AnyRef): Int = {
+      val before = liveModels()
+      val out = run
+      val deadline = System.nanoTime() + 10000000000L // removal is asynchronous
+      while ((liveModels() -- before).size > expected && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      try (liveModels() -- before).size
+      finally java.lang.ref.Reference.reachabilityFence(out)
+    }
+    for (iters <- Seq(1, 3))
+      assert(newModels(0)(Similarity.pqTrainCodebooks(emb, "vec_id", "embedding",
+        m = 4, ksub = 8, iters = iters)) == 0, s"pqTrainCodebooks iters=$iters")
+    assert(newModels(1)(Similarity.pqTopKMd5(emb, "vec_id", "embedding", 0L, 5, 4, 8)) == 1)
+    assert(newModels(1)(Similarity.ivfKmeansMd5(emb, "vec_id", "embedding", 0L, 5, 8, 2)) == 1)
+  }
+
   test("PQ: codebooks deterministic, codes in range, ADC top-k overlaps brute force") {
     val books = Similarity.pqTrainCodebooks(emb, "vec_id", "embedding",
       m = 8, ksub = 16, iters = 2)

@@ -328,6 +328,118 @@ class ServicesSpec extends SparkSpec {
       Left("table access denied: spark_catalog.default.customer not in allowlist"))
   }
 
+  /** `body` on a new session over the shared context, with `extensions`
+    * and the engine of the sf0.001 data set; the session is the active
+    * one meanwhile (catalogs load under the active session's settings),
+    * so catalogs and temp views it registers stay out of the shared one. */
+  private def isolated[T](env: Map[String, String] = Map.empty)(
+      extensions: org.apache.spark.sql.SparkSessionExtensions => Unit)(body: Engine => T): T = {
+    spark.sparkContext // the new session joins the running context
+    val session = org.apache.spark.sql.SparkSession.builder()
+      .withExtensions(graft.GraftExtensions.injectRules _).withExtensions(extensions).create()
+    org.apache.spark.sql.SparkSession.setActiveSession(session)
+    try body(new Engine(EngineConfig.fromEnv(env).toOption.get, Some(dir), existing = Some(session)))
+    finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
+  }
+
+  test("schemaOf: the catalog's columns equal the analyzed relation's, CHAR/VARCHAR included") {
+    isolated(Map("TRINO_ALLOW_WRITE_QUERIES" -> "true"))(_ => ()) { e =>
+      val session = e.spark
+      assert(new QueryService(e).execute("CREATE TEMP VIEW graft_spec_chars AS SELECT " +
+        "CAST('a' AS CHAR(3)) AS c3, CAST('b' AS VARCHAR(5)) AS v5, r_name FROM region").isRight)
+      session.sql("CREATE DATABASE IF NOT EXISTS graft_schema_spec")
+      session.sql("CREATE TABLE IF NOT EXISTS graft_schema_spec.chars " +
+        "(k INT, c CHAR(3), v VARCHAR(5), d DECIMAL(10, 2)) USING parquet")
+      session.conf.set("spark.sql.catalog.graft_chars", classOf[CharColumnsCatalog].getName)
+      val names =
+        (graft.engine.Tables.names :+ "graft_spec_chars").map(t => ("spark_catalog", "default", t)) ++
+          new MetadataService(e).listTables("tpch", "tiny").map(t => ("tpch", "tiny", t)) ++
+          Seq(("spark_catalog", "graft_schema_spec", "chars"), ("graft_chars", "s", "t"))
+      def shape(st: org.apache.spark.sql.types.StructType) =
+        st.fields.toSeq.map(f => (f.name, TypeNames.trino(f.dataType)))
+      try {
+        assert(names.count(_._1 == "tpch") == 7)
+        for ((c, s, t) <- names) {
+          val analyzed = session.table(
+            if (s == "default") s"`$t`" else s"`$c`.`$s`.`$t`").schema
+          assert(shape(MetadataService.schemaOf(e, c, s, t)) == shape(analyzed), s"$c.$s.$t")
+        }
+        assert(shape(MetadataService.schemaOf(e, "spark_catalog", "default", "graft_spec_chars")) ==
+          Seq("c3" -> "varchar", "v5" -> "varchar", "r_name" -> "varchar"))
+        for (t <- Seq(("spark_catalog", "graft_schema_spec", "chars"), ("graft_chars", "s", "t")))
+          assert(shape(MetadataService.schemaOf(e, t._1, t._2, t._3)).toMap.get("c").contains("varchar"))
+      } finally session.sql("DROP DATABASE IF EXISTS graft_schema_spec CASCADE")
+    }
+  }
+
+  test("schema reads: get_table_schema, DESCRIBE and information_schema.columns analyze no table") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+    import org.apache.spark.sql.catalyst.rules.Rule
+    // an analyzer that counts its resolution passes over a plan that
+    // reads one of the data set's or tpch.tiny's tables
+    val tables = graft.engine.Tables.names.toSet
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    isolated()(_.injectResolutionRule(_ => new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (plan.exists {
+              case SubqueryAlias(id, _) => tables(id.name.toLowerCase)
+              case _ => false
+            }) runs.incrementAndGet()
+        plan
+      }
+    })) { e =>
+      assert(e.spark.table("region").count() == 5 && runs.get > 0, "the rule counts")
+      val meta = new MetadataService(e)
+      val qs = new QueryService(e)
+      val calls = Seq[(String, () => Boolean)](
+        "get_table_schema region" -> (() => meta.getTableSchema("", "", "region").isRight),
+        "get_table_schema tpch.tiny.customer" ->
+          (() => meta.getTableSchema("tpch", "tiny", "customer").isRight),
+        "DESCRIBE region" -> (() => qs.execute("DESCRIBE region").isRight),
+        "SHOW CREATE TABLE tpch.tiny.nation" ->
+          (() => qs.execute("SHOW CREATE TABLE tpch.tiny.nation").isRight),
+        "information_schema.columns" -> (() => qs.execute(
+          "SELECT column_name FROM information_schema.columns WHERE table_name = 'orders'")
+          .toOption.exists(_.rows.nonEmpty)))
+      val passes = calls.map { case (label, call) =>
+        runs.set(0)
+        assert(call(), label)
+        label -> runs.get
+      }
+      assert(passes.forall(_._2 == 0), s"resolution passes over a table: $passes")
+    }
+  }
+
+  test("schema reads: a missing or denied name keeps its error text") {
+    val notFound = "[TABLE_OR_VIEW_NOT_FOUND] The table or view `nope` cannot be found. " +
+      "Verify the spelling and correctness of the schema and catalog."
+    val hint = "If you did not qualify the name with a schema, verify the current_schema() " +
+      "output, or qualify the name with the correct schema and catalog."
+    val m = new MetadataService(engine())
+    assert(m.getTableSchema("", "", "nope") == Left(s"failed to get table schema: $notFound $hint"))
+    assert(m.getTableSchema("tpch", "tiny", "nope") == Left("failed to get table schema: " +
+      notFound.replace("`nope`", "`tpch`.`tiny`.`nope`") + " " + hint))
+    assert(m.getTableSchema("nocat", "s", "t") == Left("failed to get table schema: " +
+      "[REQUIRES_SINGLE_PART_NAMESPACE] spark_catalog requires a single-part namespace, " +
+      "but got `nocat`.`s`. SQLSTATE: 42K05"))
+    val qs = new QueryService(engine())
+    val full = s"query execution failed: $notFound\n$hint\n" +
+      "To tolerate the error on drop use DROP VIEW IF EXISTS or DROP TABLE IF EXISTS. " +
+      "SQLSTATE: 42P01;\n'UnresolvedRelation [nope], [], false\n"
+    for (sql <- Seq("DESCRIBE nope", "SHOW COLUMNS FROM nope", "SHOW CREATE TABLE nope"))
+      assert(qs.execute(sql) == Left(full), sql)
+    val denied = new QueryService(engine(Map("GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+      "TRINO_ALLOWED_SCHEMAS" -> "spark_catalog.default")))
+    for (sql <- Seq("DESCRIBE tpch.tiny.region", "SHOW CREATE TABLE tpch.tiny.region"))
+      assert(denied.execute(sql) == Left("schema access denied: tpch.tiny not in allowlist"), sql)
+    val e = engine(Map("TRINO_ALLOWED_TABLES" -> "tpch.tiny.nation"))
+    assert(new MetadataService(e).getTableSchema("tpch", "tiny", "region") ==
+      Left("table access denied: tpch.tiny.region not in allowlist"))
+  }
+
   // --- ExplainService ---
 
   test("explain: default (distributed) mode has a formatted physical plan") {
@@ -712,4 +824,34 @@ class ServicesSpec extends SparkSpec {
     assert(parsed("c") == null)
     assert(parsed("d") == true)
   }
+}
+
+/** A V2 catalog holding one table, `s.t`, whose columns are CHAR(3) and
+  * VARCHAR(5): the relation the analyzer builds over it reads them as
+  * STRING. Read-only. */
+class CharColumnsCatalog extends org.apache.spark.sql.connector.catalog.TableCatalog {
+  import org.apache.spark.sql.connector.catalog._
+  import org.apache.spark.sql.types._
+  private var catalogName = ""
+  override def initialize(name: String,
+      options: org.apache.spark.sql.util.CaseInsensitiveStringMap): Unit = catalogName = name
+  override def name(): String = catalogName
+  override def listTables(ns: Array[String]): Array[Identifier] = Array(Identifier.of(Array("s"), "t"))
+  override def loadTable(ident: Identifier): Table =
+    if (ident.namespace.sameElements(Array("s")) && ident.name == "t") new Table {
+      override def name(): String = "t"
+      override def schema(): StructType =
+        StructType(Seq(StructField("c", CharType(3)), StructField("v", VarcharType(5))))
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.BATCH_READ)
+    } else throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
+      ident.namespace.toSeq :+ ident.name)
+  override def createTable(ident: Identifier, schema: StructType,
+      partitions: Array[org.apache.spark.sql.connector.expressions.Transform],
+      properties: java.util.Map[String, String]): Table = throw new UnsupportedOperationException
+  override def alterTable(ident: Identifier, changes: TableChange*): Table =
+    throw new UnsupportedOperationException
+  override def dropTable(ident: Identifier): Boolean = throw new UnsupportedOperationException
+  override def renameTable(from: Identifier, to: Identifier): Unit =
+    throw new UnsupportedOperationException
 }
