@@ -17,9 +17,17 @@ the bound means the host is too noisy to tell a change of that size. Runs
 that are not correct, or that fail calls, are listed; every run's result
 line is kept in <work>/results.jsonl. Standard library only; nothing is
 fetched.
+
+With --per-query it then prints, per statement (agent_explore: `ms`) or per
+query (pipeline_batch: `meta_ms` and `query_ms`), the base and head medians
+over the runs of each run's own median, read from every run's
+.bench_work/out/<workload>-*.json in the two clones, sorted by the head's
+change, largest gain first: which statements a change of a metric comes from.
 """
 import argparse
+import glob
 import json
+import math
 import os
 import statistics
 import subprocess
@@ -95,6 +103,37 @@ def report(results, metrics):
               f"  {rel:.3f} / {m['bound']}{flag}")
 
 
+def p50(xs):
+    """Nearest-rank median, as servebench/run.py takes its percentiles."""
+    return sorted(xs)[math.ceil(len(xs) / 2) - 1]
+
+
+def per_query(clones, workload):
+    """Per statement id and key: the median over a side's runs of each run's
+    own median, both sides, largest head gain first."""
+    keys = ("meta_ms", "query_ms") if workload == "pipeline_batch" else ("ms",)
+    medians = {}  # (key, id) -> side -> [one median per run]
+    for side, path in clones.items():
+        for f in sorted(glob.glob(os.path.join(path, ".bench_work", "out", workload + "-*.json"))):
+            with open(f) as fh:
+                calls = json.load(fh)["calls"]
+            by_id = {}
+            for c in calls:
+                by_id.setdefault(c["id"], []).append(c)
+            for sid, cs in by_id.items():
+                for k in keys:
+                    medians.setdefault((k, sid), {}).setdefault(side, []).append(
+                        p50([c[k] for c in cs]))
+    rows = [(k, sid, statistics.median(v["base"]), statistics.median(v["head"]))
+            for (k, sid), v in medians.items() if "base" in v and "head" in v]
+    print(f"\nper {'query' if workload == 'pipeline_batch' else 'statement'}: "
+          "median over runs of each run's median")
+    print(f"{'key':<10}{'id':<40}{'base':>10}{'head':>10}{'delta':>10}{'ratio':>8}")
+    for k, sid, b, h in sorted(rows, key=lambda r: r[3] - r[2]):
+        print(f"{k:<10}{sid:<40}{b:>10.1f}{h:>10.1f}{h - b:>10.1f}"
+              f"{(h / b if b else float('nan')):>8.3f}")
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--base", required=True, help="base revision")
@@ -103,6 +142,8 @@ def main(argv=None):
     ap.add_argument("--seeds", default="2-7", help="e.g. 2-7 or 1,3,5")
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--work", help="directory for the two clones (default: a new temp dir)")
+    ap.add_argument("--per-query", action="store_true",
+                    help="also print the medians per statement or query, sorted by delta")
     a = ap.parse_args(argv)
 
     work = a.work or tempfile.mkdtemp(prefix="ab_pairs-")
@@ -134,6 +175,8 @@ def main(argv=None):
             f"{s} {'ok' if pair[s] else 'no result'}" for s in order), flush=True)
 
     report(results, metrics)
+    if a.per_query:
+        per_query(sides, a.workload)
     for side, seed, r in bad:
         print(f"NOT CORRECT: {side} seed {seed}: {r}")
     return 1 if bad else 0

@@ -14,7 +14,8 @@ object Sessions {
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** A session on `local[cores]` (or `master`) with one shuffle
-    * partition per core, UTC, no UI, graft's log policy and the served
+    * partition per core, UTC, no UI, `file:` served by
+    * [[graft.fs.LocalFileSystem]], graft's log policy and the served
     * dialect. `static` carries SparkContext-level settings that only
     * take effect at build (e.g. an executor class path); runtime SQL
     * settings belong in `spark.conf.set` after the build. */
@@ -35,6 +36,9 @@ object Sessions {
         sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", parts))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // file: writes set their modes in-process, not by a forked chmod
+      // per file and directory (graft.fs.LocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.LocalFileSystem].getName)
       .config(static)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -149,14 +149,12 @@ object Retrieval {
       // one job: computes the corpus facts AND populates the cache
       val facts = tf.agg(countDistinct(col("doc_id")).as("n"),
         sum(col("tf")).as("t")).collect()(0)
-      tf.select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-          termBucket(col("tok"), hexChars).as("bucket"))
-        .repartition(col("bucket"))
+      byBucket(tf.select(col("tok"), col("doc_id"), col("tf"), col("dl"),
+          termBucket(col("tok"), hexChars).as("bucket")))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$path/postings")
-      tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        .withColumn("bucket", termBucket(col("tok"), hexChars))
-        .repartition(col("bucket"))
+      byBucket(tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+          .withColumn("bucket", termBucket(col("tok"), hexChars)))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$path/terms")
       writeCorpusStats(docs.sparkSession, path,
@@ -210,20 +208,18 @@ object Retrieval {
       // terms re-aggregation and swap. Corpus stats still land LAST,
       // after both lanes.
       awaitAll(Seq(
-        () => tfNew.select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-              termBucket(col("tok"), bhex).as("bucket"))
-            .repartition(col("bucket"))
+        () => byBucket(tfNew.select(col("tok"), col("doc_id"), col("tf"), col("dl"),
+              termBucket(col("tok"), bhex).as("bucket")))
             .write.mode("append").partitionBy("bucket")
             .parquet(s"$path/postings"),
         () => {
           val dfNew = tfNew.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-          spark.read.parquet(s"$path/terms")
-            .filter(col("bucket").isin(touched: _*)) // partition pruning
-            .select(col("tok"), col("df"))
-            .union(dfNew)
-            .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-            .withColumn("bucket", termBucket(col("tok"), bhex))
-            .repartition(col("bucket"))
+          byBucket(spark.read.parquet(s"$path/terms")
+              .filter(col("bucket").isin(touched: _*)) // partition pruning
+              .select(col("tok"), col("df"))
+              .union(dfNew)
+              .groupBy(col("tok")).agg(sum(col("df")).as("df"))
+              .withColumn("bucket", termBucket(col("tok"), bhex)))
             .write.mode("overwrite").partitionBy("bucket")
             .parquet(s"$path/terms_merge_tmp")
           // swap in ONLY the touched buckets; untouched buckets are
@@ -242,6 +238,14 @@ object Retrieval {
         n0 + facts.getLong(0), t0 + facts.getLong(1))
     } finally tfNew.unpersist()
   }
+
+  /** `df` hash-partitioned on its `bucket` column into the session's
+    * shuffle-partition count, for a `partitionBy("bucket")` write: each
+    * bucket still lands in one task (one file per bucket directory), and
+    * the explicit count keeps AQE from coalescing the small exchange
+    * into a single task that writes every bucket alone. */
+  private def byBucket(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("bucket"))
 
   /** Write the corpus stats file ("n=…\nt=…"). Driver-side, no job.
     * delete-then-create, never truncate-in-place: an index cloned by

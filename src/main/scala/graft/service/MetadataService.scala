@@ -91,17 +91,21 @@ object MetadataService {
 
   private[service] def quote(ident: String): String = s"`${ident.replace("`", "``")}`"
 
-  /** The columns of catalog.schema.table, from the catalog alone (no
-    * parse, analysis or Dataset): the configured default namespace's
-    * tables are session views, read by their bare name; any other
-    * namespace is read from its own catalog. A name the catalog does
-    * not hold throws Spark's error for it. */
-  def schemaOf(engine: Engine, catalog: String, schema: String, table: String): StructType = {
+  /** catalog.schema.table's stored name and columns, from the catalog
+    * alone (no parse, analysis or Dataset): the configured default
+    * namespace's tables are session views, read by their bare name; any
+    * other namespace is read from its own catalog. A name the catalog
+    * does not hold throws Spark's error for it. */
+  def relation(engine: Engine, catalog: String, schema: String, table: String): (String, StructType) = {
     val cfg = engine.config
-    CatalogBridge.schemaOf(engine.spark,
+    CatalogBridge.relation(engine.spark,
       if (catalog.equalsIgnoreCase(cfg.catalog) && schema.equalsIgnoreCase(cfg.schema)) Seq(table)
       else Seq(catalog, schema, table))
   }
+
+  /** The columns of catalog.schema.table ([[relation]]). */
+  def schemaOf(engine: Engine, catalog: String, schema: String, table: String): StructType =
+    relation(engine, catalog, schema, table)._2
 }
 
 /** Spark → Trino type-name mapping (reference docs/tools.md:117-155

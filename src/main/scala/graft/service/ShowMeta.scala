@@ -153,12 +153,15 @@ object ShowMeta {
   private def resolve(engine: Engine, name: Seq[String]): (String, String, String) =
     SqlAllowlist.qualified(name, engine.sessionCatalog, engine.sessionSchema)
 
+  /** Trino's SHOW CREATE TABLE: the table under the name its catalog
+    * stores (`region` for `REGION`), with Trino type names. */
   def createTable(engine: Engine, name: Seq[String]): DataFrame = {
     val (c, s, t) = resolve(engine, name)
-    val cols = MetadataService.schemaOf(engine, c, s, t).fields
+    val (stored, schema) = MetadataService.relation(engine, c, s, t)
+    val cols = schema.fields
       .map(f => s"   ${f.name} ${TypeNames.trino(f.dataType)}")
       .mkString(",\n")
-    val ddl = s"CREATE TABLE $c.$s.$t (\n$cols\n)"
+    val ddl = s"CREATE TABLE $c.$s.$stored (\n$cols\n)"
     frame(engine, strings("Create Table"), Seq(Row(ddl)))
   }
 

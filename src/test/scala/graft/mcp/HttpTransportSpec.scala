@@ -49,6 +49,14 @@ class HttpTransportSpec extends SparkSpec {
     assert(resp.statusCode() == 202 && resp.body().isEmpty)
   }
 
+  test("POST /mcp with a malformed JSON-RPC body yields -32700") {
+    val resp = post("""{"jsonrpc":"2.0","id":1,"method":""")
+    val r = Json.parse(resp.body()).asInstanceOf[collection.Map[String, Any]]
+    assert(r("error").asInstanceOf[collection.Map[String, Any]]("code") == -32700L)
+    // and the transport still serves the next call
+    assert(post("""{"jsonrpc":"2.0","id":2,"method":"tools/list"}""").statusCode() == 200)
+  }
+
   test("GET /status reports ok") {
     val resp = client.send(HttpRequest.newBuilder(URI.create(s"$base/status")).GET().build(),
       HttpResponse.BodyHandlers.ofString())

@@ -74,6 +74,10 @@ class ShowStatsSpec extends SparkSpec {
     val ddl = r.rows.head.head.toString
     assert(ddl.startsWith("CREATE TABLE spark_catalog.default.region ("))
     assert(ddl.contains("r_regionkey integer") && ddl.contains("r_name varchar"))
+    // the table's stored name, as Trino prints it, not the name as typed
+    assert(qs().execute("SHOW CREATE TABLE REGION").toOption.get.rows.head.head.toString == ddl)
+    assert(qs().execute("SHOW CREATE TABLE tpch.tiny.CUSTOMER").toOption.get.rows.head.head
+      .toString.startsWith("CREATE TABLE tpch.tiny.customer ("))
     // DESCRIBE and SHOW CREATE TABLE agree on type names by construction
     val s = qs().execute("show session").toOption.get
     assert(s.columns == Seq("Name", "Value", "Default", "Type", "Description"))
