@@ -119,8 +119,16 @@ object TpchTinyCatalog {
       spark.conf.set(DirConf, dir)
     // force the load: CatalogManager.listCatalogs only reports catalogs
     // already instantiated, so SHOW CATALOGS would omit tpch until the
-    // first tpch.… reference without this
-    spark.sessionState.catalogManager.catalog("tpch")
+    // first tpch.… reference without this. The load reads the catalog
+    // conf from the thread's active session, so `spark` is made active
+    // for it, and the previous one restored after.
+    val previous = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    try spark.sessionState.catalogManager.catalog("tpch")
+    finally previous match {
+      case Some(s) => SparkSession.setActiveSession(s)
+      case None => SparkSession.clearActiveSession()
+    }
   }
 
   /** Trino tpch-connector column shapes over the driver's trimmed

@@ -1,8 +1,18 @@
 package graft.dialect
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, BasePredicate, Cast, CommonExpressionRef, Divide, Expression, GenericInternalRow, JoinedRow, Literal, MutableProjection, Predicate, SpecificInternalRow, SubqueryExpression, WindowExpression, With}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, DeclarativeAggregate, First, Last, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-pattern recognition — Trino's `MATCH_RECOGNIZE` table clause
   * (SQL:2016), the one Trino SQL construct Spark has no surface for at
@@ -10,19 +20,21 @@ import org.apache.spark.sql.types._
   * shapes the feature is actually used for:
   *
   *  - `PARTITION BY c1[, …]`, `ORDER BY c1[, …]` (plain columns)
-  *  - `MEASURES` of `FIRST(V.c[, n])`, `LAST(V.c[, n])` (logical
-  *    offset navigation; out-of-range → NULL), `V.c` (≡ FINAL LAST),
-  *    `COUNT(V.*)`, `COUNT(*)`, `SUM/AVG/MIN/MAX(V.c)` (and the
-  *    unqualified `SUM(c)` form — the universal variable, i.e. every
-  *    matched row; FINAL in ONE-ROW mode, RUNNING in ALL-ROWS mode;
-  *    `AVG` always emits double — for decimal inputs the sum is exact
-  *    and divided once, a documented deviation from Trino's
-  *    decimal-typed avg), `MATCH_NUMBER()`, `CLASSIFIER()`, each
-  *    with `AS name`. `RUNNING`/`FINAL` prefixes: RUNNING is the
-  *    ALL-mode default (and a no-op in ONE-ROW mode); FINAL flips an
-  *    ALL-mode navigation/aggregate measure to whole-match evaluation
-  *    on every output row (Trino's semantics; invalid on
-  *    MATCH_NUMBER/CLASSIFIER)
+  *  - `MEASURES` of any Spark SQL expression over the row-pattern
+  *    forms, each with `AS name`: `FIRST(x[, n])`, `LAST(x[, n])`
+  *    (logical offset navigation; out-of-range → NULL), `V.c` (≡
+  *    LAST(V.c)), `PREV/NEXT(x[, n])` (physical, nested over FIRST/LAST
+  *    too), `SUM/AVG/MIN/MAX/COUNT(x)`, `COUNT(*)`, `COUNT(V.*)`,
+  *    `MATCH_NUMBER()`, `CLASSIFIER([V])`. An argument `x` is an
+  *    expression whose columns name one variable, or none (the
+  *    universal variable: every matched row); an unqualified column
+  *    outside the forms is the measure's row. `AVG` is DOUBLE: an exact
+  *    sum, then one division (`CAST(SUM(x) AS DOUBLE) / COUNT(x)`), a
+  *    documented deviation from Trino's decimal-typed avg.
+  *    `RUNNING`/`FINAL` prefixes: RUNNING is the ALL-mode default (and a
+  *    no-op in ONE-ROW mode); FINAL flips an ALL-mode measure to
+  *    whole-match evaluation on every output row (Trino's semantics;
+  *    invalid on MATCH_NUMBER/CLASSIFIER)
   *  - `ONE ROW PER MATCH` (the default) — output is partition columns
   *    + measures with FINAL semantics — and `ALL ROWS PER MATCH`
   *    — one output row per MATCHED row carrying every input column +
@@ -50,25 +62,20 @@ import org.apache.spark.sql.types._
   *    exclusions (excluded rows stay part of the match — measures and
   *    navigation see them — but are omitted from ALL-ROWS output;
   *    incompatible with WITH UNMATCHED ROWS, as in Trino)
-  *  - `DEFINE V AS <boolean sql>` in two evaluation classes:
-  *    - current-row-only predicates (V's OWN qualifier, `V.price`
-  *      inside DEFINE V, denotes the current row and is stripped) get
-  *      the FULL Spark SQL expression surface, compiled by Catalyst to
-  *      boolean flag columns before the scan;
-  *    - predicates referencing ANOTHER pattern variable or SUBSET —
-  *      `DEFINE C AS price <= A.price` (≡ RUNNING `LAST(A.price)`, the
-  *      docs-funnel form) and explicit `FIRST/LAST(V.c[, n])`
-  *      navigation — evaluate INSIDE the matcher against the in-flight
-  *      assignment ([[MrPredicate]]): supported there are columns,
-  *      cross-variable navigation, literals, comparisons, `IS [NOT]
-  *      NULL`, `[NOT] BETWEEN`/`IN`, `AND`/`OR`/`NOT`, and `+ - * / %`
-  *      arithmetic (richer SQL is rejected with a clear message — keep
-  *      the predicate cross-free or precompute a column).
-  *    Both classes take `PREV(col[, n])` / `NEXT(col[, n])` = the n-th
-  *    previous / following ROW in the partition (physical navigation,
-  *    SQL:2016; evaluated as window `lag`/`lead` before the scan;
-  *    out-of-partition → NULL → no match). Variables without a
-  *    DEFINE match any row (standard).
+  *  - `DEFINE V AS <boolean sql>`: any Spark SQL predicate over the
+  *    same forms. V's own qualifier (`V.price` inside DEFINE V) and an
+  *    unqualified column denote the row under test; another variable's
+  *    `A.price` is RUNNING `LAST(A.price)`, the rows mapped so far in
+  *    this hypothesis. A DEFINE that reads only the current row (and
+  *    PREV/NEXT of it) is a Catalyst boolean column computed before the
+  *    scan, PREV/NEXT as window lag/lead; the rest evaluate in the
+  *    matcher. Out-of-partition navigation → NULL → no match; variables
+  *    without a DEFINE match any row (standard).
+  *
+  * Both clauses are one expression language: each text is parsed once
+  * by the session's SQL parser, its row-pattern forms are lowered onto
+  * slots of a context row, and Spark's analyzer resolves and types the
+  * rest (function lookup, coercion, decimal rules, three-valued logic).
   *
   * Execution is the Spark-idiomatic shape for sequential semantics:
   * ONE hash shuffle on the partition keys + a secondary sort on
@@ -76,11 +83,9 @@ import org.apache.spark.sql.types._
   * order)` — then a streaming `mapPartitions` pass that runs a
   * backtracking pattern matcher per partition-key group. Matching is
   * leftmost-greedy with SKIP PAST LAST ROW, i.e. matches never overlap
-  * and quantifier preference equals Trino's. DEFINE predicates are
-  * evaluated by Catalyst as boolean projections BEFORE the scan (full
-  * codegen; the scan consumes pre-computed flags) — the matcher itself
-  * never evaluates SQL. Memory bound: one partition-key GROUP is
-  * buffered at a time (the same bound Trino's operator has), capped by
+  * and quantifier preference equals Trino's. Memory bound: one
+  * partition-key GROUP is buffered at a time (the same bound Trino's
+  * operator has), capped by
   * `spark.graft.matchRecognize.maxGroupRows` (default 10M; a skewed
   * hot key fails with a message naming the key instead of an OOM).
   *
@@ -115,35 +120,13 @@ object MatchRecognize {
     * Trino errors when the target is the match start or unmatched). */
   case class SkipToVar(first: Boolean, v: String) extends SkipMode
 
-  sealed trait MKind
-  case object MFirst extends MKind
-  case object MLast extends MKind
-  case object MCountVar extends MKind
-  case object MCountStar extends MKind
-  case object MMatchNumber extends MKind
-  case object MClassifier extends MKind
-  /** SUM/AVG/MIN/MAX(V.c) — aggregate over the rows mapped to V
-    * (varName = "" ⇒ the universal row-pattern variable: every matched
-    * row). FINAL semantics in ONE ROW PER MATCH, RUNNING in ALL ROWS. */
-  case object MSum extends MKind
-  case object MAvg extends MKind
-  case object MMin extends MKind
-  case object MMax extends MKind
-  /** A general MEASURES expression over navigation/aggregates
-    * (`LAST(B.v) - FIRST(A.v)`, `SUM(B.v) / COUNT(B.*)`), carried as a
-    * [[MrPredicate]] AST in [[Measure.ast]]. Unqualified columns mean
-    * the universal variable's LAST row (FINAL = the match's last row in
-    * ONE-ROW mode, the current row under RUNNING in ALL-ROWS mode). */
-  case object MExpr extends MKind
-  /** `offset` is the logical navigation offset of FIRST/LAST(V.c, n):
-    * n-th mapped row from the start / from the end (0 = the default).
-    * `finalSem`: the measure carried an explicit `FINAL` prefix —
-    * meaningful only in ALL ROWS PER MATCH (evaluate over the WHOLE
-    * match at every output row instead of the rows seen so far); in
-    * ONE ROW PER MATCH output is FINAL regardless, as in SQL:2016. */
-  case class Measure(kind: MKind, varName: String, colName: String,
-      alias: String, offset: Int = 0, finalSem: Boolean = false,
-      ast: Option[MrPredicate.Node] = None)
+  /** One MEASURES entry: the expression text (RUNNING/FINAL prefix and
+    * `AS alias` stripped) and its alias. `finalSem`: the measure carried
+    * an explicit `FINAL` prefix — meaningful only in ALL ROWS PER MATCH
+    * (evaluate over the WHOLE match at every output row instead of the
+    * rows seen so far); in ONE ROW PER MATCH output is FINAL regardless,
+    * as in SQL:2016. */
+  case class Measure(text: String, alias: String, finalSem: Boolean = false)
 
   case class Spec(partitionBy: Seq[String], orderBy: Seq[String],
       measures: Seq[Measure], pattern: Pat, defines: Seq[(String, String)],
@@ -187,7 +170,7 @@ object MatchRecognize {
     throw new IllegalArgumentException(s"MATCH_RECOGNIZE: $msg")
 
   /** Distinct pattern variables in appearance order — the one Pat walk
-    * shared by Spec.vars and the measure parser's variable universe. */
+    * behind Spec.vars. */
   private def patternVars(p0: Pat): Seq[String] = {
     def walk(p: Pat): Seq[String] = p match {
       case PVar(n)    => Seq(n)
@@ -316,11 +299,8 @@ object MatchRecognize {
         case other      => fail(s"cannot parse DEFINE entry: $other")
       }
     }).getOrElse(Seq.empty)
-    // expression measures resolve variable qualifiers at parse time, so
-    // they need the full variable universe (pattern vars + subsets)
-    val allVarsForMeasures = patternVars(pattern) ++ subsets.map(_._1)
     val measures = section("MEASURES")
-      .map(splitList(_).map(parseMeasure(_, allVarsForMeasures)))
+      .map(splitList(_).map(parseMeasure))
       .getOrElse(Seq.empty)
     if (measures.isEmpty && !allRows)
       fail("MEASURES is required in this subset " +
@@ -357,12 +337,6 @@ object MatchRecognize {
     val unknown = defines.map(_._1).filterNot(spec.vars.contains)
     if (unknown.nonEmpty)
       fail(s"DEFINE variables not in PATTERN: ${unknown.mkString(", ")}")
-    val badM = measures.filter(m => (m.kind == MFirst || m.kind == MLast ||
-      m.kind == MCountVar || ((m.kind == MSum || m.kind == MAvg ||
-        m.kind == MMin || m.kind == MMax) && m.varName.nonEmpty)) &&
-      !knownVar(m.varName))
-    if (badM.nonEmpty)
-      fail(s"measure references unknown variable: ${badM.map(_.varName).mkString(", ")}")
     spec
   }
 
@@ -379,23 +353,12 @@ object MatchRecognize {
     }
   }
 
-  private def parseMeasure(s: String, vars: Seq[String] = Seq.empty): Measure = {
+  private def parseMeasure(s: String): Measure = {
     val asM = "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
     val (exprTxt, alias) = s.trim match {
       case asM(e, a) => (e.trim, a)
       case _ => fail(s"measure needs AS <name>: $s")
     }
-    val firstLast = "(?is)^(FIRST|LAST)\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\.([A-Za-z_][A-Za-z0-9_]*)\\s*(?:,\\s*(\\d+)\\s*)?\\)$".r
-    val bare = "(?is)^([A-Za-z_][A-Za-z0-9_]*)\\.([A-Za-z_][A-Za-z0-9_]*)$".r
-    val countVar = "(?is)^COUNT\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\.\\*\\s*\\)$".r
-    val countStar = "(?is)^COUNT\\s*\\(\\s*\\*\\s*\\)$".r
-    val aggFn = "(?is)^(SUM|AVG|MIN|MAX)\\s*\\(\\s*(?:([A-Za-z_][A-Za-z0-9_]*)\\.)?([A-Za-z_][A-Za-z0-9_]*)\\s*\\)$".r
-    val matchNum = "(?is)^MATCH_NUMBER\\s*\\(\\s*\\)$".r
-    // CLASSIFIER() or CLASSIFIER(U) — the optional argument (a pattern
-    // variable or SUBSET union) scopes the lookup to the last row
-    // mapped to U (SQL:2016 / Trino)
-    val classifier =
-      "(?is)^CLASSIFIER\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)?\\s*\\)$".r
     // RUNNING is the default semantics in ALL ROWS PER MATCH and a
     // no-op marker in ONE ROW PER MATCH's FINAL output; FINAL flips an
     // ALL-mode measure to whole-match evaluation on every output row
@@ -405,45 +368,11 @@ object MatchRecognize {
       else if (exprTxt.toUpperCase.startsWith("FINAL "))
         (exprTxt.substring("FINAL ".length).trim, true)
       else (exprTxt, false)
-    def num(s: String): Int =
-      try s.toInt
-      catch { case _: NumberFormatException =>
-        fail(s"navigation offset out of range: $s") }
-    val m = body match {
-      case firstLast(fl, v, c, off) =>
-        Measure(if (fl.equalsIgnoreCase("FIRST")) MFirst else MLast, v, c,
-          alias, if (off == null) 0 else num(off))
-      case bare(v, c)  => Measure(MLast, v, c, alias) // FINAL LAST semantics
-      case countVar(v) => Measure(MCountVar, v, "", alias)
-      case countStar() => Measure(MCountStar, "", "", alias)
-      case matchNum()   => Measure(MMatchNumber, "", "", alias)
-      case classifier(v) =>
-        if (v != null && !vars.exists(_.equalsIgnoreCase(v)))
-          fail(s"CLASSIFIER argument $v is not a pattern variable or SUBSET")
-        Measure(MClassifier, if (v == null) "" else v, "", alias)
-      case aggFn(fn, v, c) =>
-        val kind = fn.toUpperCase match {
-          case "SUM" => MSum
-          case "AVG" => MAvg
-          case "MIN" => MMin
-          case "MAX" => MMax
-        }
-        // unqualified SUM(c) aggregates over the universal variable
-        // (every matched row) — varName "" marks that, as in SQL:2016
-        Measure(kind, if (v == null) "" else v, c, alias)
-      case other =>
-        // the general form: an expression over navigation/aggregates —
-        // `LAST(B.v) - FIRST(A.v)`, `SUM(B.v) / COUNT(B.*)`, a boolean
-        // comparison — parsed into the MrPredicate AST (which raises
-        // its own specific error on anything outside that grammar)
-        Measure(MExpr, "", "", alias,
-          ast = Some(MrPredicate.parse(other, "", vars)))
-    }
     // Trino: RUNNING/FINAL prefix only navigation and aggregates —
     // MATCH_NUMBER()/CLASSIFIER() take neither
-    if (isFinal && (m.kind == MMatchNumber || m.kind == MClassifier))
+    if (isFinal && "(?is)(MATCH_NUMBER|CLASSIFIER)\\s*\\(.*".r.matches(body))
       fail(s"FINAL cannot prefix this measure: $exprTxt")
-    m.copy(finalSem = isFinal)
+    Measure(body, alias, isFinal)
   }
 
   // pattern := alt ; alt := cat ('|' cat)* ; cat := quant+ ;
@@ -618,34 +547,285 @@ object MatchRecognize {
     case PQuant(q, _, _, _) => nullable(q)
   }
 
-  // ---------- planner / runner ----------
+  // ---------- DEFINE and MEASURES: one expression language ----------
 
   private val DefPrefix = "__mr_def_"
+  private val SlotPrefix = "__mr_slot_"
 
-  private def navColName(isPrev: Boolean, c: String, n: Int): String =
-    s"__mr_${if (isPrev) "prev" else "next"}${n}_$c"
+  /** Where a slot reads its argument, given the rows mapped so far and
+    * the anchor row: the row under test in DEFINE; in MEASURES the
+    * match's last row (FINAL) or the output row (RUNNING). `step` is a
+    * physical move in the group: PREV < 0, NEXT > 0. */
+  private[graft] sealed trait Loc { def step: Int = 0 }
+  /** FIRST/LAST(v, off) over v's rows ("" = every mapped row), then
+    * `step` rows on. */
+  private[graft] final case class AtNav(v: String, first: Boolean, off: Int,
+      override val step: Int) extends Loc
+  /** The anchor row, then `step` rows on. */
+  private[graft] final case class AtRow(override val step: Int) extends Loc
+  /** Aggregate `fn` over v's rows ("" = every mapped row). */
+  private[graft] final case class OverRows(v: String, fn: String) extends Loc
+  private[graft] case object MatchNumber extends Loc
+  /** The variable of the last row mapped to v ("" = any variable). */
+  private[graft] final case class ClassifierOf(v: String) extends Loc
 
-  /** Rewrite variable V's current-row DEFINE predicate for Catalyst:
-    * strip V's OWN qualifier (`V.c` denotes the current row). Callers
-    * route predicates naming another variable to [[MrPredicate]]
-    * first ([[MrPredicate.needsInterpreter]]). Scans and strips
-    * literal-aware, so a 'B.foo' inside a string constant is never
-    * touched. */
-  private[graft] def rewriteDefinePred(v: String, pred0: String): String = {
-    val masked = SqlText.mask(pred0)
-    val re = ("(?i)(?<![A-Za-z0-9_])" +
-      java.util.regex.Pattern.quote(v) + "\\s*\\.").r
-    val sb = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(pred0).filterNot(m => masked(m.start)).foreach { m =>
-      sb.append(pred0.substring(last, m.start)); last = m.end
+  private val Aggs = Set("sum", "avg", "min", "max", "count")
+  private val Forms = Aggs ++ Set("first", "last", "prev", "next", "match_number", "classifier")
+
+  /** A row-pattern form: its name (lower case) and arguments. One-
+    * argument FIRST/LAST parse as Spark's first()/last() aggregates. */
+  private def form(e: Expression): Option[(String, Seq[Expression])] = e match {
+    case f: UnresolvedFunction if f.nameParts.length == 1 &&
+        Forms(f.nameParts.head.toLowerCase) =>
+      val name = f.nameParts.head.toLowerCase
+      if (f.isDistinct || f.filter.isDefined || f.ignoreNulls)
+        fail(s"${name.toUpperCase} takes no DISTINCT, FILTER or IGNORE NULLS")
+      Some((name, f.arguments))
+    case a: AggregateExpression => a.aggregateFunction match {
+      case f: First => Some(("first", Seq(f.child)))
+      case l: Last => Some(("last", Seq(l.child)))
+      case _ => None
     }
-    sb.append(pred0.substring(last))
-    sb.toString
+    case _ => None
   }
 
+  /** A non-negative integer literal: a navigation offset. */
+  private def offset(e: Expression, f: String): Int = e match {
+    case Literal(n: Int, IntegerType) if n >= 0 => n
+    case _ => fail(s"${f.toUpperCase} offset must be a non-negative integer literal (got $e)")
+  }
+
+  /** The one walk that lowers the row-pattern forms of parsed DEFINE and
+    * MEASURES trees onto slots: each form becomes a reference to a slot
+    * (a locator and an argument over the scan columns; MATCH_NUMBER's
+    * and CLASSIFIER's argument is a placeholder of their type).
+    * Identical slots are shared. */
+  private final class Lowering(spec: Spec, columns: Seq[String]) {
+    val slots = mutable.LinkedHashMap.empty[(Loc, Expression), Int]
+    private val names =
+      (spec.vars ++ spec.subsets.map(_._1)).map(v => v.toLowerCase -> v).toMap
+    private val cols = columns.map(_.toLowerCase).toSet
+
+    private def slot(loc: Loc, arg: Expression): Expression =
+      UnresolvedAttribute(Seq(SlotPrefix + slots.getOrElseUpdate((loc, arg), slots.size)))
+
+    private def unknown(q: String, where: String): Nothing =
+      fail(s"unknown variable $q in $where: not a pattern variable or SUBSET")
+    private def variable(q: String, where: String): String =
+      names.getOrElse(q.toLowerCase, unknown(q, where))
+
+    /** `V.c`: the variable V names and the column `c`; a qualifier that
+      * is neither a variable nor a column (a struct) is an error. */
+    private def qualified(a: UnresolvedAttribute, where: String): Option[(String, Expression)] =
+      if (a.nameParts.length < 2) None
+      else names.get(a.nameParts.head.toLowerCase) match {
+        case Some(v) => Some((v, UnresolvedAttribute(a.nameParts.tail)))
+        case None if !cols(a.nameParts.head.toLowerCase) => unknown(a.nameParts.head, where)
+        case None => None
+      }
+
+    /** `e` for DEFINE `own` ("" in MEASURES) with every form lowered. */
+    def lower(e: Expression, own: String, where: String): Expression = form(e) match {
+      case Some((f @ ("first" | "last"), args)) => navigate(f, args, 0, where)
+      case Some((f @ ("prev" | "next"), args)) =>
+        if (args.isEmpty || args.length > 2) fail(s"${f.toUpperCase} takes (value[, offset]) in $where")
+        val n = args.lift(1).fold(1)(offset(_, f))
+        val step = if (f == "prev") -n else n
+        form(args.head) match {
+          case Some((g @ ("first" | "last"), inner)) => navigate(g, inner, step, where)
+          case _ =>
+            // PREV(A.c) of another variable is PREV(LAST(A.c))
+            val (v, arg) = argument(args.head, f, where)
+            if (v.isEmpty || v == own) slot(AtRow(step), arg)
+            else slot(AtNav(v, first = false, 0, step), arg)
+        }
+      case Some(("match_number", args)) =>
+        if (args.nonEmpty || own.nonEmpty) fail(s"MATCH_NUMBER() is a measure with no argument ($where)")
+        slot(MatchNumber, Literal(0L))
+      case Some(("classifier", args)) => args match {
+        case Seq() => slot(ClassifierOf(""), Literal(""))
+        case Seq(a: UnresolvedAttribute) => names.get(a.name.toLowerCase) match {
+          case Some(v) => slot(ClassifierOf(v), Literal(""))
+          case None => fail(s"CLASSIFIER argument ${a.name} is not a pattern variable or SUBSET ($where)")
+        }
+        case _ => fail(s"CLASSIFIER takes one pattern variable or SUBSET ($where)")
+      }
+      case Some((f, args)) => args match {
+        case Seq(UnresolvedStar(target)) =>
+          if (f != "count") fail(s"${f.toUpperCase}(*) is not valid in $where (only COUNT takes *)")
+          slot(OverRows(target.fold("")(t => variable(t.mkString("."), where)), "count"), Literal(1))
+        case Seq(a) =>
+          val (v, arg) = argument(a, f, where)
+          // AVG: an exact sum, then one division, as DOUBLE
+          if (f == "avg") Divide(Cast(slot(OverRows(v, "sum"), arg), DoubleType),
+            slot(OverRows(v, "count"), arg))
+          else slot(OverRows(v, f), arg)
+        case _ => fail(s"${f.toUpperCase} takes one argument in $where")
+      }
+      case None => e match {
+        case a: UnresolvedAttribute => qualified(a, where) match {
+          case Some((v, c)) => if (v == own) c else slot(AtNav(v, first = false, 0, 0), c)
+          case None => a
+        }
+        case _ => e.mapChildren(lower(_, own, where))
+      }
+    }
+
+    private def navigate(f: String, args: Seq[Expression], step: Int, where: String): Expression = {
+      if (args.isEmpty || args.length > 2) fail(s"${f.toUpperCase} takes (value[, offset]) in $where")
+      val (v, arg) = argument(args.head, f, where)
+      slot(AtNav(v, f == "first", args.lift(1).fold(0)(offset(_, f)), step), arg)
+    }
+
+    /** A navigation or aggregate argument: the one variable its columns
+      * name ("" when unqualified: the universal variable) and the
+      * argument with that qualifier stripped. */
+    private def argument(e: Expression, f: String, where: String): (String, Expression) = {
+      val qs = mutable.LinkedHashSet.empty[String]
+      def strip(x: Expression): Expression = form(x) match {
+        case Some((g, _)) => fail(s"${if (Aggs(g)) "an aggregate" else "navigation"} inside a " +
+          s"navigation/aggregate argument is not supported (${g.toUpperCase} in ${f.toUpperCase}, $where)")
+        case None => x match {
+          case a: UnresolvedAttribute => qualified(a, where) match {
+            case Some((v, c)) => qs += v; c
+            case None => qs += ""; a
+          }
+          case _ => x.mapChildren(strip)
+        }
+      }
+      val arg = strip(e)
+      if (qs.size > 1)
+        fail(s"a ${f.toUpperCase} argument must reference a single pattern variable (got " +
+          s"${qs.map(q => if (q.isEmpty) "unqualified" else q).mkString(", ")} in $where); " +
+          "mixed or partly-unqualified references are ambiguous")
+      (qs.headOption.getOrElse(""), arg)
+    }
+  }
+
+  /** The matcher's half of a compiled spec, serializable and compiled
+    * to projections once per task: the scan columns `in`, each slot's
+    * locator and resolved argument (for OverRows, the aggregate over
+    * it) with its attribute, the DEFINEs the matcher evaluates, and the
+    * measures — all resolved over `in ++ slotAttrs`. */
+  private[graft] final case class Program(in: Seq[Attribute], locs: IndexedSeq[Loc],
+      slots: IndexedSeq[Expression], slotAttrs: IndexedSeq[Attribute],
+      preds: Map[String, Expression], measures: Seq[Expression]) {
+    /** The slots `e` reads. */
+    def slotsOf(e: Seq[Expression]): Array[Int] =
+      slotAttrs.indices.filter(k => e.exists(_.references.contains(slotAttrs(k)))).toArray
+    def locsOf(e: Expression): Seq[Loc] = slotsOf(Seq(e)).toSeq.map(locs)
+  }
+
+  /** A spec's DEFINEs and MEASURES over a scan schema, parsed, lowered,
+    * resolved and typed once on the driver. `flags` are the DEFINEs
+    * Catalyst evaluates as boolean columns before the scan (trees over
+    * the input columns and the `lags` columns: name, argument, step);
+    * the rest evaluate in the matcher (`program`). */
+  private[graft] final case class Compiled(flags: Map[String, Expression],
+      lags: Seq[(String, Expression, Int)], program: Program, fields: Seq[StructField])
+
+  /** Compile `spec` over `schema`. With `windows`, a DEFINE that reads
+    * PREV/NEXT of the current row only is still a flag column (its
+    * navigation a lag/lead window); without (a stream) it evaluates in
+    * the matcher. */
+  private[graft] def compile(spark: SparkSession, spec: Spec, schema: StructType,
+      windows: Boolean): Compiled = {
+    def parse(text: String, where: String): Expression =
+      try spark.sessionState.sqlParser.parseExpression(text)
+      catch { case e: AnalysisException => fail(s"cannot parse $where: ${e.getMessage}") }
+    val low = new Lowering(spec, schema.fieldNames.toSeq)
+    val defs = spec.defines.map { case (v, text) =>
+      v -> low.lower(parse(text, s"DEFINE $v"), v, s"DEFINE $v") }
+    val meas = spec.measures.map { m =>
+      low.lower(parse(m.text, s"measure ${m.alias}"), "", s"measure ${m.alias}") }
+    val slots = low.slots.keys.toIndexedSeq
+    val in = schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    // the slot arguments resolve over the scan columns; the trees over
+    // the scan columns and the typed slots
+    val slotExprs = slots.zip(analyze(spark, slots.map(_._2), in)).map {
+      case ((OverRows(_, fn), _), arg) => aggregate(fn, arg)
+      case (_, arg) => arg
+    }
+    val slotAttrs = slotExprs.indices.map(k =>
+      AttributeReference(SlotPrefix + k, slotExprs(k).dataType)(): Attribute)
+    val (defTyped, measTyped) = analyze(spark, defs.map(_._2) ++ meas, in ++ slotAttrs)
+      .splitAt(defs.length)
+    defs.zip(defTyped).foreach { case ((v, _), e) =>
+      if (e.dataType != BooleanType) fail(s"DEFINE $v must be a boolean predicate " +
+        s"(got ${e.dataType.simpleString}); add a comparison")
+    }
+    def slotsOf(e: Expression): Seq[Int] = e.collect {
+      case UnresolvedAttribute(Seq(n)) if n.startsWith(SlotPrefix) => n.drop(SlotPrefix.length).toInt
+    }
+    val flags = defs.filter { case (_, e) =>
+      slotsOf(e).forall(k => windows && slots(k)._1.isInstanceOf[AtRow]) }.toMap
+    Compiled(flags,
+      flags.values.flatMap(slotsOf).toSeq.distinct.sorted.map(k =>
+        (SlotPrefix + k, slots(k)._2, slots(k)._1.step)),
+      Program(in, slots.map(_._1), slotExprs, slotAttrs,
+        defs.zip(defTyped).collect { case ((v, _), e) if !flags.contains(v) => v -> e }.toMap,
+        measTyped),
+      spec.measures.zip(measTyped).map { case (m, e) => StructField(m.alias, e.dataType) })
+  }
+
+  /** `exprs` resolved and typed by Spark's analyzer over `attrs`;
+    * row-level expressions only. */
+  private def analyze(spark: SparkSession, exprs: Seq[Expression],
+      attrs: Seq[Attribute]): Seq[Expression] =
+    if (exprs.isEmpty) Nil
+    else {
+      val plan = Project(exprs.zipWithIndex.map { case (e, i) => Alias(e, s"_$i")() },
+        LocalRelation(attrs))
+      val analyzed =
+        try ColumnBridge.analyzed(spark, plan).analyzed
+        catch { case e: AnalysisException => fail(e.getSimpleMessage) }
+      ReplaceExpressions(analyzed) match {
+        case Project(list, _: LocalRelation) if !list.exists(_.exists {
+            case _: SubqueryExpression | _: AggregateExpression | _: WindowExpression => true
+            case _ => false }) =>
+          list.map { case Alias(c, _) => fold(inlineWith(c)); case other => other }
+        case _ => fail("DEFINE and MEASURES take row-level expressions over the " +
+          "row-pattern forms: no other aggregates, window functions, " +
+          "generators or subqueries")
+      }
+    }
+
+  /** `e` with each `With` common expression (BETWEEN's, for one)
+    * inlined at its references, which the optimizer would otherwise do:
+    * the matcher evaluates analyzed trees. */
+  private def inlineWith(e: Expression): Expression = e.transformUp {
+    case w: With =>
+      val defs = w.defs.map(d => d.id -> d.child).toMap
+      w.child.transformUp { case r: CommonExpressionRef if defs.contains(r.id) => defs(r.id) }
+  }
+
+  /** `e` with its constant subexpressions evaluated once, as the
+    * optimizer's constant folding would (a literal compared with a
+    * decimal is cast once, not per row). */
+  private def fold(e: Expression): Expression = e.transformDown {
+    case x if x.foldable && !x.isInstanceOf[Literal] => Literal.create(x.eval(), x.dataType)
+  }
+
+  /** The row-pattern aggregate `fn` over a resolved argument. */
+  private def aggregate(fn: String, arg: Expression): DeclarativeAggregate = {
+    if (fn == "sum" && !arg.dataType.isInstanceOf[NumericType])
+      fail(s"SUM/AVG require a numeric argument (got ${arg.dataType.simpleString})")
+    val agg = fn match {
+      case "sum" => Sum(arg)
+      case "min" => Min(arg)
+      case "max" => Max(arg)
+      case _ => Count(arg)
+    }
+    if (agg.checkInputDataTypes().isFailure)
+      fail(s"${fn.toUpperCase} cannot take ${arg.dataType.simpleString}")
+    agg
+  }
+
+  // ---------- planner / runner ----------
+
   /** Run the spec over `df`, returning the ONE-ROW-PER-MATCH relation
-    * (partition columns + measures). */
+    * (partition columns + measures) or the ALL-ROWS one (every input
+    * column + measures). */
   def run(df: DataFrame, spec0: Spec): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // resolve every column reference case-INSENSITIVELY against the
@@ -655,11 +835,7 @@ object MatchRecognize {
         fail(s"column $c not found in input (have: ${df.columns.mkString(", ")})"))
     val spec = spec0.copy(
       partitionBy = spec0.partitionBy.map(resolve),
-      orderBy = spec0.orderBy.map(resolve),
-      measures = spec0.measures.map {
-        case m if m.colName.nonEmpty => m.copy(colName = resolve(m.colName))
-        case m => m
-      })
+      orderBy = spec0.orderBy.map(resolve))
     // partition-key groups are identified by Seq[Any] equality in the
     // scan — value semantics for atomic types, but NOT for binary
     // (Array[Byte] compares by reference → one logical group splits
@@ -674,93 +850,7 @@ object MatchRecognize {
         case _ => ()
       }
     }
-    // 1. rewrite DEFINE predicates. Two evaluation classes:
-    //    - a predicate over the CURRENT row only → a Catalyst boolean
-    //      projection computed before the scan (full codegen);
-    //    - a predicate referencing ANOTHER pattern variable's mapped
-    //      rows (`DEFINE C AS price <= A.price`, Trino's docs-funnel
-    //      form) → an interpreted [[MrPredicate]] AST evaluated inside
-    //      the matcher against the in-flight assignment (RUNNING LAST
-    //      semantics, SQL:2016). PREV/NEXT(col[, n]) are PHYSICAL
-    //      navigation over the partition's row order in both classes,
-    //      realized as window lag/lead computed by Catalyst BEFORE the
-    //      scan; out-of-partition → NULL → no match.
-    val varNames = spec.vars
-    val allVarNames = varNames ++ spec.subsets.map(_._1)
-    // (isPrev, resolvedCol, offset) → the lag/lead column to prepare
-    val navCols =
-      scala.collection.mutable.LinkedHashSet.empty[(Boolean, String, Int)]
-    // PREV/NEXT accept an unqualified column or one qualified by the
-    // variable being defined (PREV(B.price) in DEFINE B = the previous
-    // ROW's price); a different variable's qualifier has no physical
-    // meaning here and is rejected.
-    val navRe = ("(?i)\\b(PREV|NEXT)\\s*\\(\\s*" +
-      "(?:([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*)?([A-Za-z_][A-Za-z0-9_]*)" +
-      "\\s*(?:,\\s*(\\d+)\\s*)?\\)").r
-    def rewriteNav(v: String, pred: String): String = {
-      // quote-masked: a 'PREV(x)' inside a string literal is data, not
-      // navigation — rewriting (or rejecting the qualified form) there
-      // would corrupt a working predicate
-      val masked = SqlText.mask(pred)
-      val sb = new StringBuilder
-      var last = 0
-      navRe.findAllMatchIn(pred).filterNot(m => masked(m.start)).foreach { m =>
-        val isPrev = m.group(1).equalsIgnoreCase("PREV")
-        // a DIFFERENT variable's qualifier is Trino's nested-navigation
-        // sugar — PREV(A.c) ≡ PREV(LAST(A.c), 1) — which is
-        // hypothesis-dependent: leave the text alone and let the
-        // interpreted parser carry it as a NestNav (the `A.` qualifier
-        // routes the predicate there). Unknown qualifiers still fail
-        // loudly here, before Catalyst can misread them.
-        val foreign = Option(m.group(2)).exists(q => !q.equalsIgnoreCase(v))
-        if (foreign) {
-          val q = m.group(2)
-          if (!allVarNames.exists(_.equalsIgnoreCase(q)))
-            fail(s"${m.group(1).toUpperCase} qualifier $q in DEFINE $v " +
-              "is not a pattern variable or SUBSET")
-          // no rewrite: the un-advanced `last` keeps the original text
-        } else {
-          val c = resolve(m.group(3))
-          val n = Option(m.group(4)).map(_.toInt).getOrElse(1)
-          navCols += ((isPrev, c, n))
-          sb.append(pred.substring(last, m.start))
-            .append(navColName(isPrev, c, n))
-          last = m.end
-        }
-      }
-      sb.append(pred.substring(last))
-      sb.toString
-    }
-    // Catalyst-evaluable defines → boolean flag text; cross-variable
-    // defines → unresolved AST (column indices bound after the plan)
-    val simpleDefs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val crossAsts = scala.collection.mutable.LinkedHashMap.empty[String, MrPredicate.Node]
-    spec.defines.foreach { case (v, pred0) =>
-      val others = allVarNames.filterNot(_.equalsIgnoreCase(v))
-      val navved = rewriteNav(v, pred0)
-      if (!MrPredicate.needsInterpreter(navved, others))
-        // own qualifier (V.c = the current row) stripped, full SQL
-        // surface via expr()
-        simpleDefs(v) = rewriteDefinePred(v, navved)
-      else
-        crossAsts(v) = MrPredicate.parse(navved, v, allVarNames)
-    }
-    // PREV/NEXT inside expression MEASURES (and any PNav the textual
-    // DEFINE rewrite missed) ride the same lag/lead columns: lower each
-    // PNav carrier onto the nav column it needs (registered here,
-    // computed by Catalyst below)
-    val registerNav: (Boolean, String, Int) => String = (isPrev, c, n) => {
-      val rc = resolve(c)
-      navCols += ((isPrev, rc, n))
-      navColName(isPrev, rc, n)
-    }
-    crossAsts.mapValuesInPlace((_, a) => MrPredicate.lowerPNav(a, registerNav))
-    val measuresLowered = spec.measures.map { m =>
-      m.ast match {
-        case Some(a) => m.copy(ast = Some(MrPredicate.lowerPNav(a, registerNav)))
-        case None => m
-      }
-    }
+    val compiled = compile(df.sparkSession, spec, df.schema, windows = true)
     // ORDER BY direction + null ordering (Trino defaults; PREV/NEXT's
     // lag/lead windows must see the SAME order the matcher scans in)
     val orderColumns: Seq[org.apache.spark.sql.Column] =
@@ -774,59 +864,33 @@ object MatchRecognize {
       }
     val w = Window.partitionBy(spec.partitionBy.map(col): _*)
       .orderBy(orderColumns: _*)
-    val lagged = navCols.foldLeft(df) { case (d, (isPrev, c, n)) =>
-      d.withColumn(navColName(isPrev, c, n),
-        (if (isPrev) lag(col(c), n) else lead(col(c), n)).over(w))
+    val lagged = compiled.lags.foldLeft(df) { case (d, (name, arg, step)) =>
+      val a = ColumnBridge.column(arg)
+      d.withColumn(name, (if (step < 0) lag(a, -step) else lead(a, step)).over(w))
     }
-    // cross-variable defines evaluate in the matcher; their flag column
-    // is a constant TRUE so the scan shape stays uniform
-    val prepared = withFlags(lagged, varNames, simpleDefs.get)
-    // 2. ONE shuffle on the partition keys + secondary sort — rows of a
-    //    key group arrive contiguous and ordered inside each partition
+    val prepared = withFlags(lagged, spec.vars, compiled.flags)
+    // ONE shuffle on the partition keys + secondary sort — rows of a
+    // key group arrive contiguous and ordered inside each partition
     val sortCols = spec.partitionBy.map(col) ++ orderColumns
     val arranged =
       if (spec.partitionBy.nonEmpty)
         prepared.repartition(spec.partitionBy.map(col): _*)
           .sortWithinPartitions(sortCols: _*)
       else prepared.coalesce(1).sortWithinPartitions(sortCols: _*)
-    // 3. output schema: ONE ROW PER MATCH = partition cols + measures;
-    //    ALL ROWS PER MATCH = every input column + measures (RUNNING)
+    // output schema: ONE ROW PER MATCH = partition cols + measures;
+    // ALL ROWS PER MATCH = every input column + measures (RUNNING)
     val inSchema = arranged.schema
-    def colType(c: String): DataType = inSchema(inSchema.fieldIndex(c)).dataType
     val inputCols = df.columns.toSeq // original columns, no __mr internals
-    // expression measures: bind column references and infer the output
-    // type now (plan time), not mid-scan
-    val resolvedMeasures = measuresLowered.map { m =>
-      m.ast match {
-        case Some(a) => m.copy(ast = Some(MrPredicate.resolve(a, inSchema)))
-        case None    => m
-      }
-    }
-    val (measureExecs, measureFields) = planMeasures(resolvedMeasures, inSchema)
     val outSchema = StructType(
       (if (spec.allRows) inputCols.map(c => inSchema(inSchema.fieldIndex(c)))
-       else spec.partitionBy.map(c => StructField(c, colType(c)))) ++
-      measureFields)
+       else spec.partitionBy.map(c => StructField(c, inSchema(inSchema.fieldIndex(c)).dataType))) ++
+      compiled.fields)
     val keyIdx =
       (if (spec.allRows) inputCols else spec.partitionBy)
         .map(inSchema.fieldIndex)
     val partIdx = spec.partitionBy.map(inSchema.fieldIndex)
-    // bind the cross-variable ASTs' column references to the scan
-    // schema (current-row columns AND the lag/lead nav columns exist
-    // there) — resolution errors surface at plan time, not mid-scan
-    val crossPreds: Map[String, MrPredicate.Node] =
-      crossAsts.map { case (v, ast) =>
-        val resolved = MrPredicate.resolve(ast, inSchema)
-        // boolean-ness checked at PLAN time — a DEFINE like `B.v + A.v`
-        // must error here, not as a task failure mid-scan
-        val dt = MrPredicate.exprType(resolved, inSchema)
-        if (dt != BooleanType)
-          fail(s"DEFINE $v must be a boolean predicate " +
-            s"(got ${dt.simpleString}); add a comparison")
-        v -> resolved
-      }.toMap
-    val matcher = new GroupMatcher(spec, keyIdx, flagIdx(varNames, inSchema),
-      crossPreds, measureExecs)
+    val matcher = new GroupMatcher(spec, keyIdx, flagIdx(spec.vars, inSchema),
+      compiled.program, inSchema.length)
     // Skew insurance at 100 TB: the operator buffers ONE partition-key
     // group in memory (Trino's operator has the identical bound), so a
     // pathologically hot key (one user with 10^8 events) would pressure
@@ -845,111 +909,15 @@ object MatchRecognize {
   private[graft] def flagIdx(vars: Seq[String], schema: StructType): Map[String, Int] =
     vars.map(v => v -> schema.fieldIndex(DefPrefix + v)).toMap
 
-  /** `df` plus one boolean column per pattern variable: its Catalyst
-    * DEFINE (`simpleDefs`, by variable) coalesced to false, or TRUE for
-    * a variable without one there (undefined, or evaluated in the
-    * matcher). */
+  /** `df` plus one boolean column per pattern variable: its flag DEFINE
+    * (`flags`, a lowered tree) coalesced to false, or TRUE for a
+    * variable without one (undefined, or evaluated in the matcher). */
   private[graft] def withFlags(df: DataFrame, vars: Seq[String],
-      simpleDefs: String => Option[String]): DataFrame =
+      flags: Map[String, Expression]): DataFrame =
     vars.foldLeft(df) { (d, v) =>
       d.withColumn(DefPrefix + v, coalesce( // NULL predicate = no match
-        simpleDefs(v).map(p => expr(p).cast("boolean")).getOrElse(lit(true)),
-        lit(false)))
+        flags.get(v).map(ColumnBridge.column).getOrElse(lit(true)), lit(false)))
     }
-
-  /** Resolved execution form of one measure: field index instead of
-    * name, output type attached for the aggregate fold, the resolved
-    * expression AST for MExpr measures. */
-  private[graft] case class MeasureExec(kind: MKind, varName: String,
-      cIdx: Int, offset: Int, dt: DataType, finalSem: Boolean,
-      ast: Option[MrPredicate.Node] = None)
-
-  /** Resolve PARSED measures (ASTs already bound via MrPredicate
-    * .resolve) against a scan schema: the execution form (field
-    * indexes, output type) and the output fields, with the aggregate
-    * widening and atomic-orderability gates applied. Shared by the
-    * batch planner and the streaming measures face. */
-  private[graft] def planMeasures(resolved: Seq[Measure],
-      inSchema: StructType): (Seq[MeasureExec], Seq[StructField]) = {
-    def colType(c: String): DataType = inSchema(inSchema.fieldIndex(c)).dataType
-    val fields = resolved.map { m =>
-      (m.kind, m.colName, m.alias) match {
-        case (MExpr, _, a) =>
-          StructField(a, MrPredicate.exprType(m.ast.get, inSchema))
-        case (MFirst | MLast, c, a) => StructField(a, colType(c))
-        case (MClassifier, _, a)    => StructField(a, StringType)
-        case (MSum, c, a) => StructField(a, sumOutType(colType(c), c))
-        case (MAvg, c, a) =>
-          sumOutType(colType(c), c) // numeric check only
-          StructField(a, DoubleType)
-        case (MMin | MMax, c, a) => colType(c) match {
-          case BinaryType | _: ArrayType | _: MapType | _: StructType =>
-            fail(s"MIN/MAX measure requires an orderable atomic column " +
-              s"($c is ${colType(c).simpleString})")
-          case dt => StructField(a, dt)
-        }
-        case (_, _, a)              => StructField(a, LongType)
-      }
-    }
-    val execs = resolved.zip(fields).map { case (m, f) =>
-      MeasureExec(m.kind, m.varName,
-        if (m.colName.nonEmpty) inSchema.fieldIndex(m.colName) else -1,
-        m.offset, f.dataType, m.finalSem, m.ast)
-    }
-    (execs, fields)
-  }
-
-  /** Output type of SUM(c): integral → bigint (Trino's widening),
-    * float/double → double, decimal → precision+10 (Spark's sum rule);
-    * non-numeric rejected. Also serves as the SUM/AVG numeric gate. */
-  private[graft] def sumOutType(dt: DataType, c: String): DataType = dt match {
-    case ByteType | ShortType | IntegerType | LongType => LongType
-    case FloatType | DoubleType => DoubleType
-    case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
-    case other => fail(s"SUM/AVG measures require a numeric column " +
-      s"($c is ${other.simpleString})")
-  }
-
-  private def toBigDec(a: Any): java.math.BigDecimal = a match {
-    case b: java.math.BigDecimal  => b
-    case b: scala.math.BigDecimal => b.bigDecimal
-    case n: Number => new java.math.BigDecimal(n.toString)
-  }
-
-  private def cmpAny(a: Any, b: Any): Int =
-    a.asInstanceOf[Comparable[Any]].compareTo(b)
-
-  /** Evaluate a SUM/AVG/MIN/MAX measure over the mapped rows' values.
-    * Nulls are skipped (SQL aggregate semantics); all-null/empty → NULL.
-    * Decimal sums are exact; AVG emits double — exact sum then ONE
-    * division, i.e. CAST(SUM(CAST(x AS DECIMAL)) AS DOUBLE)/COUNT(x) —
-    * so the result is order-independent for decimal inputs. */
-  private[graft] def aggOver(kind: MKind, outType: DataType,
-      vals: Seq[Any]): Any = {
-    val nn = vals.filter(_ != null)
-    if (nn.isEmpty) null
-    else kind match {
-      case MMin => nn.reduce((a, b) => if (cmpAny(a, b) <= 0) a else b)
-      case MMax => nn.reduce((a, b) => if (cmpAny(a, b) >= 0) a else b)
-      case MSum => outType match {
-        case LongType =>
-          java.lang.Long.valueOf(nn.map(_.asInstanceOf[Number].longValue).sum)
-        case DoubleType =>
-          java.lang.Double.valueOf(nn.map(_.asInstanceOf[Number].doubleValue).sum)
-        case d: DecimalType =>
-          nn.map(toBigDec).reduce(_ add _).setScale(d.scale)
-        case other => fail(s"unexpected SUM output type: $other")
-      }
-      case MAvg =>
-        val sumD = nn.head match {
-          case _: java.math.BigDecimal | _: scala.math.BigDecimal =>
-            nn.map(toBigDec).reduce(_ add _).doubleValue
-          case _ => nn.map(_.asInstanceOf[Number].doubleValue).sum
-        }
-        java.lang.Double.valueOf(sumD / nn.length)
-      case other => fail(s"aggOver does not handle $other")
-    }
-  }
 
   /** Assignments inside a `{- … -}` exclusion carry this prefix on the
     * variable name: the row is part of the match (measures/navigation
@@ -1043,23 +1011,18 @@ object MatchRecognize {
     * watermark and horizon), so the two cannot drift.
     *
     * A group row carries its input columns and, at `flagIdx(v)`, the
-    * Catalyst flag of each pattern variable's current-row DEFINE
-    * ([[withFlags]]); `crossPreds` are the DEFINEs evaluated against
-    * the in-flight assignment. An output row is the `outIdx` columns of
-    * its row (the match start in ONE ROW PER MATCH, each matched row in
-    * ALL ROWS PER MATCH), then the measures.
-    *
-    * The cross-variable DEFINEs and expression measures are compiled to
-    * closure trees once per deserialized copy — once per task on an
-    * executor: the ASTs are what serialize, never the closures. */
+    * flag column of each pattern variable's current-row DEFINE
+    * ([[withFlags]]); `program` holds the DEFINEs evaluated against the
+    * in-flight assignment and the measures. An output row is the
+    * `outIdx` columns of its row (the match start in ONE ROW PER MATCH,
+    * each matched row in ALL ROWS PER MATCH), then the measures.
+    * `width` is the group row's column count. The program is compiled
+    * to projections once per deserialized copy — once per task on an
+    * executor. */
   private[graft] final class GroupMatcher(spec: Spec, outIdx: Seq[Int],
-      flagIdx: Map[String, Int], crossPreds: Map[String, MrPredicate.Node],
-      measures: Seq[MeasureExec]) extends Serializable {
+      flagIdx: Map[String, Int], program: Program, width: Int) extends Serializable {
 
-    @transient private lazy val preds: Map[String, MrPredicate.Ctx => Boolean] =
-      crossPreds.map { case (v, ast) => v -> MrPredicate.compileBool(ast) }
-    @transient private lazy val compiled: Array[MrPredicate.Ctx => Any] =
-      measures.map(m => m.ast.map(MrPredicate.compile).orNull).toArray
+    @transient private lazy val ev = new Evaluator(program, spec, width, membersOf)
 
     /** Real variables a measure/skip target stands for: a subset name
       * expands to its members, anything else to itself. Case-insensitive
@@ -1069,15 +1032,6 @@ object MatchRecognize {
       spec.subsets.collectFirst {
         case (k, ms) if k.equalsIgnoreCase(v) => ms
       }.getOrElse(Seq(v))
-
-    private def flag(g: Array[Row], i: Int, v: String,
-        acc: List[(Int, String)]): Boolean = {
-      val fi = flagIdx(v)
-      !g(i).isNullAt(fi) && g(i).getBoolean(fi) && (preds.get(v) match {
-        case Some(pred) => pred(new MrPredicate.RowCtx(g, i, v, acc, membersOf))
-        case None => true
-      })
-    }
 
     /** Scan group `g` from start row `from`, numbering matches from
       * `matchNo` and handing each output row to `out`. `bound(i)` is
@@ -1089,6 +1043,11 @@ object MatchRecognize {
       * start (g.length when none) and the next match number. */
     def scan(g: Array[Row], from: Int, matchNo: Long,
         bound: Int => (Int, Boolean), out: Row => Unit): (Int, Long) = {
+      val rows = ev.rows(g)
+      def flag(i: Int, v: String, acc: List[(Int, String)]): Boolean = {
+        val fi = flagIdx(v)
+        !g(i).isNullAt(fi) && g(i).getBoolean(fi) && ev.test(v, rows, i, acc)
+      }
       var i = from
       var mn = matchNo
       while (i < g.length) {
@@ -1096,13 +1055,13 @@ object MatchRecognize {
         var probed = false
         val m = matchFlagsCtx(spec.pattern, if (closed) end else end + 1,
           (j, v, acc) =>
-            if (j >= end) { probed = true; false } else flag(g, j, v, acc), i)
+            if (j >= end) { probed = true; false } else flag(j, v, acc), i)
         if (probed && !closed) return (i, mn)
         if (m == null) {
           // WITH UNMATCHED ROWS (SKIP PAST LAST ROW only: matches are
           // disjoint, so a dead scan position is exactly an unmatched
           // row): the row with every measure NULL, as in Trino
-          if (spec.withUnmatched) out(row(g, i, new Array[Any](measures.length)))
+          if (spec.withUnmatched) out(row(g, i, new Array[Any](spec.measures.length)))
           i += 1
         } else if (m._2.isEmpty) {
           // EMPTY match (nullable pattern; greedy preference already
@@ -1110,16 +1069,39 @@ object MatchRecognize {
           // ONE-ROW mode and in ALL-ROWS SHOW (suppressed by OMIT EMPTY
           // MATCHES); consumes nothing, so the scan always resumes at
           // the NEXT row (SQL:2016's empty-match rule, regardless of
-          // AFTER MATCH SKIP mode)
-          if (!spec.allRows || !spec.omitEmpty) out(row(g, i, emptyMeasures(g, mn)))
+          // AFTER MATCH SKIP mode). Navigation, CLASSIFIER and
+          // aggregates are NULL over the empty set, COUNT is 0.
+          if (!spec.allRows || !spec.omitEmpty) {
+            val vals = new Array[Any](spec.measures.length)
+            ev.whole.eval(rows, Nil, -1, mn, vals)
+            ev.running.eval(rows, Nil, -1, mn, vals)
+            out(row(g, i, vals))
+          }
           mn += 1
           i += 1
         } else {
-          if (spec.allRows)
-            allRowsMeasures(g, m._2, mn).foreach { case (r, vals) => out(row(g, r, vals)) }
-          else out(row(g, i, oneRowMeasures(g, m._2, i, m._1, mn)))
+          // FINAL measures over the whole match: the match's last row
+          // is the anchor ("assigned" is most recent first, exclusion
+          // marks intact — excluded rows still feed the measures)
+          val assigned = m._2
+          val whole = new Array[Any](spec.measures.length)
+          ev.whole.eval(rows, assigned, assigned.head._1, mn, whole)
+          if (!spec.allRows) out(row(g, i, whole))
+          else {
+            // ALL ROWS PER MATCH: one row per non-excluded matched row,
+            // RUNNING measures over the rows mapped up to it
+            var soFar = List.empty[(Int, String)]
+            assigned.reverseIterator.foreach { case a @ (r, name) =>
+              soFar = a :: soFar
+              if (name.isEmpty || name.charAt(0) != ExclMark) {
+                val vals = whole.clone()
+                ev.running.eval(rows, soFar, r, mn, vals)
+                out(row(g, r, vals))
+              }
+            }
+          }
           mn += 1
-          i = resumeIndex(spec.skip, i, m._1, m._2, membersOf)
+          i = resumeIndex(spec.skip, i, m._1, assigned, membersOf)
         }
       }
       (g.length, mn)
@@ -1132,144 +1114,182 @@ object MatchRecognize {
       System.arraycopy(mvals, 0, vals, outIdx.length, mvals.length)
       Row.fromSeq(vals.toIndexedSeq)
     }
+  }
 
-    /** An EMPTY match's measures: navigation, CLASSIFIER() and
-      * aggregates are NULL over the empty set, COUNT is 0,
-      * MATCH_NUMBER() is assigned (SQL:2016 / Trino). */
-    private def emptyMeasures(g: Array[Row], matchNo: Long): Array[Any] =
-      measures.zipWithIndex.map { case (m, mi) =>
-        m.kind match {
-          case MCountVar | MCountStar => 0L
-          case MMatchNumber => matchNo
-          case MExpr => MrPredicate.coerce(compiled(mi)(
-            new MrPredicate.MatchCtx(g, Nil, -1, membersOf)), m.dt)
-          case _ => null
-        }
-      }.toArray
+  /** A group's rows as InternalRows for the program's expressions, each
+    * converted on first read (only the columns they read). */
+  private final class Rows(g: Array[Row], convert: Row => InternalRow) {
+    private val cache = new Array[InternalRow](g.length)
+    def apply(i: Int): InternalRow = {
+      var r = cache(i)
+      if (r == null) { r = convert(g(i)); cache(i) = r }
+      r
+    }
+    /** `f` at row i, NULL off the group. */
+    def at(i: Int, f: InternalRow => Any): Any =
+      if (i < 0 || i >= g.length) null else f(apply(i))
+  }
 
-    /** ONE ROW PER MATCH: FINAL semantics over the whole match.
-      * `assigned` is the matcher's reverse-order assignment list
-      * (exclusion marks intact — excluded rows still feed
-      * navigation/aggregates). */
-    private def oneRowMeasures(g: Array[Row], assigned: List[(Int, String)],
-        start: Int, end: Int, matchNo: Long): Array[Any] = {
-      // ascending row order; exclusion marks stripped
-      val asc = assigned.reverse.map { case (r, v) => (r, stripExcl(v)) }
-      val byVar = asc.groupBy(_._2).map { case (k, l) => k -> l.map(_._1) }
-      // "" = the universal variable (every matched row); a subset name
-      // expands to the sorted union of its members' rows
-      def varRows(v: String): Seq[Int] =
-        if (v.isEmpty) asc.map(_._1)
-        else membersOf(v) match {
-          case Seq(one) => byVar.getOrElse(one, Nil)
-          case ms => ms.flatMap(m => byVar.getOrElse(m, Nil)).sorted
-        }
-      measures.zipWithIndex.map { case (MeasureExec(kind, v, cIdx, off, dt, _, _), mi) =>
-        kind match {
-          case MFirst =>
-            varRows(v).lift(off).map(r => g(r).get(cIdx)).orNull
-          case MLast  =>
-            val l = varRows(v)
-            l.lift(l.length - 1 - off).map(r => g(r).get(cIdx)).orNull
-          case MCountVar    => varRows(v).length.toLong
-          case MCountStar   => (end - start).toLong
-          case MMatchNumber => matchNo
-          case MClassifier  => // last row's var, mark-stripped; with an
-            // argument, the last row mapped to that variable/SUBSET
-            if (v.isEmpty) assigned.headOption.map(a => stripExcl(a._2)).orNull
-            else {
-              val ms = membersOf(v).map(_.toLowerCase).toSet
-              asc.reverseIterator.find(p => ms(p._2.toLowerCase))
-                .map(_._2).orNull
-            }
-          case MSum | MAvg | MMin | MMax =>
-            aggOver(kind, dt, varRows(v).map(r => g(r).get(cIdx)))
-          case MExpr => // FINAL: the whole match; unqualified cols = last row
-            MrPredicate.coerce(compiled(mi)(new MrPredicate.MatchCtx(g, asc,
-              if (asc.isEmpty) -1 else asc.last._1, membersOf)), dt)
-        }
+  /** A [[Program]] compiled for one task. Its expressions read a context
+    * row: the anchor group row joined with the slot row, which each
+    * evaluation fills for the slots it reads from the rows mapped so far
+    * (most recent first) and the anchor. */
+  private final class Evaluator(p: Program, spec: Spec, width: Int,
+      membersOf: String => Seq[String]) {
+    private val attrs: Seq[Attribute] = p.in ++
+      (p.in.length until width).map(i => AttributeReference(s"_$i", NullType)()) ++ p.slotAttrs
+    private val slotRow = new GenericInternalRow(p.slots.length)
+    private val context = new JoinedRow
+    private val nullRow = new GenericInternalRow(width)
+
+    private val converters: Array[(Int, Any => Any)] = {
+      val read = AttributeSet((p.slots ++ p.preds.values ++ p.measures).flatMap(_.references))
+      p.in.indices.collect { case i if read.contains(p.in(i)) =>
+        i -> CatalystTypeConverters.createToCatalystConverter(p.in(i).dataType)
       }.toArray
     }
+    def rows(g: Array[Row]): Rows = new Rows(g, r => {
+      val vs = new Array[Any](width)
+      converters.foreach { case (i, c) => vs(i) = c(r.get(i)) }
+      new GenericInternalRow(vs)
+    })
 
-    /** ALL ROWS PER MATCH: (rowIndex, measures) for each non-excluded
-      * matched row, ascending, measures in RUNNING semantics (state as
-      * of that row) unless FINAL-prefixed, CLASSIFIER() = the row's own
-      * variable — Trino's ALL-mode defaults. An excluded row updates the
-      * RUNNING state but yields nothing. */
-    private def allRowsMeasures(g: Array[Row], assigned: List[(Int, String)],
-        matchNo: Long): Seq[(Int, Array[Any])] = {
-      val ascRaw = assigned.reverse // ascending row order, marks intact
-      val asc = ascRaw.map { case (r, v) => (r, stripExcl(v)) }
-      // whole-match structures for FINAL-prefixed measures
-      val fullByVar = asc.groupBy(_._2).map { case (k, l) => k -> l.map(_._1) }
-      val fullAll = asc.map(_._1)
-      val total = asc.length.toLong
-      val rowsOf = scala.collection.mutable
-        .HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-      val allSoFar = scala.collection.mutable.ArrayBuffer.empty[Int]
-      // ascending (row, strippedVar) prefix for RUNNING expression
-      // measures — an immutable Vector so each row's snapshot is O(1)
-      // structural sharing, not an O(n) copy per output row
-      var soFarPairs = Vector.empty[(Int, String)]
-      var seen = 0L
-      ascRaw.flatMap { case (rowI, rawName) =>
-        val excluded = rawName.nonEmpty && rawName.charAt(0) == ExclMark
-        val varName = stripExcl(rawName)
-        rowsOf.getOrElseUpdate(varName,
-          scala.collection.mutable.ArrayBuffer.empty[Int]) += rowI
-        allSoFar += rowI
-        soFarPairs :+= ((rowI, varName))
-        seen += 1L
-        if (excluded) None else {
-        val vals = new Array[Any](measures.length)
-        measures.zipWithIndex.foreach { case (MeasureExec(kind, v, cIdx, off, dt, fin, _), mi) =>
-          // RUNNING (the ALL-mode default): state as of this row;
-          // FINAL: the whole match on every row. "" = universal;
-          // subset names expand to the union of their members' rows.
-          def varRows: Seq[Int] =
-            if (v.isEmpty) { if (fin) fullAll else allSoFar.toSeq }
-            else membersOf(v) match {
-              case Seq(one) =>
-                if (fin) fullByVar.getOrElse(one, Nil)
-                else rowsOf.get(one).map(_.toSeq).getOrElse(Nil)
-              case ms =>
-                if (fin) ms.flatMap(m => fullByVar.getOrElse(m, Nil)).sorted
-                else ms.flatMap(m =>
-                  rowsOf.get(m).map(_.toSeq).getOrElse(Nil)).sorted
-            }
-          vals(mi) = kind match {
-            case MFirst => varRows.lift(off)
-              .map(r => g(r).get(cIdx)).orNull
-            case MLast  =>
-              val l = varRows
-              l.lift(l.length - 1 - off).map(r => g(r).get(cIdx)).orNull
-            case MCountVar    => varRows.length.toLong
-            case MCountStar   => if (fin) total else seen
-            case MMatchNumber => matchNo
-            case MClassifier  =>
-              // RUNNING (CLASSIFIER takes no FINAL prefix — rejected at
-              // parse, as in Trino): this row's own variable; with an
-              // argument, the last row mapped to it so far
-              if (v.isEmpty) varName
-              else {
-                val ms = membersOf(v).map(_.toLowerCase).toSet
-                soFarPairs.reverseIterator.find(p => ms(p._2.toLowerCase))
-                  .map(_._2).orNull
-              }
-            case MSum | MAvg | MMin | MMax =>
-              aggOver(kind, dt, varRows.map(r => g(r).get(cIdx)))
-            case MExpr =>
-              // RUNNING (default): rows so far, unqualified cols = this
-              // row; FINAL: the whole match, cols = its last row
-              val ctx =
-                if (fin) new MrPredicate.MatchCtx(g, asc, asc.last._1, membersOf)
-                else new MrPredicate.MatchCtx(g, soFarPairs, rowI, membersOf)
-              MrPredicate.coerce(compiled(mi)(ctx), dt)
-          }
-        }
-        Some((rowI, vals))
-        }
+    /** Is an assigned variable name (exclusion mark and all) one of v's
+      * rows? "" stands for every row. */
+    private def in(v: String): String => Boolean =
+      if (v.isEmpty) _ => true
+      else {
+        val ms = membersOf(v)
+        (ms ++ ms.map(m => s"$ExclMark$m")).toSet
       }
+
+    /** The row of FIRST/LAST(v, off) among `rev`, or -1. */
+    private def nth(rev: List[(Int, String)], m: String => Boolean, first: Boolean,
+        off: Int): Int =
+      if (first) {
+        val n = rev.count(a => m(a._2))
+        if (off >= n) -1 else nth(rev, m, first = false, n - 1 - off)
+      } else {
+        var k = off
+        var l = rev
+        while (l.nonEmpty) {
+          if (m(l.head._2)) { if (k == 0) return l.head._1; k -= 1 }
+          l = l.tail
+        }
+        -1
+      }
+
+    private def value(e: Expression): InternalRow => Any = {
+      val proj = MutableProjection.create(Seq(e), attrs)
+      proj.initialize(0)
+      val dt = e.dataType
+      r => proj(r).get(0, dt)
+    }
+
+    /** One aggregate slot: Spark's own initial/update/evaluate
+      * expressions folded over v's rows in row order. */
+    private final class Fold(agg: DeclarativeAggregate) {
+      private val buf = new SpecificInternalRow(agg.aggBufferAttributes.map(_.dataType))
+      private val init = MutableProjection.create(agg.initialValues).target(buf)
+      private val update = MutableProjection.create(agg.updateExpressions,
+        agg.aggBufferAttributes ++ attrs).target(buf)
+      private val result = MutableProjection.create(Seq(agg.evaluateExpression),
+        agg.aggBufferAttributes)
+      private val joined = new JoinedRow
+      private var rs = new Array[Int](16)
+      def apply(g: Rows, rev: List[(Int, String)], m: String => Boolean): Any = {
+        init(InternalRow.empty)
+        var n = 0
+        var l = rev
+        while (l.nonEmpty) {
+          if (m(l.head._2)) {
+            if (n == rs.length) rs = java.util.Arrays.copyOf(rs, 2 * n)
+            rs(n) = l.head._1
+            n += 1
+          }
+          l = l.tail
+        }
+        while (n > 0) { n -= 1; update(joined(buf, g(rs(n)))) } // row order
+        result(buf).get(0, agg.dataType)
+      }
+    }
+
+    private type Reader = (Rows, List[(Int, String)], Int, Long) => Any
+    private val live: Set[Int] = p.slotsOf(p.preds.values.toSeq ++ p.measures).toSet
+    private val readers: Array[Reader] = p.locs.indices.map[Reader] { k =>
+      if (!live(k)) null
+      else (p.locs(k), p.slots(k)) match {
+        case (MatchNumber, _) => (_, _, _, mn) => mn
+        case (ClassifierOf(v), _) =>
+          val m = in(v)
+          (_, rev, _, _) => rev.find(a => m(a._2))
+            .map(a => UTF8String.fromString(stripExcl(a._2))).orNull
+        case (AtRow(step), e) =>
+          val f = value(e)
+          (g, _, anchor, _) => if (anchor < 0) null else g.at(anchor + step, f)
+        case (AtNav(v, first, off, step), e) =>
+          val (f, m) = (value(e), in(v))
+          (g, rev, _, _) => {
+            val r = nth(rev, m, first, off)
+            if (r < 0) null else g.at(r + step, f)
+          }
+        case (OverRows(v, _), agg: DeclarativeAggregate) =>
+          val (fold, m) = (new Fold(agg), in(v))
+          (g, rev, _, _) => fold(g, rev, m)
+        case (loc, e) => throw new IllegalStateException(s"slot $loc over $e")
+      }
+    }.toArray
+
+    private def fill(ids: Array[Int], g: Rows, rev: List[(Int, String)], anchor: Int,
+        matchNo: Long): Unit = {
+      var k = 0
+      while (k < ids.length) {
+        slotRow.update(ids(k), readers(ids(k))(g, rev, anchor, matchNo))
+        k += 1
+      }
+    }
+
+    private val preds: Map[String, (BasePredicate, Array[Int])] =
+      p.preds.map { case (v, e) =>
+        val pred = Predicate.create(e, attrs)
+        pred.initialize(0)
+        v -> ((pred, p.slotsOf(Seq(e))))
+      }
+
+    /** DEFINE v at row i, tentatively mapped after `acc`. */
+    def test(v: String, g: Rows, i: Int, acc: List[(Int, String)]): Boolean =
+      preds.get(v) match {
+        case None => true
+        case Some((pred, ids)) =>
+          fill(ids, g, (i, v) :: acc, i, 0L)
+          pred.eval(context(g(i), slotRow))
+      }
+
+    /** Measures evaluated together over one anchor and one assignment;
+      * `idx` are their positions in the output. */
+    final class Measures(idx: Array[Int]) {
+      private lazy val es = idx.toSeq.map(p.measures)
+      private lazy val proj = {
+        val m = MutableProjection.create(es, attrs)
+        m.initialize(0)
+        m
+      }
+      private lazy val ids = p.slotsOf(es)
+      private lazy val types = es.map(_.dataType).toArray
+      private lazy val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
+      def eval(g: Rows, rev: List[(Int, String)], anchor: Int, matchNo: Long,
+          out: Array[Any]): Unit = if (idx.nonEmpty) {
+        fill(ids, g, rev, anchor, matchNo)
+        val r = proj(context(if (anchor < 0) nullRow else g(anchor), slotRow))
+        var k = 0
+        while (k < idx.length) { out(idx(k)) = toScala(k)(r.get(k, types(k))); k += 1 }
+      }
+    }
+    /** FINAL measures (every measure in ONE ROW PER MATCH) and RUNNING
+      * ones. */
+    val (whole, running) = {
+      val (f, r) = spec.measures.indices.partition(i => !spec.allRows || spec.measures(i).finalSem)
+      (new Measures(f.toArray), new Measures(r.toArray))
     }
   }
 

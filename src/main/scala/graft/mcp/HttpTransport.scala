@@ -43,6 +43,10 @@ object HttpTransport {
   private[graft] def enableNoDelay(): Unit =
     if (System.getProperty("sun.net.httpserver.nodelay") == null)
       System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** The largest POST body read, in bytes; a longer one is answered
+    * 413 without being read further. */
+  val MaxBodyBytes: Int = 1 << 20
 }
 
 class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
@@ -69,6 +73,21 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
             e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
           size() > maxSessions
       })
+
+  /** The request body as UTF-8, reading at most MaxBodyBytes + 1
+    * bytes; None when it is longer than MaxBodyBytes. */
+  private def readBody(ex: HttpExchange): Option[String] = {
+    val bytes = ex.getRequestBody.readNBytes(HttpTransport.MaxBodyBytes + 1)
+    if (bytes.length > HttpTransport.MaxBodyBytes) None
+    else Some(new String(bytes, StandardCharsets.UTF_8))
+  }
+
+  private val tooLarge = s"request body exceeds ${HttpTransport.MaxBodyBytes} bytes"
+
+  /** 413 for a JSON-RPC endpoint: an Invalid Request error with no id. */
+  private def rpcTooLarge(ex: HttpExchange): Unit =
+    respond(ex, 413, Json.write(ListMap("jsonrpc" -> "2.0", "id" -> null,
+      "error" -> ListMap("code" -> -32600, "message" -> tooLarge))))
 
   /** Bound port (useful when constructed with port 0 in tests). */
   def boundPort: Int = http.getAddress.getPort
@@ -106,24 +125,26 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
           case Some(reason) =>
             deniedHeaders(ex)
             respond(ex, 401, Json.write(ListMap("error" -> reason)))
-          case None =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            val sid = Option(ex.getRequestHeaders.getFirst("Mcp-Session-Id"))
-            val isInit = body.contains("\"initialize\"")
-            if (sid.exists(s => !sessions.containsKey(s)))
-              // spec: a request with an unknown/expired session id → 404,
-              // client must re-initialize
-              respond(ex, 404, """{"error":"unknown or expired session"}""")
-            else server.handle(body) match {
-              case Some(resp) =>
-                if (isInit && resp.contains("protocolVersion")) {
-                  val fresh = java.util.UUID.randomUUID().toString
-                  sessions.put(fresh, java.lang.Long.valueOf(System.currentTimeMillis()))
-                  ex.getResponseHeaders.add("Mcp-Session-Id", fresh)
-                }
-                respond(ex, 200, resp)
-              case None => ex.sendResponseHeaders(202, -1) // notification
-            }
+          case None => readBody(ex) match {
+            case None => rpcTooLarge(ex)
+            case Some(body) =>
+              val sid = Option(ex.getRequestHeaders.getFirst("Mcp-Session-Id"))
+              val isInit = body.contains("\"initialize\"")
+              if (sid.exists(s => !sessions.containsKey(s)))
+                // spec: a request with an unknown/expired session id → 404,
+                // client must re-initialize
+                respond(ex, 404, """{"error":"unknown or expired session"}""")
+              else server.handle(body) match {
+                case Some(resp) =>
+                  if (isInit && resp.contains("protocolVersion")) {
+                    val fresh = java.util.UUID.randomUUID().toString
+                    sessions.put(fresh, java.lang.Long.valueOf(System.currentTimeMillis()))
+                    ex.getResponseHeaders.add("Mcp-Session-Id", fresh)
+                  }
+                  respond(ex, 200, resp)
+                case None => ex.sendResponseHeaders(202, -1) // notification
+              }
+          }
         }
       case "DELETE" =>
         // spec: DELETE with the session header terminates the session
@@ -191,17 +212,19 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
             case kv if kv.startsWith("sessionId=") => kv.drop("sessionId=".length)
           }
         sid.map(s => Option(sseStreams.get(s))) match {
-          case Some(Some(stream)) =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            server.handle(body).foreach { resp =>
-              try {
-                stream.write(sseEvent("message", resp))
-                stream.flush()
-              } catch { case _: java.io.IOException =>
-                sseStreams.remove(sid.get) // client went away
+          case Some(Some(stream)) => readBody(ex) match {
+            case None => rpcTooLarge(ex)
+            case Some(body) =>
+              server.handle(body).foreach { resp =>
+                try {
+                  stream.write(sseEvent("message", resp))
+                  stream.flush()
+                } catch { case _: java.io.IOException =>
+                  sseStreams.remove(sid.get) // client went away
+                }
               }
-            }
-            respond(ex, 202, "Accepted", contentType = "text/plain")
+              respond(ex, 202, "Accepted", contentType = "text/plain")
+          }
           case _ => respond(ex, 404, """{"error":"unknown or expired session"}""")
         }
       case _ => respond(ex, 405, """{"error":"method not allowed"}""")
@@ -319,12 +342,13 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
       cors(ex)
       ex.getRequestMethod match {
         case "OPTIONS" => ex.sendResponseHeaders(204, -1)
-        case "POST" =>
-          val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          oa.register(body) match {
+        case "POST" => readBody(ex) match {
+          case None => respond(ex, 413, Json.write(ListMap("error" -> tooLarge)))
+          case Some(body) => oa.register(body) match {
             case Right(json) => respond(ex, 201, json)
             case Left(err) => respond(ex, 400, Json.write(ListMap("error" -> err)))
           }
+        }
         case _ => respond(ex, 405, """{"error":"method not allowed"}""")
       }
       ex.close()
@@ -334,13 +358,13 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
       cors(ex)
       ex.getRequestMethod match {
         case "OPTIONS" => ex.sendResponseHeaders(204, -1)
-        case "POST" =>
-          val form = OAuthEndpoints.parseParams(
-            new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-          oa.token(form) match {
+        case "POST" => readBody(ex) match {
+          case None => respond(ex, 413, Json.write(ListMap("error" -> tooLarge)))
+          case Some(body) => oa.token(OAuthEndpoints.parseParams(body)) match {
             case Right(json) => respond(ex, 200, json)
             case Left(err) => respond(ex, 400, Json.write(ListMap("error" -> err)))
           }
+        }
         case _ => respond(ex, 405, """{"error":"method not allowed"}""")
       }
       ex.close()

@@ -283,9 +283,10 @@ object TimeOps {
 
     // Expression MEASURES (new in r13): arithmetic/comparison over
     // navigation and aggregates — `LAST(B.value) - FIRST(A.value)`,
-    // `SUM(B.dval) / COUNT(B.*)` (exact decimal sum, one double
-    // division), a LONG expression, and a boolean comparison. Replayed
-    // in DuckDB as per-island aggregates joined to the preceding view.
+    // `CAST(SUM(B.dval) AS DOUBLE) / COUNT(B.*)` (exact decimal sum,
+    // one double division), a LONG expression, and a boolean
+    // comparison. Replayed in DuckDB as per-island aggregates joined to
+    // the preceding view.
     "mr_funnel_delta" -> ((s, d) => {
       val ev = t(s, d, "events").withColumn("dval",
         col("value").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
@@ -293,7 +294,7 @@ object TimeOps {
         """PARTITION BY user_id ORDER BY ts, event_id
           |MEASURES FIRST(A.ts) AS start_ts,
           |         LAST(B.value) - FIRST(A.value) AS delta,
-          |         SUM(B.dval) / COUNT(B.*) AS per_click,
+          |         CAST(SUM(B.dval) AS DOUBLE) / COUNT(B.*) AS per_click,
           |         COUNT(B.*) * 2 + 1 AS odd_clicks,
           |         LAST(B.value) > FIRST(A.value) AS improved
           |PATTERN (A B+)
@@ -334,7 +335,7 @@ object TimeOps {
     // TPC-H revenue formula as an aggregate ARGUMENT —
     // SUM(A.eprice * (1 - A.disc)) — plus LAST over the same product
     // and a composite PREV, all evaluated per mapped row with exact
-    // decimal arithmetic and emitted as double. PATTERN (A+) with an
+    // decimal arithmetic, cast to double. PATTERN (A+) with an
     // always-true DEFINE matches each order once, so the DuckDB replay
     // is a plain GROUP BY joined to the per-order last/previous lines.
     "mr_order_revenue" -> ((s, d) => {
@@ -347,8 +348,8 @@ object TimeOps {
         """PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey, l_suppkey
           |MEASURES COUNT(*) AS n_lines,
           |         SUM(A.eprice * (1 - A.disc)) AS revenue,
-          |         LAST(A.eprice * (1 - A.disc)) AS last_net,
-          |         PREV(eprice + disc) AS prev_mix
+          |         CAST(LAST(A.eprice * (1 - A.disc)) AS DOUBLE) AS last_net,
+          |         CAST(PREV(eprice + disc) AS DOUBLE) AS prev_mix
           |PATTERN (A+)
           |DEFINE A AS l_quantity > 0""".stripMargin
       graft.dialect.MatchRecognize.run(li,

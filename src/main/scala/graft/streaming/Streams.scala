@@ -473,10 +473,8 @@ object Streams {
     * all). Same clause grammar, and the same scan, DEFINE evaluation and
     * measure emission as the batch operator
     * ([[graft.dialect.MatchRecognize.GroupMatcher]]), so the two faces
-    * cannot drift: FIRST/LAST(V.c[, n]), bare V.c, COUNT(*)/COUNT(V.*),
-    * SUM/AVG/MIN/MAX over columns or expressions
-    * (`SUM(A.price * (1 - A.disc))`), expression measures,
-    * MATCH_NUMBER(), CLASSIFIER([U]); ONE ROW and ALL ROWS PER MATCH
+    * cannot drift: DEFINEs and MEASURES in the one expression language
+    * ([[graft.dialect.MatchRecognize.compile]]); ONE ROW and ALL ROWS PER MATCH
     * (WITH UNMATCHED ROWS too); every AFTER MATCH SKIP mode (each
     * resumes strictly after the match START, so an emitted start is
     * final and the retention rule holds under overlap). Cross-variable
@@ -484,9 +482,9 @@ object Streams {
     * FIRST/LAST navigation are re-tested under each hypothesis' own
     * assignment, as in batch. PREV (any depth, simple or composite
     * argument, nested under FIRST/LAST) works in DEFINE: the state
-    * buffer IS the ordered partition prefix, so PREV(col, n) at buffer
-    * row j reads row j-n — the same value the batch lag() column
-    * carries. NEXT stays rejected: its target row may not have arrived.
+    * buffer IS the ordered partition prefix, so PREV(x, n) at buffer
+    * row j reads row j-n — the batch matcher's own rule over its group.
+    * NEXT stays rejected: its target row may not have arrived.
     * Restricted to `PARTITION BY user_id ORDER BY ts[, event_id]`
     * ascending, without anchors, exclusions or patterns that can match
     * empty; output = user_id + the measures (ONE ROW) or every input
@@ -521,7 +519,7 @@ object Streams {
     * Flink CEP's bound. */
   def matchRecognizeRows(events: Dataset[Event], clause: String,
       horizonSeconds: Long = 3600L, watermark: String = "2 hours"): DataFrame = {
-    import graft.dialect.{MatchRecognize, MrPredicate}
+    import graft.dialect.MatchRecognize
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spec = MatchRecognize.parseClause(clause)
@@ -540,63 +538,38 @@ object Streams {
     val df = events.toDF()
     val inSchema = df.schema
     val vars = spec.vars
-    val allVarNames = vars ++ spec.subsets.map(_._1)
-    // DEFINE classes, as in the batch planner: current-row-only →
-    // Catalyst flag projections; hypothesis-dependent or PREV → ASTs
-    // over the buffered values. NEXT → reject.
-    val simpleDefs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val crossPreds = scala.collection.mutable.LinkedHashMap.empty[String, MrPredicate.Node]
+    // the batch compiler, with no window: a DEFINE that reads any row
+    // but the current one evaluates in the matcher, PREV over the
+    // buffered rows
+    val compiled = MatchRecognize.compile(df.sparkSession, spec, inSchema, windows = false)
+    val program = compiled.program
+    program.preds.foreach { case (v, e) =>
+      require(program.locsOf(e).forall(_.step <= 0),
+        s"matchRecognizeRows: DEFINE $v uses NEXT — forward physical " +
+          "navigation is not available over a stream (the target row " +
+          "may not have arrived); PREV is supported")
+    }
+    spec.measures.zip(program.measures).foreach { case (m, e) =>
+      require(program.locsOf(e).forall(l => l.step == 0 && !l.isInstanceOf[MatchRecognize.AtRow]),
+        s"matchRecognizeRows: measure ${m.alias} uses PREV/NEXT — " +
+          "physical navigation is not available over a stream")
+    }
     // Deepest PREV step across the DEFINEs: the state keeps this many
     // CONTEXT rows behind the first live attempt so a PREV at an
     // attempt's start still reads its true predecessors after eviction.
-    var maxPrevDepth = 0
-    spec.defines.foreach { case (v, pred) =>
-      val others = allVarNames.filterNot(_.equalsIgnoreCase(v))
-      val hasPhysical =
-        "(?i)\\b(PREV|NEXT)\\s*\\(".r.findFirstIn(pred).isDefined
-      if (!MrPredicate.needsInterpreter(pred, others) && !hasPhysical)
-        simpleDefs(v) = MatchRecognize.rewriteDefinePred(v, pred)
-      else {
-        val ast = MrPredicate.parse(pred, v, allVarNames)
-        require(!MrPredicate.usesNextNav(ast),
-          s"matchRecognizeRows: DEFINE $v uses NEXT — forward physical " +
-            "navigation is not available over a stream (the target row " +
-            "may not have arrived); PREV is supported")
-        maxPrevDepth = math.max(maxPrevDepth, MrPredicate.maxPrevDepth(ast))
-        val resolved = MrPredicate.resolve(
-          MrPredicate.lowerPrevForBuffer(ast), inSchema)
-        require(MrPredicate.exprType(resolved, inSchema) ==
-          org.apache.spark.sql.types.BooleanType,
-          s"matchRecognizeRows: DEFINE $v must be a boolean predicate")
-        crossPreds(v) = resolved
-      }
-    }
-    // measures: resolve ASTs, reject physical navigation, derive the
-    // execution plan + output schema with the batch rules
-    val resolvedMeasures = spec.measures.map { m =>
-      m.ast match {
-        case Some(a) =>
-          require(!MrPredicate.usesPhysicalNav(a),
-            s"matchRecognizeRows: measure ${m.alias} uses PREV/NEXT — " +
-              "physical navigation is not available over a stream")
-          m.copy(ast = Some(MrPredicate.resolve(a, inSchema)))
-        case None => m
-      }
-    }
-    val (measureExecs, measureFields) =
-      MatchRecognize.planMeasures(resolvedMeasures, inSchema)
+    val maxPrevDepth =
+      (0 +: program.preds.values.toSeq.flatMap(program.locsOf).map(-_.step)).max
     val uidIdx = inSchema.fieldIndex("user_id")
     // ONE ROW = partition key + measures; ALL ROWS = every input
     // column + measures (the batch output contract)
     val (outSchema, outIdx) =
-      if (spec.allRows) (StructType(inSchema.fields ++ measureFields), inSchema.indices)
-      else (StructType(StructField("user_id", LongType, nullable = false) +: measureFields),
+      if (spec.allRows) (StructType(inSchema.fields ++ compiled.fields), inSchema.indices)
+      else (StructType(StructField("user_id", LongType, nullable = false) +: compiled.fields),
         Seq(uidIdx))
     val prepared = MatchRecognize.withFlags(
-      df.withWatermark("ts", watermark), vars, simpleDefs.get)
+      df.withWatermark("ts", watermark), vars, compiled.flags)
     val matcher = new MatchRecognize.GroupMatcher(spec, outIdx,
-      MatchRecognize.flagIdx(vars, prepared.schema), crossPreds.toMap,
-      measureExecs)
+      MatchRecognize.flagIdx(vars, prepared.schema), program, prepared.schema.length)
     val horizonMs = horizonSeconds * 1000L
     val tsIdx = inSchema.fieldIndex("ts")
     val eidIdx = inSchema.fieldIndex("event_id")

@@ -31,16 +31,15 @@ object ClusterSmoke {
       // must serialize to executor JVMs that did not define
       // them — a local[32] run never proves that
       "mr_funnel",
-      // aggregate MEASURES: the aggOver fold (BigDecimal sums) runs
-      // inside the executor-side GroupMatcher
+      // aggregate MEASURES: Spark's aggregate folds run inside the
+      // executor-side GroupMatcher
       "mr_funnel_agg",
-      // interpreted DEFINE/MEASURES paths (r13): the MrPredicate AST
-      // (cross-variable refs, running aggregates, expression measures)
-      // must serialize into executor-side GroupMatchers too
+      // DEFINEs and MEASURES evaluated in the matcher: the resolved
+      // Catalyst expressions and slot locators (cross-variable refs,
+      // running aggregates, nested navigation, expression arguments)
+      // must serialize into executor-side GroupMatchers and compile
+      // there
       "mr_vshape", "mr_pack_runs", "mr_funnel_delta",
-      // r13 second wave: nested navigation (NestNav lowered onto lag
-      // columns) and expression arguments (NavX/AggX/PNavX with the
-      // row-pinned Ctx) — serialized closures with BigDecimal folds
       "mr_run_context", "mr_order_revenue",
       // BM25 incremental merge: the touched-bucket terms swap is
       // RENAME-based (write tmp buckets, fs.rename into terms/) and the

@@ -32,6 +32,20 @@ class TpchTinyCatalogSpec extends SparkSpec {
       "mktsegment" -> "varchar", "comment" -> "varchar"))
   }
 
+  test("register loads the catalog on a session that is not the thread's active one") {
+    val other = spark.newSession()
+    val before = org.apache.spark.sql.SparkSession.getActiveSession
+    assert(!before.contains(other))
+    // only `other` carries the catalog conf, so the load must read it there
+    val conf = spark.conf.getOption("spark.sql.catalog.tpch")
+    spark.conf.unset("spark.sql.catalog.tpch")
+    try {
+      TpchTinyCatalog.register(other, dir)
+      assert(org.apache.spark.sql.graft.CatalogBridge.catalogs(other).contains("tpch"))
+      assert(org.apache.spark.sql.SparkSession.getActiveSession == before)
+    } finally conf.foreach(spark.conf.set("spark.sql.catalog.tpch", _))
+  }
+
   test("both catalogs list; allowlist filters the tpch catalog out") {
     val cats = new MetadataService(engine()).listCatalogs()
     assert(cats.contains("spark_catalog") && cats.contains("tpch"), cats)

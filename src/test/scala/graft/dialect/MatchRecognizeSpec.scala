@@ -513,6 +513,56 @@ class MatchRecognizeSpec extends SparkSpec {
     assert(mr.nonEmpty && mr == expected)
   }
 
+  test("cross-variable DEFINEs with a function call and a CASE equal a window-SQL replay") {
+    // A and B stay disjoint on event_type, so the matches are exactly
+    // the adjacent (view, click) pairs whose click passes the test — a
+    // lead() window in plain SQL
+    val rnd = new scala.util.Random(20261021L)
+    val events = (1 to 600).map { i =>
+      (1L + rnd.nextInt(5), i.toLong, Seq("view", "click", "buy")(rnd.nextInt(3)),
+        (rnd.nextInt(2001) - 1000) / 10.0)
+    }.toDF("user_id", "event_id", "event_type", "value")
+      .withColumn("ts", col("event_id"))
+    def mr(b: String) = MatchRecognize.run(events, parseClause(
+      s"""PARTITION BY user_id ORDER BY ts, event_id
+         |MEASURES FIRST(A.event_id) AS a_eid, LAST(B.value) AS b_val
+         |PATTERN (A B)
+         |DEFINE A AS event_type = 'view',
+         |       B AS event_type = 'click' AND $b""".stripMargin))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val pairs = events
+      .withColumn("n_type", lead(col("event_type"), 1).over(w))
+      .withColumn("n_val", lead(col("value"), 1).over(w))
+      .filter(col("event_type") === "view" && col("n_type") === "click")
+    def replay(test: String) = pairs.filter(expr(test))
+      .select(col("user_id"), col("event_id"), col("n_val")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    val fn = mr("abs(B.value - A.value) > 10")
+    assert(fn.nonEmpty && fn == replay("abs(n_val - value) > 10"))
+    val cased = mr("CASE WHEN A.value > 50 THEN B.value < A.value ELSE B.value >= A.value END")
+    assert(cased.nonEmpty &&
+      cased == replay("CASE WHEN value > 50 THEN n_val < value ELSE n_val >= value END"))
+  }
+
+  test("expression measures take functions: round(LAST(B.v) - FIRST(A.v), 1)") {
+    val df = Seq(
+      (1L, 1L, "view", 10.04), (1L, 2L, "click", 4.0), (1L, 3L, "click", 16.18),
+      (2L, 1L, "view", 3.0), (2L, 2L, "click", 1.26))
+      .toDF("uid", "seq", "ev", "v")
+    val out = MatchRecognize.run(df, parseClause(
+      """PARTITION BY uid ORDER BY seq
+        |MEASURES round(LAST(B.v) - FIRST(A.v), 1) AS d,
+        |         concat(CLASSIFIER(), '#', CAST(MATCH_NUMBER() AS STRING)) AS tag
+        |PATTERN (A B+)
+        |DEFINE A AS ev = 'view', B AS ev = 'click'""".stripMargin))
+    assert(out.schema("d").dataType == org.apache.spark.sql.types.DoubleType)
+    val rows = out.orderBy("uid").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+    assert(rows == Seq((1L, 6.1, "B#1"), (2L, -1.7, "B#1")))
+  }
+
   test("FINAL measures in ALL ROWS PER MATCH evaluate over the whole match") {
     val df = Seq(
       (1L, 1L, "view", 10.0), (1L, 2L, "click", 2.0), (1L, 3L, "click", 4.0))
@@ -768,9 +818,13 @@ class MatchRecognizeSpec extends SparkSpec {
         |PATTERN (A B) DEFINE A AS ev = 'view', B AS ev <> 'A.x'""".stripMargin))
       .collect()
     assert(lit.length == 3) // every view+any pair: (1,2) (3,4) (2:1,2)
-    // the Catalyst rewrite strips only the variable's own qualifier
-    assert(MatchRecognize.rewriteDefinePred("B", "B.price > 'B.x' AND b .v") ==
-      "price > 'B.x' AND v")
+    // the lowering strips only the variable's own qualifier: a 'B.x'
+    // inside a string literal is data
+    val quoted = MatchRecognize.run(df, parseClause(
+      """PARTITION BY uid ORDER BY seq MEASURES COUNT(*) AS n
+        |PATTERN (A B) DEFINE A AS ev = 'view', B AS B.ev <> 'B.x' AND b.price > 0""".stripMargin))
+      .collect()
+    assert(quoted.length == 3)
   }
 
   test("cross-variable DEFINE: the Trino docs V-shape with A.price cap") {
@@ -968,18 +1022,23 @@ class MatchRecognizeSpec extends SparkSpec {
     // row under RUNNING
     assert(out == Seq((1L, null, 20.0, 0.0), (2L, 4.0, 20.0, -6.0),
       (3L, 20.0, 20.0, 6.0)))
-    // arithmetic over a string column errors at plan time with the type
-    val e = intercept[IllegalArgumentException](MatchRecognize.run(df,
+    // arithmetic over a string column takes Spark's ANSI coercion: the
+    // string is cast to a number, and 'click' fails that cast when read
+    val e = intercept[Exception](MatchRecognize.run(df,
       parseClause("""PARTITION BY uid ORDER BY seq
         |MEASURES LAST(B.ev) + 1 AS bad
-        |PATTERN (A B+) DEFINE B AS ev = 'click'""".stripMargin)))
-    assert(e.getMessage.contains("numeric"))
-    // an unknown function in a measure expression errors with guidance
-    val e2 = intercept[IllegalArgumentException](parseClause(
+        |PATTERN (A B+) DEFINE B AS ev = 'click'""".stripMargin)).collect())
+    def chain(t: Throwable): String =
+      if (t == null) "" else t.getMessage + " " + chain(t.getCause)
+    assert(chain(e).contains("CAST_INVALID_INPUT"), chain(e))
+    // a function call in a measure is Spark's: upper() of the measure's
+    // row, the match's last
+    val up = MatchRecognize.run(df, parseClause(
       """PARTITION BY uid ORDER BY seq
-        |MEASURES upper(ev) AS bad
+        |MEASURES upper(ev) AS u
         |PATTERN (A B+) DEFINE B AS ev = 'click'""".stripMargin))
-    assert(e2.getMessage.contains("not supported"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(up == Seq((1L, "CLICK")))
   }
 
   test("empty matches: ONE ROW PER MATCH emits them with null navigation") {
@@ -1062,12 +1121,14 @@ class MatchRecognizeSpec extends SparkSpec {
         |B AS B.v > A.v AND B.v > Z.v""".stripMargin)))
     assert(e1.getMessage.contains("Z") &&
       e1.getMessage.contains("not a pattern variable"))
-    // a function call inside a CROSS predicate → rejected with guidance
-    val e2 = intercept[IllegalArgumentException](MatchRecognize.run(df,
-      parseClause("""PARTITION BY uid ORDER BY seq MEASURES COUNT(*) AS n
-        |PATTERN (A B) DEFINE B AS abs(B.v) > A.v""".stripMargin)))
-    assert(e2.getMessage.contains("abs") &&
-      e2.getMessage.contains("not supported"))
+    // a function call inside a CROSS predicate is Spark's own
+    val signed = Seq((1L, 1L, "view", 5.0), (1L, 2L, "click", -7.0),
+      (2L, 1L, "view", 5.0), (2L, 2L, "click", 3.0)).toDF("uid", "seq", "ev", "v")
+    val absRows = MatchRecognize.run(signed,
+      parseClause("""PARTITION BY uid ORDER BY seq MEASURES FIRST(A.seq) AS s
+        |PATTERN (A B) DEFINE A AS ev = 'view', B AS abs(B.v) > A.v""".stripMargin))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(absRows == Seq((1L, 1L))) // |-7| > 5; |3| is not
     // PREV over a DIFFERENT variable is nested-navigation sugar —
     // PREV(A.v) ≡ PREV(LAST(A.v), 1): starts at row 1 see NULL (before
     // the partition) → UNKNOWN → no match; the start at row 2 compares
@@ -1345,7 +1406,7 @@ class MatchRecognizeSpec extends SparkSpec {
 
   test("expression arguments: SUM/AVG/MIN/COUNT over arithmetic") {
     // SUM(A.price * (1 - A.disc)) — the per-row product aggregated
-    // exactly (decimal), emitted per the widening rules
+    // exactly (decimal), typed by Spark's decimal rules
     val df = Seq(
       (1L, 1L, BigDecimal("10.00"), BigDecimal("0.10")),
       (1L, 2L, BigDecimal("20.00"), BigDecimal("0.25")),
@@ -1360,8 +1421,9 @@ class MatchRecognizeSpec extends SparkSpec {
         |PATTERN (A+)
         |DEFINE A AS price > 0""".stripMargin
     val out = MatchRecognize.run(df, parseClause(clause)).orderBy("uid")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
-        r.getDouble(3), r.getLong(4))).toSeq
+      .collect().map(r => (r.getLong(0), r.getDecimal(1).doubleValue, r.getDouble(2),
+        r.getDecimal(3).doubleValue, r.getLong(4))).toSeq
+    // decimal arithmetic stays decimal (Spark's rules); AVG is DOUBLE
     // uid 1: 10*0.9 + 20*0.75 = 24; avg(20,40)=30; min(9.9,19.75)=9.9
     assert(out == Seq((1L, 24.0, 30.0, 9.9, 2L), (2L, 5.0, 10.0, 5.0, 1L)))
   }

@@ -6,20 +6,14 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
-/** Differential check of the MrPredicate interpreter (its compiled
-  * closure trees, the form the matcher runs) against Catalyst
-  * on their SHARED surface: random boolean expressions over current-row
-  * columns (no pattern navigation) must evaluate to the same
-  * true/false/UNKNOWN as Spark's `expr(...)` on the same single-row
-  * relation — comparisons, arithmetic, AND/OR/NOT three-valued logic,
-  * IS NULL, BETWEEN, IN, literals, nulls.
-  *
-  * The generator keeps arithmetic within one numeric family (long /
-  * double / decimal) and never compares decimal against double: Spark
-  * resolves those mixes by casting decimal THROUGH double while the
-  * interpreter compares exactly — a deliberate, documented difference
-  * (exactness) that would otherwise flag boundary artifacts instead of
-  * bugs.
+/** Differential check of the DEFINEs the matcher evaluates against
+  * Catalyst's own evaluation of the same text: random boolean
+  * expressions over current-row columns, run as cross-variable DEFINEs
+  * through [[MatchRecognize.run]], must give the same
+  * true/false/UNKNOWN as Spark's `expr(...)` on the same row —
+  * comparisons, arithmetic (decimal, double and long mixed freely),
+  * AND/OR/NOT three-valued logic, IS NULL, BETWEEN, IN, literals,
+  * nulls, and zero divisors that throw under ANSI.
   */
 class MrPredicateDifferentialSpec extends SparkSpec {
 
@@ -32,8 +26,8 @@ class MrPredicateDifferentialSpec extends SparkSpec {
   /** One expression + row pair per case. Families: 0=long 1=double
     * 2=decimal 3=string. */
   private final class Gen(rnd: scala.util.Random) {
-    // zero appears 1-in-6 so zero-divisor NULL semantics (Spark
-    // non-ANSI: x/0 and x%0 are NULL for every numeric type) get hit
+    // zero appears 1-in-6 so zero divisors (which throw under ANSI for
+    // every numeric type) get hit
     def longLit(): String =
       if (rnd.nextInt(6) == 0) "0" else rnd.nextInt(21) - 10 + ""
     def dblLit(): String = {
@@ -83,12 +77,7 @@ class MrPredicateDifferentialSpec extends SparkSpec {
           s"${atom(0)} IN (${longLit()}, ${longLit()}, ${longLit()})"
         case _ =>
           val op = Seq("=", "<>", "<", "<=", ">", ">=", "!=")(rnd.nextInt(7))
-          // long vs double / long vs decimal mixes are fine; decimal vs
-          // double is not (Spark widens through double, we stay exact)
-          val rfam = fam match {
-            case 0 => Seq(0, 1, 2)(rnd.nextInt(3))
-            case f => f
-          }
+          val rfam = Seq(0, 1, 2)(rnd.nextInt(3))
           s"${num(fam, 2)} $op ${num(rfam, 2)}"
       }
     }
@@ -117,21 +106,12 @@ class MrPredicateDifferentialSpec extends SparkSpec {
   test("interpreter agrees with Catalyst on 400 random boolean expressions") {
     val rnd = new scala.util.Random(20260815L)
     val gen = new Gen(rnd)
-    val ctxOf: Row => MrPredicate.Ctx = row => new MrPredicate.Ctx {
-      def cur(idx: Int): Any = if (row.isNullAt(idx)) null else row.get(idx)
-      def nav(v: String, colIdx: Int, first: Boolean, off: Int): Any =
-        fail("no navigation in this differential")
-      def aggVals(v: String, colIdx: Int): Seq[Any] =
-        fail("no aggregates in this differential")
-      def navRowIdx(v: String, first: Boolean, off: Int): Int =
-        fail("no navigation in this differential")
-      def aggRowIdxs(v: String): Seq[Int] =
-        fail("no aggregates in this differential")
-      def valueAt(r: Int, colIdx: Int): Any =
-        fail("no row navigation in this differential")
-      def curRowIdx: Int = 0
-      def groupSize: Int = 1
-    }
+    // PATTERN (A (B | C | D)) over two rows: row 2, the case row, maps
+    // to B when the expression is TRUE, to C when it is FALSE and to D
+    // when it is UNKNOWN (alternation prefers the leftmost branch); the
+    // A.la reference keeps all three in the matcher
+    val pairSchema = StructType(StructField("seq", LongType) +: schema.fields)
+    val anchor = Row.fromSeq(1L +: 1L +: Seq.fill(schema.length - 1)(null))
     var checked = 0
     (1 to 400).foreach { i =>
       val text = gen.pred(3)
@@ -154,18 +134,28 @@ class MrPredicateDifferentialSpec extends SparkSpec {
         } catch {
           case e: Throwable if isArith(e) => Left("arith")
         }
-      val resolved =
-        MrPredicate.resolve(MrPredicate.parse(text, "X", Nil), schema)
+      val pair = spark.createDataFrame(
+        java.util.Arrays.asList(anchor, Row.fromSeq(2L +: vals)), pairSchema)
+      val clause =
+        s"""ORDER BY seq
+           |MEASURES CLASSIFIER() AS c
+           |PATTERN (A (B | C | D))
+           |DEFINE A AS seq = 1,
+           |       B AS ($text) AND A.la IS NOT NULL,
+           |       C AS NOT ($text) AND A.la IS NOT NULL,
+           |       D AS A.la IS NOT NULL""".stripMargin
       val mine: Either[String, Option[Boolean]] =
-        try MrPredicate.compile(resolved)(ctxOf(row)) match {
-          case null => Right(None)
-          case b: java.lang.Boolean => Right(Some(b.booleanValue))
-          case other => fail(s"non-boolean from interpreter: $other ($text)")
+        try MatchRecognize.run(pair, MatchRecognize.parseClause(clause))
+            .collect().map(_.getString(0)).toSeq match {
+          case Seq("B") => Right(Some(true))
+          case Seq("C") => Right(Some(false))
+          case Seq("D") => Right(None)
+          case other => fail(s"case $i: no single match ($other) for $text")
         } catch {
-          case e: ArithmeticException => Left("arith")
+          case e: Throwable if isArith(e) => Left("arith")
         }
       assert(mine == sparkOut,
-        s"case $i diverged: $text over $vals — interpreter=$mine catalyst=$sparkOut")
+        s"case $i diverged: $text over $vals — matcher=$mine catalyst=$sparkOut")
       checked += 1
     }
     assert(checked == 400)
@@ -174,7 +164,7 @@ class MrPredicateDifferentialSpec extends SparkSpec {
   test("expression arguments ≡ the same expression precomputed as a column") {
     // Property: FN(B.e) inside MEASURES (and SUM(A.e) inside DEFINE)
     // must equal FN(B.pc) where pc = e precomputed by Catalyst on the
-    // input relation — the argument's row-pinned interpretation and
+    // input relation — an argument read at the navigated row and
     // Spark's projection are two evaluators of the same expression.
     // Random arithmetic over two nullable double columns, null rows
     // included; division excluded (zero divisors would throw at

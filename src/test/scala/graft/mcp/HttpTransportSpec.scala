@@ -57,6 +57,17 @@ class HttpTransportSpec extends SparkSpec {
     assert(post("""{"jsonrpc":"2.0","id":2,"method":"tools/list"}""").statusCode() == 200)
   }
 
+  test("an over-cap POST body gets 413 and a JSON-RPC error; the next call is served") {
+    val big = "{\"jsonrpc\":\"2.0\",\"id\":1,\"method\":\"tools/list\",\"pad\":\"" +
+      ("x" * (HttpTransport.MaxBodyBytes + 1000)) + "\"}"
+    val resp = post(big)
+    assert(resp.statusCode() == 413)
+    val r = Json.parse(resp.body()).asInstanceOf[collection.Map[String, Any]]
+    assert(r("id") == null)
+    assert(r("error").asInstanceOf[collection.Map[String, Any]]("code") == -32600L)
+    assert(post("""{"jsonrpc":"2.0","id":2,"method":"tools/list"}""").statusCode() == 200)
+  }
+
   test("GET /status reports ok") {
     val resp = client.send(HttpRequest.newBuilder(URI.create(s"$base/status")).GET().build(),
       HttpResponse.BodyHandlers.ofString())

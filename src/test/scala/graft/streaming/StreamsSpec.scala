@@ -791,6 +791,53 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("matchRecognizeRows: function calls and CASE in DEFINE and MEASURES equal batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val mr = Seq(
+      Event(1, ts(0), 1, "view", 5.0),
+      Event(2, ts(1), 1, "click", -7.0),  // |-7| > 5
+      Event(3, ts(2), 1, "click", 9.0),
+      Event(4, ts(3), 1, "click", 2.0),   // |2| <= 5: run ends
+      Event(5, ts(4), 1, "view", 60.0),
+      Event(6, ts(5), 1, "click", 40.0),  // A > 50: B must be below it
+      Event(7, ts(0), 2, "view", 3.0),
+      Event(8, ts(1), 2, "click", 1.0))   // neither test holds: no match
+    val clause =
+      """PARTITION BY user_id ORDER BY ts, event_id
+        |MEASURES FIRST(A.ts) AS start_ts,
+        |         round(LAST(B.value) - FIRST(A.value), 1) AS d,
+        |         upper(CLASSIFIER()) AS cls, COUNT(B.*) AS nb
+        |PATTERN (A B+)
+        |DEFINE A AS event_type = 'view',
+        |       B AS event_type = 'click' AND
+        |         CASE WHEN A.value > 50 THEN B.value < A.value
+        |              ELSE abs(B.value) > A.value END""".stripMargin
+    val flush = Seq(Event(100, ts(90), 99, "noop", 0.0),
+      Event(101, ts(95), 99, "noop", 0.0))
+    val mem = MemoryStream[Event]
+    val q = Streams.matchRecognizeRows(mem.toDS(), clause,
+        horizonSeconds = 1800L, watermark = "10 seconds")
+      .writeStream.format("memory").queryName("mr_rows_fn")
+      .outputMode("append").start()
+    try {
+      mem.addData(mr.filter(_.ts.getTime <= ts(2).getTime): _*)
+      q.processAllAvailable()
+      mem.addData(mr.filterNot(_.ts.getTime <= ts(2).getTime): _*)
+      q.processAllAvailable()
+      flush.foreach { e => mem.addData(e); q.processAllAvailable() }
+      def canon(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+        df.filter(col("user_id") < 90).orderBy("user_id", "start_ts")
+          .collect().map(_.toSeq.toList: Seq[Any]).toSeq
+      val streaming = canon(spark.table("mr_rows_fn"))
+      val batch = canon(graft.dialect.MatchRecognize.run((mr ++ flush).toDF(),
+        graft.dialect.MatchRecognize.parseClause(clause)))
+      assert(streaming == batch, s"$streaming vs $batch")
+      // user 1: B run -7, 9 (then 2 fails), and the 60 → 40 match
+      assert(streaming.map(r => (r(2), r(3), r(4))) ==
+        Seq((4.0, "B", 2L), (-20.0, "B", 1L)))
+    } finally q.stop()
+  }
+
   test("matchRecognizeRows: aggregate DEFINE budget packs over a stream") {
     implicit val sqlCtx = spark.sqlContext
     val mr = Seq(
